@@ -35,6 +35,7 @@ from ..ast import (
     WithItem,
 )
 from .patterns import match_element
+from .template import parse_codegen_merge
 from .utils import digit1, identifier, tag, tag_no_case, ws0, ws1
 
 # Clause kind tags used by the order FSM
@@ -977,7 +978,18 @@ def parse_query(s: str):
 
     ParseFail kinds: "Verify" (unconsumed input, with the remaining slice)
     or "Tag" (clause-order violation / empty query, with the full input).
+    Codegen-rendered MERGE batches take the template recognizer, which
+    returns the AST the full parser would; everything else goes to the
+    full parser.
     """
+    query = parse_codegen_merge(s)
+    if query is not None:
+        return query
+    return _parse_full(s)
+
+
+def _parse_full(s: str):
+    """The recursive-descent query loop behind ``parse_query``."""
     i = 0
     clauses = []
     while True:

@@ -160,7 +160,7 @@ def _at_boundary(s: str, i: int) -> bool:
     j = ws0(s, i)
     if j >= len(s):
         return True
-    return any(s.startswith(k, j) for k in _BOUNDARIES)
+    return s.startswith(_BOUNDARIES, j)
 
 
 def pattern_element_sequence(s: str, i: int, allow_qpp: bool):

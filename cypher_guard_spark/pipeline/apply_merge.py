@@ -85,14 +85,22 @@ _PARSED_SCHEMA = StructType(
 )
 
 
-class MergeApplyRefused(Exception):
-    """A statement failed validation or fell outside the applier subset."""
+_MAX_LISTED_REFUSALS = 20
 
-    def __init__(self, failures: list):
+
+class MergeApplyRefused(Exception):
+    """Statements failed validation or fell outside the applier subset.
+
+    ``failures`` lists at most the first 20 (statement, error) pairs;
+    ``total`` is the number of refused statements.
+    """
+
+    def __init__(self, failures: list, total: int):
         self.failures = failures
+        self.total = total
         super().__init__(
-            f"{len(failures)} statement(s) refused; first: "
-            f"{failures[0][1]} [{failures[0][0][:120]}]"
+            f"{total} statement(s) refused; listing the first {len(failures)}; "
+            f"first: {failures[0][1]} [{failures[0][0][:120]}]"
         )
 
 
@@ -290,11 +298,14 @@ def apply_merge_batches(
     `batches` carries newline-joined multi-statement batch strings
     (build_merge_batches output) — statements split and explode JVM-side
     before the single parse UDF. `on_error='raise'` (default) raises
-    MergeApplyRefused listing every refused statement; 'skip' applies
-    the valid subset (the refusals remain queryable via
-    parse_merge_statements). The apply itself is one parse pass + two
-    distinct()s — no driver loop, nothing collected but refusals.
+    MergeApplyRefused with the total refused count and the first 20
+    refused statements; 'skip' applies the valid subset (the refusals
+    remain queryable via parse_merge_statements). Any other value raises
+    ValueError. The apply itself is one parse pass + two distinct()s — no
+    driver loop, nothing collected but refusals.
     """
+    if on_error not in ("raise", "skip"):
+        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     if schema is None:
         from .synth import pipeline_db_schema
 
@@ -305,9 +316,16 @@ def apply_merge_batches(
     parsed = parse_merge_statements(spark, stmts, schema)
     if on_error == "raise":
         bad = parsed.where(F.col("err").isNotNull()).select("statement", "err")
-        failures = [(r["statement"], r["err"]) for r in bad.limit(20).collect()]
+        failures = [
+            (r["statement"], r["err"])
+            for r in bad.limit(_MAX_LISTED_REFUSALS).collect()
+        ]
         if failures:
-            raise MergeApplyRefused(failures)
+            # count only when the listing is truncated: no extra job otherwise
+            total = len(failures)
+            if total == _MAX_LISTED_REFUSALS:
+                total = bad.count()
+            raise MergeApplyRefused(failures, total)
     else:
         parsed = parsed.where(F.col("err").isNull())
     edges = (

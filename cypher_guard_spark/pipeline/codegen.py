@@ -1,8 +1,13 @@
 """Graph materialization: canonical triples → Cypher MERGE batches.
 
 The emitted grammar is deliberately restricted to what the guard parses
-(SURVEY.md §2.3 / quirk Q10): single label per node, property-map values
-limited to string/number literals, `MERGE ... ON CREATE SET ...` only.
+(SURVEY.md §2.3 / quirk Q10): newline-joined statements
+`MERGE (v:L {k: '…'[, k: '…']})`, optionally followed by
+`-[:T]->(v:L {…})` — one label per node, string-literal property values,
+no `ON CREATE`/`ON MATCH SET`. `guard/parser/template.py` recognizes
+exactly this rendered grammar in front of the full parser, so a change to
+the rendering here must keep it (or the guard falls back to the slow path;
+tests/test_pipeline.py checks every emitted batch is recognized).
 String values are sanitized by dropping quote characters — the reference
 grammar has no escapes, a quote char terminates the literal.
 

@@ -172,6 +172,22 @@ def test_on_error_skip_applies_valid_subset(spark):
     assert edges.count() == 0
 
 
+def test_on_error_rejects_unknown_mode(spark):
+    stmts = _stmts(spark, "MERGE (l:Location {city: 'Berlin'})")
+    for mode in ("Raise", "ignore", ""):
+        with pytest.raises(ValueError, match="on_error"):
+            apply_merge_batches(spark, stmts, on_error=mode)
+
+
+def test_refusal_listing_is_truncated_with_total(spark):
+    stmts = [f"MERGE (n:Nope{i} {{city: 'X'}})" for i in range(25)]
+    with pytest.raises(MergeApplyRefused) as ei:
+        apply_merge_batches(spark, _stmts(spark, *stmts))
+    assert len(ei.value.failures) == 20
+    assert ei.value.total == 25
+    assert str(ei.value).startswith("25 statement(s) refused; listing the first 20;")
+
+
 def test_parse_exposes_structured_errors(spark):
     parsed = parse_merge_statements(
         spark,

@@ -126,6 +126,22 @@ def test_merge_batches_stay_in_supported_grammar(result):
         assert has_valid_cypher(row["cypher"], schema), row["cypher"][:200]
 
 
+def test_merge_batches_take_template_fast_path(result):
+    """Every emitted batch is recognized by the codegen-MERGE template and
+    parses to the full parser's AST: codegen drift cannot silently fall
+    off the fast path."""
+    from cypher_guard_spark.guard.parser.clauses import _parse_full
+    from cypher_guard_spark.guard.parser.template import parse_codegen_merge
+
+    out, _ = result
+    batches = [r["cypher"] for r in out["merge_batches"].collect()]
+    assert batches
+    for cypher in batches:
+        ast = parse_codegen_merge(cypher)
+        assert ast is not None, cypher[:200]
+        assert ast == _parse_full(cypher)
+
+
 def test_lineage_rows_cover_all_stages(result):
     out, _ = result
     stages = {r["stage"] for r in out["lineage"]}
