@@ -1319,95 +1319,16 @@ def q_kg_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return louvain(spark, weighted, src="u", dst="v", weight="w")
 
 
-def _py_louvain(pair_w: dict, iters: int = 6, max_levels: int = 8) -> dict:
-    """Serial twin of `pipeline.graph_algo.louvain`: identical integer
-    gain scores, xxhash64(vertex, level) parity gating, tie order
-    (stay beats move, then smallest community id), fixed rounds per
-    level, merge-progress level rule, min-member canonical labels."""
-    from collections import defaultdict
-
-    from cypher_guard_spark.oracle.sparkhash import spark_xxhash64
-
-    pairs: dict = {}
-    for (a, b), w in pair_w.items():
-        if a == b:
-            continue
-        key = (a, b) if a <= b else (b, a)
-        pairs[key] = pairs.get(key, 0) + int(w)
-    if not pairs:
-        return {}
-    verts0: set = set()
-    for a, b in pairs:
-        verts0.add(a)
-        verts0.add(b)
-    vmap = {v: v for v in verts0}
-    m2 = 2 * sum(pairs.values())
-    for level in range(max_levels):
-        verts: set = set()
-        for a, b in pairs:
-            verts.add(a)
-            verts.add(b)
-        if len(verts) <= 1:
-            break
-        adj: dict = defaultdict(dict)
-        k: dict = defaultdict(int)
-        for (a, b), w in pairs.items():
-            if a == b:
-                k[a] += 2 * w
-            else:
-                adj[a][b] = adj[a].get(b, 0) + w
-                adj[b][a] = adj[b].get(a, 0) + w
-                k[a] += w
-                k[b] += w
-        comm = {v: v for v in verts}
-        for r in range(iters):
-            tot: dict = defaultdict(int)
-            for v in verts:
-                tot[comm[v]] += k[v]
-            new = dict(comm)
-            for v in verts:
-                if spark_xxhash64(v, level) % 2 != r % 2:
-                    continue
-                kin: dict = defaultdict(int)
-                kin[comm[v]] += 0
-                for j, w in adj.get(v, {}).items():
-                    kin[comm[j]] += w
-                best = None
-                for cand, kv in kin.items():
-                    own = 1 if cand == comm[v] else 0
-                    score = m2 * kv - k[v] * (tot[cand] - own * k[v])
-                    key = (-score, -own, cand)
-                    if best is None or key < best[0]:
-                        best = (key, cand)
-                new[v] = best[1]
-            comm = new
-        n_comms = len(set(comm.values()))
-        if n_comms == len(verts):
-            break
-        vmap = {e: comm[c] for e, c in vmap.items()}
-        npairs: dict = defaultdict(int)
-        for (a, b), w in pairs.items():
-            ca, cb = comm[a], comm[b]
-            key = (ca, cb) if ca <= cb else (cb, ca)
-            npairs[key] += w
-        pairs = dict(npairs)
-        if n_comms <= 1:
-            break
-    reps: dict = {}
-    for e, c in vmap.items():
-        if c not in reps or e < reps[c]:
-            reps[c] = e
-    return {e: reps[c] for e, c in vmap.items()}
-
-
 def _kg_louvain_sql() -> str:
+    from cypher_guard_spark.pipeline.graph_algo import py_louvain
+
     pair_w: dict = {}
     for d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
         if s == o:
             continue
         a, b = (s, o) if s < o else (o, s)
         pair_w.setdefault((a, b), set()).add((d, _r))
-    assign = _py_louvain({k: len(v) for k, v in pair_w.items()})
+    assign = py_louvain({k: len(v) for k, v in pair_w.items()})
     rows = [
         f"({_sql_quote(e)}, {_sql_quote(c)})"
         for e, c in sorted(assign.items())

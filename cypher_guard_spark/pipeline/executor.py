@@ -136,7 +136,10 @@ from ..guard.ast import (
 
 _SEP = "\x1f"
 # the Neo4j catalog procedures with executable semantics against our
-# graph, each with its single canonical output name
+# graph, each with its single canonical output name. All three answer
+# from THIS graph, not from the store: db.propertyKeys lists the keys of
+# the labels present here, while Neo4j lists every key ever created
+# store-wide, so on a graph missing a label the row count can differ.
 _CATALOG_YIELDS = {
     "db.labels": "label",
     "db.relationshipTypes": "relationshipType",
@@ -1176,6 +1179,11 @@ def _compile_query(
     # position IS the written position's semantics; the HAVING-style
     # `WITH x, count(y) AS n WHERE n > 1` lands after the aggregation
     # because `n` exists nowhere earlier.
+    # One asymmetry with the refuse-never-guess rule: the flattened AST
+    # cannot tell an ambiguous WHERE surface from its legal reading (text
+    # written as `WITH a AS b WHERE a.x = 1`, a Neo4j compile error, looks
+    # like the MATCH-level filter), so such a query executes its one
+    # compilable reading instead of being refused.
     # ------------------------------------------------------------------
     kinds: dict = {}
     for v in out_frame.columns:

@@ -2,11 +2,14 @@
 
 Every stage writes its output table (parquet here; the writer format is
 pluggable — on a cluster with an Iceberg catalog set
-``SPARK_GRAFT_TABLE_FORMAT=iceberg``) plus a lineage record per partition:
+``SPARK_GRAFT_TABLE_FORMAT=iceberg``) plus lineage records
 (stage, partition_id, rows, checksum, wall_ms). The checksum is a
-bit_xor of xxhash64 over the stage's key columns — per-partition values
-depend on partitioning, but their XOR is partition-invariant (and immune
-to ANSI overflow), which is what resume verification compares.
+bit_xor of xxhash64 over the stage's key columns: the XOR is
+partition-invariant (and immune to ANSI overflow), which is what resume
+verification compares. A stage whose (rows, checksum) was observed on a
+write is ONE record with ``partition_id=-1``; a stage that had to be
+scanned has one record per partition. Sum/XOR over a stage's records
+(`global_checksum`) is the same either way.
 
 Resume = skip any stage whose output already exists with a _SUCCESS marker
 (atomic commit), loading it instead of recomputing. Incomplete outputs
@@ -25,26 +28,34 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def lineage_scan(df: DataFrame, stage: str, key_cols=None) -> DataFrame:
-    """(stage, partition_id, h) pre-aggregation frame for ONE stage.
+def lineage_scan(df: DataFrame, stage: str, key_cols) -> DataFrame:
+    """(stage, partition_id, h) pre-aggregation frame for ONE stage that
+    has no observed checksum (a resumed table, an in-memory stage, or a
+    pass-through frame whose consumer did not write).
 
-    All stages' frames are unioned and aggregated in a SINGLE
-    groupBy(stage, partition_id) — one shuffle, one AQE round, one job for
-    the whole pipeline's lineage, instead of one exchange per stage (the
-    per-stage groupBys dominated the orchestration floor at small inputs).
-
-    ``key_cols=None`` marks a freshly-written stage whose global checksum
-    already rode the write action (Observation): its frame carries a null
-    hash term (bit_xor over all-nulls aggregates to null) and reads ZERO
-    columns — parquet/ORC answer it from row-group metadata. Stages without
-    an observed checksum (pass-through inputs, resumed tables) hash their
-    key columns in full."""
-    h = F.xxhash64(*key_cols) if key_cols else F.lit(None).cast("long")
+    `CheckpointManager.finalize` unions every such frame and aggregates
+    them in a single groupBy(stage, partition_id) collect, instead of one
+    exchange per stage (per-stage groupBys dominated the orchestration
+    floor at small inputs). A fresh checkpointed run has none."""
     return df.select(
         F.lit(stage).alias("stage"),
         F.spark_partition_id().alias("partition_id"),
-        h.alias("h"),
+        F.xxhash64(*key_cols).alias("h"),
     )
+
+
+def _observe(df: DataFrame, obs: Observation, key_cols) -> DataFrame:
+    """``df`` observed for (rows, checksum) on its first action."""
+    return df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(F.xxhash64(*key_cols)).alias("checksum"),
+    )
+
+
+def _rows_checksum(obs: Observation) -> tuple:
+    got = obs.get
+    return int(got["rows"]), int(got["checksum"] or 0)
 
 
 def global_checksum(lineage_rows, stage: str | None = None) -> tuple:
@@ -77,8 +88,9 @@ class CheckpointManager:
         self.fmt = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
         self.lineage: list = []
         self.resumed_stages: list = []
+        # (stage, frame, key_cols, Observation | None) awaiting finalize()
         self._pending: list = []
-        self._observed: dict[str, int] = {}
+        self._observed: dict[str, tuple] = {}
         self._walls: dict[str, float] = {}
         self._row_counts: dict[str, int] = {}
 
@@ -130,7 +142,7 @@ class CheckpointManager:
         write+rescan it would save).
         """
         t0 = time.time()
-        csum = None
+        obs = None
         if materialize and self.base_dir and self.resume and self._complete(name):
             df = self.spark.read.format(self.fmt).load(self._path(name))
             self.resumed_stages.append(name)
@@ -140,83 +152,83 @@ class CheckpointManager:
             if materialize and self.base_dir:
                 # right-size the file count: narrow chains inherit the
                 # source's partitioning (e.g. 256 input files), and paying
-                # a commit + lineage barrier over hundreds of tiny files
-                # per stage is pure driver-serial overhead. coalesce is a
-                # no-op when the plan already has <= target partitions, so
-                # it is applied unconditionally — probing getNumPartitions
-                # first would finalize the AQE plan and run every upstream
-                # shuffle's map stages a second time. Row count AND the
+                # a commit barrier over hundreds of tiny files per stage is
+                # pure driver-serial overhead. coalesce is a no-op when the
+                # plan already has <= target partitions, so it is applied
+                # unconditionally — probing getNumPartitions first would
+                # finalize the AQE plan and run every upstream shuffle's
+                # map stages a second time. Row count AND the
                 # partition-invariant XOR checksum ride the write action
                 # itself (zero extra jobs).
                 target = 4 * self.spark.sparkContext.defaultParallelism
-                obs = Observation(f"lineage_{name}")
-                df = df.coalesce(target).observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.bit_xor(F.xxhash64(*key_cols)).alias("checksum"),
-                )
-                df.write.format(self.fmt).mode("overwrite").save(self._path(name))
-                got = obs.get
-                self._row_counts[name] = int(got["rows"])
-                csum = int(got["checksum"]) if got["checksum"] is not None else 0
-                df = self.spark.read.format(self.fmt).load(self._path(name))
+                written = Observation(f"lineage_{name}")
+                _observe(df.coalesce(target), written, key_cols).write.format(
+                    self.fmt
+                ).mode("overwrite").save(self._path(name))
+                self._observed[name] = _rows_checksum(written)
+                self._row_counts[name] = self._observed[name][0]
+                # read back with the schema the driver already holds:
+                # inferring it from the files costs one job per stage.
+                # Iceberg tables carry their own schema.
+                reader = self.spark.read.format(self.fmt)
+                if self.fmt != "iceberg":
+                    reader = reader.schema(df.schema)
+                df = reader.load(self._path(name))
             elif materialize:
                 # no checkpoint dir (in-memory run): lazily localCheckpoint
                 # multi-consumer stage outputs so the first action
                 # materializes them once instead of re-running the full
                 # upstream DAG per downstream consumer.
                 df = df.localCheckpoint(eager=False)
+            elif self.base_dir:
+                # pass-through frame: its (rows, checksum) rides the write
+                # of its single consumer. Checkpointed runs only: a lazy
+                # localCheckpoint (the in-memory path) completes the
+                # observation before computing anything, with 0 rows.
+                obs = Observation(f"lineage_{name}")
+                df = _observe(df, obs, key_cols)
         self._walls[name] = (time.time() - t0) * 1000.0
-        # defer the collect: per-stage lineage actions each pay a full job
-        # barrier; finalize() unions every stage's pre-agg frame and runs
-        # ONE job with ONE shuffle. Freshly-written stages contribute only
-        # a zero-column row-count scan (their checksum rode the write
-        # Observation); resumed and pass-through stages hash their key
-        # columns in full.
-        if csum is not None:
-            self._observed[name] = csum
-            self._pending.append(lineage_scan(df, name))
-        else:
-            self._pending.append(lineage_scan(df, name, key_cols))
+        if name not in self._observed:
+            self._pending.append((name, df, key_cols, obs))
         return df
 
     def finalize(self) -> None:
-        """Materialize all pending lineage in a single action (one job,
-        one groupBy(stage, partition_id) shuffle across every stage).
+        """Turn this run's stages into lineage rows.
 
-        Observed (write-carried) checksums join the collected rows as one
-        synthetic partition_id=-1 row each (rows=0): `global_checksum`'s
-        XOR/sum aggregation is partition-invariant, so consumers see
-        exactly the same (rows, checksum) the full per-partition hash
-        would produce — with no second scan of any stage table."""
-        if not self._pending:
-            return
+        A stage observed on a write (its own, or its consumer's for a
+        pass-through frame) becomes one ``partition_id=-1`` row with its
+        real row count: zero jobs. Every other stage — resumed tables
+        (the scan IS the resume check), the in-memory path, a pass-through
+        frame whose consumer was resumed — is hashed per partition, all
+        of them in ONE union + groupBy(stage, partition_id) collect.
+        `global_checksum` sums/XORs a stage's rows, so both forms give the
+        same (rows, checksum)."""
         from pyspark.sql import Row
 
-        u = self._pending[0]
-        for frame in self._pending[1:]:
-            u = u.unionByName(frame)
-        agg = u.groupBy("stage", "partition_id").agg(
-            F.count("*").alias("rows"), F.bit_xor("h").alias("checksum")
-        )
-        for r in agg.collect():
-            self.lineage.append(
-                Row(
-                    stage=r["stage"],
-                    partition_id=r["partition_id"],
-                    rows=r["rows"],
-                    checksum=r["checksum"],
-                    wall_ms=float(self._walls.get(r["stage"], 0.0)),
-                )
+        scans = []
+        for name, df, key_cols, obs in self._pending:
+            # never `obs.get` an observation that did not fire: it blocks
+            if obs is not None and obs._jo.future().isCompleted():
+                self._observed[name] = _rows_checksum(obs)
+            else:
+                scans.append(lineage_scan(df, name, key_cols))
+        parts = [(name, -1, *got) for name, got in self._observed.items()]
+        if scans:
+            u = scans[0]
+            for frame in scans[1:]:
+                u = u.unionByName(frame)
+            agg = u.groupBy("stage", "partition_id").agg(
+                F.count("*").alias("rows"), F.bit_xor("h").alias("checksum")
             )
-        for name, csum in self._observed.items():
+            parts += [tuple(r) for r in agg.collect()]
+        for stage, pid, rows, csum in parts:
             self.lineage.append(
                 Row(
-                    stage=name,
-                    partition_id=-1,
-                    rows=0,
-                    checksum=int(csum),
-                    wall_ms=float(self._walls.get(name, 0.0)),
+                    stage=stage,
+                    partition_id=pid,
+                    rows=rows,
+                    checksum=csum,
+                    wall_ms=float(self._walls.get(stage, 0.0)),
                 )
             )
         self._pending = []

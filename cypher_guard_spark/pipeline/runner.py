@@ -35,6 +35,15 @@ def run_pipeline(
     db_schema=None,
 ) -> dict:
     """Returns {stage_name: DataFrame} + 'lineage' rows + 'resumed_stages'."""
+    # checked before any stage runs: 0 would otherwise fail only after
+    # four stage tables are written, and a negative batch size would
+    # silently build one giant batch
+    for arg, value in (
+        ("salt_buckets", salt_buckets),
+        ("statements_per_batch", statements_per_batch),
+    ):
+        if value < 1:
+            raise ValueError(f"{arg} must be >= 1, got {value}")
     if db_schema is None:
         db_schema = pipeline_db_schema()
     cm = CheckpointManager(spark, checkpoint_dir, resume=resume)

@@ -1,6 +1,7 @@
 """Pipeline correctness (SURVEY.md §5.2 steps 3-4): span-sequence equality,
 triple P/R ≥ 0.95, MERGE-batch validation gate, checkpoint/resume."""
 
+import os
 import shutil
 
 import pytest
@@ -157,6 +158,111 @@ def test_lineage_rows_cover_all_stages(result):
     } <= stages
 
 
+WRITTEN_STAGES = (
+    "triples_raw",
+    "link_stats",
+    "entity_map",
+    "triples",
+    "merge_batches",
+    "verdicts",
+)
+ALL_STAGES = ("documents", "mentions") + WRITTEN_STAGES
+
+
+def _checksums(lineage) -> dict:
+    from cypher_guard_spark.pipeline.lineage import global_checksum
+
+    return {s: global_checksum(lineage, s) for s in ALL_STAGES}
+
+
+def test_fresh_run_lineage_finalize_starts_no_job(spark, corpus, tmp_path, monkeypatch):
+    """On a fresh checkpointed run every stage's (rows, checksum) rode a
+    write, so finalize() has nothing left to scan."""
+    from cypher_guard_spark.pipeline import run_pipeline
+    from cypher_guard_spark.pipeline.lineage import CheckpointManager
+
+    sc = spark.sparkContext
+    group = "lineage-finalize-test"
+    finalize = CheckpointManager.finalize
+
+    def grouped(self):
+        sc.setJobGroup(group, group)
+        try:
+            finalize(self)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(CheckpointManager, "finalize", grouped)
+    docs, _ = corpus
+    out = run_pipeline(spark, docs, checkpoint_dir=str(tmp_path / "ckpt"))
+    assert {r["stage"] for r in out["lineage"]} == set(ALL_STAGES)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_written_stages_have_one_lineage_row_with_table_count(spark, result):
+    out, ckpt = result
+    for stage in WRITTEN_STAGES:
+        rows = [r for r in out["lineage"] if r["stage"] == stage]
+        assert len(rows) == 1, (stage, rows)
+        assert rows[0]["partition_id"] == -1
+        table = spark.read.format(os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet"))
+        assert rows[0]["rows"] == table.load(f"{ckpt}/{stage}").count(), stage
+
+
+def test_pass_through_lineage_matches_independent_hash(spark, corpus, result):
+    """documents/mentions are observed on their consumer's write (one
+    partition_id=-1 row each); the values equal a direct hash of frames
+    rebuilt from the corpus."""
+    from pyspark.sql import functions as F
+
+    from cypher_guard_spark.pipeline.lineage import global_checksum
+    from cypher_guard_spark.pipeline.mentions import (
+        extract_triples_raw,
+        mentions_from_triples,
+    )
+
+    docs, _ = corpus
+    out, _ = result
+    mentions = mentions_from_triples(extract_triples_raw(docs))
+    for stage, frame, key in (("documents", docs, "doc_id"), ("mentions", mentions, "mention_id")):
+        assert [r["partition_id"] for r in out["lineage"] if r["stage"] == stage] == [-1]
+        want = frame.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(key))).first()
+        assert global_checksum(out["lineage"], stage) == (want[0], want[1]), stage
+
+
+def test_in_memory_run_has_lineage_for_every_stage(spark, corpus, result):
+    """checkpoint_dir=None: consumers are lazy localCheckpoints, which would
+    complete a pass-through observation with 0 rows, so every stage is
+    scanned — and agrees with the checkpointed run."""
+    from cypher_guard_spark.pipeline import run_pipeline
+
+    docs, _ = corpus
+    out, _ = result
+    mem = run_pipeline(spark, docs, checkpoint_dir=None)
+    assert {r["stage"] for r in mem["lineage"]} == set(ALL_STAGES)
+    assert _checksums(mem["lineage"]) == _checksums(out["lineage"])
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_run_pipeline_rejects_salt_buckets_below_one(spark, corpus, tmp_path, bad):
+    from cypher_guard_spark.pipeline import run_pipeline
+
+    docs, _ = corpus
+    with pytest.raises(ValueError, match="salt_buckets"):
+        run_pipeline(spark, docs, checkpoint_dir=str(tmp_path), salt_buckets=bad)
+    assert list(tmp_path.iterdir()) == []
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_run_pipeline_rejects_statements_per_batch_below_one(spark, corpus, tmp_path, bad):
+    from cypher_guard_spark.pipeline import run_pipeline
+
+    docs, _ = corpus
+    with pytest.raises(ValueError, match="statements_per_batch"):
+        run_pipeline(spark, docs, checkpoint_dir=str(tmp_path), statements_per_batch=bad)
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_resume_skips_completed_stages_and_reproduces(spark, corpus, result):
     """Kill-after-stage-N simulation: wipe downstream outputs, rerun, and
     require (a) upstream stages resumed not recomputed, (b) identical
@@ -184,6 +290,22 @@ def test_resume_skips_completed_stages_and_reproduces(spark, corpus, result):
     assert "triples" not in out2["resumed_stages"]
     rows_after, csum_after = global_checksum(out2["lineage"], "triples")
     assert (rows_before, csum_before) == (rows_after, csum_after)
+
+
+def test_resumed_run_reproduces_every_stage_checksum(spark, corpus, result):
+    """A rerun over complete checkpoints resumes every written stage, so
+    the pass-through frames' consumers never write and documents/mentions
+    fall back to the per-partition hash scan: all 8 stages' (rows,
+    checksum) still equal the fresh run's."""
+    from cypher_guard_spark.pipeline import run_pipeline
+
+    docs, _ = corpus
+    out, ckpt = result
+    again = run_pipeline(spark, docs, checkpoint_dir=ckpt)
+    assert set(again["resumed_stages"]) == set(WRITTEN_STAGES)
+    for stage in ("documents", "mentions"):
+        assert all(r["partition_id"] >= 0 for r in again["lineage"] if r["stage"] == stage)
+    assert _checksums(again["lineage"]) == _checksums(out["lineage"])
 
 
 def test_cc_driver_fast_path_matches_distributed_loop(spark):
