@@ -2,16 +2,26 @@
 
 entry(spark)   — flagship query (KG extraction over the synthesized
                  interleaved corpus + guard verdict join) at sf0.001 scale.
-queries()      — one entry per operator family (SURVEY.md §2 + ops):
-                 relational, dedup, text analysis, similarity search, and
-                 the reimplemented cypher-guard (verdicts over the golden
-                 corpus as a VALUES oracle).
-oracle_sql()   — exact DuckDB ANSI-SQL twins; column names/aliases match
-                 the Spark side 1:1.
+registry()     — the single table of registry entries, one
+                 `(name, build, oracle)` tuple each, over every operator
+                 family (SURVEY.md §2 + ops): relational, dedup, text
+                 analysis, similarity search, the KG pipeline and graph
+                 kernels, and the reimplemented cypher-guard. List order
+                 is the driver order (the CORRECTNESS artifact verifies
+                 roughly the first 50 entries).
+queries()      — {name: build}, a view of registry().
+oracle_sql()   — {name: oracle()}, a view of registry(): exact DuckDB
+                 ANSI-SQL twins whose column names/aliases match the Spark
+                 side 1:1.
+
+Adding an entry is one tuple in registry(): `build(spark, sf_dir)`
+returns the DataFrame, `oracle` is a zero-argument callable returning
+the twin's SQL, or None for a rows-only entry.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -2903,10 +2913,10 @@ def _kg_triple_diff_values() -> str:
         (old if int(d.split("-")[1]) % 2 == 0 else new).add((s, _r, o))
     rows = [
         f"({_sql_quote(s)}, {_sql_quote(p)}, {_sql_quote(o)}, 'added')"
-        for s, p, o in new - old
+        for s, p, o in sorted(new - old)
     ] + [
         f"({_sql_quote(s)}, {_sql_quote(p)}, {_sql_quote(o)}, 'removed')"
-        for s, p, o in old - new
+        for s, p, o in sorted(old - new)
     ]
     return (
         "SELECT * FROM (VALUES "
@@ -3401,7 +3411,7 @@ def _kg_ktruss_values(k: int = 3) -> str:
         if keep == und:
             break
         und = keep
-    rows = [f"({_sql_quote(a)}, {_sql_quote(b)})" for a, b in und]
+    rows = [f"({_sql_quote(a)}, {_sql_quote(b)})" for a, b in sorted(und)]
     if not rows:
         return (
             "SELECT * FROM (VALUES ('', '')) AS t(a, b) WHERE 1 = 0"
@@ -4257,13 +4267,15 @@ def _py_mention_counts(triples) -> dict:
     return counts
 
 
-def _py_kg_canonical_triples(n_docs: int | None = None) -> list:
+@functools.cache
+def _py_kg_canonical_triples(n_docs: int | None = None) -> tuple:
     """Pure-Python twin of the whole canonicalization pipeline: the same
     render → regex extraction as `_kg_triples_raw_values`, mention counts
     per (label, surface), the `_driver_entity_map` twin (itself equality-
     locked against the distributed path by tests/test_pipeline.py), and
     the subj/obj map application. Returns
-    [(doc_id, subj, pred, obj, subj_label, obj_label)]."""
+    ((doc_id, subj, pred, obj, subj_label, obj_label), ...), computed once
+    per process: a pure function of the synthesized corpus."""
     from cypher_guard_spark.pipeline.canonicalize import _driver_entity_map
 
     triples = _py_kg_raw_triples(n_docs)
@@ -4277,10 +4289,10 @@ def _py_kg_canonical_triples(n_docs: int | None = None) -> list:
             [(l, s, n) for (l, s), n in counts.items()], 16, 8, 0.6
         )
     }
-    return [
+    return tuple(
         (d, emap.get((sl, s), s), r, emap.get((ol, o), o), sl, ol)
         for d, s, r, o, sl, ol in triples
-    ]
+    )
 
 
 def _kg_canonical_triples_values() -> str:
@@ -4509,10 +4521,19 @@ def _round6(x: float) -> float:
 
 def _py_minhash_pairs(
     n: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.3
-) -> list[tuple[int, int, float]]:
+) -> tuple[tuple[int, int, float], ...]:
     """Pure-Python twin of ops.dedup.minhash_near_duplicates: sorted
     (a, b, sim) with sim rounded and thresholded. Shared by the pair-level
-    oracle and the clustering oracle so both verify the same pair set."""
+    oracle and the clustering oracles so all verify the same pair set;
+    computed once per (documents dir, parameters)."""
+    return _py_minhash_pairs_at(_oracle_sf_dir(), n, num_hashes, bands, threshold)
+
+
+@functools.cache
+def _py_minhash_pairs_at(
+    sf_dir: str, n: int, num_hashes: int, bands: int, threshold: float
+) -> tuple[tuple[int, int, float], ...]:
+    # sf_dir only keys the cache: _oracle_documents() reads that same dir
     from collections import defaultdict
 
     from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
@@ -4546,7 +4567,7 @@ def _py_minhash_pairs(
         sim = _round6(len(sa & sb) / len(sa | sb))
         if sim >= threshold:
             out.append((a, b, sim))
-    return out
+    return tuple(out)
 
 
 def _py_neardup_incremental(
@@ -5482,595 +5503,47 @@ def _cached_coarse_centroids(spark: SparkSession, sf_dir: str, k: int = 8,
     )
 
 
-# Names that must occupy the HEAD of the queries() registry, in order. The
-# driver's CORRECTNESS artifact verifies roughly the first 50 entries per
-# round; rounds 1-4 spent that budget re-verifying the round-1 entries, so
-# the 51 entries below (plus this round's new ones) had never appeared in an
-# official artifact despite being judge-verified green at sf0.01 (VERDICT r4
-# task 1). First the eight the verdict names explicitly, then the new
-# round-5 search-only entries, then the rest of the never-checked set; the
-# last three (transitively exercised / map-only ops) are the ones that
-# overflow a strict 50-entry window.
-_DRIVER_WINDOW_PRIORITY = [
-    "kg_extraction_pr",
-    "kg_cypher_match",
-    "kg_cypher_varlen",
-    "kg_cypher_coworkers",
-    "kg_cypher_degrees",
-    "kg_cypher_optional",
-    "kg_cypher_unwind",
-    "kg_cypher_relvar",
-    "kg_cypher_with",
-    "kg_cypher_with_chain",
-    "kg_merge_apply",
-    "kg_cypher_applied",
-    "kg_cypher_call",
-    "kg_cypher_proc",
-    "emb_hard_negatives",
-    "doc_source_cap",
-    "kg_backbone",
-    "kg_louvain",
-    "kg_scc",
-    "kg_ktruss",
-    "kg_betweenness",
-    "emb_ivfpq_topk",
-    "emb_pq_topk",
-    "corpus_bpe_merges",
-    "media_phash_dups",
-    "corpus_curated_shards",
-    "emb_pq_search",
-    "emb_ivfpq_search",
-    "kg_entity_map",
-    "kg_components",
-    "kg_entity_map_update",
-    "kg_hits",
-    "kg_random_walks",
-    "kg_walk_pairs",
-    "kg_walk_negatives",
-    "kg_entity_cooccur",
-    "kg_fuzzy_surfaces",
-    "kg_khop",
-    "kg_neighborhood_function",
-    "kg_harmonic",
-    "kg_closeness",
-    "kg_conflicts",
-    "kg_triple_history",
-    "kg_schema_infer",
-    "kg_schema_roundtrip",
-    "kg_shortest_paths",
-    "kg_path_tree",
-    "kg_triple_fusion",
-    "kg_triple_diff",
-    "kg_entity_similarity",
-    "kg_communities",
-    "kg_modularity",
-    "kg_graph_profile",
-    "kg_assortativity",
-    "kg_triangles",
-    "kg_clustering",
-    "kg_bfs_depths",
-    "kg_kcore",
-    "kg_link_prediction",
-    "kg_ppr",
-    "kg_neighbor_sample",
-    "emb_pq_codebooks",
-    "emb_curation",
-    "corpus_quality_floor",
-    "corpus_collocations",
-    "doc_oov_rates",
-    "doc_compression",
-    "doc_pii_redacted",
-    "doc_bpe_tokens",
-    "corpus_vocab",
-    "emb_projected",
-    "corpus_length_quantiles",
-]
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from cypher_guard_spark.ops import (
-        decontam,
-        dedup,
-        relational,
-        sample,
-        similarity,
-        temporal,
-        text,
+# DuckDB fragments shared by several oracles. The language vote mirrors
+# text.language_id: the stop-word list with the most distinct hits wins,
+# ties go to the alphabetically first language and no hit at all is 'und'.
+_LANGS_SQL = {
+    "de": "['der','die','das','und','ist','ein']",
+    "en": "['the','a','of','and','to','in','is']",
+    "es": "['el','la','los','y','es','un']",
+    "fr": "['le','la','les','et','est','un']",
+}
+_LANG_HIT_SQL = {
+    lang: (
+        "len(list_intersect(list_distinct(regexp_split_to_array(lower(trim(text)),"
+        f" '\\s+')), {words}))"
     )
-
-    from cypher_guard_spark.ops import bpe
-
-    def _docs(spark, sf_dir):
-        return relational.load(spark, sf_dir, "documents")
-
-    def _emb(spark, sf_dir):
-        return relational.load(spark, sf_dir, "embeddings")
-
-    reg = {
-        # relational / analytic
-        "q1_pricing_summary": relational.q1_pricing_summary,
-        "q3_unshipped_revenue": relational.q3_unshipped_revenue,
-        "q5_nation_revenue": relational.q5_nation_revenue,
-        "order_priority_counts": relational.order_priority_counts,
-        "top_customers_by_revenue": relational.top_customers_by_revenue,
-        "events_hourly": relational.events_hourly,
-        "events_top_users": relational.events_top_users,
-        "events_sessionized": relational.events_sessionized,
-        # temporal joins (asof / range — primitives Spark lacks)
-        "events_asof_purchase": q_events_asof_purchase,
-        # first-order Markov transition counts over each user's
-        # time-ordered event sequence (next-event prediction / funnel
-        # discovery input) — one keyed window exchange, then a tiny
-        # |types|^2-key partial agg
-        "events_transitions": lambda s, d: temporal.event_transitions(
-            relational.load(s, d, "events")
-        ),
-        "events_purchase_window": q_events_purchase_window,
-        # event-rate anomaly report: z-scores from explicit integer-sum
-        # moments (never stddev_samp's order-dependent streaming merge);
-        # one corpus-sized partial-agg shuffle, grid-sized stats join
-        "events_rate_anomalies": lambda s, d: temporal.rate_anomalies(
-            relational.load(s, d, "events"), z_threshold=2.0
-        ),
-        # exponentially-decayed per-user activity — exact dyadic weights
-        # (2^-age via bit shifts, int64 partial agg, one binary re-scale)
-        "events_activity_decay": lambda s, d: temporal.activity_decay(
-            relational.load(s, d, "events"), cap_days=30
-        ),
-        "events_rollup_incremental": q_events_rollup_incremental,
-        "events_funnel": q_events_funnel,
-        "events_retention": relational.events_retention,
-        # dedup
-        "doc_exact_dedup": lambda s, d: dedup.exact_duplicates(_docs(s, d)),
-        "doc_ngram_jaccard_pairs": lambda s, d: dedup.ngram_jaccard_pairs(
-            _docs(s, d), threshold=0.2
-        ),
-        "doc_minhash_near_dups": lambda s, d: dedup.minhash_near_duplicates(
-            _docs(s, d), threshold=0.3
-        ),
-        "doc_neardup_incremental": lambda s, d: dedup.neardup_incremental(
-            _docs(s, d).where(F.col("doc_id") % 2 == 1),
-            dedup.band_rows(_docs(s, d).where(F.col("doc_id") % 2 == 0)),
-            _docs(s, d).where(F.col("doc_id") % 2 == 0),
-            threshold=0.3,
-        ),
-        "doc_simhash_near_dups": lambda s, d: dedup.simhash_near_duplicates(
-            _docs(s, d), max_hamming=12
-        ),
-        "doc_neardup_clusters": lambda s, d: dedup.neardup_clusters(
-            s, _docs(s, d), threshold=0.3
-        ),
-        # contamination-free train/eval carve: the split key is the
-        # near-dup CLUSTER, so no minhash pair can cross the boundary
-        "doc_leakage_split": lambda s, d: dedup.leakage_safe_split(
-            s, _docs(s, d), eval_pct=10, threshold=0.3
-        ),
-        "doc_neardup_survivors": lambda s, d: dedup.neardup_survivors(
-            s, _docs(s, d), threshold=0.3
-        ).select("doc_id", "source", "lang", "n_chars"),
-        "doc_neardup_report": lambda s, d: dedup.neardup_report(
-            s, _docs(s, d), threshold=0.3
-        ),
-        # corpus-governance duplication matrix: near-dup mass per SOURCE
-        # pair (who re-hosts whom), composed off the same LSH pair list
-        "doc_source_dup_matrix": lambda s, d: dedup.cross_source_dup_matrix(
-            _docs(s, d), threshold=0.3
-        ),
-        "doc_decontam": lambda s, d: decontam.contamination_report(
-            _docs(s, d).where(F.col("doc_id") % 97 != 0),
-            _docs(s, d).where(F.col("doc_id") % 97 == 0),
-            n=3,
-        ),
-        "doc_fuzzy_decontam": lambda s, d: decontam.fuzzy_contamination(
-            _docs(s, d).where(F.col("doc_id") % _FUZZY_MOD != 0),
-            _docs(s, d).where(F.col("doc_id") % _FUZZY_MOD == 0),
-            threshold=0.2,
-        ),
-        "doc_decontam_spans": lambda s, d: decontam.contamination_spans(
-            _docs(s, d).where(F.col("doc_id") % 97 != 0),
-            _docs(s, d).where(F.col("doc_id") % 97 == 0),
-            n=3,
-        ),
-        # corpus-wide line dedup: the flat synthetic text has no newlines,
-        # so the query derives a multi-line corpus deterministically first
-        # (newline after every 8th token) — the operator itself is the
-        # general RefinedWeb boilerplate-line removal
-        "doc_line_dedup": lambda s, d: dedup.line_dedup(
-            _docs(s, d).withColumn(
-                "text",
-                F.regexp_replace(
-                    F.col("text"), r"((?:\S+\s+){7}\S+)\s+", "$1\n"
-                ),
-            ),
-            min_docs=2,
-        ),
-        # span-granular duplication diagnostic (Lee et al. ExactSubstr at
-        # n-gram granularity): fraction of each doc's tokens covered by a
-        # cross-doc duplicated n-gram — digest-only frequency shuffle,
-        # broadcast semi-join, integer interval-union fold per doc
-        "doc_dup_ngram_coverage": lambda s, d: dedup.dup_ngram_coverage(
-            _docs(s, d), n=5, min_docs=2
-        ),
-        # deterministic sampling (training-data curation)
-        "doc_stratified_sample": lambda s, d: sample.stratified_sample(
-            _docs(s, d), sample.length_bucket(), _SAMPLE_FRACTIONS
-        ).select("doc_id", "stratum"),
-        "doc_balanced_sample": lambda s, d: sample.balanced_sample(
-            _docs(s, d), sample.length_bucket(), k=25
-        ).select("doc_id", "stratum", "rnk"),
-        # continuous importance sampling: keep-probability = the quality
-        # score itself (quality-weighted corpus thinning)
-        "doc_weighted_sample": lambda s, d: sample.weighted_sample(
-            text.quality_scores(_docs(s, d)), weight=F.col("quality")
-        ),
-        # DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
-        # importance lift of every raw doc vs a small target exemplar set
-        # (doc_id % 23 == 0 plays the target domain); exact-integer
-        # ratio-of-means scoring, B=4096 buckets broadcast
-        "doc_dsir_weights": lambda s, d: sample.dsir_weights(
-            _docs(s, d).where(F.col("doc_id") % 23 != 0),
-            _docs(s, d).where(F.col("doc_id") % 23 == 0),
-            buckets=4096,
-        ),
-        # the DSIR RESAMPLING step: importance lift (capped at 1) becomes
-        # the per-row keep probability of the deterministic hash-Bernoulli
-        # sampler — weights → weighted_sample, the full Xie et al. recipe
-        "doc_dsir_selected": lambda s, d: sample.weighted_sample(
-            sample.dsir_weights(
-                _docs(s, d).where(F.col("doc_id") % 23 != 0),
-                _docs(s, d).where(F.col("doc_id") % 23 == 0),
-                buckets=4096,
-            ),
-            weight=F.least(F.col("lift"), F.lit(1.0)),
-        ),
-        "doc_training_shards": lambda s, d: sample.shuffle_shards(
-            _docs(s, d), 8, seed=0
-        ).select("doc_id", "shard", "pos"),
-        "doc_pack_sequences": lambda s, d: sample.pack_sequences(
-            _docs(s, d), budget=64, n_shards=4
-        ),
-        "corpus_mixture": lambda s, d: sample.token_budget_mixture(
-            _docs(s, d), _MIXTURE_WEIGHTS, _MIXTURE_TOTAL
-        ),
-        # sliding context-window chunking (RAG ingestion / long-doc
-        # pretraining split); 48-token windows every 32 tokens so the
-        # synthetic corpus median (~50-70 tokens) exercises multi-chunk,
-        # tail-shorter-than-window, and single-chunk docs at once
-        "doc_chunks": lambda s, d: sample.chunk_documents(
-            _docs(s, d), chunk_tokens=48, stride=32
-        ),
-        # text analysis
-        # the synthetic corpus is single-line and unpunctuated, so the
-        # driver instantiation gates on word count (require_punct=False,
-        # min_words=50 ~ the corpus median); the punctuation path is
-        # pytest-locked on crafted multi-line docs
-        "doc_clean_text": lambda s, d: text.clean_text(
-            _docs(s, d), min_words=50, require_punct=False
-        ).select("doc_id", "clean_text", "n_lines_kept", "n_lines_dropped"),
-        "doc_token_stats": lambda s, d: text.token_count(_docs(s, d)),
-        "doc_quality_scores": lambda s, d: text.quality_scores(_docs(s, d)),
-        "doc_language_id": lambda s, d: text.language_id(_docs(s, d)),
-        "doc_fingerprints": lambda s, d: text.fingerprints(_docs(s, d)),
-        # lexical diversity: type-token ratio + Simpson repeat
-        # concentration — exact-integer ratios, spam/template signal
-        "doc_lexical_diversity": lambda s, d: text.lexical_diversity(
-            _docs(s, d)
-        ),
-        "doc_subword_counts": lambda s, d: text.bpe_ish_token_count(_docs(s, d)),
-        "doc_top_bigrams": lambda s, d: text.top_ngrams(_docs(s, d), n=2, k=20),
-        "doc_pii_counts": lambda s, d: text.pii_counts(_docs(s, d)),
-        "doc_repetition_scores": lambda s, d: text.repetition_scores(_docs(s, d), n=2),
-        "doc_tfidf_keywords": lambda s, d: text.tfidf_keywords(_docs(s, d), k=5),
-        "doc_bm25_topk": lambda s, d: text.bm25_topk(
-            _docs(s, d), _BM25_TERMS, topk=20
-        ),
-        "doc_bigram_cohesion": lambda s, d: text.bigram_cohesion(_docs(s, d)),
-        "doc_rarity_scores": lambda s, d: text.rarity_scores(
-            _docs(s, d), rare_max_df=2
-        ),
-        "corpus_source_mix": lambda s, d: text.source_mix(_docs(s, d)),
-        # oracle gate opts into exact distinct counts; the production
-        # default is the HLL sketch mode (approx_count_distinct)
-        "corpus_cardinality": lambda s, d: text.corpus_cardinality(
-            _docs(s, d), exact=True
-        ),
-        # oracle gate opts into the exact rank rule; the production
-        # default is the approx_percentile threshold (no per-source sort)
-        "corpus_quality_floor": lambda s, d: text.quality_floor(
-            _docs(s, d), q=0.2, exact=True
-        ),
-        "corpus_collocations": lambda s, d: text.collocations(
-            _docs(s, d), window=5, min_count=5, k=50
-        ),
-        # frequency-ranked vocabulary (tokenizer-training prerequisite):
-        # ids are the 0-based rank under the (count DESC, token ASC) total
-        # order so they are engine/run-stable; the rank window runs over
-        # the vocab_size survivor set only, never the corpus
-        "corpus_vocab": lambda s, d: text.build_vocab(
-            _docs(s, d), vocab_size=200, min_count=2
-        ),
-        # Heaps-law vocabulary growth: distinct token types vs corpus
-        # prefix at 10 doc-id checkpoints — pure-integer contract
-        "corpus_vocab_growth": lambda s, d: text.vocab_growth(
-            _docs(s, d), n_checkpoints=10
-        ),
-        # tokenizer QA: per-doc OOV share against the corpus_vocab table
-        # (top-200/min-2), same tokens() expression on both sides
-        "doc_oov_rates": lambda s, d: text.oov_rates(
-            _docs(s, d), text.build_vocab(_docs(s, d), vocab_size=200, min_count=2)
-        ),
-        # zlib repetitiveness signal (FineWeb/DCLM-family heuristic);
-        # the sanctioned Pandas-UDF carve-out — byte-level DEFLATE has no
-        # Catalyst expression
-        "doc_compression": lambda s, d: text.compression_ratios(_docs(s, d)),
-        # fixed-chain PII scrubbing behind the pii_counts pre-scan. The
-        # synthetic corpus is PII-free (as for doc_pii_counts), so this
-        # gate locks the pass-through path byte-for-byte; replacement
-        # semantics are locked by tests/test_ops.py::test_redact_pii_*
-        "doc_pii_redacted": lambda s, d: text.redact_pii(_docs(s, d)),
-        # real BPE trainer: corpus scanned ONCE (word-frequency agg),
-        # merge loop runs over the vocabulary-sized word table — exact
-        # integer counts + total tie order so the merge sequence is a
-        # pure function of the corpus (independent Counter-twin oracle)
-        "corpus_bpe_merges": lambda s, d: bpe.train_bpe(
-            _docs(s, d), num_merges=24, min_pair_count=2
-        ),
-        # encode with the trained merges (min-rank-first GPT-2 loop in an
-        # Arrow-batched kernel, distinct-word memo per batch, map-only
-        # plan) — oracle re-trains with the independent twin and encodes
-        # serially, verifying the full train->encode composition
-        "doc_bpe_tokens": lambda s, d: bpe.bpe_encode(
-            _docs(s, d), bpe.train_bpe(_docs(s, d), num_merges=24)
-        ).select("doc_id", "n_words", "n_subwords"),
-        # exact=True is the oracle gate's opt-in; the default (fast) mode
-        # is the approx-sketch plan that survives 10^12 rows
-        "corpus_length_quantiles": lambda s, d: text.length_quantiles(
-            _docs(s, d), exact=True
-        ),
-        "corpus_curated": q_corpus_curated,
-        "corpus_curated_shards": q_corpus_curated_shards,
-        # similarity search
-        # kNN label-agreement audit (confident-learning family): does
-        # each vector's cosine neighborhood vote for its own label —
-        # strict-minority agreement flags mislabeled candidates
-        # audits the vec_id < 1000 stratum — the docstring's sampled-audit
-        # posture (label noise is a population estimate); at sf0.01 the
-        # corpus has 500 vectors so the driver gate still audits ALL of
-        # them (hash unchanged), while the sf0.1 bench stops paying the
-        # full all-pairs scan
-        "emb_label_noise": lambda s, d: similarity.knn_label_noise(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 1000), k=10
-        ),
-        # semi-hard negative mining (FaceNet recipe): nearest
-        # different-label neighbors per anchor, re-ranked, top-5 kept
-        "emb_hard_negatives": lambda s, d: similarity.hard_negatives(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 50),
-            k=20, per_anchor=5
-        ),
-        # per-source saturation cap (RefinedWeb anti-domination guard):
-        # two-phase skew-safe top-cap; the single-window DuckDB twin
-        # doubles as the two-phase == one-phase equality proof
-        "doc_source_cap": lambda s, d: sample.source_cap(
-            _docs(s, d), cap=50, score_col="n_chars"
-        ),
-        # corpus frequency spectrum: types binned by floor(log2(count))
-        # — the Zipf-profile histogram; integer-exact, no vocab sort
-        "corpus_freq_spectrum": lambda s, d: text.frequency_spectrum(
-            _docs(s, d)
-        ),
-        "emb_knn_bruteforce": lambda s, d: similarity.brute_force_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5), k=10
-        ),
-        "emb_ann_lsh": lambda s, d: similarity.ann_lsh_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5), k=5, bits=8
-        ),
-        "emb_ivf_topk": lambda s, d: similarity.ivf_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
-            k=5, n_centroids=8, nprobe=2
-        ),
-        # IVF-PQ: pruning x compression composed (by_residual=False) —
-        # probed cells' CODES are the only thing scanned
-        "emb_ivfpq_topk": lambda s, d: similarity.ivfpq_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
-            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16
-        ),
-        "emb_label_centroids": lambda s, d: similarity.label_centroids(_emb(s, d)),
-        # product quantization: all m codebooks train in ONE tagged Lloyd
-        # loop; encode is a map-only literal argmin; ADC top-k scans the
-        # codes table with driver-baked per-query LUTs
-        "emb_pq_codebooks": lambda s, d: similarity.train_pq(
-            _emb(s, d), m=4, k=16, iters=2
-        ).select(
-            "subspace", "centroid_id", F.posexplode("center").alias("dim", "cx")
-        ),
-        "emb_pq_topk": lambda s, d: similarity.pq_topk(
-            _emb(s, d),
-            similarity.train_pq(_emb(s, d), m=4, k=16, iters=2),
-            _emb(s, d)
-            .where(F.col("vec_id") < 5)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-            ),
-            k=5,
-        ),
-        # search-only twins of the two entries above: codebooks/centroids
-        # come from the train-once process cache (literal rows), so the
-        # bench wall here is the ADC scan / cell-pruned search itself —
-        # the number that matters for a train-once/search-forever index
-        "emb_pq_search": lambda s, d: similarity.pq_topk(
-            _emb(s, d),
-            _cached_pq_codebooks(s, d, m=4, k=16, iters=2),
-            _emb(s, d)
-            .where(F.col("vec_id") < 5)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-            ),
-            k=5,
-        ),
-        "emb_ivfpq_search": lambda s, d: similarity.ivfpq_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
-            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16,
-            centroids=_cached_coarse_centroids(s, d, k=8, iters=2),
-            codebooks=_cached_pq_codebooks(s, d, m=4, k=16, iters=2),
-        ),
-        "emb_cosine_near_dups": lambda s, d: dedup.embedding_near_duplicates(
-            _emb(s, d), threshold=0.15
-        ),
-        "emb_semantic_dups": lambda s, d: dedup.semantic_duplicates(
-            _emb(s, d), n_clusters=8, threshold=0.3
-        ),
-        "emb_quantized": lambda s, d: similarity.quantize_embeddings(
-            _emb(s, d)
-        ).select("vec_id", F.posexplode("qvec").alias("dim", "q")),
-        "emb_curation": q_emb_curation,
-        "emb_projected": lambda s, d: similarity.project_embeddings(
-            _emb(s, d), out_dim=8, seed=0
-        ),
-        # multimodal plumbing (binary payload + typed metadata; stub kernel)
-        "media_features": q_media_features,
-        "media_frame_plan": q_media_frame_plan,
-        "media_resize": q_media_resize,
-        "media_phash_dups": q_media_phash_dups,
-        # cypher-guard (SURVEY §2 operator inventory, verdict parity)
-        "guard_verdicts": q_guard_verdicts,
-        "guard_error_codes": q_guard_error_codes,
-        "guard_is_write": q_guard_is_write,
-        "guard_accuracy": q_guard_accuracy,
-        # KG pipeline extraction (exact oracle); full pipeline is bench/pytest
-        "kg_triples_raw": q_kg_triples_raw,
-        "kg_canonical_triples": q_kg_canonical_triples,
-        "kg_extraction_pr": q_kg_extraction_pr,
-        "kg_cypher_match": q_kg_cypher_match,
-        "kg_cypher_varlen": q_kg_cypher_varlen,
-        "kg_cypher_coworkers": q_kg_cypher_coworkers,
-        "kg_cypher_degrees": q_kg_cypher_degrees,
-        "kg_cypher_optional": q_kg_cypher_optional,
-        "kg_cypher_unwind": q_kg_cypher_unwind,
-        "kg_cypher_relvar": q_kg_cypher_relvar,
-        "kg_cypher_with": q_kg_cypher_with,
-        "kg_cypher_with_chain": q_kg_cypher_with_chain,
-        "kg_merge_apply": q_kg_merge_apply,
-        "kg_cypher_applied": q_kg_cypher_applied,
-        "kg_cypher_call": q_kg_cypher_call,
-        "kg_cypher_proc": q_kg_cypher_proc,
-        "kg_backbone": q_kg_backbone,
-        "kg_louvain": q_kg_louvain,
-        "kg_entity_degrees": q_kg_entity_degrees,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_pagerank_weighted": q_kg_pagerank_weighted,
-        "kg_pagerank_recency": q_kg_pagerank_recency,
-        "kg_hits": q_kg_hits,
-        "kg_random_walks": q_kg_random_walks,
-        "kg_node2vec_walks": q_kg_node2vec_walks,
-        "kg_walk_pairs": q_kg_walk_pairs,
-        "kg_walk_negatives": q_kg_walk_negatives,
-        "kg_entity_cooccur": q_kg_entity_cooccur,
-        "kg_fuzzy_surfaces": q_kg_fuzzy_surfaces,
-        "kg_khop": q_kg_khop,
-        "kg_neighborhood_function": q_kg_neighborhood_function,
-        "kg_neighborhood_hyperball": q_kg_neighborhood_hyperball,
-        "kg_harmonic_hyperball": q_kg_harmonic_hyperball,
-        "kg_closeness_hyperball": q_kg_closeness_hyperball,
-        "kg_spectral_embeddings": q_kg_spectral_embeddings,
-        "kg_spectral_knn": q_kg_spectral_knn,
-        "kg_harmonic": q_kg_harmonic,
-        "kg_closeness": q_kg_closeness,
-        "kg_eccentricity": q_kg_eccentricity,
-        "kg_katz": q_kg_katz,
-        "kg_reciprocity": q_kg_reciprocity,
-        "kg_betweenness": q_kg_betweenness,
-        "kg_conflicts": q_kg_conflicts,
-        "kg_triple_history": q_kg_triple_history,
-        "kg_fact_churn": q_kg_fact_churn,
-        "kg_schema_infer": q_kg_schema_infer,
-        "kg_schema_roundtrip": q_kg_schema_roundtrip,
-        "kg_shortest_paths": q_kg_shortest_paths,
-        "kg_path_tree": q_kg_path_tree,
-        "kg_triple_fusion": q_kg_triple_fusion,
-        "kg_triple_diff": q_kg_triple_diff,
-        "kg_entity_similarity": q_kg_entity_similarity,
-        "kg_communities": q_kg_communities,
-        "kg_modularity": q_kg_modularity,
-        "kg_community_quality": q_kg_community_quality,
-        "kg_metapaths": q_kg_metapaths,
-        "kg_entailed": q_kg_entailed,
-        "kg_graph_profile": q_kg_graph_profile,
-        "kg_assortativity": q_kg_assortativity,
-        "kg_scc": q_kg_scc,
-        "kg_ktruss": q_kg_ktruss,
-        "kg_triangles": q_kg_triangles,
-        "kg_clustering": q_kg_clustering,
-        "kg_bfs_depths": q_kg_bfs_depths,
-        "kg_kcore": q_kg_kcore,
-        "kg_link_prediction": q_kg_link_prediction,
-        "kg_ppr": q_kg_ppr,
-        "kg_neighbor_sample": q_kg_neighbor_sample,
-        "kg_entity_map": q_kg_entity_map,
-        "kg_blocking_report": q_kg_blocking_report,
-        "kg_entity_map_update": q_kg_entity_map_update,
-        "kg_components": q_kg_components,
-        "kg_media_links": q_kg_media_links,
-    }
-    # Registry ORDER is the driver's correctness budget: the per-round
-    # CORRECTNESS artifact verifies (roughly) the FIRST 50 entries only, and
-    # rounds 1-4 listed the round-1 relational/doc entries first — so the
-    # entire graph suite, PQ/IVF-PQ, BPE, phash and the capstones had never
-    # appeared in an official artifact (VERDICT r4, top task). The head of
-    # the registry is therefore the never-driver-checked set (plus this
-    # round's new entries); four-times-green round-1 entries drop to the
-    # tail. Values are untouched — this is a pure reordering.
-    head = [n for n in _DRIVER_WINDOW_PRIORITY if n in reg]
-    tail = [n for n in reg if n not in _DRIVER_WINDOW_PRIORITY]
-    return {n: reg[n] for n in (*head, *tail)}
-
-
-def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
-    """Driver contract: no-arg call reads VALUES-oracle inputs from
-    `$SPARK_GRAFT_ORACLE_SF_DIR` (default sf0.01 — the dir the driver
-    compares at). Consumers comparing at another scale pass `sf_dir`
-    explicitly so the recomputed oracles and the Spark queries can never
-    silently read different datasets (ADVICE r2)."""
-    import os
-
-    if sf_dir is not None:
-        os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    langs_sql = {
-        "de": "['der','die','das','und','ist','ein']",
-        "en": "['the','a','of','and','to','in','is']",
-        "es": "['el','la','los','y','es','un']",
-        "fr": "['le','la','les','et','est','un']",
-    }
-    hit = {
-        lang: (
-            "len(list_intersect(list_distinct(regexp_split_to_array(lower(trim(text)),"
-            f" '\\s+')), {words}))"
-        )
-        for lang, words in langs_sql.items()
-    }
-    best = f"greatest({hit['de']}, {hit['en']}, {hit['es']}, {hit['fr']})"
-    lang_case = (
-        f"CASE WHEN {best} <= 0 THEN 'und' "
-        + " ".join(
-            f"WHEN {hit[lang]} = {best} THEN '{lang}'" for lang in sorted(langs_sql)
-        )
-        + " END"
+    for lang, words in _LANGS_SQL.items()
+}
+_LANG_BEST_SQL = (
+    f"greatest({_LANG_HIT_SQL['de']}, {_LANG_HIT_SQL['en']}, "
+    f"{_LANG_HIT_SQL['es']}, {_LANG_HIT_SQL['fr']})"
+)
+_LANG_CASE_SQL = (
+    f"CASE WHEN {_LANG_BEST_SQL} <= 0 THEN 'und' "
+    + " ".join(
+        f"WHEN {_LANG_HIT_SQL[lang]} = {_LANG_BEST_SQL} THEN '{lang}'"
+        for lang in sorted(_LANGS_SQL)
     )
-
-    shingles = (
-        "list_distinct(list_transform(generate_series(1, greatest(len(W) - 2, 0)),"
-        " i -> W[i] || ' ' || W[i+1] || ' ' || W[i+2]))"
-    ).replace("W", "regexp_split_to_array(lower(trim(text)), '\\s+')")
-    # positional (non-distinct) variant — span-level decontam needs runs
-    shingles_pos = (
-        "list_transform(generate_series(1, greatest(len(W) - 2, 0)),"
-        " i -> W[i] || ' ' || W[i+1] || ' ' || W[i+2])"
-    ).replace("W", "regexp_split_to_array(lower(trim(text)), '\\s+')")
-
-    # hoisted: reused verbatim by corpus_curated and (as a CTE) by the
-    # composed corpus_curated_shards capstone
-    curated_sql = f"""
+    + " END"
+)
+# the distinct 3-token shingles of a document, and the positional
+# (non-distinct) variant that span-level decontam needs for runs
+_SHINGLES_SQL = (
+    "list_distinct(list_transform(generate_series(1, greatest(len(W) - 2, 0)),"
+    " i -> W[i] || ' ' || W[i+1] || ' ' || W[i+2]))"
+).replace("W", "regexp_split_to_array(lower(trim(text)), '\\s+')")
+_SHINGLES_POS_SQL = (
+    "list_transform(generate_series(1, greatest(len(W) - 2, 0)),"
+    " i -> W[i] || ' ' || W[i+1] || ' ' || W[i+2])"
+).replace("W", "regexp_split_to_array(lower(trim(text)), '\\s+')")
+# reused verbatim by corpus_curated and (as a CTE) by the composed
+# corpus_curated_shards capstone
+_CURATED_SQL = f"""
             WITH corpus AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
             feat AS (
               SELECT doc_id, text,
@@ -6081,7 +5554,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                             greatest(length(lower(trim(text))), 1), 6)), 6) AS quality,
                      round(1.0 - len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) /
                            greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')), 1), 6) AS dupr,
-                     {lang_case} AS lang_pred
+                     {_LANG_CASE_SQL} AS lang_pred
               FROM corpus),
             filtered AS (
               SELECT doc_id, text, n_tokens, quality FROM feat
@@ -6090,11 +5563,11 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
               SELECT min(doc_id) AS doc_id FROM filtered
               GROUP BY md5(lower(trim(text)))),
             bench AS (
-              SELECT DISTINCT unnest({shingles}) AS g
+              SELECT DISTINCT unnest({_SHINGLES_SQL}) AS g
               FROM documents WHERE doc_id % 97 = 0),
             dirty AS (
               SELECT DISTINCT s.doc_id
-              FROM (SELECT f.doc_id, unnest({shingles}) AS g
+              FROM (SELECT f.doc_id, unnest({_SHINGLES_SQL}) AS g
                     FROM filtered f JOIN survivors USING (doc_id)) s
               JOIN bench USING (g))
             SELECT f.doc_id, f.n_tokens, f.quality
@@ -6102,162 +5575,261 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             WHERE f.doc_id NOT IN (SELECT doc_id FROM dirty)
     """
 
-    return {
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "q3_unshipped_revenue": """
-            SELECT l_orderkey,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < '1995-03-15'
-              AND l_shipdate > '1995-03-15'
-            GROUP BY l_orderkey
-            ORDER BY revenue DESC, l_orderkey
-            LIMIT 20
-        """,
-        "q5_nation_revenue": """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY n_name ORDER BY n_name
-        """,
-        "order_priority_counts": """
-            SELECT o_orderpriority, count(*) AS order_count
-            FROM orders
-            WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-              AND EXISTS (SELECT 1 FROM lineitem
-                          WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-            GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """,
-        "top_customers_by_revenue": """
-            SELECT c_custkey, c_name, revenue FROM (
-              SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue
-              FROM orders GROUP BY o_custkey
-            ) JOIN customer ON o_custkey = c_custkey
-            ORDER BY revenue DESC, c_custkey LIMIT 25
-        """,
-        "events_hourly": """
-            SELECT date_trunc('hour', ts) AS window_start, event_type,
-                   count(*) AS n, round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        "events_top_users": """
-            SELECT event_type, user_id, total_value, rnk FROM (
-              SELECT event_type, user_id, total_value,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY total_value DESC, user_id) AS rnk
-              FROM (SELECT event_type, user_id, round(sum(value), 4) AS total_value
-                    FROM events GROUP BY 1, 2)
-            ) WHERE rnk <= 3
-        """,
-        "events_sessionized": """
-            SELECT user_id, max(session_id)::BIGINT AS n_sessions, count(*) AS n_events
+
+def registry() -> list[
+    tuple[str, Callable[[SparkSession, str], DataFrame], Callable[[], str] | None]
+]:
+    """The driver registry: one `(name, build, oracle)` record per entry.
+
+    `build(spark, sf_dir)` returns the entry's DataFrame; `oracle()`
+    returns the SQL of its DuckDB twin (column names match 1:1), or the
+    record holds `None` for a rows-only entry. List order is the driver
+    order."""
+    from cypher_guard_spark.ops import (
+        bpe,
+        decontam,
+        dedup,
+        relational,
+        sample,
+        similarity,
+        temporal,
+        text,
+    )
+
+    def _docs(spark, sf_dir):
+        return relational.load(spark, sf_dir, "documents")
+
+    def _emb(spark, sf_dir):
+        return relational.load(spark, sf_dir, "embeddings")
+
+    return [
+        # The driver's CORRECTNESS artifact verifies roughly the first 50
+        # entries per round, so the head holds the entries rounds 1-4 never
+        # reached: the eight VERDICT r4 names, the round-5 search-only
+        # entries, then the rest of that never-checked set.
+        ("kg_extraction_pr", q_kg_extraction_pr, _kg_extraction_pr_sql),
+        ("kg_cypher_match", q_kg_cypher_match, _kg_cypher_match_sql),
+        ("kg_cypher_varlen", q_kg_cypher_varlen, _kg_cypher_varlen_sql),
+        ("kg_cypher_coworkers", q_kg_cypher_coworkers, _kg_cypher_coworkers_sql),
+        ("kg_cypher_degrees", q_kg_cypher_degrees, _kg_cypher_degrees_sql),
+        ("kg_cypher_optional", q_kg_cypher_optional, _kg_cypher_optional_sql),
+        ("kg_cypher_unwind", q_kg_cypher_unwind, _kg_cypher_unwind_sql),
+        ("kg_cypher_relvar", q_kg_cypher_relvar, _kg_cypher_relvar_sql),
+        ("kg_cypher_with", q_kg_cypher_with, _kg_cypher_with_sql),
+        ("kg_cypher_with_chain", q_kg_cypher_with_chain, _kg_cypher_with_chain_sql),
+        ("kg_merge_apply", q_kg_merge_apply, _kg_merge_apply_sql),
+        ("kg_cypher_applied", q_kg_cypher_applied, _kg_cypher_match_sql),
+        ("kg_cypher_call", q_kg_cypher_call, _kg_cypher_call_sql),
+        ("kg_cypher_proc", q_kg_cypher_proc, _kg_cypher_proc_sql),
+        # semi-hard negative mining (FaceNet recipe): nearest
+        # different-label neighbors per anchor, re-ranked, top-5 kept
+        ("emb_hard_negatives", lambda s, d: similarity.hard_negatives(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 50),
+            k=20, per_anchor=5
+        ), lambda: """
+            WITH topk AS (
+              SELECT query_id, neighbor_id, sim FROM (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
+                       row_number() OVER (PARTITION BY q.vec_id
+                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                    c.vec_id) AS rank
+                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+                WHERE q.vec_id < 50
+              ) WHERE rank <= 20),
+            neg AS (
+              SELECT t.query_id AS anchor_id, q.label,
+                     t.neighbor_id AS negative_id, n.label AS negative_label,
+                     t.sim,
+                     row_number() OVER (PARTITION BY t.query_id
+                         ORDER BY t.sim DESC, t.neighbor_id) AS neg_rank
+              FROM topk t
+              JOIN embeddings q ON t.query_id = q.vec_id
+              JOIN embeddings n ON t.neighbor_id = n.vec_id
+              WHERE n.label <> q.label)
+            SELECT anchor_id, label, negative_id, negative_label,
+                   CAST(neg_rank AS BIGINT) AS neg_rank, sim
+            FROM neg WHERE neg_rank <= 5
+        """),
+        # per-source saturation cap (RefinedWeb anti-domination guard):
+        # two-phase skew-safe top-cap; the single-window DuckDB twin
+        # doubles as the two-phase == one-phase equality proof
+        ("doc_source_cap", lambda s, d: sample.source_cap(
+            _docs(s, d), cap=50, score_col="n_chars"
+        ), lambda: """
+            SELECT doc_id, source, CAST(keep_rank AS BIGINT) AS keep_rank
             FROM (
-              SELECT user_id,
-                     sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                            ROWS UNBOUNDED PRECEDING) AS session_id
-              FROM (
-                SELECT user_id, ts, event_id,
-                       CASE WHEN lag(epoch(ts)) OVER (PARTITION BY user_id
-                                                      ORDER BY ts, event_id) IS NULL
-                                 OR epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id
-                                                      ORDER BY ts, event_id) > 1800
-                            THEN 1 ELSE 0 END AS new_session
-                FROM events)
-            ) GROUP BY user_id ORDER BY user_id
-        """,
-        "events_transitions": """
-            SELECT from_type, to_type, count(*) AS n_transitions
-            FROM (
-              SELECT event_type AS from_type,
-                     lead(event_type) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS to_type
-              FROM events)
-            WHERE to_type IS NOT NULL
-            GROUP BY from_type, to_type
-        """,
-        "corpus_vocab": """
-            WITH tok AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+              SELECT doc_id, source,
+                     row_number() OVER (PARTITION BY source
+                         ORDER BY n_chars DESC, doc_id) AS keep_rank
+              FROM documents
+            ) WHERE keep_rank <= 50
+        """),
+        ("kg_backbone", q_kg_backbone, _kg_backbone_sql),
+        ("kg_louvain", q_kg_louvain, _kg_louvain_sql),
+        ("kg_scc", q_kg_scc, _kg_scc_values),
+        ("kg_ktruss", q_kg_ktruss, _kg_ktruss_values),
+        ("kg_betweenness", q_kg_betweenness, _kg_betweenness_values),
+        # IVF-PQ: pruning x compression composed (by_residual=False) —
+        # probed cells' CODES are the only thing scanned
+        ("emb_ivfpq_topk", lambda s, d: similarity.ivfpq_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
+            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16
+        ), _emb_ivfpq_values),
+        ("emb_pq_topk", lambda s, d: similarity.pq_topk(
+            _emb(s, d),
+            similarity.train_pq(_emb(s, d), m=4, k=16, iters=2),
+            _emb(s, d)
+            .where(F.col("vec_id") < 5)
+            .select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+            ),
+            k=5,
+        ), _emb_pq_topk_values),
+        # real BPE trainer: corpus scanned ONCE (word-frequency agg),
+        # merge loop runs over the vocabulary-sized word table — exact
+        # integer counts + total tie order so the merge sequence is a
+        # pure function of the corpus (independent Counter-twin oracle)
+        ("corpus_bpe_merges", lambda s, d: bpe.train_bpe(
+            _docs(s, d), num_merges=24, min_pair_count=2
+        ), _corpus_bpe_merges_values),
+        ("media_phash_dups", q_media_phash_dups, _media_phash_dups_values),
+        ("corpus_curated_shards", q_corpus_curated_shards, lambda: f"""
+            WITH cur AS ({_CURATED_SQL}),
+            v AS (SELECT * FROM {_doc_training_shards_values()})
+            SELECT c.doc_id, v.shard,
+                   (row_number() OVER (PARTITION BY v.shard
+                                       ORDER BY v.h, c.doc_id) - 1)::BIGINT
+                     AS pos
+            FROM cur c JOIN v USING (doc_id)
+        """),
+        # search-only twins of emb_pq_topk / emb_ivfpq_topk: codebooks and
+        # centroids come from the train-once process cache (literal rows), so
+        # the bench wall here is the ADC scan / cell-pruned search itself —
+        # the number that matters for a train-once/search-forever index. The
+        # cached trained structures equal freshly trained ones (the trainers
+        # are deterministic), so both entries share their trainer twins' oracle
+        ("emb_pq_search", lambda s, d: similarity.pq_topk(
+            _emb(s, d),
+            _cached_pq_codebooks(s, d, m=4, k=16, iters=2),
+            _emb(s, d)
+            .where(F.col("vec_id") < 5)
+            .select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+            ),
+            k=5,
+        ), _emb_pq_topk_values),
+        ("emb_ivfpq_search", lambda s, d: similarity.ivfpq_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
+            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16,
+            centroids=_cached_coarse_centroids(s, d, k=8, iters=2),
+            codebooks=_cached_pq_codebooks(s, d, m=4, k=16, iters=2),
+        ), _emb_ivfpq_values),
+        ("kg_entity_map", q_kg_entity_map, _kg_entity_map_values),
+        ("kg_components", q_kg_components, _kg_components_values),
+        ("kg_entity_map_update", q_kg_entity_map_update, _kg_entity_map_update_values),
+        ("kg_hits", q_kg_hits, _kg_hits_values),
+        ("kg_random_walks", q_kg_random_walks, _kg_random_walks_values),
+        ("kg_walk_pairs", q_kg_walk_pairs, _kg_walk_pairs_sql),
+        ("kg_walk_negatives", q_kg_walk_negatives, _kg_walk_negatives_values),
+        ("kg_entity_cooccur", q_kg_entity_cooccur, _kg_entity_cooccur_sql),
+        ("kg_fuzzy_surfaces", q_kg_fuzzy_surfaces, _kg_fuzzy_surfaces_sql),
+        ("kg_khop", q_kg_khop, _kg_khop_sql),
+        ("kg_neighborhood_function", q_kg_neighborhood_function,
+         _kg_neighborhood_function_sql),
+        ("kg_harmonic", q_kg_harmonic, _kg_harmonic_sql),
+        ("kg_closeness", q_kg_closeness, _kg_closeness_sql),
+        ("kg_conflicts", q_kg_conflicts, _kg_conflicts_sql),
+        ("kg_triple_history", q_kg_triple_history, _kg_triple_history_values),
+        ("kg_schema_infer", q_kg_schema_infer, _kg_schema_infer_sql),
+        ("kg_schema_roundtrip", q_kg_schema_roundtrip, _kg_schema_roundtrip_sql),
+        ("kg_shortest_paths", q_kg_shortest_paths, _kg_shortest_paths_values),
+        ("kg_path_tree", q_kg_path_tree, _kg_path_tree_values),
+        ("kg_triple_fusion", q_kg_triple_fusion, _kg_triple_fusion_values),
+        ("kg_triple_diff", q_kg_triple_diff, _kg_triple_diff_values),
+        ("kg_entity_similarity", q_kg_entity_similarity, _kg_entity_similarity_values),
+        ("kg_communities", q_kg_communities, _kg_communities_values),
+        ("kg_modularity", q_kg_modularity, _kg_modularity_values),
+        ("kg_graph_profile", q_kg_graph_profile, _kg_graph_profile_values),
+        ("kg_assortativity", q_kg_assortativity, _kg_assortativity_values),
+        ("kg_triangles", q_kg_triangles, _kg_triangles_values),
+        ("kg_clustering", q_kg_clustering, _kg_clustering_values),
+        ("kg_bfs_depths", q_kg_bfs_depths, _kg_bfs_depths_values),
+        ("kg_kcore", q_kg_kcore, _kg_kcore_values),
+        ("kg_link_prediction", q_kg_link_prediction, _kg_link_prediction_values),
+        ("kg_ppr", q_kg_ppr, _kg_ppr_values),
+        ("kg_neighbor_sample", q_kg_neighbor_sample, _kg_neighbor_sample_values),
+        # product quantization: all m codebooks train in ONE tagged Lloyd
+        # loop; encode is a map-only literal argmin; ADC top-k scans the
+        # codes table with driver-baked per-query LUTs
+        ("emb_pq_codebooks", lambda s, d: similarity.train_pq(
+            _emb(s, d), m=4, k=16, iters=2
+        ).select(
+            "subspace", "centroid_id", F.posexplode("center").alias("dim", "cx")
+        ), _emb_pq_codebooks_values),
+        ("emb_curation", q_emb_curation, _emb_curation_sql),
+        # oracle gate opts into the exact rank rule; the production
+        # default is the approx_percentile threshold (no per-source sort)
+        ("corpus_quality_floor", lambda s, d: text.quality_floor(
+            _docs(s, d), q=0.2, exact=True
+        ), lambda: """
+            WITH t AS (
+              SELECT doc_id, source, lower(trim(text)) AS txt,
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
               FROM documents),
-            counts AS (
-              SELECT token, count(*) AS n_occurrences,
-                     count(DISTINCT doc_id) AS n_docs
-              FROM tok GROUP BY token
-              HAVING count(*) >= 2)
-            SELECT token,
-                   row_number() OVER (ORDER BY n_occurrences DESC, token ASC) - 1
-                     AS token_id,
-                   n_occurrences, n_docs
-            FROM counts
-            ORDER BY n_occurrences DESC, token ASC
-            LIMIT 200
-        """,
-        "corpus_vocab_growth": """
-            WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS mxid FROM documents),
-            spine AS (
-              SELECT CAST(range AS INT) AS i,
-                     CAST((range * mxid) // 10 AS BIGINT) AS checkpoint
-              FROM range(1, 11), mx),
-            pd AS (
-              SELECT greatest(CAST((CAST(doc_id AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
-                     COUNT(*) AS docs,
-                     CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) AS toks
-              FROM documents, mx GROUP BY 1),
-            fo AS (
-              SELECT tok, MIN(doc_id) AS fd
-              FROM (SELECT doc_id,
-                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
-                    FROM documents)
-              GROUP BY tok),
-            fv AS (
-              SELECT greatest(CAST((CAST(fd AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
-                     COUNT(*) AS vocab
-              FROM fo, mx GROUP BY 1)
-            SELECT spine.checkpoint,
-                   CAST(SUM(COALESCE(pd.docs, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_docs_cum,
-                   CAST(SUM(COALESCE(pd.toks, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_tokens_cum,
-                   CAST(SUM(COALESCE(fv.vocab, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS vocab_cum
-            FROM spine
-            LEFT JOIN pd ON spine.i = pd.i
-            LEFT JOIN fv ON spine.i = fv.i
-        """,
-        "doc_compression": _doc_compression_values(),
-        "doc_pii_redacted": """
-            WITH red AS (
+            ql AS (
+              SELECT doc_id, source,
+                     round(least(len(toks) / 32.0, 1.0) *
+                           (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
+                           greatest(length(txt), 1), 6)), 6) AS quality
+              FROM t),
+            r AS (
+              SELECT doc_id, source, quality,
+                     row_number() OVER (PARTITION BY source
+                                        ORDER BY quality, doc_id) AS rn,
+                     count(*) OVER (PARTITION BY source) AS n
+              FROM ql)
+            SELECT doc_id, source, quality
+            FROM r WHERE rn > floor(0.2 * n)
+        """),
+        ("corpus_collocations", lambda s, d: text.collocations(
+            _docs(s, d), window=5, min_count=5, k=50
+        ), lambda: """
+            WITH t AS (
               SELECT doc_id,
-                     regexp_replace(
-                       regexp_replace(
-                         regexp_replace(lower(trim(text)),
-                           '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+',
-                           '<EMAIL>', 'g'),
-                         'https?://[^\\s]+', '<URL>', 'g'),
-                       '[0-9]{6,}', '<DIGITS>', 'g') AS text_redacted
-              FROM documents)
-            SELECT doc_id, text_redacted,
-                   len(regexp_extract_all(text_redacted,
-                       '<EMAIL>|<URL>|<DIGITS>')) AS n_redactions
-            FROM red
-        """,
-        "doc_oov_rates": """
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents),
+            pos AS (
+              SELECT doc_id, unnest(toks) AS tok,
+                     unnest(range(0, len(toks))) AS ord
+              FROM t),
+            uni AS (SELECT tok, count(*) AS c FROM pos GROUP BY tok),
+            n AS (SELECT count(*) AS total FROM pos),
+            pairs AS (
+              SELECT least(p1.tok, p2.tok) AS tok_a,
+                     greatest(p1.tok, p2.tok) AS tok_b
+              FROM pos p1 JOIN pos p2
+                ON p1.doc_id = p2.doc_id
+               AND p2.ord > p1.ord AND p2.ord <= p1.ord + 5),
+            pc AS (
+              SELECT tok_a, tok_b, count(*) AS n_pairs
+              FROM pairs GROUP BY tok_a, tok_b
+              HAVING count(*) >= 5)
+            SELECT tok_a, tok_b, n_pairs,
+                   round(n.total * n_pairs / (ua.c * ub.c), 6) AS lift
+            FROM pc
+            JOIN uni ua ON ua.tok = pc.tok_a
+            JOIN uni ub ON ub.tok = pc.tok_b, n
+            ORDER BY n_pairs DESC, tok_a, tok_b
+            LIMIT 50
+        """),
+        # tokenizer QA: per-doc OOV share against the corpus_vocab table
+        # (top-200/min-2), same tokens() expression on both sides
+        ("doc_oov_rates", lambda s, d: text.oov_rates(
+            _docs(s, d), text.build_vocab(_docs(s, d), vocab_size=200, min_count=2)
+        ), lambda: """
             WITH tok AS (
               SELECT doc_id,
                      unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
@@ -6284,36 +5856,221 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                    END AS oov_rate
             FROM (SELECT DISTINCT doc_id FROM documents) d
             LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-        """,
-        "corpus_bpe_merges": _corpus_bpe_merges_values(),
-        "doc_bpe_tokens": _doc_bpe_tokens_values(),
-        "events_rollup_incremental": """
-            SELECT strftime(ts, '%Y-%m-%d') AS day,
-                   date_trunc('hour', ts) AS hour_start,
-                   event_type,
-                   count(*) AS n,
-                   CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT)
-                     AS sum_fp
-            FROM events
-            GROUP BY 1, 2, 3
-        """,
-        "events_activity_decay": """
-            WITH ref AS (SELECT MAX(CAST(ts AS DATE)) AS refd FROM events),
-            per AS (
+        """),
+        # zlib repetitiveness signal (FineWeb/DCLM-family heuristic);
+        # the sanctioned Pandas-UDF carve-out — byte-level DEFLATE has no
+        # Catalyst expression
+        ("doc_compression", lambda s, d: text.compression_ratios(_docs(s, d)),
+         _doc_compression_values),
+        # fixed-chain PII scrubbing behind the pii_counts pre-scan. The
+        # synthetic corpus is PII-free (as for doc_pii_counts), so this
+        # gate locks the pass-through path byte-for-byte; replacement
+        # semantics are locked by tests/test_ops.py::test_redact_pii_*
+        ("doc_pii_redacted", lambda s, d: text.redact_pii(_docs(s, d)), lambda: """
+            WITH red AS (
+              SELECT doc_id,
+                     regexp_replace(
+                       regexp_replace(
+                         regexp_replace(lower(trim(text)),
+                           '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+',
+                           '<EMAIL>', 'g'),
+                         'https?://[^\\s]+', '<URL>', 'g'),
+                       '[0-9]{6,}', '<DIGITS>', 'g') AS text_redacted
+              FROM documents)
+            SELECT doc_id, text_redacted,
+                   len(regexp_extract_all(text_redacted,
+                       '<EMAIL>|<URL>|<DIGITS>')) AS n_redactions
+            FROM red
+        """),
+        # encode with the trained merges (min-rank-first GPT-2 loop in an
+        # Arrow-batched kernel, distinct-word memo per batch, map-only
+        # plan) — oracle re-trains with the independent twin and encodes
+        # serially, verifying the full train->encode composition
+        ("doc_bpe_tokens", lambda s, d: bpe.bpe_encode(
+            _docs(s, d), bpe.train_bpe(_docs(s, d), num_merges=24)
+        ).select("doc_id", "n_words", "n_subwords"), _doc_bpe_tokens_values),
+        # frequency-ranked vocabulary (tokenizer-training prerequisite):
+        # ids are the 0-based rank under the (count DESC, token ASC) total
+        # order so they are engine/run-stable; the rank window runs over
+        # the vocab_size survivor set only, never the corpus
+        ("corpus_vocab", lambda s, d: text.build_vocab(
+            _docs(s, d), vocab_size=200, min_count=2
+        ), lambda: """
+            WITH tok AS (
+              SELECT doc_id,
+                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+              FROM documents),
+            counts AS (
+              SELECT token, count(*) AS n_occurrences,
+                     count(DISTINCT doc_id) AS n_docs
+              FROM tok GROUP BY token
+              HAVING count(*) >= 2)
+            SELECT token,
+                   row_number() OVER (ORDER BY n_occurrences DESC, token ASC) - 1
+                     AS token_id,
+                   n_occurrences, n_docs
+            FROM counts
+            ORDER BY n_occurrences DESC, token ASC
+            LIMIT 200
+        """),
+        ("emb_projected", lambda s, d: similarity.project_embeddings(
+            _emb(s, d), out_dim=8, seed=0
+        ), _emb_projected_values),
+        # exact=True is the oracle gate's opt-in; the default (fast) mode
+        # is the approx-sketch plan that survives 10^12 rows
+        ("corpus_length_quantiles", lambda s, d: text.length_quantiles(
+            _docs(s, d), exact=True
+        ), lambda: """
+            WITH base AS (
+              SELECT source,
+                     len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                       AS n_tokens,
+                     doc_id
+              FROM documents),
+            ranked AS (
+              SELECT source, n_tokens,
+                     row_number() OVER (
+                       PARTITION BY source ORDER BY n_tokens, doc_id) AS rn,
+                     count(*) OVER (PARTITION BY source) AS n
+              FROM base)
+            SELECT source, q, n_tokens AS n_tokens_q
+            FROM ranked
+            CROSS JOIN (VALUES (0.25::DOUBLE), (0.5::DOUBLE),
+                               (0.9::DOUBLE), (0.99::DOUBLE)) AS qt(q)
+            WHERE rn = floor(q * (n - 1)) + 1
+        """),
+
+        # The rest, by operator family.
+
+        # relational / analytic
+        ("q1_pricing_summary", relational.q1_pricing_summary, lambda: """
+            SELECT l_returnflag, l_linestatus,
+                   round(sum(l_quantity), 2) AS sum_qty,
+                   round(sum(l_extendedprice), 2) AS sum_base_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+                   count(*) AS count_order
+            FROM lineitem WHERE l_shipdate <= '1998-09-02'
+            GROUP BY l_returnflag, l_linestatus
+            ORDER BY l_returnflag, l_linestatus
+        """),
+        ("q3_unshipped_revenue", relational.q3_unshipped_revenue, lambda: """
+            SELECT l_orderkey,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            WHERE c_mktsegment = 'BUILDING'
+              AND o_orderdate < '1995-03-15'
+              AND l_shipdate > '1995-03-15'
+            GROUP BY l_orderkey
+            ORDER BY revenue DESC, l_orderkey
+            LIMIT 20
+        """),
+        ("q5_nation_revenue", relational.q5_nation_revenue, lambda: """
+            SELECT n_name,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+                   count(*) AS n_items
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            GROUP BY n_name ORDER BY n_name
+        """),
+        ("order_priority_counts", relational.order_priority_counts, lambda: """
+            SELECT o_orderpriority, count(*) AS order_count
+            FROM orders
+            WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
+              AND EXISTS (SELECT 1 FROM lineitem
+                          WHERE l_orderkey = o_orderkey AND l_quantity > 45)
+            GROUP BY o_orderpriority ORDER BY o_orderpriority
+        """),
+        ("top_customers_by_revenue", relational.top_customers_by_revenue, lambda: """
+            SELECT c_custkey, c_name, revenue FROM (
+              SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue
+              FROM orders GROUP BY o_custkey
+            ) JOIN customer ON o_custkey = c_custkey
+            ORDER BY revenue DESC, c_custkey LIMIT 25
+        """),
+        ("events_hourly", relational.events_hourly, lambda: """
+            SELECT date_trunc('hour', ts) AS window_start, event_type,
+                   count(*) AS n, round(sum(value), 4) AS sum_value
+            FROM events GROUP BY 1, 2 ORDER BY 1, 2
+        """),
+        ("events_top_users", relational.events_top_users, lambda: """
+            SELECT event_type, user_id, total_value, rnk FROM (
+              SELECT event_type, user_id, total_value,
+                     row_number() OVER (PARTITION BY event_type
+                                        ORDER BY total_value DESC, user_id) AS rnk
+              FROM (SELECT event_type, user_id, round(sum(value), 4) AS total_value
+                    FROM events GROUP BY 1, 2)
+            ) WHERE rnk <= 3
+        """),
+        ("events_sessionized", relational.events_sessionized, lambda: """
+            SELECT user_id, max(session_id)::BIGINT AS n_sessions, count(*) AS n_events
+            FROM (
               SELECT user_id,
-                     datediff('day', CAST(ts AS DATE), refd) AS age
-              FROM events, ref),
-            agg AS (
-              SELECT user_id,
-                     COUNT(*) AS n_events,
-                     CAST(SUM(CASE WHEN age <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_recent,
-                     CAST(SUM(CASE WHEN age <= 30 THEN (1::BIGINT << (30 - age)) ELSE 0 END) AS BIGINT) AS scaled
-              FROM per GROUP BY user_id)
-            SELECT user_id, n_events, n_recent,
-                   ROUND(CAST(scaled AS DOUBLE) / 1073741824.0, 6) AS activity
-            FROM agg
-        """,
-        "events_rate_anomalies": """
+                     sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                            ROWS UNBOUNDED PRECEDING) AS session_id
+              FROM (
+                SELECT user_id, ts, event_id,
+                       CASE WHEN lag(epoch(ts)) OVER (PARTITION BY user_id
+                                                      ORDER BY ts, event_id) IS NULL
+                                 OR epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id
+                                                      ORDER BY ts, event_id) > 1800
+                            THEN 1 ELSE 0 END AS new_session
+                FROM events)
+            ) GROUP BY user_id ORDER BY user_id
+        """),
+
+        # temporal joins (asof / range — primitives Spark lacks)
+        ("events_asof_purchase", q_events_asof_purchase, lambda: """
+            WITH l AS (SELECT event_id, user_id, ts FROM events
+                       WHERE event_type = 'click'),
+                 r AS (SELECT user_id, ts, event_id AS p_event_id, value
+                       FROM events WHERE event_type = 'purchase')
+            SELECT event_id, user_id, purchase_event_id, purchase_value, gap_us
+            FROM (
+              SELECT l.event_id, l.user_id,
+                     r.p_event_id AS purchase_event_id,
+                     r.value AS purchase_value,
+                     epoch_us(l.ts) - epoch_us(r.ts) AS gap_us,
+                     row_number() OVER (PARTITION BY l.event_id
+                                        ORDER BY r.ts DESC, r.p_event_id DESC) AS rn
+              FROM l LEFT JOIN r ON l.user_id = r.user_id AND r.ts < l.ts
+            ) WHERE rn = 1
+        """),
+        # first-order Markov transition counts over each user's
+        # time-ordered event sequence (next-event prediction / funnel
+        # discovery input) — one keyed window exchange, then a tiny
+        # |types|^2-key partial agg
+        ("events_transitions", lambda s, d: temporal.event_transitions(
+            relational.load(s, d, "events")
+        ), lambda: """
+            SELECT from_type, to_type, count(*) AS n_transitions
+            FROM (
+              SELECT event_type AS from_type,
+                     lead(event_type) OVER (PARTITION BY user_id
+                                            ORDER BY ts, event_id) AS to_type
+              FROM events)
+            WHERE to_type IS NOT NULL
+            GROUP BY from_type, to_type
+        """),
+        ("events_purchase_window", q_events_purchase_window, lambda: """
+            SELECT v.event_id AS view_event_id, p.event_id AS purchase_event_id,
+                   epoch_us(v.ts) - epoch_us(p.ts) AS gap_us
+            FROM (SELECT * FROM events WHERE event_type = 'view') v
+            JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+              ON v.user_id = p.user_id AND v.ts >= p.ts
+                 AND v.ts < p.ts + INTERVAL 1800 SECONDS
+        """),
+        # event-rate anomaly report: z-scores from explicit integer-sum
+        # moments (never stddev_samp's order-dependent streaming merge);
+        # one corpus-sized partial-agg shuffle, grid-sized stats join
+        ("events_rate_anomalies", lambda s, d: temporal.rate_anomalies(
+            relational.load(s, d, "events"), z_threshold=2.0
+        ), lambda: """
             WITH counts AS (
               SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
                      count(*) AS n_events
@@ -6330,36 +6087,38 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             WHERE nb >= 2 AND (sxx - sx * sx / nb) / (nb - 1) > 0
               AND abs((c.n_events - sx / nb)
                       / sqrt((sxx - sx * sx / nb) / (nb - 1))) >= 2.0
-        """,
-        "events_asof_purchase": """
-            WITH l AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-                 r AS (SELECT user_id, ts, event_id AS p_event_id, value
-                       FROM events WHERE event_type = 'purchase')
-            SELECT event_id, user_id, purchase_event_id, purchase_value, gap_us
-            FROM (
-              SELECT l.event_id, l.user_id,
-                     r.p_event_id AS purchase_event_id,
-                     r.value AS purchase_value,
-                     epoch_us(l.ts) - epoch_us(r.ts) AS gap_us,
-                     row_number() OVER (PARTITION BY l.event_id
-                                        ORDER BY r.ts DESC, r.p_event_id DESC) AS rn
-              FROM l LEFT JOIN r ON l.user_id = r.user_id AND r.ts < l.ts
-            ) WHERE rn = 1
-        """,
-        "events_retention": """
-            WITH act AS (
-              SELECT DISTINCT user_id,
-                     floor(epoch(ts) / 604800)::BIGINT AS p
-              FROM events),
-            coh AS (SELECT user_id, min(p) AS cohort_p FROM act GROUP BY user_id)
-            SELECT coh.cohort_p AS cohort_period,
-                   act.p - coh.cohort_p AS period_offset,
-                   count(DISTINCT act.user_id) AS n_users
-            FROM act JOIN coh USING (user_id)
-            GROUP BY 1, 2
-        """,
-        "events_funnel": """
+        """),
+        # exponentially-decayed per-user activity — exact dyadic weights
+        # (2^-age via bit shifts, int64 partial agg, one binary re-scale)
+        ("events_activity_decay", lambda s, d: temporal.activity_decay(
+            relational.load(s, d, "events"), cap_days=30
+        ), lambda: """
+            WITH ref AS (SELECT MAX(CAST(ts AS DATE)) AS refd FROM events),
+            per AS (
+              SELECT user_id,
+                     datediff('day', CAST(ts AS DATE), refd) AS age
+              FROM events, ref),
+            agg AS (
+              SELECT user_id,
+                     COUNT(*) AS n_events,
+                     CAST(SUM(CASE WHEN age <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_recent,
+                     CAST(SUM(CASE WHEN age <= 30 THEN (1::BIGINT << (30 - age)) ELSE 0 END) AS BIGINT) AS scaled
+              FROM per GROUP BY user_id)
+            SELECT user_id, n_events, n_recent,
+                   ROUND(CAST(scaled AS DOUBLE) / 1073741824.0, 6) AS activity
+            FROM agg
+        """),
+        ("events_rollup_incremental", q_events_rollup_incremental, lambda: """
+            SELECT strftime(ts, '%Y-%m-%d') AS day,
+                   date_trunc('hour', ts) AS hour_start,
+                   event_type,
+                   count(*) AS n,
+                   CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT)
+                     AS sum_fp
+            FROM events
+            GROUP BY 1, 2, 3
+        """),
+        ("events_funnel", q_events_funnel, lambda: """
             WITH s1 AS (
               SELECT user_id, min(ts) AS step_1_ts
               FROM events WHERE event_type = 'view' GROUP BY user_id),
@@ -6384,25 +6143,34 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                         ELSE 1 END AS completed_step,
                    step_1_ts, step_2_ts, step_3_ts
             FROM s3
-        """,
-        "events_purchase_window": """
-            SELECT v.event_id AS view_event_id, p.event_id AS purchase_event_id,
-                   epoch_us(v.ts) - epoch_us(p.ts) AS gap_us
-            FROM (SELECT * FROM events WHERE event_type = 'view') v
-            JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-              ON v.user_id = p.user_id AND v.ts >= p.ts
-                 AND v.ts < p.ts + INTERVAL 1800 SECONDS
-        """,
-        "doc_exact_dedup": """
+        """),
+        ("events_retention", relational.events_retention, lambda: """
+            WITH act AS (
+              SELECT DISTINCT user_id,
+                     floor(epoch(ts) / 604800)::BIGINT AS p
+              FROM events),
+            coh AS (SELECT user_id, min(p) AS cohort_p FROM act GROUP BY user_id)
+            SELECT coh.cohort_p AS cohort_period,
+                   act.p - coh.cohort_p AS period_offset,
+                   count(DISTINCT act.user_id) AS n_users
+            FROM act JOIN coh USING (user_id)
+            GROUP BY 1, 2
+        """),
+
+        # dedup
+        ("doc_exact_dedup", lambda s, d: dedup.exact_duplicates(_docs(s, d)),
+         lambda: """
             SELECT md5(lower(trim(text))) AS digest, count(*) AS dup_count,
                    min(doc_id) AS canonical_doc_id
             FROM documents GROUP BY 1
-        """,
-        "doc_ngram_jaccard_pairs": f"""
+        """),
+        ("doc_ngram_jaccard_pairs", lambda s, d: dedup.ngram_jaccard_pairs(
+            _docs(s, d), threshold=0.2
+        ), lambda: f"""
             WITH base AS (
               SELECT doc_id,
                      array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[1:2], ' ') AS block,
-                     {shingles} AS sh
+                     {_SHINGLES_SQL} AS sh
               FROM documents)
             SELECT a.doc_id AS a, b.doc_id AS b,
                    round(len(list_intersect(a.sh, b.sh))::DOUBLE /
@@ -6410,116 +6178,65 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM base a JOIN base b ON a.block = b.block AND a.doc_id < b.doc_id
             WHERE round(len(list_intersect(a.sh, b.sh))::DOUBLE /
                         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) >= 0.2
-        """,
-        "doc_clean_text": """
-            WITH l AS (
-              SELECT doc_id, regexp_split_to_array(text, '\\n') AS lines
-              FROM documents),
-            f AS (
-              SELECT doc_id, len(lines) AS n_lines,
-                     list_filter(lines, x ->
-                       len(regexp_split_to_array(trim(x), '\\s+')) >= 50
-                       AND NOT (contains(lower(x), 'cookie')
-                                OR contains(lower(x), 'javascript')
-                                OR contains(lower(x), 'lorem ipsum'))) AS kept
-              FROM l)
-            SELECT doc_id, array_to_string(kept, chr(10)) AS clean_text,
-                   len(kept) AS n_lines_kept,
-                   n_lines - len(kept) AS n_lines_dropped
-            FROM f WHERE len(kept) > 0
-        """,
-        "doc_token_stats": """
-            SELECT doc_id, len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
-                   length(lower(trim(text))) AS n_chars_norm
-            FROM documents
-        """,
-        "doc_quality_scores": """
-            WITH t AS (
-              SELECT doc_id, lower(trim(text)) AS txt,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents)
-            SELECT doc_id,
-                   len(toks) AS n_tokens,
-                   round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
-                         greatest(length(txt), 1), 6) AS punct_ratio,
-                   round(len(list_filter(toks, x -> list_contains(
-                         ['the','a','of','and','to','in','is'], x))) /
-                         greatest(len(toks), 1), 6) AS stopword_ratio,
-                   round(least(len(toks) / 32.0, 1.0) *
-                         (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
-                         greatest(length(txt), 1), 6)), 6) AS quality
-            FROM t
-        """,
-        "doc_language_id": f"""
-            SELECT doc_id, {lang_case} AS lang_pred FROM documents
-        """,
-        "doc_fingerprints": """
-            SELECT doc_id,
-                   md5(array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[1:8], ' ')) AS fingerprint
-            FROM documents
-        """,
-        "doc_lexical_diversity": """
-            WITH tf AS (
-              SELECT doc_id, tok, COUNT(*) AS tf
-              FROM (SELECT doc_id,
-                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
-                    FROM documents)
-              GROUP BY doc_id, tok),
-            agg AS (
-              SELECT doc_id,
-                     CAST(SUM(tf) AS BIGINT) AS n_tokens,
-                     CAST(COUNT(*) AS BIGINT) AS n_types,
-                     CAST(SUM(tf * (tf - 1)) AS BIGINT) AS rep
-              FROM tf GROUP BY doc_id)
-            SELECT doc_id, n_tokens, n_types,
-                   ROUND(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
-                   CASE WHEN n_tokens < 2 THEN 0.0
-                        ELSE ROUND(CAST(rep AS DOUBLE) /
-                                   CAST(n_tokens * (n_tokens - 1) AS DOUBLE), 6)
-                   END AS simpson
-            FROM agg
-        """,
-        "doc_subword_counts": """
-            SELECT doc_id,
-                   len(regexp_extract_all(lower(trim(text)), '[a-z0-9]+|[^a-z0-9\\s]')) AS n_subword
-            FROM documents
-        """,
-        "doc_top_bigrams": """
-            SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
-            FROM (
-              SELECT doc_id, unnest(list_transform(
-                       generate_series(1, greatest(len(W) - 1, 0)),
-                       i -> W[i] || ' ' || W[i+1])) AS ngram
-              FROM (SELECT doc_id,
-                           regexp_split_to_array(lower(trim(text)), '\\s+') AS W
-                    FROM documents))
-            GROUP BY ngram
-            ORDER BY n_occurrences DESC, ngram
-            LIMIT 20
-        """,
-        "doc_pii_counts": """
-            SELECT doc_id,
-                   len(regexp_extract_all(lower(trim(text)),
-                       '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) AS n_emails,
-                   len(regexp_extract_all(lower(trim(text)),
-                       'https?://[^\\s]+')) AS n_urls,
-                   len(regexp_extract_all(lower(trim(text)),
-                       '[0-9]{6,}')) AS n_long_digit_runs,
-                   CASE WHEN len(regexp_extract_all(lower(trim(text)),
-                            '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) > 0
-                          OR len(regexp_extract_all(lower(trim(text)),
-                            'https?://[^\\s]+')) > 0
-                          OR len(regexp_extract_all(lower(trim(text)),
-                            '[0-9]{6,}')) > 0
-                        THEN 1 ELSE 0 END AS has_pii
-            FROM documents
-        """,
-        "doc_decontam": f"""
+        """),
+        ("doc_minhash_near_dups", lambda s, d: dedup.minhash_near_duplicates(
+            _docs(s, d), threshold=0.3
+        ), _doc_minhash_values),
+        ("doc_neardup_incremental", lambda s, d: dedup.neardup_incremental(
+            _docs(s, d).where(F.col("doc_id") % 2 == 1),
+            dedup.band_rows(_docs(s, d).where(F.col("doc_id") % 2 == 0)),
+            _docs(s, d).where(F.col("doc_id") % 2 == 0),
+            threshold=0.3,
+        ), _doc_neardup_incremental_values),
+        ("doc_simhash_near_dups", lambda s, d: dedup.simhash_near_duplicates(
+            _docs(s, d), max_hamming=12
+        ), _doc_simhash_values),
+        ("doc_neardup_clusters", lambda s, d: dedup.neardup_clusters(
+            s, _docs(s, d), threshold=0.3
+        ), _doc_neardup_clusters_values),
+        # contamination-free train/eval carve: the split key is the
+        # near-dup CLUSTER, so no minhash pair can cross the boundary
+        ("doc_leakage_split", lambda s, d: dedup.leakage_safe_split(
+            s, _docs(s, d), eval_pct=10, threshold=0.3
+        ), _doc_leakage_split_values),
+        ("doc_neardup_survivors", lambda s, d: dedup.neardup_survivors(
+            s, _docs(s, d), threshold=0.3
+        ).select("doc_id", "source", "lang", "n_chars"), _doc_neardup_survivors_sql),
+        ("doc_neardup_report", lambda s, d: dedup.neardup_report(
+            s, _docs(s, d), threshold=0.3
+        ), lambda: (
+            "SELECT cluster_size, count(DISTINCT cluster_id) AS n_clusters, "
+            "count(*) AS n_docs FROM ("
+            + _doc_neardup_clusters_values()
+            + ") GROUP BY cluster_size"
+        )),
+        # corpus-governance duplication matrix: near-dup mass per SOURCE
+        # pair (who re-hosts whom), composed off the same LSH pair list
+        ("doc_source_dup_matrix", lambda s, d: dedup.cross_source_dup_matrix(
+            _docs(s, d), threshold=0.3
+        ), lambda: f"""
+            WITH pairs AS ({_doc_minhash_values()}),
+            lab AS (SELECT doc_id, source FROM documents)
+            SELECT least(la.source, lb.source) AS source_a,
+                   greatest(la.source, lb.source) AS source_b,
+                   COUNT(*) AS n_pairs,
+                   MIN(sim) AS min_sim,
+                   MAX(sim) AS max_sim
+            FROM pairs
+            JOIN lab la ON pairs.a = la.doc_id
+            JOIN lab lb ON pairs.b = lb.doc_id
+            GROUP BY 1, 2
+        """),
+        ("doc_decontam", lambda s, d: decontam.contamination_report(
+            _docs(s, d).where(F.col("doc_id") % 97 != 0),
+            _docs(s, d).where(F.col("doc_id") % 97 == 0),
+            n=3,
+        ), lambda: f"""
             WITH bench AS (
-              SELECT DISTINCT unnest({shingles}) AS ngram
+              SELECT DISTINCT unnest({_SHINGLES_SQL}) AS ngram
               FROM documents WHERE doc_id % 97 = 0),
             corpus AS (
-              SELECT doc_id, {shingles} AS sh
+              SELECT doc_id, {_SHINGLES_SQL} AS sh
               FROM documents WHERE doc_id % 97 <> 0),
             hits AS (
               SELECT e.doc_id, count(*) AS n_cont
@@ -6531,13 +6248,22 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                    round(coalesce(h.n_cont, 0) / greatest(len(c.sh), 1), 6) AS contamination,
                    (coalesce(h.n_cont, 0) > 0)::int AS contaminated
             FROM corpus c LEFT JOIN hits h ON c.doc_id = h.doc_id
-        """,
-        "doc_decontam_spans": f"""
+        """),
+        ("doc_fuzzy_decontam", lambda s, d: decontam.fuzzy_contamination(
+            _docs(s, d).where(F.col("doc_id") % _FUZZY_MOD != 0),
+            _docs(s, d).where(F.col("doc_id") % _FUZZY_MOD == 0),
+            threshold=0.2,
+        ), _doc_fuzzy_decontam_values),
+        ("doc_decontam_spans", lambda s, d: decontam.contamination_spans(
+            _docs(s, d).where(F.col("doc_id") % 97 != 0),
+            _docs(s, d).where(F.col("doc_id") % 97 == 0),
+            n=3,
+        ), lambda: f"""
             WITH corpus AS (
-              SELECT doc_id, {shingles_pos} AS sh
+              SELECT doc_id, {_SHINGLES_POS_SQL} AS sh
               FROM documents WHERE doc_id % 97 <> 0),
             bench AS (
-              SELECT DISTINCT unnest({shingles}) AS ngram
+              SELECT DISTINCT unnest({_SHINGLES_SQL}) AS ngram
               FROM documents WHERE doc_id % 97 = 0),
             g AS (
               SELECT doc_id, unnest(generate_series(1, len(sh))) AS pos,
@@ -6567,330 +6293,20 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM corpus c
             LEFT JOIN agg a USING (doc_id)
             LEFT JOIN mr USING (doc_id)
-        """,
-        "doc_repetition_scores": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            g AS (
-              SELECT doc_id, toks,
-                     list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
-                                    i -> toks[i] || ' ' || toks[i + 1]) AS grams
-              FROM t),
-            best AS (
-              SELECT doc_id, max(c) AS best FROM (
-                SELECT doc_id, gram, count(*) AS c
-                FROM (SELECT doc_id, unnest(grams) AS gram FROM g)
-                GROUP BY doc_id, gram)
-              GROUP BY doc_id)
-            SELECT g.doc_id,
-                   len(g.toks) AS n_tokens,
-                   round(1.0 - len(list_distinct(g.toks)) / greatest(len(g.toks), 1), 6)
-                       AS dup_token_ratio,
-                   round(coalesce(b.best, 0) / greatest(len(g.grams), 1), 6)
-                       AS top_ngram_ratio
-            FROM g LEFT JOIN best b ON g.doc_id = b.doc_id
-        """,
-        "doc_tfidf_keywords": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-              FROM documents),
-            per AS (
-              SELECT doc_id, unnest(list_distinct(ws)) AS token, ws FROM t),
-            tfp AS (
-              SELECT doc_id, token,
-                     len(list_filter(ws, x -> x = token)) AS tf
-              FROM per),
-            dfreq AS (
-              SELECT token, count(*) AS doc_freq FROM tfp GROUP BY token),
-            n AS (SELECT count(*)::DOUBLE AS nd FROM documents),
-            scored AS (
-              SELECT doc_id, tfp.token, tf, doc_freq,
-                     round(tf * (n.nd - doc_freq + 0.5) / (doc_freq + 0.5), 6)
-                       AS score
-              FROM tfp JOIN dfreq USING (token) CROSS JOIN n),
-            ranked AS (
-              SELECT *, row_number() OVER (
-                       PARTITION BY doc_id ORDER BY score DESC, token) AS rnk
-              FROM scored)
-            SELECT doc_id, token, tf, doc_freq, score, rnk
-            FROM ranked WHERE rnk <= 5
-        """,
-        "doc_bm25_topk": _bm25_topk_sql(),
-        "doc_rarity_scores": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-              FROM documents),
-            per AS (
-              SELECT doc_id, unnest(list_distinct(ws)) AS token, ws FROM t),
-            tfp AS (
-              SELECT doc_id, token,
-                     len(list_filter(ws, x -> x = token)) AS tf
-              FROM per),
-            dfreq AS (
-              SELECT token, count(*) AS doc_freq FROM tfp GROUP BY token),
-            j AS (
-              SELECT doc_id, tf, doc_freq FROM tfp JOIN dfreq USING (token))
-            SELECT doc_id,
-                   sum(tf)::BIGINT AS n_tokens,
-                   sum(CASE WHEN doc_freq <= 2 THEN tf ELSE 0 END)::BIGINT
-                     AS n_rare,
-                   round(sum(CASE WHEN doc_freq <= 2 THEN tf ELSE 0 END) /
-                         greatest(sum(tf), 1), 6) AS rare_ratio,
-                   round(sum(tf * doc_freq) / greatest(sum(tf), 1), 6)
-                     AS avg_doc_freq
-            FROM j GROUP BY doc_id
-        """,
-        "corpus_length_quantiles": """
-            WITH base AS (
-              SELECT source,
-                     len(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                       AS n_tokens,
-                     doc_id
-              FROM documents),
-            ranked AS (
-              SELECT source, n_tokens,
-                     row_number() OVER (
-                       PARTITION BY source ORDER BY n_tokens, doc_id) AS rn,
-                     count(*) OVER (PARTITION BY source) AS n
-              FROM base)
-            SELECT source, q, n_tokens AS n_tokens_q
-            FROM ranked
-            CROSS JOIN (VALUES (0.25::DOUBLE), (0.5::DOUBLE),
-                               (0.9::DOUBLE), (0.99::DOUBLE)) AS qt(q)
-            WHERE rn = floor(q * (n - 1)) + 1
-        """,
-        "corpus_cardinality": """
-            WITH base AS (
-              SELECT source, md5(lower(trim(text))) AS digest,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            d AS (SELECT source, count(*) AS n_docs,
-                         count(DISTINCT digest) AS n_unique_texts
-                  FROM base GROUP BY source),
-            t AS (SELECT source, count(*) AS n_tokens,
-                         count(DISTINCT token) AS n_unique_tokens
-                  FROM (SELECT source, unnest(toks) AS token FROM base)
-                  GROUP BY source)
-            SELECT source, n_docs, n_tokens, n_unique_texts, n_unique_tokens
-            FROM d JOIN t USING (source)
-        """,
-        "doc_bigram_cohesion": """
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            pos AS (
-              SELECT doc_id, unnest(toks) AS tok,
-                     unnest(range(0, len(toks))) AS ord
-              FROM t),
-            pairs AS (
-              SELECT p1.doc_id, p1.tok AS w1, p2.tok AS w2
-              FROM pos p1 JOIN pos p2
-                ON p1.doc_id = p2.doc_id AND p2.ord = p1.ord + 1),
-            bg AS (
-              SELECT doc_id, w1, w2, count(*) AS tf
-              FROM pairs GROUP BY 1, 2, 3),
-            c12 AS (SELECT w1, w2, sum(tf) AS c12 FROM bg GROUP BY 1, 2),
-            c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
-            agg AS (
-              SELECT b.doc_id, sum(b.tf)::BIGINT AS n_bigrams,
-                     sum(b.tf * c12.c12) AS num, sum(b.tf * c1.c1) AS den
-              FROM bg b JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
-              GROUP BY 1)
-            SELECT doc_id, n_bigrams,
-                   round(num / greatest(den, 1), 6) AS cohesion
-            FROM agg
-        """,
-        "corpus_quality_floor": """
-            WITH t AS (
-              SELECT doc_id, source, lower(trim(text)) AS txt,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            ql AS (
-              SELECT doc_id, source,
-                     round(least(len(toks) / 32.0, 1.0) *
-                           (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
-                           greatest(length(txt), 1), 6)), 6) AS quality
-              FROM t),
-            r AS (
-              SELECT doc_id, source, quality,
-                     row_number() OVER (PARTITION BY source
-                                        ORDER BY quality, doc_id) AS rn,
-                     count(*) OVER (PARTITION BY source) AS n
-              FROM ql)
-            SELECT doc_id, source, quality
-            FROM r WHERE rn > floor(0.2 * n)
-        """,
-        "corpus_collocations": """
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            pos AS (
-              SELECT doc_id, unnest(toks) AS tok,
-                     unnest(range(0, len(toks))) AS ord
-              FROM t),
-            uni AS (SELECT tok, count(*) AS c FROM pos GROUP BY tok),
-            n AS (SELECT count(*) AS total FROM pos),
-            pairs AS (
-              SELECT least(p1.tok, p2.tok) AS tok_a,
-                     greatest(p1.tok, p2.tok) AS tok_b
-              FROM pos p1 JOIN pos p2
-                ON p1.doc_id = p2.doc_id
-               AND p2.ord > p1.ord AND p2.ord <= p1.ord + 5),
-            pc AS (
-              SELECT tok_a, tok_b, count(*) AS n_pairs
-              FROM pairs GROUP BY tok_a, tok_b
-              HAVING count(*) >= 5)
-            SELECT tok_a, tok_b, n_pairs,
-                   round(n.total * n_pairs / (ua.c * ub.c), 6) AS lift
-            FROM pc
-            JOIN uni ua ON ua.tok = pc.tok_a
-            JOIN uni ub ON ub.tok = pc.tok_b, n
-            ORDER BY n_pairs DESC, tok_a, tok_b
-            LIMIT 50
-        """,
-        "corpus_source_mix": """
-            SELECT source, lang, count(*) AS n_docs,
-                   count(DISTINCT md5(lower(trim(text)))) AS n_unique,
-                   round(sum(length(lower(trim(text))))::DOUBLE / count(*), 6) AS avg_chars,
-                   round(1.0 - count(DISTINCT md5(lower(trim(text)))) / count(*), 6) AS dup_ratio
-            FROM documents GROUP BY source, lang
-        """,
-        "emb_hard_negatives": """
-            WITH topk AS (
-              SELECT query_id, neighbor_id, sim FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                    c.vec_id) AS rank
-                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-                WHERE q.vec_id < 50
-              ) WHERE rank <= 20),
-            neg AS (
-              SELECT t.query_id AS anchor_id, q.label,
-                     t.neighbor_id AS negative_id, n.label AS negative_label,
-                     t.sim,
-                     row_number() OVER (PARTITION BY t.query_id
-                         ORDER BY t.sim DESC, t.neighbor_id) AS neg_rank
-              FROM topk t
-              JOIN embeddings q ON t.query_id = q.vec_id
-              JOIN embeddings n ON t.neighbor_id = n.vec_id
-              WHERE n.label <> q.label)
-            SELECT anchor_id, label, negative_id, negative_label,
-                   CAST(neg_rank AS BIGINT) AS neg_rank, sim
-            FROM neg WHERE neg_rank <= 5
-        """,
-        "doc_source_cap": """
-            SELECT doc_id, source, CAST(keep_rank AS BIGINT) AS keep_rank
-            FROM (
-              SELECT doc_id, source,
-                     row_number() OVER (PARTITION BY source
-                         ORDER BY n_chars DESC, doc_id) AS keep_rank
-              FROM documents
-            ) WHERE keep_rank <= 50
-        """,
-        "emb_label_noise": """
-            WITH topk AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                    c.vec_id) AS rank
-                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-                WHERE q.vec_id < 1000
-              ) WHERE rank <= 10)
-            SELECT t.query_id AS vec_id, q.label,
-                   CAST(count(*) AS BIGINT) AS n_neighbors,
-                   CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-                   round(CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS DOUBLE)
-                         / count(*), 6) AS agree_frac,
-                   CAST(CASE WHEN 2 * sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END)
-                             < count(*) THEN 1 ELSE 0 END AS BIGINT) AS suspect
-            FROM topk t
-            JOIN embeddings q ON t.query_id = q.vec_id
-            JOIN embeddings n ON t.neighbor_id = n.vec_id
-            GROUP BY t.query_id, q.label
-        """,
-        "corpus_freq_spectrum": """
-            WITH tok AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
-              FROM documents),
-            counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
-            b AS (SELECT CASE WHEN cnt < 2 THEN 0 WHEN cnt < 4 THEN 1 WHEN cnt < 8 THEN 2 WHEN cnt < 16 THEN 3 WHEN cnt < 32 THEN 4 WHEN cnt < 64 THEN 5 WHEN cnt < 128 THEN 6 WHEN cnt < 256 THEN 7 WHEN cnt < 512 THEN 8 WHEN cnt < 1024 THEN 9 WHEN cnt < 2048 THEN 10 WHEN cnt < 4096 THEN 11 WHEN cnt < 8192 THEN 12 WHEN cnt < 16384 THEN 13 WHEN cnt < 32768 THEN 14 WHEN cnt < 65536 THEN 15 WHEN cnt < 131072 THEN 16 WHEN cnt < 262144 THEN 17 WHEN cnt < 524288 THEN 18 WHEN cnt < 1048576 THEN 19 WHEN cnt < 2097152 THEN 20 WHEN cnt < 4194304 THEN 21 WHEN cnt < 8388608 THEN 22 WHEN cnt < 16777216 THEN 23 WHEN cnt < 33554432 THEN 24 WHEN cnt < 67108864 THEN 25 WHEN cnt < 134217728 THEN 26 WHEN cnt < 268435456 THEN 27 WHEN cnt < 536870912 THEN 28 WHEN cnt < 1073741824 THEN 29 WHEN cnt < 2147483648 THEN 30 WHEN cnt < 4294967296 THEN 31 WHEN cnt < 8589934592 THEN 32 WHEN cnt < 17179869184 THEN 33 WHEN cnt < 34359738368 THEN 34 WHEN cnt < 68719476736 THEN 35 WHEN cnt < 137438953472 THEN 36 WHEN cnt < 274877906944 THEN 37 WHEN cnt < 549755813888 THEN 38 WHEN cnt < 1099511627776 THEN 39 WHEN cnt < 2199023255552 THEN 40 WHEN cnt < 4398046511104 THEN 41 WHEN cnt < 8796093022208 THEN 42 WHEN cnt < 17592186044416 THEN 43 WHEN cnt < 35184372088832 THEN 44 WHEN cnt < 70368744177664 THEN 45 WHEN cnt < 140737488355328 THEN 46 WHEN cnt < 281474976710656 THEN 47 WHEN cnt < 562949953421312 THEN 48 WHEN cnt < 1125899906842624 THEN 49 WHEN cnt < 2251799813685248 THEN 50 WHEN cnt < 4503599627370496 THEN 51 WHEN cnt < 9007199254740992 THEN 52 WHEN cnt < 18014398509481984 THEN 53 WHEN cnt < 36028797018963968 THEN 54 WHEN cnt < 72057594037927936 THEN 55 WHEN cnt < 144115188075855872 THEN 56 WHEN cnt < 288230376151711744 THEN 57 WHEN cnt < 576460752303423488 THEN 58 WHEN cnt < 1152921504606846976 THEN 59 WHEN cnt < 2305843009213693952 THEN 60 WHEN cnt < 4611686018427387904 THEN 61 ELSE 62 END AS bucket, cnt FROM counts),
-            spec AS (
-              SELECT bucket,
-                     CAST(MIN(cnt) AS BIGINT) AS min_count,
-                     CAST(MAX(cnt) AS BIGINT) AS max_count,
-                     CAST(count(*) AS BIGINT) AS n_types,
-                     CAST(sum(cnt) AS BIGINT) AS total_occurrences
-              FROM b GROUP BY bucket)
-            SELECT bucket, min_count, max_count, n_types, total_occurrences,
-                   CAST(sum(n_types) OVER (ORDER BY bucket ASC
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS cum_types
-            FROM spec
-        """,
-        "emb_knn_bruteforce": """
-            SELECT query_id, neighbor_id, rank, sim FROM (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
-                     row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                  c.vec_id) AS rank
-              FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-              WHERE q.vec_id < 5
-            ) WHERE rank <= 10
-        """,
-        "emb_ann_lsh": """
-            WITH b AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(generate_series(1, 8),
-                        i -> CASE WHEN embedding[i] > 0 THEN 1 << (i - 1) ELSE 0 END)) AS bucket
-              FROM embeddings)
-            SELECT query_id, neighbor_id, rank, sim FROM (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
-                     row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                  c.vec_id) AS rank
-              FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-              WHERE q.vec_id < 5
-            ) WHERE rank <= 5
-        """,
-        "emb_label_centroids": """
-            SELECT label, dim, round(avg(v), 6) AS centroid FROM (
-              SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-                     unnest(embedding)::DOUBLE AS v
-              FROM embeddings)
-            GROUP BY label, dim
-        """,
-        "emb_cosine_near_dups": """
-            WITH b AS (
-              SELECT vec_id, embedding,
-                     list_sum(list_transform(generate_series(1, 8),
-                        i -> CASE WHEN embedding[i] > 0 THEN 1 << (i - 1) ELSE 0 END)) AS bucket
-              FROM embeddings)
-            SELECT a, b, sim FROM (
-              SELECT l.vec_id AS a, r.vec_id AS b,
-                     round(list_cosine_similarity(l.embedding::DOUBLE[], r.embedding::DOUBLE[]), 6) AS sim
-              FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-            ) WHERE sim >= 0.15
-        """,
-        "corpus_curated": curated_sql,
-        "corpus_curated_shards": f"""
-            WITH cur AS ({curated_sql}),
-            v AS (SELECT * FROM {_doc_training_shards_values()})
-            SELECT c.doc_id, v.shard,
-                   (row_number() OVER (PARTITION BY v.shard
-                                       ORDER BY v.h, c.doc_id) - 1)::BIGINT
-                     AS pos
-            FROM cur c JOIN v USING (doc_id)
-        """,
-        "doc_line_dedup": """
+        """),
+        # corpus-wide line dedup: the flat synthetic text has no newlines,
+        # so the query derives a multi-line corpus deterministically first
+        # (newline after every 8th token) — the operator itself is the
+        # general RefinedWeb boilerplate-line removal
+        ("doc_line_dedup", lambda s, d: dedup.line_dedup(
+            _docs(s, d).withColumn(
+                "text",
+                F.regexp_replace(
+                    F.col("text"), r"((?:\S+\s+){7}\S+)\s+", "$1\n"
+                ),
+            ),
+            min_docs=2,
+        ), lambda: """
             WITH docs2 AS (
               SELECT doc_id,
                      regexp_replace(text, '((?:\\S+\\s+){7}\\S+)\\s+',
@@ -6916,42 +6332,14 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                      AS n_removed,
                    coalesce(r.text_clean, '') AS text_clean
             FROM docs2 d LEFT JOIN reb r USING (doc_id)
-        """,
-        "doc_weighted_sample": f"""
-            WITH t AS (
-              SELECT doc_id, lower(trim(text)) AS txt,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            q AS (
-              SELECT doc_id,
-                     len(toks) AS n_tokens,
-                     round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
-                           greatest(length(txt), 1), 6) AS punct_ratio,
-                     round(len(list_filter(toks, x -> list_contains(
-                           ['the','a','of','and','to','in','is'], x))) /
-                           greatest(len(toks), 1), 6) AS stopword_ratio,
-                     round(least(len(toks) / 32.0, 1.0) *
-                           (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
-                           greatest(length(txt), 1), 6)), 6) AS quality
-              FROM t),
-            hs AS (SELECT * FROM {_doc_hash_values()})
-            SELECT q.doc_id, q.n_tokens, q.punct_ratio, q.stopword_ratio,
-                   q.quality,
-                   round(q.quality * 1048576)::BIGINT AS keep_threshold
-            FROM q JOIN hs USING (doc_id)
-            WHERE hs.h < round(q.quality * 1048576)::BIGINT
-        """,
-        "doc_dsir_weights": _doc_dsir_sql(),
-        "doc_dsir_selected": f"""
-            WITH d AS ({_doc_dsir_sql()}),
-            hs AS (SELECT * FROM {_doc_hash_values()})
-            SELECT d.doc_id, d.n_feats, d.t_hits, d.r_hits, d.lift,
-                   CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
-                     AS keep_threshold
-            FROM d JOIN hs ON d.doc_id = hs.doc_id
-            WHERE hs.h < CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
-        """,
-        "doc_dup_ngram_coverage": """
+        """),
+        # span-granular duplication diagnostic (Lee et al. ExactSubstr at
+        # n-gram granularity): fraction of each doc's tokens covered by a
+        # cross-doc duplicated n-gram — digest-only frequency shuffle,
+        # broadcast semi-join, integer interval-union fold per doc
+        ("doc_dup_ngram_coverage", lambda s, d: dedup.dup_ngram_coverage(
+            _docs(s, d), n=5, min_docs=2
+        ), lambda: """
             WITH t AS (
               SELECT doc_id,
                      regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
@@ -6980,32 +6368,83 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                    round(coalesce(c.n_covered, 0) / greatest(b.n_tokens, 1), 6)
                      AS coverage
             FROM base b LEFT JOIN cov c USING (doc_id)
-        """,
-        "doc_chunks": """
+        """),
+
+        # deterministic sampling (training-data curation)
+        ("doc_stratified_sample", lambda s, d: sample.stratified_sample(
+            _docs(s, d), sample.length_bucket(), _SAMPLE_FRACTIONS
+        ).select("doc_id", "stratum"), _doc_stratified_sample_values),
+        ("doc_balanced_sample", lambda s, d: sample.balanced_sample(
+            _docs(s, d), sample.length_bucket(), k=25
+        ).select("doc_id", "stratum", "rnk"), _doc_balanced_sample_values),
+        # continuous importance sampling: keep-probability = the quality
+        # score itself (quality-weighted corpus thinning)
+        ("doc_weighted_sample", lambda s, d: sample.weighted_sample(
+            text.quality_scores(_docs(s, d)), weight=F.col("quality")
+        ), lambda: f"""
             WITH t AS (
-              SELECT doc_id,
+              SELECT doc_id, lower(trim(text)) AS txt,
                      regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
               FROM documents),
-            n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-            c AS (
-              SELECT doc_id, toks, n,
-                     unnest(range(0, CASE WHEN n <= 48 THEN 1
-                                   ELSE ((n - 48 + 31) // 32) + 1 END)) AS i
-              FROM n)
-            SELECT doc_id, i::INT AS chunk_id, (i * 32)::INT AS start_tok,
-                   least(48, n - i * 32)::INT AS n_tokens,
-                   array_to_string(toks[(i * 32 + 1):(i * 32 + 48)], ' ')
-                     AS chunk_text
-            FROM c
-        """,
-        "doc_training_shards": f"""
+            q AS (
+              SELECT doc_id,
+                     len(toks) AS n_tokens,
+                     round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
+                           greatest(length(txt), 1), 6) AS punct_ratio,
+                     round(len(list_filter(toks, x -> list_contains(
+                           ['the','a','of','and','to','in','is'], x))) /
+                           greatest(len(toks), 1), 6) AS stopword_ratio,
+                     round(least(len(toks) / 32.0, 1.0) *
+                           (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
+                           greatest(length(txt), 1), 6)), 6) AS quality
+              FROM t),
+            hs AS (SELECT * FROM {_doc_hash_values()})
+            SELECT q.doc_id, q.n_tokens, q.punct_ratio, q.stopword_ratio,
+                   q.quality,
+                   round(q.quality * 1048576)::BIGINT AS keep_threshold
+            FROM q JOIN hs USING (doc_id)
+            WHERE hs.h < round(q.quality * 1048576)::BIGINT
+        """),
+        # DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
+        # importance lift of every raw doc vs a small target exemplar set
+        # (doc_id % 23 == 0 plays the target domain); exact-integer
+        # ratio-of-means scoring, B=4096 buckets broadcast
+        ("doc_dsir_weights", lambda s, d: sample.dsir_weights(
+            _docs(s, d).where(F.col("doc_id") % 23 != 0),
+            _docs(s, d).where(F.col("doc_id") % 23 == 0),
+            buckets=4096,
+        ), _doc_dsir_sql),
+        # the DSIR RESAMPLING step: importance lift (capped at 1) becomes
+        # the per-row keep probability of the deterministic hash-Bernoulli
+        # sampler — weights → weighted_sample, the full Xie et al. recipe
+        ("doc_dsir_selected", lambda s, d: sample.weighted_sample(
+            sample.dsir_weights(
+                _docs(s, d).where(F.col("doc_id") % 23 != 0),
+                _docs(s, d).where(F.col("doc_id") % 23 == 0),
+                buckets=4096,
+            ),
+            weight=F.least(F.col("lift"), F.lit(1.0)),
+        ), lambda: f"""
+            WITH d AS ({_doc_dsir_sql()}),
+            hs AS (SELECT * FROM {_doc_hash_values()})
+            SELECT d.doc_id, d.n_feats, d.t_hits, d.r_hits, d.lift,
+                   CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
+                     AS keep_threshold
+            FROM d JOIN hs ON d.doc_id = hs.doc_id
+            WHERE hs.h < CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
+        """),
+        ("doc_training_shards", lambda s, d: sample.shuffle_shards(
+            _docs(s, d), 8, seed=0
+        ).select("doc_id", "shard", "pos"), lambda: f"""
             WITH v AS (SELECT * FROM {_doc_training_shards_values()})
             SELECT doc_id, shard,
                    (row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
                     - 1)::BIGINT AS pos
             FROM v
-        """,
-        "doc_pack_sequences": f"""
+        """),
+        ("doc_pack_sequences", lambda s, d: sample.pack_sequences(
+            _docs(s, d), budget=64, n_shards=4
+        ), lambda: f"""
             WITH shards AS (SELECT * FROM {_doc_pack_shards_values()}),
             base AS (
               SELECT d.doc_id, s.shard,
@@ -7022,8 +6461,439 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             SELECT doc_id, shard, (ce // 64)::BIGINT AS seq_id,
                    n_tokens, (ce % 64)::BIGINT AS tok_offset
             FROM w
-        """,
-        "emb_quantized": """
+        """),
+        ("corpus_mixture", lambda s, d: sample.token_budget_mixture(
+            _docs(s, d), _MIXTURE_WEIGHTS, _MIXTURE_TOTAL
+        ), _corpus_mixture_sql),
+        # sliding context-window chunking (RAG ingestion / long-doc
+        # pretraining split); 48-token windows every 32 tokens so the
+        # synthetic corpus median (~50-70 tokens) exercises multi-chunk,
+        # tail-shorter-than-window, and single-chunk docs at once
+        ("doc_chunks", lambda s, d: sample.chunk_documents(
+            _docs(s, d), chunk_tokens=48, stride=32
+        ), lambda: """
+            WITH t AS (
+              SELECT doc_id,
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents),
+            n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
+            c AS (
+              SELECT doc_id, toks, n,
+                     unnest(range(0, CASE WHEN n <= 48 THEN 1
+                                   ELSE ((n - 48 + 31) // 32) + 1 END)) AS i
+              FROM n)
+            SELECT doc_id, i::INT AS chunk_id, (i * 32)::INT AS start_tok,
+                   least(48, n - i * 32)::INT AS n_tokens,
+                   array_to_string(toks[(i * 32 + 1):(i * 32 + 48)], ' ')
+                     AS chunk_text
+            FROM c
+        """),
+
+        # text analysis
+        # the synthetic corpus is single-line and unpunctuated, so the
+        # driver instantiation gates on word count (require_punct=False,
+        # min_words=50 ~ the corpus median); the punctuation path is
+        # pytest-locked on crafted multi-line docs
+        ("doc_clean_text", lambda s, d: text.clean_text(
+            _docs(s, d), min_words=50, require_punct=False
+        ).select("doc_id", "clean_text", "n_lines_kept", "n_lines_dropped"), lambda: """
+            WITH l AS (
+              SELECT doc_id, regexp_split_to_array(text, '\\n') AS lines
+              FROM documents),
+            f AS (
+              SELECT doc_id, len(lines) AS n_lines,
+                     list_filter(lines, x ->
+                       len(regexp_split_to_array(trim(x), '\\s+')) >= 50
+                       AND NOT (contains(lower(x), 'cookie')
+                                OR contains(lower(x), 'javascript')
+                                OR contains(lower(x), 'lorem ipsum'))) AS kept
+              FROM l)
+            SELECT doc_id, array_to_string(kept, chr(10)) AS clean_text,
+                   len(kept) AS n_lines_kept,
+                   n_lines - len(kept) AS n_lines_dropped
+            FROM f WHERE len(kept) > 0
+        """),
+        ("doc_token_stats", lambda s, d: text.token_count(_docs(s, d)), lambda: """
+            SELECT doc_id, len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
+                   length(lower(trim(text))) AS n_chars_norm
+            FROM documents
+        """),
+        ("doc_quality_scores", lambda s, d: text.quality_scores(_docs(s, d)),
+         lambda: """
+            WITH t AS (
+              SELECT doc_id, lower(trim(text)) AS txt,
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents)
+            SELECT doc_id,
+                   len(toks) AS n_tokens,
+                   round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
+                         greatest(length(txt), 1), 6) AS punct_ratio,
+                   round(len(list_filter(toks, x -> list_contains(
+                         ['the','a','of','and','to','in','is'], x))) /
+                         greatest(len(toks), 1), 6) AS stopword_ratio,
+                   round(least(len(toks) / 32.0, 1.0) *
+                         (1.0 - round((length(txt) - length(regexp_replace(txt, '[^\\w\\s]', '', 'g'))) /
+                         greatest(length(txt), 1), 6)), 6) AS quality
+            FROM t
+        """),
+        ("doc_language_id", lambda s, d: text.language_id(_docs(s, d)), lambda: f"""
+            SELECT doc_id, {_LANG_CASE_SQL} AS lang_pred FROM documents
+        """),
+        ("doc_fingerprints", lambda s, d: text.fingerprints(_docs(s, d)), lambda: """
+            SELECT doc_id,
+                   md5(array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[1:8], ' ')) AS fingerprint
+            FROM documents
+        """),
+        # lexical diversity: type-token ratio + Simpson repeat
+        # concentration — exact-integer ratios, spam/template signal
+        ("doc_lexical_diversity", lambda s, d: text.lexical_diversity(
+            _docs(s, d)
+        ), lambda: """
+            WITH tf AS (
+              SELECT doc_id, tok, COUNT(*) AS tf
+              FROM (SELECT doc_id,
+                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                    FROM documents)
+              GROUP BY doc_id, tok),
+            agg AS (
+              SELECT doc_id,
+                     CAST(SUM(tf) AS BIGINT) AS n_tokens,
+                     CAST(COUNT(*) AS BIGINT) AS n_types,
+                     CAST(SUM(tf * (tf - 1)) AS BIGINT) AS rep
+              FROM tf GROUP BY doc_id)
+            SELECT doc_id, n_tokens, n_types,
+                   ROUND(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
+                   CASE WHEN n_tokens < 2 THEN 0.0
+                        ELSE ROUND(CAST(rep AS DOUBLE) /
+                                   CAST(n_tokens * (n_tokens - 1) AS DOUBLE), 6)
+                   END AS simpson
+            FROM agg
+        """),
+        ("doc_subword_counts", lambda s, d: text.bpe_ish_token_count(_docs(s, d)),
+         lambda: """
+            SELECT doc_id,
+                   len(regexp_extract_all(lower(trim(text)), '[a-z0-9]+|[^a-z0-9\\s]')) AS n_subword
+            FROM documents
+        """),
+        ("doc_top_bigrams", lambda s, d: text.top_ngrams(_docs(s, d), n=2, k=20),
+         lambda: """
+            SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
+            FROM (
+              SELECT doc_id, unnest(list_transform(
+                       generate_series(1, greatest(len(W) - 1, 0)),
+                       i -> W[i] || ' ' || W[i+1])) AS ngram
+              FROM (SELECT doc_id,
+                           regexp_split_to_array(lower(trim(text)), '\\s+') AS W
+                    FROM documents))
+            GROUP BY ngram
+            ORDER BY n_occurrences DESC, ngram
+            LIMIT 20
+        """),
+        ("doc_pii_counts", lambda s, d: text.pii_counts(_docs(s, d)), lambda: """
+            SELECT doc_id,
+                   len(regexp_extract_all(lower(trim(text)),
+                       '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) AS n_emails,
+                   len(regexp_extract_all(lower(trim(text)),
+                       'https?://[^\\s]+')) AS n_urls,
+                   len(regexp_extract_all(lower(trim(text)),
+                       '[0-9]{6,}')) AS n_long_digit_runs,
+                   CASE WHEN len(regexp_extract_all(lower(trim(text)),
+                            '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z][a-z]+')) > 0
+                          OR len(regexp_extract_all(lower(trim(text)),
+                            'https?://[^\\s]+')) > 0
+                          OR len(regexp_extract_all(lower(trim(text)),
+                            '[0-9]{6,}')) > 0
+                        THEN 1 ELSE 0 END AS has_pii
+            FROM documents
+        """),
+        ("doc_repetition_scores", lambda s, d: text.repetition_scores(_docs(s, d), n=2),
+         lambda: """
+            WITH t AS (
+              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents),
+            g AS (
+              SELECT doc_id, toks,
+                     list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
+                                    i -> toks[i] || ' ' || toks[i + 1]) AS grams
+              FROM t),
+            best AS (
+              SELECT doc_id, max(c) AS best FROM (
+                SELECT doc_id, gram, count(*) AS c
+                FROM (SELECT doc_id, unnest(grams) AS gram FROM g)
+                GROUP BY doc_id, gram)
+              GROUP BY doc_id)
+            SELECT g.doc_id,
+                   len(g.toks) AS n_tokens,
+                   round(1.0 - len(list_distinct(g.toks)) / greatest(len(g.toks), 1), 6)
+                       AS dup_token_ratio,
+                   round(coalesce(b.best, 0) / greatest(len(g.grams), 1), 6)
+                       AS top_ngram_ratio
+            FROM g LEFT JOIN best b ON g.doc_id = b.doc_id
+        """),
+        ("doc_tfidf_keywords", lambda s, d: text.tfidf_keywords(_docs(s, d), k=5),
+         lambda: """
+            WITH t AS (
+              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
+              FROM documents),
+            per AS (
+              SELECT doc_id, unnest(list_distinct(ws)) AS token, ws FROM t),
+            tfp AS (
+              SELECT doc_id, token,
+                     len(list_filter(ws, x -> x = token)) AS tf
+              FROM per),
+            dfreq AS (
+              SELECT token, count(*) AS doc_freq FROM tfp GROUP BY token),
+            n AS (SELECT count(*)::DOUBLE AS nd FROM documents),
+            scored AS (
+              SELECT doc_id, tfp.token, tf, doc_freq,
+                     round(tf * (n.nd - doc_freq + 0.5) / (doc_freq + 0.5), 6)
+                       AS score
+              FROM tfp JOIN dfreq USING (token) CROSS JOIN n),
+            ranked AS (
+              SELECT *, row_number() OVER (
+                       PARTITION BY doc_id ORDER BY score DESC, token) AS rnk
+              FROM scored)
+            SELECT doc_id, token, tf, doc_freq, score, rnk
+            FROM ranked WHERE rnk <= 5
+        """),
+        ("doc_bm25_topk", lambda s, d: text.bm25_topk(
+            _docs(s, d), _BM25_TERMS, topk=20
+        ), _bm25_topk_sql),
+        ("doc_bigram_cohesion", lambda s, d: text.bigram_cohesion(_docs(s, d)),
+         lambda: """
+            WITH t AS (
+              SELECT doc_id,
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents),
+            pos AS (
+              SELECT doc_id, unnest(toks) AS tok,
+                     unnest(range(0, len(toks))) AS ord
+              FROM t),
+            pairs AS (
+              SELECT p1.doc_id, p1.tok AS w1, p2.tok AS w2
+              FROM pos p1 JOIN pos p2
+                ON p1.doc_id = p2.doc_id AND p2.ord = p1.ord + 1),
+            bg AS (
+              SELECT doc_id, w1, w2, count(*) AS tf
+              FROM pairs GROUP BY 1, 2, 3),
+            c12 AS (SELECT w1, w2, sum(tf) AS c12 FROM bg GROUP BY 1, 2),
+            c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
+            agg AS (
+              SELECT b.doc_id, sum(b.tf)::BIGINT AS n_bigrams,
+                     sum(b.tf * c12.c12) AS num, sum(b.tf * c1.c1) AS den
+              FROM bg b JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
+              GROUP BY 1)
+            SELECT doc_id, n_bigrams,
+                   round(num / greatest(den, 1), 6) AS cohesion
+            FROM agg
+        """),
+        ("doc_rarity_scores", lambda s, d: text.rarity_scores(
+            _docs(s, d), rare_max_df=2
+        ), lambda: """
+            WITH t AS (
+              SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
+              FROM documents),
+            per AS (
+              SELECT doc_id, unnest(list_distinct(ws)) AS token, ws FROM t),
+            tfp AS (
+              SELECT doc_id, token,
+                     len(list_filter(ws, x -> x = token)) AS tf
+              FROM per),
+            dfreq AS (
+              SELECT token, count(*) AS doc_freq FROM tfp GROUP BY token),
+            j AS (
+              SELECT doc_id, tf, doc_freq FROM tfp JOIN dfreq USING (token))
+            SELECT doc_id,
+                   sum(tf)::BIGINT AS n_tokens,
+                   sum(CASE WHEN doc_freq <= 2 THEN tf ELSE 0 END)::BIGINT
+                     AS n_rare,
+                   round(sum(CASE WHEN doc_freq <= 2 THEN tf ELSE 0 END) /
+                         greatest(sum(tf), 1), 6) AS rare_ratio,
+                   round(sum(tf * doc_freq) / greatest(sum(tf), 1), 6)
+                     AS avg_doc_freq
+            FROM j GROUP BY doc_id
+        """),
+        ("corpus_source_mix", lambda s, d: text.source_mix(_docs(s, d)), lambda: """
+            SELECT source, lang, count(*) AS n_docs,
+                   count(DISTINCT md5(lower(trim(text)))) AS n_unique,
+                   round(sum(length(lower(trim(text))))::DOUBLE / count(*), 6) AS avg_chars,
+                   round(1.0 - count(DISTINCT md5(lower(trim(text)))) / count(*), 6) AS dup_ratio
+            FROM documents GROUP BY source, lang
+        """),
+        # oracle gate opts into exact distinct counts; the production
+        # default is the HLL sketch mode (approx_count_distinct)
+        ("corpus_cardinality", lambda s, d: text.corpus_cardinality(
+            _docs(s, d), exact=True
+        ), lambda: """
+            WITH base AS (
+              SELECT source, md5(lower(trim(text))) AS digest,
+                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+              FROM documents),
+            d AS (SELECT source, count(*) AS n_docs,
+                         count(DISTINCT digest) AS n_unique_texts
+                  FROM base GROUP BY source),
+            t AS (SELECT source, count(*) AS n_tokens,
+                         count(DISTINCT token) AS n_unique_tokens
+                  FROM (SELECT source, unnest(toks) AS token FROM base)
+                  GROUP BY source)
+            SELECT source, n_docs, n_tokens, n_unique_texts, n_unique_tokens
+            FROM d JOIN t USING (source)
+        """),
+        # Heaps-law vocabulary growth: distinct token types vs corpus
+        # prefix at 10 doc-id checkpoints — pure-integer contract
+        ("corpus_vocab_growth", lambda s, d: text.vocab_growth(
+            _docs(s, d), n_checkpoints=10
+        ), lambda: """
+            WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS mxid FROM documents),
+            spine AS (
+              SELECT CAST(range AS INT) AS i,
+                     CAST((range * mxid) // 10 AS BIGINT) AS checkpoint
+              FROM range(1, 11), mx),
+            pd AS (
+              SELECT greatest(CAST((CAST(doc_id AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
+                     COUNT(*) AS docs,
+                     CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) AS toks
+              FROM documents, mx GROUP BY 1),
+            fo AS (
+              SELECT tok, MIN(doc_id) AS fd
+              FROM (SELECT doc_id,
+                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                    FROM documents)
+              GROUP BY tok),
+            fv AS (
+              SELECT greatest(CAST((CAST(fd AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
+                     COUNT(*) AS vocab
+              FROM fo, mx GROUP BY 1)
+            SELECT spine.checkpoint,
+                   CAST(SUM(COALESCE(pd.docs, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_docs_cum,
+                   CAST(SUM(COALESCE(pd.toks, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_tokens_cum,
+                   CAST(SUM(COALESCE(fv.vocab, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS vocab_cum
+            FROM spine
+            LEFT JOIN pd ON spine.i = pd.i
+            LEFT JOIN fv ON spine.i = fv.i
+        """),
+        ("corpus_curated", q_corpus_curated, lambda: _CURATED_SQL),
+
+        # similarity search
+        # kNN label-agreement audit (confident-learning family): does
+        # each vector's cosine neighborhood vote for its own label —
+        # strict-minority agreement flags mislabeled candidates
+        # audits the vec_id < 1000 stratum — the docstring's sampled-audit
+        # posture (label noise is a population estimate); at sf0.01 the
+        # corpus has 500 vectors so the driver gate still audits ALL of
+        # them (hash unchanged), while the sf0.1 bench stops paying the
+        # full all-pairs scan
+        ("emb_label_noise", lambda s, d: similarity.knn_label_noise(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 1000), k=10
+        ), lambda: """
+            WITH topk AS (
+              SELECT query_id, neighbor_id FROM (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       row_number() OVER (PARTITION BY q.vec_id
+                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                    c.vec_id) AS rank
+                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+                WHERE q.vec_id < 1000
+              ) WHERE rank <= 10)
+            SELECT t.query_id AS vec_id, q.label,
+                   CAST(count(*) AS BIGINT) AS n_neighbors,
+                   CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+                   round(CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS DOUBLE)
+                         / count(*), 6) AS agree_frac,
+                   CAST(CASE WHEN 2 * sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END)
+                             < count(*) THEN 1 ELSE 0 END AS BIGINT) AS suspect
+            FROM topk t
+            JOIN embeddings q ON t.query_id = q.vec_id
+            JOIN embeddings n ON t.neighbor_id = n.vec_id
+            GROUP BY t.query_id, q.label
+        """),
+        # corpus frequency spectrum: types binned by floor(log2(count))
+        # — the Zipf-profile histogram; integer-exact, no vocab sort
+        ("corpus_freq_spectrum", lambda s, d: text.frequency_spectrum(
+            _docs(s, d)
+        ), lambda: """
+            WITH tok AS (
+              SELECT doc_id,
+                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+              FROM documents),
+            counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
+            b AS (SELECT CASE WHEN cnt < 2 THEN 0 WHEN cnt < 4 THEN 1 WHEN cnt < 8 THEN 2 WHEN cnt < 16 THEN 3 WHEN cnt < 32 THEN 4 WHEN cnt < 64 THEN 5 WHEN cnt < 128 THEN 6 WHEN cnt < 256 THEN 7 WHEN cnt < 512 THEN 8 WHEN cnt < 1024 THEN 9 WHEN cnt < 2048 THEN 10 WHEN cnt < 4096 THEN 11 WHEN cnt < 8192 THEN 12 WHEN cnt < 16384 THEN 13 WHEN cnt < 32768 THEN 14 WHEN cnt < 65536 THEN 15 WHEN cnt < 131072 THEN 16 WHEN cnt < 262144 THEN 17 WHEN cnt < 524288 THEN 18 WHEN cnt < 1048576 THEN 19 WHEN cnt < 2097152 THEN 20 WHEN cnt < 4194304 THEN 21 WHEN cnt < 8388608 THEN 22 WHEN cnt < 16777216 THEN 23 WHEN cnt < 33554432 THEN 24 WHEN cnt < 67108864 THEN 25 WHEN cnt < 134217728 THEN 26 WHEN cnt < 268435456 THEN 27 WHEN cnt < 536870912 THEN 28 WHEN cnt < 1073741824 THEN 29 WHEN cnt < 2147483648 THEN 30 WHEN cnt < 4294967296 THEN 31 WHEN cnt < 8589934592 THEN 32 WHEN cnt < 17179869184 THEN 33 WHEN cnt < 34359738368 THEN 34 WHEN cnt < 68719476736 THEN 35 WHEN cnt < 137438953472 THEN 36 WHEN cnt < 274877906944 THEN 37 WHEN cnt < 549755813888 THEN 38 WHEN cnt < 1099511627776 THEN 39 WHEN cnt < 2199023255552 THEN 40 WHEN cnt < 4398046511104 THEN 41 WHEN cnt < 8796093022208 THEN 42 WHEN cnt < 17592186044416 THEN 43 WHEN cnt < 35184372088832 THEN 44 WHEN cnt < 70368744177664 THEN 45 WHEN cnt < 140737488355328 THEN 46 WHEN cnt < 281474976710656 THEN 47 WHEN cnt < 562949953421312 THEN 48 WHEN cnt < 1125899906842624 THEN 49 WHEN cnt < 2251799813685248 THEN 50 WHEN cnt < 4503599627370496 THEN 51 WHEN cnt < 9007199254740992 THEN 52 WHEN cnt < 18014398509481984 THEN 53 WHEN cnt < 36028797018963968 THEN 54 WHEN cnt < 72057594037927936 THEN 55 WHEN cnt < 144115188075855872 THEN 56 WHEN cnt < 288230376151711744 THEN 57 WHEN cnt < 576460752303423488 THEN 58 WHEN cnt < 1152921504606846976 THEN 59 WHEN cnt < 2305843009213693952 THEN 60 WHEN cnt < 4611686018427387904 THEN 61 ELSE 62 END AS bucket, cnt FROM counts),
+            spec AS (
+              SELECT bucket,
+                     CAST(MIN(cnt) AS BIGINT) AS min_count,
+                     CAST(MAX(cnt) AS BIGINT) AS max_count,
+                     CAST(count(*) AS BIGINT) AS n_types,
+                     CAST(sum(cnt) AS BIGINT) AS total_occurrences
+              FROM b GROUP BY bucket)
+            SELECT bucket, min_count, max_count, n_types, total_occurrences,
+                   CAST(sum(n_types) OVER (ORDER BY bucket ASC
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS BIGINT) AS cum_types
+            FROM spec
+        """),
+        ("emb_knn_bruteforce", lambda s, d: similarity.brute_force_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5), k=10
+        ), lambda: """
+            SELECT query_id, neighbor_id, rank, sim FROM (
+              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                     round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
+                     row_number() OVER (PARTITION BY q.vec_id
+                         ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                  c.vec_id) AS rank
+              FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+              WHERE q.vec_id < 5
+            ) WHERE rank <= 10
+        """),
+        ("emb_ann_lsh", lambda s, d: similarity.ann_lsh_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5), k=5, bits=8
+        ), lambda: """
+            WITH b AS (
+              SELECT vec_id, embedding,
+                     list_sum(list_transform(generate_series(1, 8),
+                        i -> CASE WHEN embedding[i] > 0 THEN 1 << (i - 1) ELSE 0 END)) AS bucket
+              FROM embeddings)
+            SELECT query_id, neighbor_id, rank, sim FROM (
+              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                     round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
+                     row_number() OVER (PARTITION BY q.vec_id
+                         ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                  c.vec_id) AS rank
+              FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
+              WHERE q.vec_id < 5
+            ) WHERE rank <= 5
+        """),
+        ("emb_ivf_topk", lambda s, d: similarity.ivf_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
+            k=5, n_centroids=8, nprobe=2
+        ), _emb_ivf_values),
+        ("emb_label_centroids", lambda s, d: similarity.label_centroids(_emb(s, d)),
+         lambda: """
+            SELECT label, dim, round(avg(v), 6) AS centroid FROM (
+              SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
+                     unnest(embedding)::DOUBLE AS v
+              FROM embeddings)
+            GROUP BY label, dim
+        """),
+        ("emb_cosine_near_dups", lambda s, d: dedup.embedding_near_duplicates(
+            _emb(s, d), threshold=0.15
+        ), lambda: """
+            WITH b AS (
+              SELECT vec_id, embedding,
+                     list_sum(list_transform(generate_series(1, 8),
+                        i -> CASE WHEN embedding[i] > 0 THEN 1 << (i - 1) ELSE 0 END)) AS bucket
+              FROM embeddings)
+            SELECT a, b, sim FROM (
+              SELECT l.vec_id AS a, r.vec_id AS b,
+                     round(list_cosine_similarity(l.embedding::DOUBLE[], r.embedding::DOUBLE[]), 6) AS sim
+              FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
+            ) WHERE sim >= 0.15
+        """),
+        ("emb_semantic_dups", lambda s, d: dedup.semantic_duplicates(
+            _emb(s, d), n_clusters=8, threshold=0.3
+        ), _emb_semdedup_values),
+        ("emb_quantized", lambda s, d: similarity.quantize_embeddings(
+            _emb(s, d)
+        ).select("vec_id", F.posexplode("qvec").alias("dim", "q")), lambda: """
             WITH x AS (
               SELECT vec_id, unnest(embedding)::DOUBLE AS x,
                      unnest(range(0, len(embedding))) AS dim
@@ -7035,124 +6905,56 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                         ELSE floor((x.x - r.lo) / r.span * 255.0 + 0.5)::INT - 128
                    END AS q
             FROM x JOIN r USING (dim)
-        """,
-        "media_features": _media_features_values(),
-        "media_frame_plan": _media_frame_plan_sql(),
-        "media_resize": _media_resize_values(),
-        "media_phash_dups": _media_phash_dups_values(),
-        "emb_ivf_topk": _emb_ivf_values(),
-        "emb_ivfpq_topk": _emb_ivfpq_values(),
-        "emb_semantic_dups": _emb_semdedup_values(),
-        "emb_pq_codebooks": _emb_pq_codebooks_values(),
-        "emb_pq_topk": _emb_pq_topk_values(),
-        # the search-only entries return exactly what the trainer-inclusive
-        # ones do (cached trained structures == freshly trained — the
-        # trainers are deterministic), so they share the same twins
-        "emb_pq_search": _emb_pq_topk_values(),
-        "emb_ivfpq_search": _emb_ivfpq_values(),
-        "emb_curation": _emb_curation_sql(),
-        "emb_projected": _emb_projected_values(),
-        "guard_verdicts": _guard_verdicts_values(),
-        "guard_error_codes": _guard_error_codes_values(),
-        "guard_is_write": _guard_is_write_values(),
-        "guard_accuracy": _guard_accuracy_values(),
-        "kg_triples_raw": _kg_triples_raw_values(),
-        "kg_canonical_triples": _kg_canonical_triples_values(),
-        "kg_extraction_pr": _kg_extraction_pr_sql(),
-        "kg_cypher_match": _kg_cypher_match_sql(),
-        "kg_cypher_varlen": _kg_cypher_varlen_sql(),
-        "kg_cypher_coworkers": _kg_cypher_coworkers_sql(),
-        "kg_cypher_degrees": _kg_cypher_degrees_sql(),
-        "kg_cypher_optional": _kg_cypher_optional_sql(),
-        "kg_cypher_unwind": _kg_cypher_unwind_sql(),
-        "kg_cypher_relvar": _kg_cypher_relvar_sql(),
-        "kg_cypher_with": _kg_cypher_with_sql(),
-        "kg_cypher_with_chain": _kg_cypher_with_chain_sql(),
-        "kg_merge_apply": _kg_merge_apply_sql(),
-        "kg_cypher_applied": _kg_cypher_match_sql(),
-        "kg_cypher_call": _kg_cypher_call_sql(),
-        "kg_cypher_proc": _kg_cypher_proc_sql(),
-        "kg_backbone": _kg_backbone_sql(),
-        "kg_louvain": _kg_louvain_sql(),
-        "kg_entity_degrees": _kg_entity_degrees_values(),
-        "kg_pagerank": _kg_pagerank_values(),
-        "kg_pagerank_weighted": _kg_pagerank_weighted_values(),
-        "kg_pagerank_recency": _kg_pagerank_recency_values(),
-        "kg_hits": _kg_hits_values(),
-        "kg_random_walks": _kg_random_walks_values(),
-        "kg_node2vec_walks": _kg_node2vec_walks_values(),
-        "kg_walk_pairs": _kg_walk_pairs_sql(),
-        "kg_walk_negatives": _kg_walk_negatives_values(),
-        "kg_entity_cooccur": _kg_entity_cooccur_sql(),
-        "kg_fuzzy_surfaces": _kg_fuzzy_surfaces_sql(),
-        "kg_khop": _kg_khop_sql(),
-        "kg_neighborhood_function": _kg_neighborhood_function_sql(),
-        "kg_harmonic": _kg_harmonic_sql(),
-        "kg_closeness": _kg_closeness_sql(),
-        "kg_eccentricity": _kg_eccentricity_sql(),
-        "kg_katz": _kg_katz_sql(),
-        "kg_reciprocity": _kg_reciprocity_sql(),
-        "kg_betweenness": _kg_betweenness_values(),
-        "kg_conflicts": _kg_conflicts_sql(),
-        "kg_triple_history": _kg_triple_history_values(),
-        "kg_fact_churn": _kg_fact_churn_sql(),
-        "kg_schema_infer": _kg_schema_infer_sql(),
-        "kg_schema_roundtrip": _kg_schema_roundtrip_sql(),
-        "kg_shortest_paths": _kg_shortest_paths_values(),
-        "kg_path_tree": _kg_path_tree_values(),
-        "kg_triple_fusion": _kg_triple_fusion_values(),
-        "kg_triple_diff": _kg_triple_diff_values(),
-        "kg_entity_similarity": _kg_entity_similarity_values(),
-        "kg_communities": _kg_communities_values(),
-        "kg_modularity": _kg_modularity_values(),
-        "kg_community_quality": _kg_community_quality_sql(),
-        "kg_metapaths": _KG_METAPATHS_SQL_TMPL.format(
+        """),
+
+        # multimodal plumbing (binary payload + typed metadata; stub kernel)
+        ("media_features", q_media_features, _media_features_values),
+        ("media_frame_plan", q_media_frame_plan, _media_frame_plan_sql),
+        ("media_resize", q_media_resize, _media_resize_values),
+
+        # cypher-guard (SURVEY §2 operator inventory, verdict parity)
+        ("guard_verdicts", q_guard_verdicts, _guard_verdicts_values),
+        ("guard_error_codes", q_guard_error_codes, _guard_error_codes_values),
+        ("guard_is_write", q_guard_is_write, _guard_is_write_values),
+        ("guard_accuracy", q_guard_accuracy, _guard_accuracy_values),
+
+        # KG pipeline extraction (exact oracle); full pipeline is bench/pytest
+        ("kg_triples_raw", q_kg_triples_raw, _kg_triples_raw_values),
+        ("kg_canonical_triples", q_kg_canonical_triples, _kg_canonical_triples_values),
+        ("kg_entity_degrees", q_kg_entity_degrees, _kg_entity_degrees_values),
+        ("kg_pagerank", q_kg_pagerank, _kg_pagerank_values),
+        ("kg_pagerank_weighted", q_kg_pagerank_weighted, _kg_pagerank_weighted_values),
+        ("kg_pagerank_recency", q_kg_pagerank_recency, _kg_pagerank_recency_values),
+        ("kg_node2vec_walks", q_kg_node2vec_walks, _kg_node2vec_walks_values),
+        ("kg_neighborhood_hyperball", q_kg_neighborhood_hyperball, None),
+        ("kg_harmonic_hyperball", q_kg_harmonic_hyperball, None),
+        ("kg_closeness_hyperball", q_kg_closeness_hyperball, None),
+        ("kg_spectral_embeddings", q_kg_spectral_embeddings, None),
+        ("kg_spectral_knn", q_kg_spectral_knn, None),
+        ("kg_eccentricity", q_kg_eccentricity, _kg_eccentricity_sql),
+        ("kg_katz", q_kg_katz, _kg_katz_sql),
+        ("kg_reciprocity", q_kg_reciprocity, _kg_reciprocity_sql),
+        ("kg_fact_churn", q_kg_fact_churn, _kg_fact_churn_sql),
+        ("kg_community_quality", q_kg_community_quality, _kg_community_quality_sql),
+        ("kg_metapaths", q_kg_metapaths, lambda: _KG_METAPATHS_SQL_TMPL.format(
             canon=_kg_canonical_triples_values()
-        ),
-        "kg_entailed": _kg_entailed_sql(),
-        "kg_graph_profile": _kg_graph_profile_values(),
-        "kg_assortativity": _kg_assortativity_values(),
-        "kg_scc": _kg_scc_values(),
-        "kg_ktruss": _kg_ktruss_values(),
-        "kg_triangles": _kg_triangles_values(),
-        "kg_clustering": _kg_clustering_values(),
-        "kg_bfs_depths": _kg_bfs_depths_values(),
-        "kg_kcore": _kg_kcore_values(),
-        "kg_link_prediction": _kg_link_prediction_values(),
-        "kg_ppr": _kg_ppr_values(),
-        "kg_neighbor_sample": _kg_neighbor_sample_values(),
-        "kg_entity_map": _kg_entity_map_values(),
-        "kg_blocking_report": _kg_blocking_report_values(),
-        "kg_entity_map_update": _kg_entity_map_update_values(),
-        "kg_components": _kg_components_values(),
-        "kg_media_links": _kg_media_links_values(),
-        "doc_minhash_near_dups": _doc_minhash_values(),
-        "doc_source_dup_matrix": f"""
-            WITH pairs AS ({_doc_minhash_values()}),
-            lab AS (SELECT doc_id, source FROM documents)
-            SELECT least(la.source, lb.source) AS source_a,
-                   greatest(la.source, lb.source) AS source_b,
-                   COUNT(*) AS n_pairs,
-                   MIN(sim) AS min_sim,
-                   MAX(sim) AS max_sim
-            FROM pairs
-            JOIN lab la ON pairs.a = la.doc_id
-            JOIN lab lb ON pairs.b = lb.doc_id
-            GROUP BY 1, 2
-        """,
-        "doc_neardup_incremental": _doc_neardup_incremental_values(),
-        "doc_simhash_near_dups": _doc_simhash_values(),
-        "doc_neardup_clusters": _doc_neardup_clusters_values(),
-        "doc_leakage_split": _doc_leakage_split_values(),
-        "doc_neardup_survivors": _doc_neardup_survivors_sql(),
-        "doc_neardup_report": (
-            "SELECT cluster_size, count(DISTINCT cluster_id) AS n_clusters, "
-            "count(*) AS n_docs FROM ("
-            + _doc_neardup_clusters_values()
-            + ") GROUP BY cluster_size"
-        ),
-        "doc_stratified_sample": _doc_stratified_sample_values(),
-        "doc_balanced_sample": _doc_balanced_sample_values(),
-        "corpus_mixture": _corpus_mixture_sql(),
-        "doc_fuzzy_decontam": _doc_fuzzy_decontam_values(),
-    }
+        )),
+        ("kg_entailed", q_kg_entailed, _kg_entailed_sql),
+        ("kg_blocking_report", q_kg_blocking_report, _kg_blocking_report_values),
+        ("kg_media_links", q_kg_media_links, _kg_media_links_values),
+    ]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: b for n, b, _ in registry()}
+
+
+def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
+    """Driver contract: no-arg call reads VALUES-oracle inputs from
+    `$SPARK_GRAFT_ORACLE_SF_DIR` (default sf0.01 — the dir the driver
+    compares at). Consumers comparing at another scale pass `sf_dir`
+    explicitly so the recomputed oracles and the Spark queries can never
+    silently read different datasets (ADVICE r2)."""
+    if sf_dir is not None:
+        os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+    return {n: o() for n, _, o in registry() if o}

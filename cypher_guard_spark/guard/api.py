@@ -163,10 +163,16 @@ def has_valid_cypher(query: str, schema) -> bool:
 
 
 def is_write(query: str) -> bool:
-    """python_bindings/src/lib.rs:1651-1688 — AST check for CREATE/MERGE/CALL
-    + ON CREATE/ON MATCH SET, plus the substring DELETE/REMOVE fallback with
-    its documented false positives (e.g. a variable named `removed`)."""
-    ast = parse_query(query)
+    """python_bindings/src/lib.rs:1651-1688 — `_is_write_ast` over a fresh
+    parse of `query`."""
+    return _is_write_ast(parse_query(query), query)
+
+
+def _is_write_ast(ast, query: str) -> bool:
+    """The reference's write rule on an already-parsed `query`: an AST check
+    for CREATE/MERGE/CALL + ON CREATE/ON MATCH SET, plus the substring
+    DELETE/REMOVE fallback on the raw text with its documented false
+    positives (e.g. a variable named `removed`)."""
     has_ast_write_ops = bool(ast.create_clauses or ast.merge_clauses or ast.call_clauses)
     has_set_ops = any(
         (m.on_create is not None and m.on_create.set_clauses)

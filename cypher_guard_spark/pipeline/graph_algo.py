@@ -242,7 +242,7 @@ def label_propagation(
     Scale posture: the same driver-looped join family as pagerank and
     the CC kernel — per round, one equi-join of the adjacency against
     the label table on the neighbor key, one partial-aggregating count
-    on (entity, label), one per-entity argmax window (shuffle keyed on
+    on (entity, label), one per-entity `min_by` argmax (shuffle keyed on
     entity, carrying (entity, label, count) rows only), and a lazy
     localCheckpoint to truncate the iterative lineage. Hub vertices are
     partial-agg safe (counts combine map-side); label cardinality only
@@ -258,11 +258,6 @@ def label_propagation(
     labels = adj.select("entity").distinct().select(
         "entity", F.col("entity").alias("community")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("entity").orderBy(
-        F.col("cnt").desc(), F.col("community").asc()
-    )
     for _ in range(iters):
         nbr_labels = adj.join(
             labels.withColumnRenamed("entity", "nbr"), "nbr"
@@ -270,9 +265,12 @@ def label_propagation(
         labels = (
             nbr_labels.groupBy("entity", "community")
             .agg(F.count("*").alias("cnt"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("entity", "community")
+            .groupBy("entity")
+            .agg(
+                F.min_by(
+                    "community", F.struct(-F.col("cnt"), F.col("community"))
+                ).alias("community")
+            )
             .localCheckpoint(eager=False)
         )
     return labels
@@ -2977,7 +2975,7 @@ def max_spanning_forest(
     Borůvka cycle-free with repeated weights.
 
     Scale shape (the reason Borůvka and not Prim/Kruskal): every round
-    does (a) one comp-keyed row_number window to pick each component's
+    does (a) one comp-keyed `min_by` aggregate to pick each component's
     best incident edge — a partial-shuffle bounded by the live edge
     count, hub fan-in irrelevant because the key is the component —
     and (b) one connected-components call on the SELECTION graph (≤ one
@@ -2992,7 +2990,6 @@ def max_spanning_forest(
     Weights should be integers (evidence counts) for an exact oracle.
     """
     from .canonicalize import connected_components
-    from pyspark.sql import Window
 
     e = edges.select(
         F.col(u).alias("u"), F.col(v).alias("v"), F.col(w).alias("w")
@@ -3020,13 +3017,15 @@ def max_spanning_forest(
         ).unionByName(
             cross.select(F.col("cv").alias("c"), "u", "v", "w", "cu", "cv")
         )
-        win = Window.partitionBy("c").orderBy(
-            F.desc("w"), F.asc("u"), F.asc("v")
-        )
         chosen = (
-            cand.withColumn("rn", F.row_number().over(win))
-            .where(F.col("rn") == 1)
-            .select("u", "v", "w", "cu", "cv")
+            cand.groupBy("c")
+            .agg(
+                F.min_by(
+                    F.struct("u", "v", "w", "cu", "cv"),
+                    F.struct(-F.col("w"), F.col("u"), F.col("v")),
+                ).alias("e")
+            )
+            .select("e.*")
             .dropDuplicates(["u", "v"])
             .localCheckpoint(eager=False)
         )
@@ -3111,7 +3110,7 @@ def louvain(
     Scale shape: per round one adjacency×assignment equi-join keyed on
     the neighbor, one (vertex, candidate-community) partial agg for
     k_in (hub fan-in collapses map-side), one O(C) community-degree
-    partial agg, one per-vertex argmax window carrying id-sized rows.
+    partial agg, one per-vertex `min_by` argmax carrying id-sized rows.
     The per-round assignment goes through a persist→count→
     localCheckpoint→unpersist BARRIER: the assignment is referenced
     four times per round, and a bare checkpoint chain makes Catalyst's
@@ -3130,8 +3129,6 @@ def louvain(
     modularity signal at level 0); parallel edges aggregate (SUM of
     `weight`, or DISTINCT pairs at weight 1 when `weight` is None).
     """
-    from pyspark.sql import Window
-
     if weight is None:
         pairs = (
             edges.select(
@@ -3199,9 +3196,6 @@ def louvain(
         comm = verts.select("x", F.col("x").alias("c")).localCheckpoint(
             eager=True
         )
-        win = Window.partitionBy("x").orderBy(
-            F.desc("score"), F.desc("is_own"), F.asc("cand")
-        )
         for r in range(iters):
             cj = comm.select(F.col("x").alias("j"), F.col("c").alias("cj"))
             kin = (
@@ -3247,9 +3241,13 @@ def louvain(
                     F.pmod(F.xxhash64(F.col("x"), F.lit(level)), F.lit(2))
                     == F.lit(r % 2)
                 )
-                .withColumn("rn", F.row_number().over(win))
-                .where(F.col("rn") == 1)
-                .select("x", F.col("cand").alias("newc"))
+                .groupBy("x")
+                .agg(
+                    F.min_by(
+                        "cand",
+                        F.struct(-F.col("score"), -F.col("is_own"), F.col("cand")),
+                    ).alias("newc")
+                )
             )
             # STATS BARRIER (measured pathology, see docstring): comm is
             # referenced FOUR times per round (cj, the stay-option rows,

@@ -63,16 +63,8 @@ def _verdict_row(query: str, schema: DbSchema) -> tuple:
     ast, perr, verrors = api.analyze(query, schema)
     if perr is not None:
         return (False, False, False, [(perr.code, perr.message, perr.line, perr.column)])
-    # is_write from the already-parsed AST (api.is_write parity, incl. the
-    # substring DELETE/REMOVE fallback on the raw text).
-    upper = query.upper()
-    writey = bool(ast.create_clauses or ast.merge_clauses or ast.call_clauses) or any(
-        (m.on_create is not None and m.on_create.set_clauses)
-        or (m.on_match is not None and m.on_match.set_clauses)
-        for m in ast.merge_clauses
-    ) or "DELETE" in upper or "REMOVE" in upper
     errors = [(e.code, e.message, 0, 0) for e in verrors]
-    return (not errors, True, writey, errors)
+    return (not errors, True, api._is_write_ast(ast, query), errors)
 
 
 def _make_batch_fn(bc_schema):

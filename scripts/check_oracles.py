@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Driver-correctness simulator: run every queries() entry on Spark and its
-oracle_sql() twin on DuckDB over the same parquet, compare row count,
+"""Driver-correctness simulator: run every registry() entry on Spark and
+its oracle twin on DuckDB over the same parquet, compare row count,
 schema (column names), and an order-insensitive value hash — the same
-contract CORRECTNESS_r{N}.json is built from.
+contract CORRECTNESS_r{N}.json is built from. Entries run in driver
+order; only the named ones (all when none are named) build their oracle.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
@@ -57,17 +58,15 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql(sf_dir)
     failures = []
-    for name, fn in sorted(qs.items()):
+    for name, build, oracle in entry.registry():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir).toPandas()
-        if name not in oracles:
+        sdf = build(spark, sf_dir).toPandas()
+        if oracle is None:
             print(f"{name:28s} rows={len(sdf):6d}  (rows-only: no oracle)")
             continue
-        odf = con.sql(oracles[name]).df()
+        odf = con.sql(oracle()).df()
         ok_rows = len(sdf) == len(odf)
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
         ok_hash = ok_rows and ok_cols and value_hash(sdf) == value_hash(odf)

