@@ -5604,152 +5604,8 @@ def registry() -> list[
 
     return [
         # The driver's CORRECTNESS artifact verifies roughly the first 50
-        # entries per round, so the head holds the entries rounds 1-4 never
-        # reached: the eight VERDICT r4 names, the round-5 search-only
-        # entries, then the rest of that never-checked set.
-        ("kg_extraction_pr", q_kg_extraction_pr, _kg_extraction_pr_sql),
-        ("kg_cypher_match", q_kg_cypher_match, _kg_cypher_match_sql),
-        ("kg_cypher_varlen", q_kg_cypher_varlen, _kg_cypher_varlen_sql),
-        ("kg_cypher_coworkers", q_kg_cypher_coworkers, _kg_cypher_coworkers_sql),
-        ("kg_cypher_degrees", q_kg_cypher_degrees, _kg_cypher_degrees_sql),
-        ("kg_cypher_optional", q_kg_cypher_optional, _kg_cypher_optional_sql),
-        ("kg_cypher_unwind", q_kg_cypher_unwind, _kg_cypher_unwind_sql),
-        ("kg_cypher_relvar", q_kg_cypher_relvar, _kg_cypher_relvar_sql),
-        ("kg_cypher_with", q_kg_cypher_with, _kg_cypher_with_sql),
-        ("kg_cypher_with_chain", q_kg_cypher_with_chain, _kg_cypher_with_chain_sql),
-        ("kg_merge_apply", q_kg_merge_apply, _kg_merge_apply_sql),
-        ("kg_cypher_applied", q_kg_cypher_applied, _kg_cypher_match_sql),
-        ("kg_cypher_call", q_kg_cypher_call, _kg_cypher_call_sql),
-        ("kg_cypher_proc", q_kg_cypher_proc, _kg_cypher_proc_sql),
-        # semi-hard negative mining (FaceNet recipe): nearest
-        # different-label neighbors per anchor, re-ranked, top-5 kept
-        ("emb_hard_negatives", lambda s, d: similarity.hard_negatives(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 50),
-            k=20, per_anchor=5
-        ), lambda: """
-            WITH topk AS (
-              SELECT query_id, neighbor_id, sim FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                    c.vec_id) AS rank
-                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-                WHERE q.vec_id < 50
-              ) WHERE rank <= 20),
-            neg AS (
-              SELECT t.query_id AS anchor_id, q.label,
-                     t.neighbor_id AS negative_id, n.label AS negative_label,
-                     t.sim,
-                     row_number() OVER (PARTITION BY t.query_id
-                         ORDER BY t.sim DESC, t.neighbor_id) AS neg_rank
-              FROM topk t
-              JOIN embeddings q ON t.query_id = q.vec_id
-              JOIN embeddings n ON t.neighbor_id = n.vec_id
-              WHERE n.label <> q.label)
-            SELECT anchor_id, label, negative_id, negative_label,
-                   CAST(neg_rank AS BIGINT) AS neg_rank, sim
-            FROM neg WHERE neg_rank <= 5
-        """),
-        # per-source saturation cap (RefinedWeb anti-domination guard):
-        # two-phase skew-safe top-cap; the single-window DuckDB twin
-        # doubles as the two-phase == one-phase equality proof
-        ("doc_source_cap", lambda s, d: sample.source_cap(
-            _docs(s, d), cap=50, score_col="n_chars"
-        ), lambda: """
-            SELECT doc_id, source, CAST(keep_rank AS BIGINT) AS keep_rank
-            FROM (
-              SELECT doc_id, source,
-                     row_number() OVER (PARTITION BY source
-                         ORDER BY n_chars DESC, doc_id) AS keep_rank
-              FROM documents
-            ) WHERE keep_rank <= 50
-        """),
-        ("kg_backbone", q_kg_backbone, _kg_backbone_sql),
-        ("kg_louvain", q_kg_louvain, _kg_louvain_sql),
-        ("kg_scc", q_kg_scc, _kg_scc_values),
-        ("kg_ktruss", q_kg_ktruss, _kg_ktruss_values),
-        ("kg_betweenness", q_kg_betweenness, _kg_betweenness_values),
-        # IVF-PQ: pruning x compression composed (by_residual=False) —
-        # probed cells' CODES are the only thing scanned
-        ("emb_ivfpq_topk", lambda s, d: similarity.ivfpq_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
-            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16
-        ), _emb_ivfpq_values),
-        ("emb_pq_topk", lambda s, d: similarity.pq_topk(
-            _emb(s, d),
-            similarity.train_pq(_emb(s, d), m=4, k=16, iters=2),
-            _emb(s, d)
-            .where(F.col("vec_id") < 5)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-            ),
-            k=5,
-        ), _emb_pq_topk_values),
-        # real BPE trainer: corpus scanned ONCE (word-frequency agg),
-        # merge loop runs over the vocabulary-sized word table — exact
-        # integer counts + total tie order so the merge sequence is a
-        # pure function of the corpus (independent Counter-twin oracle)
-        ("corpus_bpe_merges", lambda s, d: bpe.train_bpe(
-            _docs(s, d), num_merges=24, min_pair_count=2
-        ), _corpus_bpe_merges_values),
-        ("media_phash_dups", q_media_phash_dups, _media_phash_dups_values),
-        ("corpus_curated_shards", q_corpus_curated_shards, lambda: f"""
-            WITH cur AS ({_CURATED_SQL}),
-            v AS (SELECT * FROM {_doc_training_shards_values()})
-            SELECT c.doc_id, v.shard,
-                   (row_number() OVER (PARTITION BY v.shard
-                                       ORDER BY v.h, c.doc_id) - 1)::BIGINT
-                     AS pos
-            FROM cur c JOIN v USING (doc_id)
-        """),
-        # search-only twins of emb_pq_topk / emb_ivfpq_topk: codebooks and
-        # centroids come from the train-once process cache (literal rows), so
-        # the bench wall here is the ADC scan / cell-pruned search itself —
-        # the number that matters for a train-once/search-forever index. The
-        # cached trained structures equal freshly trained ones (the trainers
-        # are deterministic), so both entries share their trainer twins' oracle
-        ("emb_pq_search", lambda s, d: similarity.pq_topk(
-            _emb(s, d),
-            _cached_pq_codebooks(s, d, m=4, k=16, iters=2),
-            _emb(s, d)
-            .where(F.col("vec_id") < 5)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-            ),
-            k=5,
-        ), _emb_pq_topk_values),
-        ("emb_ivfpq_search", lambda s, d: similarity.ivfpq_topk(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
-            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16,
-            centroids=_cached_coarse_centroids(s, d, k=8, iters=2),
-            codebooks=_cached_pq_codebooks(s, d, m=4, k=16, iters=2),
-        ), _emb_ivfpq_values),
-        ("kg_entity_map", q_kg_entity_map, _kg_entity_map_values),
-        ("kg_components", q_kg_components, _kg_components_values),
-        ("kg_entity_map_update", q_kg_entity_map_update, _kg_entity_map_update_values),
-        ("kg_hits", q_kg_hits, _kg_hits_values),
-        ("kg_random_walks", q_kg_random_walks, _kg_random_walks_values),
-        ("kg_walk_pairs", q_kg_walk_pairs, _kg_walk_pairs_sql),
-        ("kg_walk_negatives", q_kg_walk_negatives, _kg_walk_negatives_values),
-        ("kg_entity_cooccur", q_kg_entity_cooccur, _kg_entity_cooccur_sql),
-        ("kg_fuzzy_surfaces", q_kg_fuzzy_surfaces, _kg_fuzzy_surfaces_sql),
-        ("kg_khop", q_kg_khop, _kg_khop_sql),
-        ("kg_neighborhood_function", q_kg_neighborhood_function,
-         _kg_neighborhood_function_sql),
-        ("kg_harmonic", q_kg_harmonic, _kg_harmonic_sql),
-        ("kg_closeness", q_kg_closeness, _kg_closeness_sql),
-        ("kg_conflicts", q_kg_conflicts, _kg_conflicts_sql),
-        ("kg_triple_history", q_kg_triple_history, _kg_triple_history_values),
-        ("kg_schema_infer", q_kg_schema_infer, _kg_schema_infer_sql),
-        ("kg_schema_roundtrip", q_kg_schema_roundtrip, _kg_schema_roundtrip_sql),
-        ("kg_shortest_paths", q_kg_shortest_paths, _kg_shortest_paths_values),
-        ("kg_path_tree", q_kg_path_tree, _kg_path_tree_values),
-        ("kg_triple_fusion", q_kg_triple_fusion, _kg_triple_fusion_values),
-        ("kg_triple_diff", q_kg_triple_diff, _kg_triple_diff_values),
-        ("kg_entity_similarity", q_kg_entity_similarity, _kg_entity_similarity_values),
+        # entries per round, so the head holds the entries absent from every
+        # CORRECTNESS_r0{1..5}.json artifact.
         ("kg_communities", q_kg_communities, _kg_communities_values),
         ("kg_modularity", q_kg_modularity, _kg_modularity_values),
         ("kg_graph_profile", q_kg_graph_profile, _kg_graph_profile_values),
@@ -5939,8 +5795,355 @@ def registry() -> list[
                                (0.9::DOUBLE), (0.99::DOUBLE)) AS qt(q)
             WHERE rn = floor(q * (n - 1)) + 1
         """),
+        # exponentially-decayed per-user activity — exact dyadic weights
+        # (2^-age via bit shifts, int64 partial agg, one binary re-scale)
+        ("events_activity_decay", lambda s, d: temporal.activity_decay(
+            relational.load(s, d, "events"), cap_days=30
+        ), lambda: """
+            WITH ref AS (SELECT MAX(CAST(ts AS DATE)) AS refd FROM events),
+            per AS (
+              SELECT user_id,
+                     datediff('day', CAST(ts AS DATE), refd) AS age
+              FROM events, ref),
+            agg AS (
+              SELECT user_id,
+                     COUNT(*) AS n_events,
+                     CAST(SUM(CASE WHEN age <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_recent,
+                     CAST(SUM(CASE WHEN age <= 30 THEN (1::BIGINT << (30 - age)) ELSE 0 END) AS BIGINT) AS scaled
+              FROM per GROUP BY user_id)
+            SELECT user_id, n_events, n_recent,
+                   ROUND(CAST(scaled AS DOUBLE) / 1073741824.0, 6) AS activity
+            FROM agg
+        """),
+        # contamination-free train/eval carve: the split key is the
+        # near-dup CLUSTER, so no minhash pair can cross the boundary
+        ("doc_leakage_split", lambda s, d: dedup.leakage_safe_split(
+            s, _docs(s, d), eval_pct=10, threshold=0.3
+        ), _doc_leakage_split_values),
+        # corpus-governance duplication matrix: near-dup mass per SOURCE
+        # pair (who re-hosts whom), composed off the same LSH pair list
+        ("doc_source_dup_matrix", lambda s, d: dedup.cross_source_dup_matrix(
+            _docs(s, d), threshold=0.3
+        ), lambda: f"""
+            WITH pairs AS ({_doc_minhash_values()}),
+            lab AS (SELECT doc_id, source FROM documents)
+            SELECT least(la.source, lb.source) AS source_a,
+                   greatest(la.source, lb.source) AS source_b,
+                   COUNT(*) AS n_pairs,
+                   MIN(sim) AS min_sim,
+                   MAX(sim) AS max_sim
+            FROM pairs
+            JOIN lab la ON pairs.a = la.doc_id
+            JOIN lab lb ON pairs.b = lb.doc_id
+            GROUP BY 1, 2
+        """),
+        # DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
+        # importance lift of every raw doc vs a small target exemplar set
+        # (doc_id % 23 == 0 plays the target domain); exact-integer
+        # ratio-of-means scoring, B=4096 buckets broadcast
+        ("doc_dsir_weights", lambda s, d: sample.dsir_weights(
+            _docs(s, d).where(F.col("doc_id") % 23 != 0),
+            _docs(s, d).where(F.col("doc_id") % 23 == 0),
+            buckets=4096,
+        ), _doc_dsir_sql),
+        # the DSIR RESAMPLING step: importance lift (capped at 1) becomes
+        # the per-row keep probability of the deterministic hash-Bernoulli
+        # sampler — weights → weighted_sample, the full Xie et al. recipe
+        ("doc_dsir_selected", lambda s, d: sample.weighted_sample(
+            sample.dsir_weights(
+                _docs(s, d).where(F.col("doc_id") % 23 != 0),
+                _docs(s, d).where(F.col("doc_id") % 23 == 0),
+                buckets=4096,
+            ),
+            weight=F.least(F.col("lift"), F.lit(1.0)),
+        ), lambda: f"""
+            WITH d AS ({_doc_dsir_sql()}),
+            hs AS (SELECT * FROM {_doc_hash_values()})
+            SELECT d.doc_id, d.n_feats, d.t_hits, d.r_hits, d.lift,
+                   CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
+                     AS keep_threshold
+            FROM d JOIN hs ON d.doc_id = hs.doc_id
+            WHERE hs.h < CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
+        """),
+        # lexical diversity: type-token ratio + Simpson repeat
+        # concentration — exact-integer ratios, spam/template signal
+        ("doc_lexical_diversity", lambda s, d: text.lexical_diversity(
+            _docs(s, d)
+        ), lambda: """
+            WITH tf AS (
+              SELECT doc_id, tok, COUNT(*) AS tf
+              FROM (SELECT doc_id,
+                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                    FROM documents)
+              GROUP BY doc_id, tok),
+            agg AS (
+              SELECT doc_id,
+                     CAST(SUM(tf) AS BIGINT) AS n_tokens,
+                     CAST(COUNT(*) AS BIGINT) AS n_types,
+                     CAST(SUM(tf * (tf - 1)) AS BIGINT) AS rep
+              FROM tf GROUP BY doc_id)
+            SELECT doc_id, n_tokens, n_types,
+                   ROUND(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
+                   CASE WHEN n_tokens < 2 THEN 0.0
+                        ELSE ROUND(CAST(rep AS DOUBLE) /
+                                   CAST(n_tokens * (n_tokens - 1) AS DOUBLE), 6)
+                   END AS simpson
+            FROM agg
+        """),
+        # Heaps-law vocabulary growth: distinct token types vs corpus
+        # prefix at 10 doc-id checkpoints — pure-integer contract
+        ("corpus_vocab_growth", lambda s, d: text.vocab_growth(
+            _docs(s, d), n_checkpoints=10
+        ), lambda: """
+            WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS mxid FROM documents),
+            spine AS (
+              SELECT CAST(range AS INT) AS i,
+                     CAST((range * mxid) // 10 AS BIGINT) AS checkpoint
+              FROM range(1, 11), mx),
+            pd AS (
+              SELECT greatest(CAST((CAST(doc_id AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
+                     COUNT(*) AS docs,
+                     CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) AS toks
+              FROM documents, mx GROUP BY 1),
+            fo AS (
+              SELECT tok, MIN(doc_id) AS fd
+              FROM (SELECT doc_id,
+                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                    FROM documents)
+              GROUP BY tok),
+            fv AS (
+              SELECT greatest(CAST((CAST(fd AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
+                     COUNT(*) AS vocab
+              FROM fo, mx GROUP BY 1)
+            SELECT spine.checkpoint,
+                   CAST(SUM(COALESCE(pd.docs, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_docs_cum,
+                   CAST(SUM(COALESCE(pd.toks, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_tokens_cum,
+                   CAST(SUM(COALESCE(fv.vocab, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS vocab_cum
+            FROM spine
+            LEFT JOIN pd ON spine.i = pd.i
+            LEFT JOIN fv ON spine.i = fv.i
+        """),
+        # kNN label-agreement audit (confident-learning family): does
+        # each vector's cosine neighborhood vote for its own label —
+        # strict-minority agreement flags mislabeled candidates
+        # audits the vec_id < 1000 stratum — the docstring's sampled-audit
+        # posture (label noise is a population estimate); at sf0.01 the
+        # corpus has 500 vectors so the driver gate still audits ALL of
+        # them (hash unchanged), while the sf0.1 bench stops paying the
+        # full all-pairs scan
+        ("emb_label_noise", lambda s, d: similarity.knn_label_noise(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 1000), k=10
+        ), lambda: """
+            WITH topk AS (
+              SELECT query_id, neighbor_id FROM (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       row_number() OVER (PARTITION BY q.vec_id
+                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                    c.vec_id) AS rank
+                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+                WHERE q.vec_id < 1000
+              ) WHERE rank <= 10)
+            SELECT t.query_id AS vec_id, q.label,
+                   CAST(count(*) AS BIGINT) AS n_neighbors,
+                   CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+                   round(CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS DOUBLE)
+                         / count(*), 6) AS agree_frac,
+                   CAST(CASE WHEN 2 * sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END)
+                             < count(*) THEN 1 ELSE 0 END AS BIGINT) AS suspect
+            FROM topk t
+            JOIN embeddings q ON t.query_id = q.vec_id
+            JOIN embeddings n ON t.neighbor_id = n.vec_id
+            GROUP BY t.query_id, q.label
+        """),
+        # corpus frequency spectrum: types binned by floor(log2(count))
+        # — the Zipf-profile histogram; integer-exact, no vocab sort
+        ("corpus_freq_spectrum", lambda s, d: text.frequency_spectrum(
+            _docs(s, d)
+        ), lambda: """
+            WITH tok AS (
+              SELECT doc_id,
+                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+              FROM documents),
+            counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
+            b AS (SELECT CASE WHEN cnt < 2 THEN 0 WHEN cnt < 4 THEN 1 WHEN cnt < 8 THEN 2 WHEN cnt < 16 THEN 3 WHEN cnt < 32 THEN 4 WHEN cnt < 64 THEN 5 WHEN cnt < 128 THEN 6 WHEN cnt < 256 THEN 7 WHEN cnt < 512 THEN 8 WHEN cnt < 1024 THEN 9 WHEN cnt < 2048 THEN 10 WHEN cnt < 4096 THEN 11 WHEN cnt < 8192 THEN 12 WHEN cnt < 16384 THEN 13 WHEN cnt < 32768 THEN 14 WHEN cnt < 65536 THEN 15 WHEN cnt < 131072 THEN 16 WHEN cnt < 262144 THEN 17 WHEN cnt < 524288 THEN 18 WHEN cnt < 1048576 THEN 19 WHEN cnt < 2097152 THEN 20 WHEN cnt < 4194304 THEN 21 WHEN cnt < 8388608 THEN 22 WHEN cnt < 16777216 THEN 23 WHEN cnt < 33554432 THEN 24 WHEN cnt < 67108864 THEN 25 WHEN cnt < 134217728 THEN 26 WHEN cnt < 268435456 THEN 27 WHEN cnt < 536870912 THEN 28 WHEN cnt < 1073741824 THEN 29 WHEN cnt < 2147483648 THEN 30 WHEN cnt < 4294967296 THEN 31 WHEN cnt < 8589934592 THEN 32 WHEN cnt < 17179869184 THEN 33 WHEN cnt < 34359738368 THEN 34 WHEN cnt < 68719476736 THEN 35 WHEN cnt < 137438953472 THEN 36 WHEN cnt < 274877906944 THEN 37 WHEN cnt < 549755813888 THEN 38 WHEN cnt < 1099511627776 THEN 39 WHEN cnt < 2199023255552 THEN 40 WHEN cnt < 4398046511104 THEN 41 WHEN cnt < 8796093022208 THEN 42 WHEN cnt < 17592186044416 THEN 43 WHEN cnt < 35184372088832 THEN 44 WHEN cnt < 70368744177664 THEN 45 WHEN cnt < 140737488355328 THEN 46 WHEN cnt < 281474976710656 THEN 47 WHEN cnt < 562949953421312 THEN 48 WHEN cnt < 1125899906842624 THEN 49 WHEN cnt < 2251799813685248 THEN 50 WHEN cnt < 4503599627370496 THEN 51 WHEN cnt < 9007199254740992 THEN 52 WHEN cnt < 18014398509481984 THEN 53 WHEN cnt < 36028797018963968 THEN 54 WHEN cnt < 72057594037927936 THEN 55 WHEN cnt < 144115188075855872 THEN 56 WHEN cnt < 288230376151711744 THEN 57 WHEN cnt < 576460752303423488 THEN 58 WHEN cnt < 1152921504606846976 THEN 59 WHEN cnt < 2305843009213693952 THEN 60 WHEN cnt < 4611686018427387904 THEN 61 ELSE 62 END AS bucket, cnt FROM counts),
+            spec AS (
+              SELECT bucket,
+                     CAST(MIN(cnt) AS BIGINT) AS min_count,
+                     CAST(MAX(cnt) AS BIGINT) AS max_count,
+                     CAST(count(*) AS BIGINT) AS n_types,
+                     CAST(sum(cnt) AS BIGINT) AS total_occurrences
+              FROM b GROUP BY bucket)
+            SELECT bucket, min_count, max_count, n_types, total_occurrences,
+                   CAST(sum(n_types) OVER (ORDER BY bucket ASC
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS BIGINT) AS cum_types
+            FROM spec
+        """),
+        ("kg_pagerank_weighted", q_kg_pagerank_weighted, _kg_pagerank_weighted_values),
+        ("kg_pagerank_recency", q_kg_pagerank_recency, _kg_pagerank_recency_values),
+        ("kg_node2vec_walks", q_kg_node2vec_walks, _kg_node2vec_walks_values),
+        ("kg_neighborhood_hyperball", q_kg_neighborhood_hyperball, None),
+        ("kg_harmonic_hyperball", q_kg_harmonic_hyperball, None),
+        ("kg_closeness_hyperball", q_kg_closeness_hyperball, None),
+        ("kg_spectral_embeddings", q_kg_spectral_embeddings, None),
+        ("kg_spectral_knn", q_kg_spectral_knn, None),
+        ("kg_eccentricity", q_kg_eccentricity, _kg_eccentricity_sql),
+        ("kg_katz", q_kg_katz, _kg_katz_sql),
+        ("kg_reciprocity", q_kg_reciprocity, _kg_reciprocity_sql),
+        ("kg_fact_churn", q_kg_fact_churn, _kg_fact_churn_sql),
+        ("kg_community_quality", q_kg_community_quality, _kg_community_quality_sql),
+        ("kg_metapaths", q_kg_metapaths, lambda: _KG_METAPATHS_SQL_TMPL.format(
+            canon=_kg_canonical_triples_values()
+        )),
+        ("kg_entailed", q_kg_entailed, _kg_entailed_sql),
+        ("kg_blocking_report", q_kg_blocking_report, _kg_blocking_report_values),
 
-        # The rest, by operator family.
+        # Verified by the round-5 artifact.
+        ("kg_extraction_pr", q_kg_extraction_pr, _kg_extraction_pr_sql),
+        ("kg_cypher_match", q_kg_cypher_match, _kg_cypher_match_sql),
+        ("kg_cypher_varlen", q_kg_cypher_varlen, _kg_cypher_varlen_sql),
+        ("kg_cypher_coworkers", q_kg_cypher_coworkers, _kg_cypher_coworkers_sql),
+        ("kg_cypher_degrees", q_kg_cypher_degrees, _kg_cypher_degrees_sql),
+        ("kg_cypher_optional", q_kg_cypher_optional, _kg_cypher_optional_sql),
+        ("kg_cypher_unwind", q_kg_cypher_unwind, _kg_cypher_unwind_sql),
+        ("kg_cypher_relvar", q_kg_cypher_relvar, _kg_cypher_relvar_sql),
+        ("kg_cypher_with", q_kg_cypher_with, _kg_cypher_with_sql),
+        ("kg_cypher_with_chain", q_kg_cypher_with_chain, _kg_cypher_with_chain_sql),
+        ("kg_merge_apply", q_kg_merge_apply, _kg_merge_apply_sql),
+        ("kg_cypher_applied", q_kg_cypher_applied, _kg_cypher_match_sql),
+        ("kg_cypher_call", q_kg_cypher_call, _kg_cypher_call_sql),
+        ("kg_cypher_proc", q_kg_cypher_proc, _kg_cypher_proc_sql),
+        # semi-hard negative mining (FaceNet recipe): nearest
+        # different-label neighbors per anchor, re-ranked, top-5 kept
+        ("emb_hard_negatives", lambda s, d: similarity.hard_negatives(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 50),
+            k=20, per_anchor=5
+        ), lambda: """
+            WITH topk AS (
+              SELECT query_id, neighbor_id, sim FROM (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS sim,
+                       row_number() OVER (PARTITION BY q.vec_id
+                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
+                                    c.vec_id) AS rank
+                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+                WHERE q.vec_id < 50
+              ) WHERE rank <= 20),
+            neg AS (
+              SELECT t.query_id AS anchor_id, q.label,
+                     t.neighbor_id AS negative_id, n.label AS negative_label,
+                     t.sim,
+                     row_number() OVER (PARTITION BY t.query_id
+                         ORDER BY t.sim DESC, t.neighbor_id) AS neg_rank
+              FROM topk t
+              JOIN embeddings q ON t.query_id = q.vec_id
+              JOIN embeddings n ON t.neighbor_id = n.vec_id
+              WHERE n.label <> q.label)
+            SELECT anchor_id, label, negative_id, negative_label,
+                   CAST(neg_rank AS BIGINT) AS neg_rank, sim
+            FROM neg WHERE neg_rank <= 5
+        """),
+        # per-source saturation cap (RefinedWeb anti-domination guard):
+        # two-phase skew-safe top-cap; the single-window DuckDB twin
+        # doubles as the two-phase == one-phase equality proof
+        ("doc_source_cap", lambda s, d: sample.source_cap(
+            _docs(s, d), cap=50, score_col="n_chars"
+        ), lambda: """
+            SELECT doc_id, source, CAST(keep_rank AS BIGINT) AS keep_rank
+            FROM (
+              SELECT doc_id, source,
+                     row_number() OVER (PARTITION BY source
+                         ORDER BY n_chars DESC, doc_id) AS keep_rank
+              FROM documents
+            ) WHERE keep_rank <= 50
+        """),
+        ("kg_backbone", q_kg_backbone, _kg_backbone_sql),
+        ("kg_louvain", q_kg_louvain, _kg_louvain_sql),
+        ("kg_scc", q_kg_scc, _kg_scc_values),
+        ("kg_ktruss", q_kg_ktruss, _kg_ktruss_values),
+        ("kg_betweenness", q_kg_betweenness, _kg_betweenness_values),
+        # IVF-PQ: pruning x compression composed (by_residual=False) —
+        # probed cells' CODES are the only thing scanned
+        ("emb_ivfpq_topk", lambda s, d: similarity.ivfpq_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
+            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16
+        ), _emb_ivfpq_values),
+        ("emb_pq_topk", lambda s, d: similarity.pq_topk(
+            _emb(s, d),
+            similarity.train_pq(_emb(s, d), m=4, k=16, iters=2),
+            _emb(s, d)
+            .where(F.col("vec_id") < 5)
+            .select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+            ),
+            k=5,
+        ), _emb_pq_topk_values),
+        # real BPE trainer: corpus scanned ONCE (word-frequency agg),
+        # merge loop runs over the vocabulary-sized word table — exact
+        # integer counts + total tie order so the merge sequence is a
+        # pure function of the corpus (independent Counter-twin oracle)
+        ("corpus_bpe_merges", lambda s, d: bpe.train_bpe(
+            _docs(s, d), num_merges=24, min_pair_count=2
+        ), _corpus_bpe_merges_values),
+        ("media_phash_dups", q_media_phash_dups, _media_phash_dups_values),
+        ("corpus_curated_shards", q_corpus_curated_shards, lambda: f"""
+            WITH cur AS ({_CURATED_SQL}),
+            v AS (SELECT * FROM {_doc_training_shards_values()})
+            SELECT c.doc_id, v.shard,
+                   (row_number() OVER (PARTITION BY v.shard
+                                       ORDER BY v.h, c.doc_id) - 1)::BIGINT
+                     AS pos
+            FROM cur c JOIN v USING (doc_id)
+        """),
+        # search-only twins of emb_pq_topk / emb_ivfpq_topk: codebooks and
+        # centroids come from the train-once process cache (literal rows), so
+        # the bench wall here is the ADC scan / cell-pruned search itself —
+        # the number that matters for a train-once/search-forever index. The
+        # cached trained structures equal freshly trained ones (the trainers
+        # are deterministic), so both entries share their trainer twins' oracle
+        ("emb_pq_search", lambda s, d: similarity.pq_topk(
+            _emb(s, d),
+            _cached_pq_codebooks(s, d, m=4, k=16, iters=2),
+            _emb(s, d)
+            .where(F.col("vec_id") < 5)
+            .select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+            ),
+            k=5,
+        ), _emb_pq_topk_values),
+        ("emb_ivfpq_search", lambda s, d: similarity.ivfpq_topk(
+            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5),
+            k=5, n_centroids=8, nprobe=2, m=4, pq_k=16,
+            centroids=_cached_coarse_centroids(s, d, k=8, iters=2),
+            codebooks=_cached_pq_codebooks(s, d, m=4, k=16, iters=2),
+        ), _emb_ivfpq_values),
+        ("kg_entity_map", q_kg_entity_map, _kg_entity_map_values),
+        ("kg_components", q_kg_components, _kg_components_values),
+        ("kg_entity_map_update", q_kg_entity_map_update, _kg_entity_map_update_values),
+        ("kg_hits", q_kg_hits, _kg_hits_values),
+        ("kg_random_walks", q_kg_random_walks, _kg_random_walks_values),
+        ("kg_walk_pairs", q_kg_walk_pairs, _kg_walk_pairs_sql),
+        ("kg_walk_negatives", q_kg_walk_negatives, _kg_walk_negatives_values),
+        ("kg_entity_cooccur", q_kg_entity_cooccur, _kg_entity_cooccur_sql),
+        ("kg_fuzzy_surfaces", q_kg_fuzzy_surfaces, _kg_fuzzy_surfaces_sql),
+        ("kg_khop", q_kg_khop, _kg_khop_sql),
+        ("kg_neighborhood_function", q_kg_neighborhood_function,
+         _kg_neighborhood_function_sql),
+        ("kg_harmonic", q_kg_harmonic, _kg_harmonic_sql),
+        ("kg_closeness", q_kg_closeness, _kg_closeness_sql),
+        ("kg_conflicts", q_kg_conflicts, _kg_conflicts_sql),
+        ("kg_triple_history", q_kg_triple_history, _kg_triple_history_values),
+        ("kg_schema_infer", q_kg_schema_infer, _kg_schema_infer_sql),
+        ("kg_schema_roundtrip", q_kg_schema_roundtrip, _kg_schema_roundtrip_sql),
+        ("kg_shortest_paths", q_kg_shortest_paths, _kg_shortest_paths_values),
+        ("kg_path_tree", q_kg_path_tree, _kg_path_tree_values),
+        ("kg_triple_fusion", q_kg_triple_fusion, _kg_triple_fusion_values),
+        ("kg_triple_diff", q_kg_triple_diff, _kg_triple_diff_values),
+        ("kg_entity_similarity", q_kg_entity_similarity, _kg_entity_similarity_values),
+
+        # Verified by the round 1-4 artifacts, by operator family.
 
         # relational / analytic
         ("q1_pricing_summary", relational.q1_pricing_summary, lambda: """
@@ -6088,26 +6291,6 @@ def registry() -> list[
               AND abs((c.n_events - sx / nb)
                       / sqrt((sxx - sx * sx / nb) / (nb - 1))) >= 2.0
         """),
-        # exponentially-decayed per-user activity — exact dyadic weights
-        # (2^-age via bit shifts, int64 partial agg, one binary re-scale)
-        ("events_activity_decay", lambda s, d: temporal.activity_decay(
-            relational.load(s, d, "events"), cap_days=30
-        ), lambda: """
-            WITH ref AS (SELECT MAX(CAST(ts AS DATE)) AS refd FROM events),
-            per AS (
-              SELECT user_id,
-                     datediff('day', CAST(ts AS DATE), refd) AS age
-              FROM events, ref),
-            agg AS (
-              SELECT user_id,
-                     COUNT(*) AS n_events,
-                     CAST(SUM(CASE WHEN age <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_recent,
-                     CAST(SUM(CASE WHEN age <= 30 THEN (1::BIGINT << (30 - age)) ELSE 0 END) AS BIGINT) AS scaled
-              FROM per GROUP BY user_id)
-            SELECT user_id, n_events, n_recent,
-                   ROUND(CAST(scaled AS DOUBLE) / 1073741824.0, 6) AS activity
-            FROM agg
-        """),
         ("events_rollup_incremental", q_events_rollup_incremental, lambda: """
             SELECT strftime(ts, '%Y-%m-%d') AS day,
                    date_trunc('hour', ts) AS hour_start,
@@ -6194,11 +6377,6 @@ def registry() -> list[
         ("doc_neardup_clusters", lambda s, d: dedup.neardup_clusters(
             s, _docs(s, d), threshold=0.3
         ), _doc_neardup_clusters_values),
-        # contamination-free train/eval carve: the split key is the
-        # near-dup CLUSTER, so no minhash pair can cross the boundary
-        ("doc_leakage_split", lambda s, d: dedup.leakage_safe_split(
-            s, _docs(s, d), eval_pct=10, threshold=0.3
-        ), _doc_leakage_split_values),
         ("doc_neardup_survivors", lambda s, d: dedup.neardup_survivors(
             s, _docs(s, d), threshold=0.3
         ).select("doc_id", "source", "lang", "n_chars"), _doc_neardup_survivors_sql),
@@ -6210,23 +6388,6 @@ def registry() -> list[
             + _doc_neardup_clusters_values()
             + ") GROUP BY cluster_size"
         )),
-        # corpus-governance duplication matrix: near-dup mass per SOURCE
-        # pair (who re-hosts whom), composed off the same LSH pair list
-        ("doc_source_dup_matrix", lambda s, d: dedup.cross_source_dup_matrix(
-            _docs(s, d), threshold=0.3
-        ), lambda: f"""
-            WITH pairs AS ({_doc_minhash_values()}),
-            lab AS (SELECT doc_id, source FROM documents)
-            SELECT least(la.source, lb.source) AS source_a,
-                   greatest(la.source, lb.source) AS source_b,
-                   COUNT(*) AS n_pairs,
-                   MIN(sim) AS min_sim,
-                   MAX(sim) AS max_sim
-            FROM pairs
-            JOIN lab la ON pairs.a = la.doc_id
-            JOIN lab lb ON pairs.b = lb.doc_id
-            GROUP BY 1, 2
-        """),
         ("doc_decontam", lambda s, d: decontam.contamination_report(
             _docs(s, d).where(F.col("doc_id") % 97 != 0),
             _docs(s, d).where(F.col("doc_id") % 97 == 0),
@@ -6405,34 +6566,6 @@ def registry() -> list[
             FROM q JOIN hs USING (doc_id)
             WHERE hs.h < round(q.quality * 1048576)::BIGINT
         """),
-        # DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
-        # importance lift of every raw doc vs a small target exemplar set
-        # (doc_id % 23 == 0 plays the target domain); exact-integer
-        # ratio-of-means scoring, B=4096 buckets broadcast
-        ("doc_dsir_weights", lambda s, d: sample.dsir_weights(
-            _docs(s, d).where(F.col("doc_id") % 23 != 0),
-            _docs(s, d).where(F.col("doc_id") % 23 == 0),
-            buckets=4096,
-        ), _doc_dsir_sql),
-        # the DSIR RESAMPLING step: importance lift (capped at 1) becomes
-        # the per-row keep probability of the deterministic hash-Bernoulli
-        # sampler — weights → weighted_sample, the full Xie et al. recipe
-        ("doc_dsir_selected", lambda s, d: sample.weighted_sample(
-            sample.dsir_weights(
-                _docs(s, d).where(F.col("doc_id") % 23 != 0),
-                _docs(s, d).where(F.col("doc_id") % 23 == 0),
-                buckets=4096,
-            ),
-            weight=F.least(F.col("lift"), F.lit(1.0)),
-        ), lambda: f"""
-            WITH d AS ({_doc_dsir_sql()}),
-            hs AS (SELECT * FROM {_doc_hash_values()})
-            SELECT d.doc_id, d.n_feats, d.t_hits, d.r_hits, d.lift,
-                   CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
-                     AS keep_threshold
-            FROM d JOIN hs ON d.doc_id = hs.doc_id
-            WHERE hs.h < CAST(ROUND(least(d.lift, 1.0) * 1048576) AS BIGINT)
-        """),
         ("doc_training_shards", lambda s, d: sample.shuffle_shards(
             _docs(s, d), 8, seed=0
         ).select("doc_id", "shard", "pos"), lambda: f"""
@@ -6543,31 +6676,6 @@ def registry() -> list[
             SELECT doc_id,
                    md5(array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[1:8], ' ')) AS fingerprint
             FROM documents
-        """),
-        # lexical diversity: type-token ratio + Simpson repeat
-        # concentration — exact-integer ratios, spam/template signal
-        ("doc_lexical_diversity", lambda s, d: text.lexical_diversity(
-            _docs(s, d)
-        ), lambda: """
-            WITH tf AS (
-              SELECT doc_id, tok, COUNT(*) AS tf
-              FROM (SELECT doc_id,
-                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
-                    FROM documents)
-              GROUP BY doc_id, tok),
-            agg AS (
-              SELECT doc_id,
-                     CAST(SUM(tf) AS BIGINT) AS n_tokens,
-                     CAST(COUNT(*) AS BIGINT) AS n_types,
-                     CAST(SUM(tf * (tf - 1)) AS BIGINT) AS rep
-              FROM tf GROUP BY doc_id)
-            SELECT doc_id, n_tokens, n_types,
-                   ROUND(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
-                   CASE WHEN n_tokens < 2 THEN 0.0
-                        ELSE ROUND(CAST(rep AS DOUBLE) /
-                                   CAST(n_tokens * (n_tokens - 1) AS DOUBLE), 6)
-                   END AS simpson
-            FROM agg
         """),
         ("doc_subword_counts", lambda s, d: text.bpe_ish_token_count(_docs(s, d)),
          lambda: """
@@ -6739,98 +6847,9 @@ def registry() -> list[
             SELECT source, n_docs, n_tokens, n_unique_texts, n_unique_tokens
             FROM d JOIN t USING (source)
         """),
-        # Heaps-law vocabulary growth: distinct token types vs corpus
-        # prefix at 10 doc-id checkpoints — pure-integer contract
-        ("corpus_vocab_growth", lambda s, d: text.vocab_growth(
-            _docs(s, d), n_checkpoints=10
-        ), lambda: """
-            WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS mxid FROM documents),
-            spine AS (
-              SELECT CAST(range AS INT) AS i,
-                     CAST((range * mxid) // 10 AS BIGINT) AS checkpoint
-              FROM range(1, 11), mx),
-            pd AS (
-              SELECT greatest(CAST((CAST(doc_id AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
-                     COUNT(*) AS docs,
-                     CAST(SUM(len(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) AS toks
-              FROM documents, mx GROUP BY 1),
-            fo AS (
-              SELECT tok, MIN(doc_id) AS fd
-              FROM (SELECT doc_id,
-                           unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
-                    FROM documents)
-              GROUP BY tok),
-            fv AS (
-              SELECT greatest(CAST((CAST(fd AS BIGINT) * 10 + mxid - 1) // mxid AS INT), 1) AS i,
-                     COUNT(*) AS vocab
-              FROM fo, mx GROUP BY 1)
-            SELECT spine.checkpoint,
-                   CAST(SUM(COALESCE(pd.docs, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_docs_cum,
-                   CAST(SUM(COALESCE(pd.toks, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS n_tokens_cum,
-                   CAST(SUM(COALESCE(fv.vocab, 0)) OVER (ORDER BY spine.i) AS BIGINT) AS vocab_cum
-            FROM spine
-            LEFT JOIN pd ON spine.i = pd.i
-            LEFT JOIN fv ON spine.i = fv.i
-        """),
         ("corpus_curated", q_corpus_curated, lambda: _CURATED_SQL),
 
         # similarity search
-        # kNN label-agreement audit (confident-learning family): does
-        # each vector's cosine neighborhood vote for its own label —
-        # strict-minority agreement flags mislabeled candidates
-        # audits the vec_id < 1000 stratum — the docstring's sampled-audit
-        # posture (label noise is a population estimate); at sf0.01 the
-        # corpus has 500 vectors so the driver gate still audits ALL of
-        # them (hash unchanged), while the sf0.1 bench stops paying the
-        # full all-pairs scan
-        ("emb_label_noise", lambda s, d: similarity.knn_label_noise(
-            _emb(s, d), _emb(s, d).where(F.col("vec_id") < 1000), k=10
-        ), lambda: """
-            WITH topk AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                                    c.vec_id) AS rank
-                FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-                WHERE q.vec_id < 1000
-              ) WHERE rank <= 10)
-            SELECT t.query_id AS vec_id, q.label,
-                   CAST(count(*) AS BIGINT) AS n_neighbors,
-                   CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-                   round(CAST(sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END) AS DOUBLE)
-                         / count(*), 6) AS agree_frac,
-                   CAST(CASE WHEN 2 * sum(CASE WHEN n.label = q.label THEN 1 ELSE 0 END)
-                             < count(*) THEN 1 ELSE 0 END AS BIGINT) AS suspect
-            FROM topk t
-            JOIN embeddings q ON t.query_id = q.vec_id
-            JOIN embeddings n ON t.neighbor_id = n.vec_id
-            GROUP BY t.query_id, q.label
-        """),
-        # corpus frequency spectrum: types binned by floor(log2(count))
-        # — the Zipf-profile histogram; integer-exact, no vocab sort
-        ("corpus_freq_spectrum", lambda s, d: text.frequency_spectrum(
-            _docs(s, d)
-        ), lambda: """
-            WITH tok AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
-              FROM documents),
-            counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
-            b AS (SELECT CASE WHEN cnt < 2 THEN 0 WHEN cnt < 4 THEN 1 WHEN cnt < 8 THEN 2 WHEN cnt < 16 THEN 3 WHEN cnt < 32 THEN 4 WHEN cnt < 64 THEN 5 WHEN cnt < 128 THEN 6 WHEN cnt < 256 THEN 7 WHEN cnt < 512 THEN 8 WHEN cnt < 1024 THEN 9 WHEN cnt < 2048 THEN 10 WHEN cnt < 4096 THEN 11 WHEN cnt < 8192 THEN 12 WHEN cnt < 16384 THEN 13 WHEN cnt < 32768 THEN 14 WHEN cnt < 65536 THEN 15 WHEN cnt < 131072 THEN 16 WHEN cnt < 262144 THEN 17 WHEN cnt < 524288 THEN 18 WHEN cnt < 1048576 THEN 19 WHEN cnt < 2097152 THEN 20 WHEN cnt < 4194304 THEN 21 WHEN cnt < 8388608 THEN 22 WHEN cnt < 16777216 THEN 23 WHEN cnt < 33554432 THEN 24 WHEN cnt < 67108864 THEN 25 WHEN cnt < 134217728 THEN 26 WHEN cnt < 268435456 THEN 27 WHEN cnt < 536870912 THEN 28 WHEN cnt < 1073741824 THEN 29 WHEN cnt < 2147483648 THEN 30 WHEN cnt < 4294967296 THEN 31 WHEN cnt < 8589934592 THEN 32 WHEN cnt < 17179869184 THEN 33 WHEN cnt < 34359738368 THEN 34 WHEN cnt < 68719476736 THEN 35 WHEN cnt < 137438953472 THEN 36 WHEN cnt < 274877906944 THEN 37 WHEN cnt < 549755813888 THEN 38 WHEN cnt < 1099511627776 THEN 39 WHEN cnt < 2199023255552 THEN 40 WHEN cnt < 4398046511104 THEN 41 WHEN cnt < 8796093022208 THEN 42 WHEN cnt < 17592186044416 THEN 43 WHEN cnt < 35184372088832 THEN 44 WHEN cnt < 70368744177664 THEN 45 WHEN cnt < 140737488355328 THEN 46 WHEN cnt < 281474976710656 THEN 47 WHEN cnt < 562949953421312 THEN 48 WHEN cnt < 1125899906842624 THEN 49 WHEN cnt < 2251799813685248 THEN 50 WHEN cnt < 4503599627370496 THEN 51 WHEN cnt < 9007199254740992 THEN 52 WHEN cnt < 18014398509481984 THEN 53 WHEN cnt < 36028797018963968 THEN 54 WHEN cnt < 72057594037927936 THEN 55 WHEN cnt < 144115188075855872 THEN 56 WHEN cnt < 288230376151711744 THEN 57 WHEN cnt < 576460752303423488 THEN 58 WHEN cnt < 1152921504606846976 THEN 59 WHEN cnt < 2305843009213693952 THEN 60 WHEN cnt < 4611686018427387904 THEN 61 ELSE 62 END AS bucket, cnt FROM counts),
-            spec AS (
-              SELECT bucket,
-                     CAST(MIN(cnt) AS BIGINT) AS min_count,
-                     CAST(MAX(cnt) AS BIGINT) AS max_count,
-                     CAST(count(*) AS BIGINT) AS n_types,
-                     CAST(sum(cnt) AS BIGINT) AS total_occurrences
-              FROM b GROUP BY bucket)
-            SELECT bucket, min_count, max_count, n_types, total_occurrences,
-                   CAST(sum(n_types) OVER (ORDER BY bucket ASC
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS cum_types
-            FROM spec
-        """),
         ("emb_knn_bruteforce", lambda s, d: similarity.brute_force_topk(
             _emb(s, d), _emb(s, d).where(F.col("vec_id") < 5), k=10
         ), lambda: """
@@ -6923,24 +6942,6 @@ def registry() -> list[
         ("kg_canonical_triples", q_kg_canonical_triples, _kg_canonical_triples_values),
         ("kg_entity_degrees", q_kg_entity_degrees, _kg_entity_degrees_values),
         ("kg_pagerank", q_kg_pagerank, _kg_pagerank_values),
-        ("kg_pagerank_weighted", q_kg_pagerank_weighted, _kg_pagerank_weighted_values),
-        ("kg_pagerank_recency", q_kg_pagerank_recency, _kg_pagerank_recency_values),
-        ("kg_node2vec_walks", q_kg_node2vec_walks, _kg_node2vec_walks_values),
-        ("kg_neighborhood_hyperball", q_kg_neighborhood_hyperball, None),
-        ("kg_harmonic_hyperball", q_kg_harmonic_hyperball, None),
-        ("kg_closeness_hyperball", q_kg_closeness_hyperball, None),
-        ("kg_spectral_embeddings", q_kg_spectral_embeddings, None),
-        ("kg_spectral_knn", q_kg_spectral_knn, None),
-        ("kg_eccentricity", q_kg_eccentricity, _kg_eccentricity_sql),
-        ("kg_katz", q_kg_katz, _kg_katz_sql),
-        ("kg_reciprocity", q_kg_reciprocity, _kg_reciprocity_sql),
-        ("kg_fact_churn", q_kg_fact_churn, _kg_fact_churn_sql),
-        ("kg_community_quality", q_kg_community_quality, _kg_community_quality_sql),
-        ("kg_metapaths", q_kg_metapaths, lambda: _KG_METAPATHS_SQL_TMPL.format(
-            canon=_kg_canonical_triples_values()
-        )),
-        ("kg_entailed", q_kg_entailed, _kg_entailed_sql),
-        ("kg_blocking_report", q_kg_blocking_report, _kg_blocking_report_values),
         ("kg_media_links", q_kg_media_links, _kg_media_links_values),
     ]
 
