@@ -120,6 +120,33 @@ def test_entry_contract(spark):
         assert out.count() >= 0
 
 
+def test_set_built_oracles_do_not_depend_on_hash_seed():
+    """kg_triple_diff and kg_ktruss build their VALUES rows from Python
+    sets; the oracle text must still be the same in every process."""
+    import os
+    import subprocess
+    import sys
+
+    import __spark_entry__ as entry
+
+    code = (
+        "import __spark_entry__ as e; "
+        "print(e._kg_triple_diff_values() + e._kg_ktruss_values())"
+    )
+    texts = {
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=entry.REPO,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for seed in ("1", "2")
+    }
+    assert len(texts) == 1
+
+
 def test_ivf_topk_structure_and_recall(spark):
     from pyspark.sql import functions as F
 
