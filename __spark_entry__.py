@@ -4530,31 +4530,51 @@ def _py_minhash_pairs(
 
 
 @functools.cache
-def _py_minhash_pairs_at(
-    sf_dir: str, n: int, num_hashes: int, bands: int, threshold: float
-) -> tuple[tuple[int, int, float], ...]:
-    # sf_dir only keys the cache: _oracle_documents() reads that same dir
-    from collections import defaultdict
-
+def _py_minhash_signatures(
+    sf_dir: str, n: int, num_hashes: int, bands: int
+) -> dict[int, tuple[tuple[str, ...], tuple[tuple[int, int], ...]]]:
+    """{doc_id: (shingles, band_keys)} in document order, the MinHash
+    signature every MinHash oracle twin starts from: the distinct word
+    n-gram shingles in first-seen order, and one (band, xxhash64 of the
+    band's rows) key per band over the `num_hashes` spark_hash minima.
+    Documents without a shingle are absent. Computed once per
+    (documents dir, parameters); sf_dir only keys the cache, as
+    _oracle_documents() reads that same dir."""
     from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
 
     rows_per_band = num_hashes // bands
-    shingle_sets: dict[int, list[str]] = {}
-    buckets: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
+    out = {}
     for doc_id, text in _oracle_documents():
         toks = _py_tokens(text)
-        sh = list(
+        sh = tuple(
             dict.fromkeys(
                 " ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))
             )
         )
         if not sh:
             continue
-        shingle_sets[doc_id] = sh
         mh = [min(spark_hash(s, k) for s in sh) for k in range(num_hashes)]
-        for b in range(bands):
-            bh = spark_xxhash64(*mh[b * rows_per_band : (b + 1) * rows_per_band])
-            buckets[(b, bh)].append(doc_id)
+        out[doc_id] = (
+            sh,
+            tuple(
+                (b, spark_xxhash64(*mh[b * rows_per_band : (b + 1) * rows_per_band]))
+                for b in range(bands)
+            ),
+        )
+    return out
+
+
+@functools.cache
+def _py_minhash_pairs_at(
+    sf_dir: str, n: int, num_hashes: int, bands: int, threshold: float
+) -> tuple[tuple[int, int, float], ...]:
+    from collections import defaultdict
+
+    sig = _py_minhash_signatures(sf_dir, n, num_hashes, bands)
+    buckets: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
+    for doc_id, (_sh, keys) in sig.items():
+        for k in keys:
+            buckets[k].append(doc_id)
     pairs = set()
     for ids in buckets.values():
         ids = sorted(ids)
@@ -4563,7 +4583,7 @@ def _py_minhash_pairs_at(
                 pairs.add((ids[i], ids[j]))
     out = []
     for a, b in sorted(pairs):
-        sa, sb = set(shingle_sets[a]), set(shingle_sets[b])
+        sa, sb = set(sig[a][0]), set(sig[b][0])
         sim = _round6(len(sa & sb) / len(sa | sb))
         if sim >= threshold:
             out.append((a, b, sim))
@@ -4579,38 +4599,19 @@ def _py_neardup_incremental(
     verified by exact shingle Jaccard."""
     from collections import defaultdict
 
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
-
-    rows_per_band = num_hashes // bands
-    shingle_sets: dict[int, list[str]] = {}
-    band_keys: dict[int, list[tuple[int, int]]] = {}
-    for doc_id, text in _oracle_documents():
-        toks = _py_tokens(text)
-        sh = list(
-            dict.fromkeys(
-                " ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))
-            )
-        )
-        if not sh:
-            continue
-        shingle_sets[doc_id] = sh
-        mh = [min(spark_hash(s, k) for s in sh) for k in range(num_hashes)]
-        band_keys[doc_id] = [
-            (b, spark_xxhash64(*mh[b * rows_per_band : (b + 1) * rows_per_band]))
-            for b in range(bands)
-        ]
+    sig = _py_minhash_signatures(_oracle_sf_dir(), n, num_hashes, bands)
     index: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
-    for doc_id, keys in band_keys.items():
+    for doc_id, (_sh, keys) in sig.items():
         if doc_id % 2 == 0:
             for k in keys:
                 index[k].append(doc_id)
     out = []
-    for doc_id, keys in band_keys.items():
+    for doc_id, (sh, keys) in sig.items():
         if doc_id % 2 == 0:
             continue
         olds = sorted({o for k in keys for o in index.get(k, ())})
         for o in olds:
-            sa, sb = set(shingle_sets[doc_id]), set(shingle_sets[o])
+            sa, sb = set(sh), set(sig[o][0])
             sim = _round6(len(sa & sb) / len(sa | sb))
             if sim >= threshold:
                 out.append((doc_id, o, sim))
@@ -4760,27 +4761,13 @@ def _doc_fuzzy_decontam_values(
     identical hashes via the murmur3/xxh64 twins."""
     from collections import defaultdict
 
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
-
-    rows_per_band = num_hashes // bands
-    shingles: dict[int, list[str]] = {}
+    sig = _py_minhash_signatures(_oracle_sf_dir(), n, num_hashes, bands)
     bench_buckets: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
     corpus_buckets: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
-    for doc_id, text in _oracle_documents():
-        toks = _py_tokens(text)
-        sh = list(
-            dict.fromkeys(
-                " ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))
-            )
-        )
-        if not sh:
-            continue
-        shingles[doc_id] = sh
-        mh = [min(spark_hash(s, k) for s in sh) for k in range(num_hashes)]
+    for doc_id, (_sh, keys) in sig.items():
         target = bench_buckets if doc_id % _FUZZY_MOD == 0 else corpus_buckets
-        for b in range(bands):
-            bh = spark_xxhash64(*mh[b * rows_per_band : (b + 1) * rows_per_band])
-            target[(b, bh)].append(doc_id)
+        for k in keys:
+            target[k].append(doc_id)
     pairs = set()
     for key, bench_ids in bench_buckets.items():
         for did in corpus_buckets.get(key, []):
@@ -4788,7 +4775,7 @@ def _doc_fuzzy_decontam_values(
                 pairs.add((did, bid))
     rows = []
     for did, bid in sorted(pairs):
-        sa, sb = set(shingles[did]), set(shingles[bid])
+        sa, sb = set(sig[did][0]), set(sig[bid][0])
         sim = _round6(len(sa & sb) / len(sa | sb))
         if sim >= threshold:
             rows.append(f"({did}, {bid}, {sim!r}::DOUBLE)")

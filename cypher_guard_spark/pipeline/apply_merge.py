@@ -50,6 +50,7 @@ distinct() over id-only columns. No driver loops, no collect on data.
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import pandas as pd
@@ -63,6 +64,8 @@ from pyspark.sql.types import (
 
 from ..guard import api
 from ..guard.schema import DbSchema
+
+logger = logging.getLogger(__name__)
 
 _SEP = "\x1f"
 
@@ -248,13 +251,9 @@ def _parse_statement(stmt: str, schema: DbSchema) -> tuple:
 
 
 def _make_parse_fn(bc_schema):
-    cache: dict = {}
-
     def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        schema = cache.get("schema")
-        if schema is None:
-            schema = bc_schema.value
-            cache["schema"] = schema
+        # the worker's `_broadcastRegistry` loads `.value` once per process
+        schema = bc_schema.value
         for series in series_iter:
             rows = [_parse_statement(s, schema) for s in series]
             yield pd.DataFrame(
@@ -327,6 +326,11 @@ def apply_merge_batches(
                 total = bad.count()
             raise MergeApplyRefused(failures, total)
     else:
+        # not counted: a count would cost a Spark job
+        logger.warning(
+            "apply_merge_batches(on_error='skip'): refused MERGE statements "
+            "are dropped; list them with parse_merge_statements"
+        )
         parsed = parsed.where(F.col("err").isNull())
     edges = (
         parsed.where(F.col("kind") == "rel")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..spark.session import local_frame
+
 
 def surface_shingles(surfaces: DataFrame, col: str = "surface") -> DataFrame:
     """+ `shingles`: distinct lowercase character 3-grams."""
@@ -237,9 +239,10 @@ def connected_components(
             mapping = _driver_union_find(probe)
             if not mapping:
                 return vertices.select("label", "surface", vid.alias("comp"))
-            comp_map = spark.createDataFrame(
+            comp_map = local_frame(
+                spark,
                 [(l, s, c) for (l, s), c in mapping.items()],
-                schema="label string, surface string, mapped_comp long",
+                "label string, surface string, mapped_comp long",
             )
             return vertices.join(
                 F.broadcast(comp_map), ["label", "surface"], "left"
@@ -403,7 +406,7 @@ def build_entity_map(
     ``driver_smallmap_max_surfaces`` (known for free from the caller's
     write-Observation row count when available, else probed with one
     early-exit limit-collect), the whole blocking + CC + election runs on
-    the driver in one collect + one createDataFrame, replacing ~8 tiny
+    the driver in one collect + one Arrow-built local frame, replacing ~8 tiny
     exchanges (explode, self-join, dedup, verify joins, CC rounds, reps
     groupBy) whose per-stage AQE/scheduling latency dominates the
     pipeline's orchestration floor. Output is bit-identical to the
@@ -425,8 +428,8 @@ def build_entity_map(
                 bands,
                 jaccard_threshold,
             )
-            return spark.createDataFrame(
-                out, schema="label string, surface string, canonical string"
+            return local_frame(
+                spark, out, "label string, surface string, canonical string"
             )
 
     surfaces = link_stats.select("label", "surface", "n_mentions")

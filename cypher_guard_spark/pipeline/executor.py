@@ -125,6 +125,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..spark.session import local_frame
+
 from ..guard.ast import (
     LengthRange,
     NodePattern,
@@ -1042,7 +1044,7 @@ def _compile_query(
             )
         named.add(var)
         req_vars.add(var)  # always bound — never null-extended
-        lf = spark.createDataFrame(vals, schema=f"`{var}` {typ}")
+        lf = local_frame(spark, vals, f"`{var}` {typ}")
         acc = lf if acc is None else acc.crossJoin(lf)
 
     # CALL { subquery } — compile each standalone and cross-join its

@@ -33,6 +33,8 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..spark.session import local_frame
+
 
 def _vertex_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(entity) — distinct endpoints of the non-self-loop edges: the
@@ -101,7 +103,7 @@ def pagerank(
     n = verts.count()  # entity-scaled driver scalar (same class as CC's)
     if n == 0:
         # empty edge set: no vertices, no ranks — guard the 1/n start
-        return spark.createDataFrame([], "entity string, rank double")
+        return local_frame(spark, [], "entity string, rank double")
     if weight is None:
         outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     elif exact:
@@ -127,7 +129,7 @@ def pagerank(
         )
         ns = s.count()
         if ns == 0:
-            return spark.createDataFrame([], "entity string, rank double")
+            return local_frame(spark, [], "entity string, rank double")
         verts = verts.join(
             s.withColumn("__seed", F.lit(1)), "entity", "left"
         ).localCheckpoint(eager=False)
@@ -849,9 +851,7 @@ def hits(
         .localCheckpoint(eager=False)
     )
     if verts.count() == 0:
-        return spark.createDataFrame(
-            [], "entity string, hub double, auth double"
-        )
+        return local_frame(spark, [], "entity string, hub double, auth double")
     hub = verts.select("entity", F.lit(1.0).alias("hub"))
     auth = verts.select("entity", F.lit(1.0).alias("auth"))
     for _ in range(iters):
@@ -1094,8 +1094,10 @@ def entity_cooccurrence(
     )
     n_docs = ents.select("doc_id").distinct().count()
     if n_docs == 0:
-        return ents.sparkSession.createDataFrame(
-            [], "entity_a string, entity_b string, n_docs_both long, lift double"
+        return local_frame(
+            ents.sparkSession,
+            [],
+            "entity_a string, entity_b string, n_docs_both long, lift double",
         )
     freq = ents.groupBy("entity").agg(F.count("*").alias("df"))
     a = ents.select("doc_id", F.col("entity").alias("entity_a"))
@@ -1254,8 +1256,10 @@ def walk_negative_samples(
     broadcast-join the arrays instead."""
     rows = sorted(freq.collect(), key=lambda r: r[0])
     if not rows:
-        return pairs.sparkSession.createDataFrame(
-            [], "center string, context string, j int, negative string"
+        return local_frame(
+            pairs.sparkSession,
+            [],
+            "center string, context string, j int, negative string",
         )
     verts = [r[0] for r in rows]
     weights = [float(r[1]) ** power for r in rows]
@@ -1912,7 +1916,7 @@ def strongly_connected_components(
         .localCheckpoint(eager=False)
     )
     active_e = adj
-    assigned = spark.createDataFrame([], "entity string, scc_id string")
+    assigned = local_frame(spark, [], "entity string, scc_id string")
 
     def _sig(df: DataFrame) -> tuple:
         # decimal(38,0) sum: int64 hash sums overflow under ANSI mode
@@ -2383,7 +2387,8 @@ def neighborhood_function_approx(
     )
     n = state.count()
     if n == 0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(h, 0, 0, 0.0) for h in range(1, k + 1)],
             "hops int, pairs_at long, pairs_cum long, frac_cum double",
         )
@@ -2422,8 +2427,8 @@ def neighborhood_function_approx(
             (h, c - prev, c, round(c / total, 6) if total else 0.0)
         )
         prev = c
-    return spark.createDataFrame(
-        rows, "hops int, pairs_at long, pairs_cum long, frac_cum double"
+    return local_frame(
+        spark, rows, "hops int, pairs_at long, pairs_cum long, frac_cum double"
     )
 
 
@@ -2647,7 +2652,7 @@ def spectral_embeddings(
         .localCheckpoint(eager=False)
     )
     if not sym.take(1):
-        return spark.createDataFrame([], "entity string, emb array<double>")
+        return local_frame(spark, [], "entity string, emb array<double>")
 
     def omega(col, j):
         return (
@@ -3153,7 +3158,7 @@ def louvain(
     pairs = pairs.localCheckpoint(eager=False)
     row = pairs.agg(F.sum(F.col("w") * 2).alias("m2")).collect()[0]
     if row["m2"] is None:
-        return spark.createDataFrame([], "entity string, community string")
+        return local_frame(spark, [], "entity string, community string")
     m2 = int(row["m2"])  # 2m — invariant under coarsening
 
     vmap = (

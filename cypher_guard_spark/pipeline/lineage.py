@@ -27,6 +27,13 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..spark.session import local_frame
+
+# the `_lineage` table's columns, one row per CheckpointManager.lineage entry
+LINEAGE_SCHEMA = (
+    "stage string, partition_id bigint, rows bigint, checksum bigint, wall_ms double"
+)
+
 
 def lineage_scan(df: DataFrame, stage: str, key_cols) -> DataFrame:
     """(stage, partition_id, h) pre-aggregation frame for ONE stage that
@@ -238,5 +245,5 @@ class CheckpointManager:
         self.finalize()
         if not self.base_dir or not self.lineage:
             return
-        ldf = self.spark.createDataFrame(self.lineage)
+        ldf = local_frame(self.spark, self.lineage, LINEAGE_SCHEMA)
         ldf.write.mode("append").parquet(os.path.join(self.base_dir, "_lineage"))

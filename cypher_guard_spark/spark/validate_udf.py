@@ -68,15 +68,10 @@ def _verdict_row(query: str, schema: DbSchema) -> tuple:
 
 
 def _make_batch_fn(bc_schema):
-    # module-global cache so the broadcast value is unpickled once per
-    # executor worker process, not per batch
-    cache: dict = {}
-
     def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        schema = cache.get("schema")
-        if schema is None:
-            schema = bc_schema.value
-            cache["schema"] = schema
+        # a task unpickles `bc_schema` as the worker's `_broadcastRegistry`
+        # entry, which loads `.value` once per worker process and keeps it
+        schema = bc_schema.value
         for series in series_iter:
             rows = [_verdict_row(q, schema) for q in series]
             yield pd.DataFrame(

@@ -172,6 +172,24 @@ def test_on_error_skip_applies_valid_subset(spark):
     assert edges.count() == 0
 
 
+def test_on_error_skip_warns_without_a_job(spark, caplog):
+    stmts = _stmts(spark, "CREATE (p:Person {firstName: 'X', lastName: 'Y'})")
+    sc = spark.sparkContext
+    sc.setJobGroup("skip-warning", "skip-warning")
+    try:
+        with caplog.at_level(
+            "WARNING", logger="cypher_guard_spark.pipeline.apply_merge"
+        ):
+            apply_merge_batches(spark, stmts, on_error="skip")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("skip-warning") == []
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert "dropped" in rec.getMessage()
+    assert "parse_merge_statements" in rec.getMessage()
+
+
 def test_on_error_rejects_unknown_mode(spark):
     stmts = _stmts(spark, "MERGE (l:Location {city: 'Berlin'})")
     for mode in ("Raise", "ignore", ""):

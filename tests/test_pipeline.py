@@ -209,6 +209,100 @@ def test_written_stages_have_one_lineage_row_with_table_count(spark, result):
         assert rows[0]["rows"] == table.load(f"{ckpt}/{stage}").count(), stage
 
 
+def test_lineage_table_reads_back_as_written(spark, result):
+    """The `_lineage` parquet of the fresh run holds exactly its lineage
+    rows, under the declared schema."""
+    out, ckpt = result
+    back = spark.read.parquet(f"{ckpt}/_lineage")
+    assert back.schema.simpleString() == (
+        "struct<stage:string,partition_id:bigint,rows:bigint,"
+        "checksum:bigint,wall_ms:double>"
+    )
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, out["lineage"]))
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_frame_schema_matches_list_path(spark):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from cypher_guard_spark.pipeline.lineage import LINEAGE_SCHEMA
+    from cypher_guard_spark.spark.session import local_frame
+
+    cases = [
+        (
+            [("verdicts", -1, 12, -(2**63), 1.5), ("documents", 3, 0, -7, 0.0)],
+            LINEAGE_SCHEMA,
+        ),
+        ([], LINEAGE_SCHEMA),
+        ([(None, None, None)], "label string, surface string, mapped_comp long"),
+        ([("e", [1.0, None]), ("f", None)], "entity string, emb array<double>"),
+        ([(2**63 - 1,), (-1,)], "`x y` long"),
+        (
+            [("a", 1), ("b", None)],
+            StructType(
+                [
+                    StructField("k", StringType(), nullable=False),
+                    StructField("v", LongType(), nullable=True),
+                ]
+            ),
+        ),
+    ]
+    for rows, schema in cases:
+        got = local_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema, schema
+        assert [f.nullable for f in got.schema] == [f.nullable for f in want.schema]
+        assert got.collect() == want.collect(), schema
+        plan = _executed_plan(got)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_driver_built_frames_are_local_table_scans(spark, result, tmp_path, monkeypatch):
+    """The entity-map fast path, the CC driver path's comp_map and the
+    `_lineage` frame reach the JVM as one Arrow batch: a LocalTableScan,
+    no Python-RDD scan that would start workers to re-pickle the rows."""
+    from cypher_guard_spark.pipeline import lineage
+    from cypher_guard_spark.pipeline.canonicalize import (
+        build_entity_map,
+        connected_components,
+    )
+    from cypher_guard_spark.spark.session import local_frame
+
+    def local_only(df):
+        plan = _executed_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    out, _ = result
+    local_only(build_entity_map(spark, out["link_stats"]))
+
+    # vertices come from the parquet table, so a LocalTableScan in the
+    # result can only be comp_map
+    vertices = out["link_stats"].select("label", "surface")
+    (label, a), (_, b) = (
+        vertices.where(vertices.label == "Person").orderBy("surface").take(2)
+    )
+    edges = local_frame(spark, [(label, a, b)], "label string, a string, b string")
+    comps = connected_components(spark, vertices, edges)
+    local_only(comps)
+    assert comps.where(comps.surface.isin(a, b)).select("comp").distinct().count() == 1
+
+    built = []
+
+    def spy(*args):
+        built.append(local_frame(*args))
+        return built[-1]
+
+    monkeypatch.setattr(lineage, "local_frame", spy)
+    cm = lineage.CheckpointManager(spark, str(tmp_path / "ckpt"))
+    cm.lineage = list(out["lineage"])
+    cm.write_lineage()
+    (ldf,) = built
+    local_only(ldf)
+
+
 def test_pass_through_lineage_matches_independent_hash(spark, corpus, result):
     """documents/mentions are observed on their consumer's write (one
     partition_id=-1 row each); the values equal a direct hash of frames
