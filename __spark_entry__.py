@@ -25,7 +25,7 @@ import functools
 import json
 import os
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4532,14 +4532,16 @@ def _py_minhash_pairs(
 @functools.cache
 def _py_minhash_signatures(
     sf_dir: str, n: int, num_hashes: int, bands: int
-) -> dict[int, tuple[tuple[str, ...], tuple[tuple[int, int], ...]]]:
+) -> Mapping[int, tuple[tuple[str, ...], tuple[tuple[int, int], ...]]]:
     """{doc_id: (shingles, band_keys)} in document order, the MinHash
     signature every MinHash oracle twin starts from: the distinct word
     n-gram shingles in first-seen order, and one (band, xxhash64 of the
     band's rows) key per band over the `num_hashes` spark_hash minima.
     Documents without a shingle are absent. Computed once per
-    (documents dir, parameters); sf_dir only keys the cache, as
-    _oracle_documents() reads that same dir."""
+    (documents dir, parameters) and shared read-only; sf_dir only keys
+    the cache, as _oracle_documents() reads that same dir."""
+    from types import MappingProxyType
+
     from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
 
     rows_per_band = num_hashes // bands
@@ -4561,7 +4563,7 @@ def _py_minhash_signatures(
                 for b in range(bands)
             ),
         )
-    return out
+    return MappingProxyType(out)
 
 
 @functools.cache

@@ -406,7 +406,7 @@ def build_entity_map(
     ``driver_smallmap_max_surfaces`` (known for free from the caller's
     write-Observation row count when available, else probed with one
     early-exit limit-collect), the whole blocking + CC + election runs on
-    the driver in one collect + one Arrow-built local frame, replacing ~8 tiny
+    the driver in one collect + one Arrow-built frame, replacing ~8 tiny
     exchanges (explode, self-join, dedup, verify joins, CC rounds, reps
     groupBy) whose per-stage AQE/scheduling latency dominates the
     pipeline's orchestration floor. Output is bit-identical to the

@@ -125,8 +125,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..spark.session import local_frame
-
 from ..guard.ast import (
     LengthRange,
     NodePattern,
@@ -135,6 +133,7 @@ from ..guard.ast import (
     RelationshipPattern,
     WhereCondition,
 )
+from ..spark.session import local_frame
 
 _SEP = "\x1f"
 # the Neo4j catalog procedures with executable semantics against our

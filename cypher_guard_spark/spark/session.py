@@ -113,13 +113,13 @@ def build_session(
 
 
 def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
-    """A row list the driver already holds, as a DataFrame over one Arrow
-    batch: the plan is a JVM ``LocalTableScan``. ``createDataFrame(list)``
-    would be ``sc.parallelize`` + ``Scan ExistingRDD``, so every job over
-    the frame starts Python workers only to re-pickle its rows (a
-    153-row write measured 0.39 s that way, 0.12 s this way). ``schema``
-    is a DDL string or a ``StructType``; the result's schema, nullability
-    included, is the one ``createDataFrame(rows, schema)`` gives."""
+    """A row list the driver already holds (tuples in schema order), as a
+    DataFrame over one Arrow batch: the plan is a JVM ``LocalTableScan``.
+    ``createDataFrame(list)`` would be ``sc.parallelize`` + ``Scan
+    ExistingRDD``, so every job over the frame starts Python workers only
+    to re-pickle its rows (docs/PERFORMANCE.md §28). ``schema`` is a DDL
+    string or a ``StructType``; the result's schema, nullability included,
+    is the one ``createDataFrame(rows, schema)`` gives."""
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     cols = list(zip(*rows)) or [()] * len(arrow)
