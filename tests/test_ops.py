@@ -2,6 +2,10 @@
 plumbing. (Oracle agreement for every SQL-expressible op is exercised by
 scripts/check_oracles.py and the driver's CORRECTNESS gate.)"""
 
+import hashlib
+import json
+from pathlib import Path
+
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -104,15 +108,33 @@ def test_multimodal_feature_plumbing(spark):
     assert decode_image(b"x", fake=True).shape == (4, 4, 3)
 
 
-def test_entry_contract(spark):
+ORACLE_DIGESTS = Path(__file__).parent / "golden" / "oracle_digests.json"
+
+
+def oracle_digests(oracles: dict[str, str]) -> dict[str, str]:
+    """sha256 of each `oracle_sql()` text. When an oracle is meant to
+    change, refresh the golden file from the repo root with
+    `python -c 'import json, __spark_entry__ as e, tests.test_ops as t;
+    print(json.dumps(t.oracle_digests(e.oracle_sql()), indent=1,
+    sort_keys=True))' > tests/golden/oracle_digests.json`."""
+    return {n: hashlib.sha256(t.encode()).hexdigest() for n, t in oracles.items()}
+
+
+def test_entry_contract(spark, monkeypatch):
     import __spark_entry__ as entry
 
     df = entry.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
     qs = entry.queries()
+    # pinned at the dir the driver compares at (sf0.01)
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", entry._ORACLE_SF_DIR_DEFAULT)
     oracles = entry.oracle_sql()
     assert set(oracles) <= set(qs)
+    pinned = json.loads(ORACLE_DIGESTS.read_text())
+    got = oracle_digests(oracles)
+    changed = sorted(n for n in pinned.keys() | got.keys() if pinned.get(n) != got.get(n))
+    assert not changed, f"oracle text changed for: {changed}"
     # every query runs and yields a stable schema at the smallest sf
     for name in ("q1_pricing_summary", "doc_token_stats", "guard_verdicts"):
         out = qs[name](spark, SF_DIR)
