@@ -35,6 +35,9 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from cypher_guard_spark.ops.text import py_tokens  # noqa: E402
+from cypher_guard_spark.oracle import round6  # noqa: E402
+
 GOLDEN_PATH = REPO / "tests/golden/verdicts.json"
 
 
@@ -1267,31 +1270,15 @@ def q_kg_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _py_kg_backbone() -> list:
     """Serial Kruskal twin under the same strict total order."""
+    from cypher_guard_spark.pipeline.graph_algo import py_max_spanning_forest
+
     pairs: dict = {}
     for d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
         if s == o:
             continue
         a, b = (s, o) if s < o else (o, s)
         pairs.setdefault((a, b), set()).add((d, _r))
-    edges = sorted(
-        ((len(ev), u, v) for (u, v), ev in pairs.items()),
-        key=lambda t: (-t[0], t[1], t[2]),
-    )
-    parent: dict = {}
-
-    def find(x):
-        while parent.get(x, x) != x:
-            parent[x] = parent.get(parent[x], parent[x])
-            x = parent[x]
-        return x
-
-    out = []
-    for w, u, v in edges:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-            out.append((u, v, w))
-    return out
+    return py_max_spanning_forest((u, v, len(ev)) for (u, v), ev in pairs.items())
 
 
 def _kg_backbone_sql() -> str:
@@ -1398,40 +1385,12 @@ def q_kg_media_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_entity_links(docs, extract_triples_raw(docs))
 
 
-def _py_kg_raw_triples_with_idx() -> list:
-    """(doc_id, span_idx, subj, pred, obj, kindless) raw-extraction twin,
-    span_idx counted over ALL spans (text + media) like posexplode."""
-    import re
-
-    from cypher_guard_spark.pipeline.synth import _render_doc
-
-    pats = [
-        (re.compile(r"^(.+) works for (.+)\.$"), "WORKS_FOR"),
-        (re.compile(r"^(.+) knows (.+)\.$"), "KNOWS"),
-        (re.compile(r"^(.+) is located in (.+)\.$"), "LOCATED_IN"),
-    ]
-    rows = []
-    for i in range(_KG_DOCS):
-        doc_id, spans = _render_doc(i)
-        for span_idx, span in enumerate(spans):
-            if span["kind"] != "text":
-                continue
-            for pat, rel in pats:
-                m = pat.match(span["text"])
-                if m:
-                    rows.append((doc_id, span_idx, m.group(1), rel, m.group(2)))
-                    break
-    return rows
-
-
 def _kg_media_links_values() -> str:
     """Twin of media_entity_links: media spans adjacent (±1) to extracted
     text spans, joined through the raw-extraction twin."""
     from cypher_guard_spark.pipeline.synth import _render_doc
 
-    trip = {}
-    for doc_id, span_idx, s, r, o in _py_kg_raw_triples_with_idx():
-        trip[(doc_id, span_idx)] = (s, r, o)
+    trip = {(d, i): (s, r, o) for d, i, s, r, o, _sl, _ol, _c in _py_kg_triples()}
     rows = []
     for i in range(_KG_DOCS):
         doc_id, spans = _render_doc(i)
@@ -1489,34 +1448,12 @@ def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_hits_values(iters: int = 3) -> str:
-    """Serial twin of hits(exact=True) over the canonical-triple edge set:
-    distinct directed edges sans self-loops, sorted-fold sums,
-    max-normalize + round 6dp per half-update."""
-    from collections import defaultdict
+    """Serial twin of hits(exact=True) over the canonical-triple edges."""
+    from cypher_guard_spark.pipeline.graph_algo import py_hits
 
-    es = {
-        (s, o)
-        for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples()
-        if s != o
-    }
-    verts = sorted({v for e in es for v in e})
-    into, outof = defaultdict(list), defaultdict(list)
-    for s, d in es:
-        into[d].append(s)
-        outof[s].append(d)
-
-    def half(scores, arriving):
-        sums = {v: _sorted_fold_sum(scores[u] for u in arriving.get(v, ())) for v in verts}
-        m = max(sums.values())
-        return {v: _round6(x / m) for v, x in sums.items()}
-
-    hub = {v: 1.0 for v in verts}
-    for _ in range(iters):
-        auth = half(hub, into)
-        hub = half(auth, outof)
     rows = [
-        f"({_sql_quote(v)}, {hub[v]!r}::DOUBLE, {auth[v]!r}::DOUBLE)"
-        for v in verts
+        f"({_sql_quote(v)}, {hub!r}::DOUBLE, {auth!r}::DOUBLE)"
+        for v, hub, auth in py_hits(_kg_edges(), iters)
     ]
     return (
         "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, hub, auth)"
@@ -1543,30 +1480,10 @@ def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _py_kg_walks(
     length: int = 4, walks_per_node: int = 2, seed: int = 7
 ) -> list:
-    """Pure-Python twin of random_walks over the canonical edge set:
-    distinct directed adjacency sans self-loops, hash-min next-step draw,
-    truncation at out-degree-0 vertices. [(start, rep, step, vertex)]."""
-    from cypher_guard_spark.oracle import spark_xxhash64
+    """random_walks twin over the canonical edges: [(start, rep, step, vertex)]."""
+    from cypher_guard_spark.pipeline.graph_algo import py_random_walks
 
-    adj: dict = {}
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            adj.setdefault(s, set()).add(o)
-    rows = []
-    for start in adj:
-        for rep in range(walks_per_node):
-            cur = start
-            rows.append((start, rep, 0, cur))
-            for t in range(1, length + 1):
-                nbrs = adj.get(cur)
-                if not nbrs:
-                    break
-                cur = min(
-                    nbrs,
-                    key=lambda nb: (spark_xxhash64(start, rep, t, nb, seed), nb),
-                )
-                rows.append((start, rep, t, cur))
-    return rows
+    return py_random_walks(_kg_edges(), length, walks_per_node, seed)
 
 
 def _kg_random_walks_values(
@@ -1606,71 +1523,14 @@ def q_kg_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _py_kg_node2vec_walks(
-    length: int = 4,
-    walks_per_node: int = 2,
-    w_return: int = 1,
-    w_in: int = 2,
-    w_out: int = 4,
-    seed: int = 7,
-) -> list:
-    """Pure-Python twin of node2vec_walks over the canonical edge set:
-    step 1 uniform hash-min, steps ≥2 the virtual-copy weighted hash-min
-    with node2vec classification (return / in / out by (prev,nbr) edge
-    membership), truncation at out-degree-0 and all-zero-weight
-    candidate sets."""
-    from cypher_guard_spark.oracle import spark_xxhash64
-
-    adj: dict = {}
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            adj.setdefault(s, set()).add(o)
-    rows = []
-    for start in adj:
-        for rep in range(walks_per_node):
-            rows.append((start, rep, 0, start))
-            prev, cur = None, start
-            for t in range(1, length + 1):
-                nbrs = adj.get(cur)
-                if not nbrs:
-                    break
-                if t == 1:
-                    nxt = min(
-                        nbrs,
-                        key=lambda nb: (
-                            spark_xxhash64(start, rep, 1, nb, seed), nb,
-                        ),
-                    )
-                else:
-                    best = None
-                    for nb in nbrs:
-                        if nb == prev:
-                            w = w_return
-                        elif nb in adj.get(prev, set()):
-                            w = w_in
-                        else:
-                            w = w_out
-                        for copy in range(1, w + 1):
-                            k = (
-                                spark_xxhash64(
-                                    start, rep, t, nb, copy, seed
-                                ),
-                                nb,
-                            )
-                            if best is None or k < best[0]:
-                                best = (k, nb)
-                    if best is None:
-                        break
-                    nxt = best[1]
-                rows.append((start, rep, t, nxt))
-                prev, cur = cur, nxt
-    return rows
-
-
 def _kg_node2vec_walks_values() -> str:
+    """node2vec_walks twin over the canonical edges, with the builder's
+    (length, walks_per_node, w_return, w_in, w_out, seed)."""
+    from cypher_guard_spark.pipeline.graph_algo import py_node2vec_walks
+
     rows = [
         f"({_sql_quote(s)}, {rep}, {t}, {_sql_quote(v)})"
-        for s, rep, t, v in _py_kg_node2vec_walks()
+        for s, rep, t, v in py_node2vec_walks(_kg_edges(), 4, 2, 1, 2, 4, 7)
     ]
     return (
         "SELECT * FROM (VALUES "
@@ -1727,7 +1587,7 @@ def _kg_shortest_paths_values(max_rounds: int = 8) -> str:
     adj: dict = defaultdict(list)
     und: dict = defaultdict(set)
     for (a, b), c in cnt.items():
-        w = _round6(1.0 / c)
+        w = round6(1.0 / c)
         adj[a].append((b, w))
         adj[b].append((a, w))
         und[a].add(b)
@@ -1738,7 +1598,7 @@ def _kg_shortest_paths_values(max_rounds: int = 8) -> str:
         new = dict(dist)
         for u, d in dist.items():
             for v, w in adj[u]:
-                nd = _round6(d + w)
+                nd = round6(d + w)
                 if v not in new or nd < new[v]:
                     new[v] = nd
         if new == dist:
@@ -1794,7 +1654,7 @@ def _kg_path_tree_values(max_rounds: int = 8) -> str:
     adj: dict = defaultdict(list)
     und: dict = defaultdict(set)
     for (a, b), c in cnt.items():
-        w = _round6(1.0 / c)
+        w = round6(1.0 / c)
         adj[a].append((b, w))
         adj[b].append((a, w))
         und[a].add(b)
@@ -1805,7 +1665,7 @@ def _kg_path_tree_values(max_rounds: int = 8) -> str:
         new = dict(state)
         for u, (d, _p) in state.items():
             for v, w in adj[u]:
-                cand = (_round6(d + w), u)
+                cand = (round6(d + w), u)
                 if v not in new or cand < new[v]:
                     new[v] = cand
         if new == state:
@@ -1840,18 +1700,9 @@ def _py_kg_fused_groups() -> dict:
     oracles so both verify the same fact multiset."""
     from collections import defaultdict
 
-    from cypher_guard_spark.pipeline.canonicalize import _driver_entity_map
-
-    raw = _py_kg_raw_triples_conf()
-    counts = _py_mention_counts([t[:6] for t in raw])
-    emap = {
-        (l, s): canon
-        for l, s, canon in _driver_entity_map(
-            [(l, s, n) for (l, s), n in counts.items()], 16, 8, 0.6
-        )
-    }
+    emap = _py_entity_map(_py_kg_mention_counts())
     groups: dict = defaultdict(list)
-    for d, s, r, o, sl, ol, conf in raw:
+    for d, _i, s, r, o, sl, ol, conf in _py_kg_triples():
         key = (emap.get((sl, s), s), r, emap.get((ol, o), o))
         groups[key].append((d, conf))
     return groups
@@ -1862,7 +1713,7 @@ def _py_noisy_or(obs: list) -> float:
     prod = 1.0
     for c in sorted(1.0 - c for _d, c in obs):
         prod = prod * c
-    return _round6(1.0 - prod)
+    return round6(1.0 - prod)
 
 
 def _kg_triple_fusion_values() -> str:
@@ -1939,7 +1790,7 @@ def _py_weighted_pagerank(
             acc = 0.0
             for c in sorted(contribs.get(v, [])):
                 acc += c
-            new[v] = _round6(base + damping * acc)
+            new[v] = round6(base + damping * acc)
         rank = new
     return rank
 
@@ -2122,10 +1973,7 @@ def _kg_fuzzy_surfaces_sql(max_dist: int = 1) -> str:
     """Brute-force oracle: DuckDB's own levenshtein over all same-label
     surface pairs from the raw-extraction twin — independent of the
     deletion-neighborhood blocking, so it checks completeness too."""
-    surf = sorted(
-        {(sl, s) for _d, s, _r, o, sl, ol in _py_kg_raw_triples()}
-        | {(ol, o) for _d, s, _r, o, sl, ol in _py_kg_raw_triples()}
-    )
+    surf = sorted(_py_kg_mention_counts())
     rows = ", ".join(
         f"({_sql_quote(l)}, {_sql_quote(s)})" for l, s in surf
     )
@@ -2433,7 +2281,7 @@ def _kg_betweenness_values(max_depth: int = 4) -> str:
                     t = 0.0
                     for c in sorted(contribs[u]):
                         t = t + c
-                    delta[u] = _round6(t)
+                    delta[u] = round6(t)
                 else:
                     delta[u] = 0.0
         for v in dist:
@@ -2444,7 +2292,7 @@ def _kg_betweenness_values(max_depth: int = 4) -> str:
         t = 0.0
         for x in sorted(bc_vals.get(v, [])):
             t = t + x
-        rows.append(f"({_sql_quote(v)}, {_round6(t * 0.5)!r}::DOUBLE)")
+        rows.append(f"({_sql_quote(v)}, {round6(t * 0.5)!r}::DOUBLE)")
     return (
         "SELECT * FROM (VALUES "
         + ", ".join(rows)
@@ -2957,86 +2805,38 @@ def q_kg_entity_map_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_entity_map_update_values() -> str:
     """Pure-Python twin of q_kg_entity_map_update: even-doc history map
-    via the `_driver_entity_map` twin, then the incremental rules —
-    novel-vs-all LSH with the parity-locked hash twins, within-batch
-    abbreviation pairs (novel abbrevs only), union-find, min-old-canonical
-    anchor / (n_mentions, surface) election."""
-    import re
-
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
+    via the entity-map twin, then the incremental rules — novel-involved
+    LSH pairs over old + novel surfaces, within-batch abbreviation pairs
+    (novel abbrevs only), union-find, min-old-canonical anchor /
+    (n_mentions, surface) election."""
     from cypher_guard_spark.pipeline.canonicalize import (
-        _driver_entity_map,
         _driver_union_find,
+        py_abbreviation_pairs,
+        py_lsh_buckets,
+        py_verified_pairs,
     )
 
-    triples = _py_kg_raw_triples()
+    triples = _py_kg_triples()
     even = [t for t in triples if int(t[0].split("-")[1]) % 2 == 0]
     odd = [t for t in triples if int(t[0].split("-")[1]) % 2 == 1]
-    old_counts = _py_mention_counts(even)
-    old_map = {
-        (l, s): c
-        for l, s, c in _driver_entity_map(
-            [(l, s, n) for (l, s), n in old_counts.items()], 16, 8, 0.6
-        )
-    }
-    new_counts = _py_mention_counts(odd)
+    old_map = _py_entity_map(_py_kg_mention_counts(even))
+    new_counts = _py_kg_mention_counts(odd)
     novel = {
         (l, s): n for (l, s), n in new_counts.items() if (l, s) not in old_map
     }
-    is_abbrev = re.compile(r"[A-Z]\. ")
-
-    def grams(s: str) -> list[str]:
-        low = s.lower()
-        return list(
-            dict.fromkeys(low[i : i + 3] for i in range(max(len(low) - 2, 1)))
-        )
-
-    def band_keys(l: str, s: str):
-        g = grams(s)
-        return [
-            (
-                l,
-                b,
-                spark_xxhash64(
-                    *[
-                        min(spark_hash(x, b * 2 + r) for x in g)
-                        for r in range(2)
-                    ]
-                ),
-            )
-            for b in range(8)
-        ]
-
-    buckets: dict = {}
-    for l, s in set(old_map) | set(novel):
-        if is_abbrev.match(s):
-            continue
-        for k in band_keys(l, s):
-            buckets.setdefault(k, set()).add(s)
-    pairs = set()
-    for l, s in novel:
-        if is_abbrev.match(s):
-            continue
-        gs = set(grams(s))
-        for k in band_keys(l, s):
-            for t in buckets.get(k, ()):
-                if t == s:
-                    continue
-                gt = set(grams(t))
-                if len(gs & gt) / len(gs | gt) >= 0.6:
-                    pairs.add((l, min(s, t), max(s, t)))
-    fulls: dict = {}
-    for (l, s), n in new_counts.items():
-        if l == "Person" and not is_abbrev.match(s):
-            fulls.setdefault((l, s.split(" ")[-1], s[:1]), []).append((n, s))
-    for (l, s), _n in new_counts.items():
-        if l == "Person" and is_abbrev.match(s) and (l, s) in novel:
-            cands = fulls.get((l, s.split(" ")[-1], s[:1]))
-            if cands:
-                pairs.add((l, s, max(cands)[1]))
-    mapping = _driver_union_find(
-        [{"label": l, "a": a, "b": b} for l, a, b in pairs]
+    pairs = py_verified_pairs(
+        py_lsh_buckets([*old_map, *novel], 16, 8),
+        0.6,
+        keep=lambda l, a, b: (l, a) in novel or (l, b) in novel,
     )
+    pairs.update(
+        (l, a, b)
+        for l, a, b in py_abbreviation_pairs(
+            [(l, s, n) for (l, s), n in new_counts.items()]
+        )
+        if (l, a) in novel
+    )
+    mapping = _driver_union_find(pairs)
     groups: dict = {}
     for (l, s), comp in mapping.items():
         groups.setdefault((l, comp), []).append(s)
@@ -3178,7 +2978,7 @@ def _kg_modularity_values(iters: int = 5) -> str:
         degc[labels[v]] += d
     sum_degsq = sum(d * d for d in degc.values())
     ncomm = len({labels[v] for v in deg})
-    q = 0.0 if m == 0 else _round6(
+    q = 0.0 if m == 0 else round6(
         float(4 * m * sum_ec - sum_degsq) / float(4 * m * m)
     )
     return (
@@ -3533,7 +3333,7 @@ def _kg_assortativity_values() -> str:
     s1 = sum(deg[a] + deg[b] for a, b in und)
     s2 = sum(deg[a] ** 2 + deg[b] ** 2 for a, b in und)
     den = 2 * m * s2 - s1 * s1
-    r = 0.0 if m == 0 or den == 0 else _round6(
+    r = 0.0 if m == 0 or den == 0 else round6(
         float(4 * m * sxy - s1 * s1) / float(den)
     )
     return (
@@ -3608,7 +3408,7 @@ def _kg_clustering_values() -> str:
                 if a < b and b in adj.get(a, ()):
                     t += 1
         deg = len(nbrs)
-        cc = _round6(2.0 * t / (deg * (deg - 1))) if deg >= 2 else 0.0
+        cc = round6(2.0 * t / (deg * (deg - 1))) if deg >= 2 else 0.0
         rows.append(f"({_sql_quote(v)}, {deg}, {t}, {cc!r}::DOUBLE)")
     return (
         "SELECT * FROM (VALUES "
@@ -3680,17 +3480,9 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_kcore_values(k: int = 2) -> str:
     """Pure-Python twin: classic peeling to the unique k-core fixpoint."""
-    adj = _kg_und_adj()
-    changed = True
-    while changed:
-        changed = False
-        for v in [v for v, nbrs in adj.items() if len(nbrs) < k]:
-            for nb in adj.pop(v):
-                adj[nb].discard(v)
-            changed = True
-    rows = [
-        f"({_sql_quote(v)}, {len(nbrs)})" for v, nbrs in adj.items() if nbrs
-    ]
+    from cypher_guard_spark.pipeline.graph_algo import py_k_core
+
+    rows = [f"({_sql_quote(v)}, {deg})" for v, deg in py_k_core(_kg_edges(), k)]
     if not rows:
         return "SELECT * FROM (VALUES (NULL, NULL)) AS t(entity, core_degree) WHERE FALSE"
     return (
@@ -3728,7 +3520,7 @@ def _kg_ppr_values(iters: int = 3, damping: float = 0.85) -> str:
     """Pure-Python twin of personalized pagerank from the hub seed over
     the canonical edge MULTISET (out-degree counts repeats, like the
     engine's groupBy count), value-sorted folds, 6dp half-up rounding."""
-    edges = [(s, o) for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples()]
+    edges = _kg_edges()
     adj = _kg_und_adj()
     hub = min(adj, key=lambda v: (-len(adj[v]), v))
     verts = sorted({v for e_ in edges for v in e_})
@@ -3742,7 +3534,7 @@ def _kg_ppr_values(iters: int = 3, damping: float = 0.85) -> str:
         for s, o in edges:
             contribs[o].append(rank[s] / outdeg[s])
         rank = {
-            v: _round6(base[v] + damping * sum(sorted(contribs[v]), 0.0))
+            v: round6(base[v] + damping * sum(sorted(contribs[v]), 0.0))
             for v in verts
         }
     rows = [f"({_sql_quote(v)}, {r!r})" for v, r in rank.items()]
@@ -3774,35 +3566,10 @@ def q_kg_entity_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_entity_map_values() -> str:
-    """VALUES twin: the same mention counts fed to _driver_entity_map
-    (itself equality-locked against the distributed path)."""
-    import re
-
-    from cypher_guard_spark.pipeline.canonicalize import _driver_entity_map
-    from cypher_guard_spark.pipeline.synth import _render_doc
-
-    pats = [
-        (re.compile(r"^(.+) works for (.+)\.$"), "Person", "Company"),
-        (re.compile(r"^(.+) knows (.+)\.$"), "Person", "Person"),
-        (re.compile(r"^(.+) is located in (.+)\.$"), "Company", "Location"),
-    ]
-    counts: dict = {}
-    for i in range(_KG_DOCS):
-        _doc_id, spans = _render_doc(i)
-        for span in spans:
-            if span["kind"] != "text":
-                continue
-            for pat, sl, ol in pats:
-                m = pat.match(span["text"])
-                if m:
-                    counts[(sl, m.group(1))] = counts.get((sl, m.group(1)), 0) + 1
-                    counts[(ol, m.group(2))] = counts.get((ol, m.group(2)), 0) + 1
-                    break
+    """VALUES twin: the entity-map twin over the corpus's mention counts."""
     rows = [
         f"({_sql_quote(l)}, {_sql_quote(s)}, {_sql_quote(c)})"
-        for l, s, c in _driver_entity_map(
-            [(l, s, n) for (l, s), n in counts.items()], 16, 8, 0.6
-        )
+        for (l, s), c in _py_entity_map(_py_kg_mention_counts()).items()
     ]
     return (
         "SELECT * FROM (VALUES "
@@ -3834,52 +3601,13 @@ def q_kg_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_blocking_report_values(num_hashes: int = 16, bands: int = 8) -> str:
-    """Twin: same surface vocabulary (the entity-map twin's extraction),
-    same abbreviation exclusion, shingles, spark_hash minhashes and
-    xxhash64 band keys via the bit-exact oracle hashes, then the
-    bucket-size histogram counted serially."""
-    import re
-    from collections import Counter
+    """Twin: the blocking-report twin over the extraction twin's surface
+    vocabulary."""
+    from cypher_guard_spark.pipeline.canonicalize import py_blocking_report
 
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
-    from cypher_guard_spark.pipeline.synth import _render_doc
-
-    pats = [
-        (re.compile(r"^(.+) works for (.+)\.$"), "Person", "Company"),
-        (re.compile(r"^(.+) knows (.+)\.$"), "Person", "Person"),
-        (re.compile(r"^(.+) is located in (.+)\.$"), "Company", "Location"),
-    ]
-    surfaces: set = set()
-    for i in range(_KG_DOCS):
-        _doc_id, spans = _render_doc(i)
-        for span in spans:
-            if span["kind"] != "text":
-                continue
-            for pat, sl, ol in pats:
-                m = pat.match(span["text"])
-                if m:
-                    surfaces.add((sl, m.group(1)))
-                    surfaces.add((ol, m.group(2)))
-                    break
-    abbrev = re.compile(r"^[A-Z]\. ")
-    rows_per_band = num_hashes // bands
-    bucket_sizes: Counter = Counter()
-    for label, surf in surfaces:
-        if abbrev.match(surf):
-            continue
-        sl = surf.lower()
-        n = max(len(sl) - 2, 1)
-        sh = list(dict.fromkeys(sl[i : i + 3] for i in range(n)))
-        for b in range(bands):
-            mh = [
-                min(spark_hash(x, b * rows_per_band + r) for x in sh)
-                for r in range(rows_per_band)
-            ]
-            bucket_sizes[(label, b, spark_xxhash64(*mh))] += 1
-    hist: Counter = Counter(bucket_sizes.values())
     vals = ", ".join(
-        f"({s}::BIGINT, {nb}::BIGINT, {nb * s * (s - 1) // 2}::BIGINT)"
-        for s, nb in sorted(hist.items())
+        f"({s}::BIGINT, {nb}::BIGINT, {cr}::BIGINT)"
+        for s, nb, cr in py_blocking_report(_py_kg_mention_counts(), num_hashes, bands)
     )
     return (
         "SELECT * FROM (VALUES "
@@ -3916,30 +3644,11 @@ def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_components_values() -> str:
     """Union-find twin with the same min-xxhash64("E", entity) comp ids."""
-    from cypher_guard_spark.oracle import spark_xxhash64
+    from cypher_guard_spark.oracle import components, spark_xxhash64
 
-    adj = _kg_und_adj()
-    ents = sorted(
-        {v for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples() for v in (s, o)}
-    )
-    parent = {v: v for v in ents}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, nbrs in adj.items():
-        for b in nbrs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-    comps: dict = {}
-    for v in ents:
-        comps.setdefault(find(v), []).append(v)
+    edges = _kg_edges()
     rows = []
-    for members in comps.values():
+    for members in components(edges, sorted({v for e in edges for v in e})):
         cid = min(spark_xxhash64("E", m) for m in members)
         rows.extend(f"({_sql_quote(m)}, {cid})" for m in members)
     return (
@@ -4014,7 +3723,7 @@ def _kg_link_prediction_values(min_shared: int = 2, k: int = 100) -> str:
             acc = 0.0
             for wv in sorted(1.0 / len(adj[z]) for z in shared):
                 acc = acc + wv
-            scores[(a, b)] = (len(shared), _round6(acc))
+            scores[(a, b)] = (len(shared), round6(acc))
     top = sorted(scores.items(), key=lambda kv: (-kv[1][1], kv[0]))[:k]
     rows = [
         f"({_sql_quote(a)}, {_sql_quote(b)}, {n}, {ra!r})"
@@ -4169,7 +3878,7 @@ def _kg_entity_similarity_values(threshold: float = 0.2) -> str:
             inter = len(adj[a] & adj[b])
             if inter == 0:
                 continue
-            sim = _round6(inter / (len(adj[a]) + len(adj[b]) - inter))
+            sim = round6(inter / (len(adj[a]) + len(adj[b]) - inter))
             if sim >= threshold:
                 rows.append(
                     f"({_sql_quote(a)}, {_sql_quote(b)}, {inter}, {sim!r}::DOUBLE)"
@@ -4188,9 +3897,7 @@ def _kg_pagerank_values(iters: int = 3, damping: float = 0.85) -> str:
     HALF_UP 6dp rounding per iteration — bit-identical doubles."""
     from collections import defaultdict
 
-    edges = [
-        (s, o) for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples()
-    ]
+    edges = _kg_edges()
     verts = sorted({v for e in edges for v in e})
     n = len(verts)
     outdeg: defaultdict = defaultdict(int)
@@ -4207,92 +3914,61 @@ def _kg_pagerank_values(iters: int = 3, damping: float = 0.85) -> str:
             acc = 0.0
             for c in sorted(contribs.get(v, [])):
                 acc += c
-            new[v] = _round6(base + damping * acc)
+            new[v] = round6(base + damping * acc)
         rank = new
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
 
 
-def _py_kg_raw_triples_conf(n_docs: int | None = None) -> list:
-    """Regex-extraction twin over the synthesized corpus (same render as
-    `_kg_triples_raw_values`), with the extraction UDF's confidence
-    formula (mentions.py: 0.9 + 0.1*min(len/80, 1) — identical IEEE op
-    order): [(doc_id, subj, pred, obj, sl, ol, conf)]."""
-    import re
+def _py_kg_triples(n_docs: int = _KG_DOCS) -> list:
+    """The extraction twin's rows over the first `n_docs` synthesized docs
+    (`mentions.py_extract_triples`)."""
+    from cypher_guard_spark.pipeline.mentions import py_extract_triples
 
-    from cypher_guard_spark.pipeline.synth import _render_doc
-
-    if n_docs is None:
-        n_docs = _KG_DOCS
-
-    pats = [
-        (re.compile(r"^(.+) works for (.+)\.$"), "WORKS_FOR", "Person", "Company"),
-        (re.compile(r"^(.+) knows (.+)\.$"), "KNOWS", "Person", "Person"),
-        (
-            re.compile(r"^(.+) is located in (.+)\.$"),
-            "LOCATED_IN",
-            "Company",
-            "Location",
-        ),
-    ]
-    triples = []
-    for i in range(n_docs):
-        doc_id, spans = _render_doc(i)
-        for span in spans:
-            if span["kind"] != "text":
-                continue
-            for pat, rel, sl, ol in pats:
-                m = pat.match(span["text"])
-                if m:
-                    conf = 0.9 + 0.1 * min(len(span["text"]) / 80.0, 1.0)
-                    triples.append(
-                        (doc_id, m.group(1), rel, m.group(2), sl, ol, conf)
-                    )
-                    break
-    return triples
+    return py_extract_triples(n_docs)
 
 
-def _py_kg_raw_triples(n_docs: int | None = None) -> list:
-    """[(doc_id, subj, pred, obj, sl, ol)] — conf stripped."""
-    return [t[:6] for t in _py_kg_raw_triples_conf(n_docs)]
+def _py_kg_mention_counts(triples=None) -> dict:
+    """{(label, surface): n_mentions} of extraction-twin rows (default:
+    the whole KG corpus)."""
+    from cypher_guard_spark.pipeline.mentions import py_mention_counts
+
+    return py_mention_counts(_py_kg_triples() if triples is None else triples)
 
 
-def _py_mention_counts(triples) -> dict:
-    """{(label, surface): n_mentions} — one count per triple endpoint,
-    the link_scores twin."""
-    counts: dict = {}
-    for _d, s, _r, o, sl, ol in triples:
-        counts[(sl, s)] = counts.get((sl, s), 0) + 1
-        counts[(ol, o)] = counts.get((ol, o), 0) + 1
-    return counts
-
-
-@functools.cache
-def _py_kg_canonical_triples(n_docs: int | None = None) -> tuple:
-    """Pure-Python twin of the whole canonicalization pipeline: the same
-    render → regex extraction as `_kg_triples_raw_values`, mention counts
-    per (label, surface), the `_driver_entity_map` twin (itself equality-
-    locked against the distributed path by tests/test_pipeline.py), and
-    the subj/obj map application. Returns
-    ((doc_id, subj, pred, obj, subj_label, obj_label), ...), computed once
-    per process: a pure function of the synthesized corpus."""
+def _py_entity_map(counts: dict) -> dict:
+    """{(label, surface): canonical} — the `_driver_entity_map` twin
+    (equality-locked against the distributed path by
+    tests/test_pipeline.py) over mention counts, at the pipeline's
+    (16 hashes, 8 bands, 0.6) blocking parameters."""
     from cypher_guard_spark.pipeline.canonicalize import _driver_entity_map
 
-    triples = _py_kg_raw_triples(n_docs)
-    counts: dict = {}
-    for _d, s, _r, o, sl, ol in triples:
-        counts[(sl, s)] = counts.get((sl, s), 0) + 1
-        counts[(ol, o)] = counts.get((ol, o), 0) + 1
-    emap = {
+    return {
         (l, s): canon
         for l, s, canon in _driver_entity_map(
             [(l, s, n) for (l, s), n in counts.items()], 16, 8, 0.6
         )
     }
+
+
+@functools.cache
+def _py_kg_canonical_triples(n_docs: int | None = None) -> tuple:
+    """Pure-Python twin of the whole canonicalization pipeline: the
+    extraction twin, its mention counts, the entity-map twin and the
+    subj/obj map application. Returns
+    ((doc_id, subj, pred, obj, subj_label, obj_label), ...), computed once
+    per process: a pure function of the synthesized corpus."""
+    triples = _py_kg_triples(n_docs or _KG_DOCS)
+    emap = _py_entity_map(_py_kg_mention_counts(triples))
     return tuple(
         (d, emap.get((sl, s), s), r, emap.get((ol, o), o), sl, ol)
-        for d, s, r, o, sl, ol in triples
+        for d, _i, s, r, o, sl, ol, _c in triples
     )
+
+
+def _kg_edges() -> list:
+    """The canonical-triple twin's directed (subj, obj) edge multiset."""
+    return [(s, o) for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples()]
 
 
 def _kg_canonical_triples_values() -> str:
@@ -4325,31 +4001,11 @@ def _kg_entity_degrees_values() -> str:
 
 
 def _kg_triples_raw_values() -> str:
-    """The extraction oracle, computed without Spark: render each doc with
-    the same deterministic generator and apply the same template regexes."""
-    import re
-
-    from cypher_guard_spark.pipeline.synth import _render_doc
-
-    pats = [
-        (re.compile(r"^(.+) works for (.+)\.$"), "WORKS_FOR"),
-        (re.compile(r"^(.+) knows (.+)\.$"), "KNOWS"),
-        (re.compile(r"^(.+) is located in (.+)\.$"), "LOCATED_IN"),
+    """The extraction oracle, computed without Spark by the extraction twin."""
+    rows = [
+        f"({_sql_quote(d)}, {_sql_quote(s)}, {_sql_quote(r)}, {_sql_quote(o)})"
+        for d, _i, s, r, o, _sl, _ol, _c in _py_kg_triples()
     ]
-    rows = []
-    for i in range(_KG_DOCS):
-        doc_id, spans = _render_doc(i)
-        for span in spans:
-            if span["kind"] != "text":
-                continue
-            for pat, rel in pats:
-                m = pat.match(span["text"])
-                if m:
-                    rows.append(
-                        f"({_sql_quote(doc_id)}, {_sql_quote(m.group(1))}, "
-                        f"{_sql_quote(rel)}, {_sql_quote(m.group(2))})"
-                    )
-                    break
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(doc_id, subj, pred, obj)"
 
 
@@ -4405,54 +4061,16 @@ def _oracle_documents() -> list[tuple[int, str]]:
     return list(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
 
 
-def _py_tokens(text: str) -> list[str]:
-    """Twin of the engine tokenizer `split(lower(trim(text)), '\\s+')`
-    (ops/dedup.py). Pinned to the SAME character classes as the Java regex:
-    Java `\\s` is ASCII-only ([ \\t\\n\\x0b\\f\\r]) and Spark `trim` strips
-    0x20 only — so the Python side uses `re.ASCII` and `.strip(' ')`, not
-    Unicode-whitespace semantics. Residual engine-vs-oracle divergence is
-    confined to locale-special lowercasings (e.g. 'İ'); the synthetic
-    corpus is ASCII, and non-ASCII corpora share every other code path."""
-    import re
-
-    return re.split(r"\s+", text.strip(" ").lower(), flags=re.ASCII)
-
-
 def _py_bpe_train(
     num_merges: int = 24, min_pair_count: int = 2
 ) -> list[tuple[int, str, str, int]]:
-    """Independent serial BPE trainer (Counter over the word-frequency
-    table, no Spark code shared with ops/bpe.py's fold/groupBy machinery):
-    the ground truth for `corpus_bpe_merges`. Tie order mirrors the
-    engine's total order (count DESC, left ASC, right ASC)."""
-    from collections import Counter
+    """The independent serial trainer (`ops.bpe.py_train_bpe`) over the
+    oracle documents: the ground truth for `corpus_bpe_merges`."""
+    from cypher_guard_spark.ops.bpe import py_train_bpe
 
-    words: Counter = Counter()
-    for _, text in _oracle_documents():
-        for w in _py_tokens(text):
-            words[w] += 1
-    vocab = {w: list(w) for w in words}
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(num_merges):
-        pairs: Counter = Counter()
-        for w, syms in vocab.items():
-            for p in zip(syms, syms[1:]):
-                pairs[p] += words[w]
-        if not pairs:
-            break
-        (left, right), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if cnt < min_pair_count:
-            break
-        merges.append((rank, left, right, cnt))
-        for w, syms in vocab.items():
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == left and s == right:
-                    out[-1] = left + right
-                else:
-                    out.append(s)
-            vocab[w] = out
-    return merges
+    return py_train_bpe(
+        [text for _, text in _oracle_documents()], num_merges, min_pair_count
+    )
 
 
 def _corpus_bpe_merges_values() -> str:
@@ -4485,7 +4103,7 @@ def _doc_bpe_tokens_values() -> str:
     memo: dict[str, int] = {}
     rows = []
     for doc_id, text in _oracle_documents():
-        ws = _py_tokens(text)
+        ws = py_tokens(text)
         n_sub = 0
         for w in ws:
             got = memo.get(w)
@@ -4512,13 +4130,6 @@ def _sorted_fold_sum(values) -> float:
     return acc
 
 
-def _round6(x: float) -> float:
-    """Spark round(_, 6): HALF_UP on the double's shortest decimal repr."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-
 def _py_minhash_pairs(
     n: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.3
 ) -> tuple[tuple[int, int, float], ...]:
@@ -4542,27 +4153,21 @@ def _py_minhash_signatures(
     the cache, as _oracle_documents() reads that same dir."""
     from types import MappingProxyType
 
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
+    from cypher_guard_spark.oracle import minhash_band_keys
 
-    rows_per_band = num_hashes // bands
     out = {}
     for doc_id, text in _oracle_documents():
-        toks = _py_tokens(text)
+        toks = py_tokens(text)
         sh = tuple(
             dict.fromkeys(
                 " ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 0))
             )
         )
-        if not sh:
-            continue
-        mh = [min(spark_hash(s, k) for s in sh) for k in range(num_hashes)]
-        out[doc_id] = (
-            sh,
-            tuple(
-                (b, spark_xxhash64(*mh[b * rows_per_band : (b + 1) * rows_per_band]))
-                for b in range(bands)
-            ),
-        )
+        if sh:
+            out[doc_id] = (
+                sh,
+                tuple(enumerate(minhash_band_keys(sh, num_hashes, bands))),
+            )
     return MappingProxyType(out)
 
 
@@ -4586,7 +4191,7 @@ def _py_minhash_pairs_at(
     out = []
     for a, b in sorted(pairs):
         sa, sb = set(sig[a][0]), set(sig[b][0])
-        sim = _round6(len(sa & sb) / len(sa | sb))
+        sim = round6(len(sa & sb) / len(sa | sb))
         if sim >= threshold:
             out.append((a, b, sim))
     return tuple(out)
@@ -4614,7 +4219,7 @@ def _py_neardup_incremental(
         olds = sorted({o for k in keys for o in index.get(k, ())})
         for o in olds:
             sa, sb = set(sh), set(sig[o][0])
-            sim = _round6(len(sa & sb) / len(sa | sb))
+            sim = round6(len(sa & sb) / len(sa | sb))
             if sim >= threshold:
                 out.append((doc_id, o, sim))
     return sorted(out)
@@ -4658,37 +4263,22 @@ def _doc_neardup_survivors_sql(threshold: float = 0.3) -> str:
     )
 
 
-def _doc_neardup_clusters_values(threshold: float = 0.3) -> str:
-    """Pure-Python twin of ops.dedup.neardup_clusters: union-find over the
+def _py_neardup_clusters(threshold: float) -> dict[int, int]:
+    """{doc_id: cluster_id} in document order — union-find over the
     minhash pair graph, cluster_id = min doc_id per component, singletons
-    are their own cluster."""
-    parent: dict[int, int] = {}
+    their own cluster."""
+    from cypher_guard_spark.oracle import components
 
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+    pairs = [(a, b) for a, b, _sim in _py_minhash_pairs(threshold=threshold)]
+    cluster_of = {v: min(ms) for ms in components(pairs) for v in ms}
+    return {d: cluster_of.get(d, d) for d, _text in _oracle_documents()}
 
-    for a, b, _sim in _py_minhash_pairs(threshold=threshold):
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_members: dict[int, list[int]] = {}
-    for v in parent:
-        comp_members.setdefault(find(v), []).append(v)
-    cluster_of: dict[int, int] = {}
-    for members in comp_members.values():
-        cid = min(members)
-        for v in members:
-            cluster_of[v] = cid
-    assignment = {
-        doc_id: cluster_of.get(doc_id, doc_id)
-        for doc_id, _text in _oracle_documents()
-    }
+
+def _doc_neardup_clusters_values(threshold: float = 0.3) -> str:
+    """Pure-Python twin of ops.dedup.neardup_clusters."""
     from collections import Counter
+
+    assignment = _py_neardup_clusters(threshold)
 
     sizes = Counter(assignment.values())
     rows = [
@@ -4706,36 +4296,13 @@ def _doc_leakage_split_values(
     threshold: float = 0.3, eval_pct: int = 10
 ) -> str:
     """Pure-Python twin of ops.dedup.leakage_safe_split: the cluster
-    twin's union-find assignment + the portable md5-prefix side hash
+    twin's assignment + the portable md5-prefix side hash
     (int(md5(str(cid))[:15], 16) % 100 < eval_pct ⇔ Spark's
     conv(substr(md5,1,15),16,10))."""
     import hashlib
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b, _sim in _py_minhash_pairs(threshold=threshold):
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_members: dict[int, list[int]] = {}
-    for v in parent:
-        comp_members.setdefault(find(v), []).append(v)
-    cluster_of: dict[int, int] = {}
-    for members in comp_members.values():
-        cid = min(members)
-        for v in members:
-            cluster_of[v] = cid
     rows = []
-    for doc_id, _text in _oracle_documents():
-        cid = cluster_of.get(doc_id, doc_id)
+    for doc_id, cid in _py_neardup_clusters(threshold).items():
         h = int(hashlib.md5(str(cid).encode()).hexdigest()[:15], 16) % 100
         side = "eval" if h < eval_pct else "train"
         rows.append(f"({doc_id}, {cid}, '{side}')")
@@ -4778,7 +4345,7 @@ def _doc_fuzzy_decontam_values(
     rows = []
     for did, bid in sorted(pairs):
         sa, sb = set(sig[did][0]), set(sig[bid][0])
-        sim = _round6(len(sa & sb) / len(sa | sb))
+        sim = round6(len(sa & sb) / len(sa | sb))
         if sim >= threshold:
             rows.append(f"({did}, {bid}, {sim!r}::DOUBLE)")
     if not rows:
@@ -4880,7 +4447,7 @@ def _emb_projected_values(out_dim: int = 8, seed: int = 0) -> str:
             acc = 0.0
             for i in range(d):
                 acc = acc + float(x[i]) * signs[i][j]
-            rows.append(f"({vid}, {j}, {_round6(acc)!r})")
+            rows.append(f"({vid}, {j}, {round6(acc)!r})")
     return (
         "SELECT * FROM (VALUES "
         + ", ".join(rows)
@@ -4952,7 +4519,7 @@ def _doc_hash_values() -> str:
 
 
 def _py_length_stratum(text: str, bucket_tokens: int = 16, n_buckets: int = 4) -> int:
-    return min(len(_py_tokens(text)) // bucket_tokens, n_buckets - 1)
+    return min(len(py_tokens(text)) // bucket_tokens, n_buckets - 1)
 
 
 def _doc_stratified_sample_values() -> str:
@@ -5019,7 +4586,7 @@ def _doc_simhash_values(bands: int = 4, max_hamming: int = 12) -> str:
     sh: dict[int, int] = {}
     buckets: defaultdict[tuple[int, int], list[int]] = defaultdict(list)
     for doc_id, text in _oracle_documents():
-        toks = list(dict.fromkeys(_py_tokens(text)))
+        toks = list(dict.fromkeys(py_tokens(text)))
         hashes = [spark_xxhash64(t) for t in toks]
         v = 0
         for i in range(64):
@@ -5057,12 +4624,12 @@ def _py_lloyd_assign(vecs: dict, n_centroids: int, iters: int):
     value-sorted sequential-fold trainer mean — bit-identical to the
     engine on every double. Returns (centers, assignment) dicts."""
     centers = {
-        cid: [_round6(x) for x in vecs[vid]]
+        cid: [round6(x) for x in vecs[vid]]
         for cid, vid in enumerate(sorted(vecs)[:n_centroids])
     }
     for _ in range(iters):
         assign = {
-            vid: min((_round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
+            vid: min((round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
             for vid, v in vecs.items()
         }
         new_centers = {}
@@ -5071,14 +4638,14 @@ def _py_lloyd_assign(vecs: dict, n_centroids: int, iters: int):
             if members:
                 dims = len(members[0])
                 new_centers[c] = [
-                    _round6(_sorted_fold_sum(m[d] for m in members) / len(members))
+                    round6(_sorted_fold_sum(m[d] for m in members) / len(members))
                     for d in range(dims)
                 ]
             else:
                 new_centers[c] = centers[c]
         centers = new_centers
     assign = {
-        vid: min((_round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
+        vid: min((round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
         for vid, v in vecs.items()
     }
     return centers, assign
@@ -5145,7 +4712,7 @@ def _emb_pq_topk_values(
                     dd = qv[s * d_m + i] - cx
                     sacc += dd * dd
                 acc += sacc
-            scored.append((_round6(acc), vid))
+            scored.append((round6(acc), vid))
         for rank, (d, vid) in enumerate(sorted(scored)[:k], start=1):
             rows.append(f"({qid}, {vid}, {rank}, {d!r}::DOUBLE)")
     return (
@@ -5190,7 +4757,7 @@ def _emb_ivfpq_values(
                     dd = qv[s * d_m + i] - cx
                     sacc += dd * dd
                 acc += sacc
-            scored.append((_round6(acc), vid))
+            scored.append((round6(acc), vid))
         for rank, (d, vid) in enumerate(sorted(scored)[:k], start=1):
             rows.append(f"({qid}, {vid}, {rank}, {d!r}::DOUBLE)")
     return (
@@ -5229,7 +4796,7 @@ def _emb_semdedup_values(
                 dot += x * y
                 na += x * x
                 nb += y * y
-            sim = _round6(dot / (math.sqrt(na) * math.sqrt(nb)))
+            sim = round6(dot / (math.sqrt(na) * math.sqrt(nb)))
             if sim >= threshold:
                 rows.append(f"({a}, {b}, {assign[a]}, {sim!r}::DOUBLE)")
     if not rows:
@@ -5272,7 +4839,7 @@ def _emb_ivf_values(
         probed = {
             c
             for _, c in sorted(
-                (_round6(dist2(vecs[qid], centers[c])), c) for c in centers
+                (round6(dist2(vecs[qid], centers[c])), c) for c in centers
             )[:nprobe]
         }
         scored = []
@@ -5284,7 +4851,7 @@ def _emb_ivf_values(
                 dot += x * y
                 na += x * x
                 nb += y * y
-            scored.append((-_round6(dot / (math.sqrt(na) * math.sqrt(nb))), nid))
+            scored.append((-round6(dot / (math.sqrt(na) * math.sqrt(nb))), nid))
         scored.sort()
         for rank, (negsim, nid) in enumerate(scored[:k], 1):
             rows.append(f"({qid}, {nid}, {rank}, {-negsim!r}::DOUBLE)")

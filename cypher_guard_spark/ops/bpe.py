@@ -46,9 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import py_tokens, tokens
 
-__all__ = ["word_table", "train_bpe", "bpe_encode", "bpe_word"]
+__all__ = ["word_table", "train_bpe", "py_train_bpe", "bpe_encode", "bpe_word"]
 
 
 def word_table(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -219,6 +219,44 @@ def train_bpe(
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count long"
     )
+
+
+def py_train_bpe(
+    texts, num_merges: int, min_pair_count: int = 2
+) -> list[tuple[int, str, str, int]]:
+    """Independent serial BPE trainer over raw `texts`: a Counter over the
+    `py_tokens` word table and a full pair recount per merge, sharing no
+    code with `train_bpe`'s fold/groupBy loop or its incremental
+    `_serial_merges`. Tie order mirrors the engine's total order (count
+    DESC, left ASC, right ASC); [(merge_rank, left, right, pair_count)]."""
+    from collections import Counter
+
+    words: Counter = Counter()
+    for text in texts:
+        for w in py_tokens(text):
+            words[w] += 1
+    vocab = {w: list(w) for w in words}
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(num_merges):
+        pairs: Counter = Counter()
+        for w, syms in vocab.items():
+            for p in zip(syms, syms[1:]):
+                pairs[p] += words[w]
+        if not pairs:
+            break
+        (left, right), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if cnt < min_pair_count:
+            break
+        merges.append((rank, left, right, cnt))
+        for w, syms in vocab.items():
+            out: list[str] = []
+            for s in syms:
+                if out and out[-1] == left and s == right:
+                    out[-1] = left + right
+                else:
+                    out.append(s)
+            vocab[w] = out
+    return merges
 
 
 def bpe_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

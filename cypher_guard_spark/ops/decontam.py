@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_shingles
+from .dedup import band_rows, word_shingles
 
 
 def benchmark_ngrams(benchmark: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
@@ -171,41 +171,18 @@ def fuzzy_contamination(
     the candidate dropDuplicates, O(candidate pairs). The corpus is
     re-shingled ONLY for candidate docs (leftsemi on candidate ids, same
     O(candidates) bound as the dedup operator)."""
-
-    def banded(side: DataFrame, id_alias: str) -> DataFrame:
-        from .dedup import word_shingles
-
-        rows_per_band = num_hashes // bands
-        base = side.select(
-            F.col("doc_id").alias(id_alias),
-            F.array_distinct(word_shingles(text_col, n)).alias("sh"),
-        ).where(F.size("sh") > 0)
-        mh = lambda b, r: (  # noqa: E731
-            f"array_min(transform(sh, x -> hash(x, b * {rows_per_band} + {r})))"
-        )
-        band_struct = (
-            "named_struct('band', b, 'bh', xxhash64("
-            + ", ".join(mh("b", r) for r in range(rows_per_band))
-            + "))"
-        )
-        bands_expr = F.expr(
-            f"transform(array(sh), sh -> transform(sequence(0, {bands - 1}), "
-            f"b -> {band_struct}))[0]"
-        )
-        return base.select(id_alias, F.explode(bands_expr).alias("bb")).select(
-            id_alias, "bb.band", "bb.bh"
-        )
-
-    from .dedup import word_shingles
-
+    bench_bands = band_rows(benchmark, text_col, n, num_hashes, bands)
     # the candidate list is referenced three times (corpus-shingle
     # leftsemi, bench join, final select) and each reference would
     # re-evaluate the full-corpus minhash subtree under column pruning —
     # the §14/§16 pathology (docs/PERFORMANCE.md). Lazy checkpoint: the
     # corpus is minhashed ONCE; the materialized rows are id pairs only.
     cand = (
-        banded(docs, "doc_id")
-        .join(F.broadcast(banded(benchmark, "bench_id")), ["band", "bh"])
+        band_rows(docs, text_col, n, num_hashes, bands)
+        .join(
+            F.broadcast(bench_bands.withColumnRenamed("doc_id", "bench_id")),
+            ["band", "bh"],
+        )
         .select("doc_id", "bench_id")
         .dropDuplicates(["doc_id", "bench_id"])
         .localCheckpoint(eager=False)

@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..oracle import components
+from ..pipeline.canonicalize import connected_components, lsh_bands
+from ..spark.session import local_frame
 from .text import _norm, tokens
 
 
@@ -198,33 +201,15 @@ def band_rows(
     at-rest index (`write_minhash_index`), and the incremental query
     (`neardup_incremental`).
 
-    The whole banding pipeline is ONE expression with the shingle array
-    bound once (array-wrap lambda): per-column minhashes would let
-    CollapseProject inline the shingle computation into every one of the
-    `num_hashes` projections (measured ~2x wall on this operator). Band b
-    hashes its `rows_per_band` minhashes with xxhash64, matching the
-    pure-Python oracle's fold exactly (`hash(x, k)` with k an int
-    expression hashes k as a second argument, same as the literal form).
+    The banding is the one-expression `canonicalize.lsh_bands`, which
+    binds the shingle array once and matches `oracle.minhash_band_keys`.
     """
-    rows_per_band = num_hashes // bands
     base = df.select(
         "doc_id", F.array_distinct(word_shingles(text_col, n)).alias("sh")
     ).where(F.size("sh") > 0)
-    mh = lambda b, r: (  # noqa: E731
-        f"array_min(transform(sh, x -> hash(x, b * {rows_per_band} + {r})))"
-    )
-    band_struct = (
-        "named_struct('band', b, 'bh', xxhash64("
-        + ", ".join(mh("b", r) for r in range(rows_per_band))
-        + "))"
-    )
-    bands_expr = F.expr(
-        f"transform(array(sh), sh -> transform(sequence(0, {bands - 1}), "
-        f"b -> {band_struct}))[0]"
-    )
-    return base.select("doc_id", F.explode(bands_expr).alias("bb")).select(
-        "doc_id", "bb.band", "bb.bh"
-    )
+    return base.select(
+        "doc_id", F.explode(lsh_bands("sh", num_hashes, bands)).alias("bb")
+    ).select("doc_id", "bb.band", "bb.bh")
 
 
 def minhash_near_duplicates(
@@ -342,34 +327,12 @@ def neardup_clusters(
     assignment = None
     probe = pairs.limit(driver_max_pairs + 1).collect()
     if len(probe) <= driver_max_pairs:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in probe:
-            a, b = r["a"], r["b"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        members: dict = {}
-        for v in parent:
-            members.setdefault(find(v), []).append(v)
-        rows = [
-            (v, min(ms)) for ms in members.values() for v in ms
-        ]
+        rows = [(v, min(ms)) for ms in components(probe) for v in ms]
         if rows:
             assignment = F.broadcast(
-                spark.createDataFrame(rows, "doc_id long, cluster_id long")
+                local_frame(spark, rows, "doc_id long, cluster_id long")
             )
     else:
-        from ..pipeline.canonicalize import connected_components
-
         # CC kernel is keyed on (label, surface) string vertices; doc ids
         # ride in base-10 so the mapping back is exact.
         edges = pairs.select(

@@ -7,6 +7,8 @@ ANSI-SQL oracle in __spark_entry__.oracle_sql().
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -28,6 +30,17 @@ def _norm(col):
 def tokens(col):
     """Whitespace tokenization of normalized text."""
     return F.split(_norm(col), r"\s+")
+
+
+def py_tokens(text: str) -> list[str]:
+    """Serial twin of `tokens` (`split(lower(trim(text)), '\\s+')`).
+    Pinned to the SAME character classes as the Java regex: Java `\\s` is
+    ASCII-only ([ \\t\\n\\x0b\\f\\r]) and Spark `trim` strips 0x20 only —
+    so this uses `re.ASCII` and `.strip(' ')`, not Unicode-whitespace
+    semantics. Residual engine-vs-twin divergence is confined to
+    locale-special lowercasings (e.g. 'İ'); the synthetic corpus is ASCII,
+    and non-ASCII corpora share every other code path."""
+    return re.split(r"\s+", text.strip(" ").lower(), flags=re.ASCII)
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -12,14 +12,27 @@ Connected components is the standard iterative min-id propagation
 takes the min neighbor component, and localCheckpoints to cut lineage.
 Surface-variant chains in this domain have diameter ≤ 3, so convergence is
 a handful of rounds; the loop is count-guarded, not fixed.
+
+The `py_*` functions are the serial twins of the kernels they follow; the
+driver fast paths (`_driver_entity_map`, `_driver_union_find`) and the
+VALUES oracles are built from them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+from collections import Counter
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..oracle import components, minhash_band_keys, spark_xxhash64
 from ..spark.session import local_frame
+
+# "J. Smith"-style abbreviations: excluded from MinHash blocking, resolved
+# by the initial + last-name blocker instead (see minhash_candidate_pairs)
+_ABBREV = r"^[A-Z]\. "
+_is_abbrev = re.compile(_ABBREV).match
 
 
 def surface_shingles(surfaces: DataFrame, col: str = "surface") -> DataFrame:
@@ -32,6 +45,112 @@ def surface_shingles(surfaces: DataFrame, col: str = "surface") -> DataFrame:
             f" i -> substring(lower({col}), i, 3)))"
         ),
     ).withColumn("_norm", norm)
+
+
+def py_surface_shingles(surface: str) -> list[str]:
+    """Serial twin of `surface_shingles`: the distinct lowercase character
+    3-grams in first-seen order, with the engine's 1-based substring and
+    one-gram floor for surfaces shorter than 3 characters."""
+    low = surface.lower()
+    return list(dict.fromkeys(low[i : i + 3] for i in range(max(len(low) - 2, 1))))
+
+
+def lsh_bands(shingles: str, num_hashes: int, bands: int) -> Column:
+    """array<struct<band, bh>>: the MinHash LSH band keys of the array
+    column `shingles` — band b's `bh` is xxhash64 over its
+    `num_hashes // bands` minhashes `array_min(transform(sh, x -> hash(x,
+    b * rows_per_band + r)))`, matching `oracle.minhash_band_keys`.
+
+    ONE expression binding the array once (array-wrap lambda): per-column
+    minhash projections would let CollapseProject inline the shingle
+    computation into each of the `num_hashes` columns (measured ~2x wall
+    on the document dedup operator, docs/PERFORMANCE.md §1). `hash(x, k)`
+    with k an int expression hashes k as a second argument, same as the
+    literal form."""
+    rows_per_band = num_hashes // bands
+    band_struct = (
+        "named_struct('band', b, 'bh', xxhash64("
+        + ", ".join(
+            f"array_min(transform(sh, x -> hash(x, b * {rows_per_band} + {r})))"
+            for r in range(rows_per_band)
+        )
+        + "))"
+    )
+    return F.expr(
+        f"transform(array({shingles}), sh -> transform(sequence(0, {bands - 1}), "
+        f"b -> {band_struct}))[0]"
+    )
+
+
+def _banded_surfaces(
+    surfaces: DataFrame, num_hashes: int, bands: int
+) -> DataFrame:
+    """(surface, label, band, band_hash) LSH keys of the non-abbreviation
+    surfaces — the blocking keys of minhash_candidate_pairs,
+    update_entity_map and blocking_report."""
+    sh = surface_shingles(surfaces.where(~F.col("surface").rlike(_ABBREV)))
+    return sh.select(
+        "surface", "label", F.explode(lsh_bands("shingles", num_hashes, bands)).alias("bb")
+    ).select("surface", "label", "bb.band", F.col("bb.bh").alias("band_hash"))
+
+
+def py_lsh_buckets(surfaces, num_hashes: int, bands: int) -> dict:
+    """Serial twin of `_banded_surfaces` grouped by bucket: {(label, band,
+    band_hash): {surface: shingles}} over (label, surface) pairs,
+    abbreviations excluded."""
+    buckets: dict = {}
+    for label, surface in surfaces:
+        if _is_abbrev(surface):
+            continue
+        grams = py_surface_shingles(surface)
+        for b, key in enumerate(minhash_band_keys(grams, num_hashes, bands)):
+            buckets.setdefault((label, b, key), {})[surface] = grams
+    return buckets
+
+
+def py_verified_pairs(buckets: dict, jaccard_threshold: float, keep=None) -> set:
+    """Serial twin of the band self-join + `_jaccard_verified` over
+    `py_lsh_buckets` output: {(label, a, b)} with a < b for every
+    same-bucket pair whose exact shingle Jaccard is >= the threshold,
+    restricted to pairs with `keep(label, a, b)` when given."""
+    pairs = set()
+    for (label, _, _), members in buckets.items():
+        names = sorted(members)
+        for i, a in enumerate(names):
+            for b in names[i + 1 :]:
+                if keep is not None and not keep(label, a, b):
+                    continue
+                sa, sb = set(members[a]), set(members[b])
+                if len(sa & sb) / len(sa | sb) >= jaccard_threshold:
+                    pairs.add((label, a, b))
+    return pairs
+
+
+def _jaccard_verified(
+    cand: DataFrame, surfaces: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """Candidate pairs (label, a, b) → (label, a, b, sim) with exact
+    shingle Jaccard sim >= `jaccard_threshold`.
+
+    The band shuffle carries keys only; the deduplicated pairs re-join
+    the one-copy shingle table of `surfaces` once per side, so the
+    payload moves once per pair side, not ×bands. The surface table is
+    ENTITY-sized, so two direct re-joins are payload-safe (unlike the
+    document-scale ops/dedup.py, which semi-join-filters the shingle
+    recompute to candidate ids) and keep this tiny stage's job count
+    minimal."""
+    sh = surface_shingles(surfaces).select("label", "surface", "shingles")
+    ver = cand.join(
+        sh.select("label", F.col("surface").alias("a"), F.col("shingles").alias("sa")),
+        ["label", "a"],
+    ).join(
+        sh.select("label", F.col("surface").alias("b"), F.col("shingles").alias("sb")),
+        ["label", "b"],
+    )
+    sim = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
+    return ver.withColumn("sim", sim).where(F.col("sim") >= jaccard_threshold).select(
+        "label", "a", "b", "sim"
+    )
 
 
 def minhash_candidate_pairs(
@@ -56,33 +175,7 @@ def minhash_candidate_pairs(
     inc" ≈ 0.76) from same-family false friends ("nina johnson" / "paula
     johnson" = 0.50).
     """
-    rows_per_band = num_hashes // bands
-    surfaces = surfaces.where(~F.col("surface").rlike(r"^[A-Z]\. "))
-    sh = surface_shingles(surfaces)
-    # banding path drops the shingle arrays BEFORE the explode + self-join:
-    # the band shuffle moves (label, surface, band, band_hash) only, and the
-    # deduplicated candidate pairs re-join the one-copy shingle table for
-    # exact-Jaccard verification (payload moves once per side, not ×bands).
-    # The whole banding is ONE expression binding the shingle array once —
-    # per-column minhash projections would let CollapseProject inline the
-    # shingle computation into each of the `num_hashes` columns (same
-    # pathology as ops/dedup.py, documented in docs/PERFORMANCE.md §1).
-    band_struct = (
-        "named_struct('band', b, 'band_hash', xxhash64("
-        + ", ".join(
-            f"array_min(transform(shingles, x -> hash(x, b * {rows_per_band} + {r})))"
-            for r in range(rows_per_band)
-        )
-        + "))"
-    )
-    bands_expr = F.expr(
-        f"transform(array(shingles), shingles -> transform(sequence(0, {bands - 1}), "
-        f"b -> {band_struct}))[0]"
-    )
-    banded = sh.select(
-        "surface", "label", F.explode(bands_expr).alias("bb")
-    ).select("surface", "label", "bb.band", "bb.band_hash")
-
+    banded = _banded_surfaces(surfaces, num_hashes, bands)
     left = banded.alias("l")
     right = banded.alias("r")
     cand = (
@@ -102,24 +195,7 @@ def minhash_candidate_pairs(
         )
         .dropDuplicates(["label", "a", "b"])
     )
-    # unlike the document-scale dedup variant (ops/dedup.py, which
-    # semi-join-filters the shingle recompute to candidate ids), the
-    # surface table here is ENTITY-sized: two direct re-joins of the
-    # one-copy shingle table are payload-safe and keep the driver-serial
-    # job count of this tiny-data stage minimal (each extra join in this
-    # subplan is another AQE round over a handful of rows).
-    shingle_tbl = sh.select("label", "surface", "shingles")
-    sha = shingle_tbl.select(
-        "label", F.col("surface").alias("a"), F.col("shingles").alias("sa")
-    )
-    shb = shingle_tbl.select(
-        "label", F.col("surface").alias("b"), F.col("shingles").alias("sb")
-    )
-    ver = cand.join(sha, ["label", "a"]).join(shb, ["label", "b"])
-    sim = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
-    return ver.withColumn("sim", sim).where(F.col("sim") >= jaccard_threshold).select(
-        "label", "a", "b", "sim"
-    )
+    return _jaccard_verified(cand, surfaces, jaccard_threshold)
 
 
 def abbreviation_pairs(link_stats: DataFrame) -> DataFrame:
@@ -130,7 +206,7 @@ def abbreviation_pairs(link_stats: DataFrame) -> DataFrame:
     most frequent expansion — a popularity prior that is deliberately,
     boundedly wrong for rare entities (see synth.py)."""
     persons = link_stats.where(F.col("label") == "Person")
-    is_abbrev = F.col("surface").rlike(r"^[A-Z]\. ")
+    is_abbrev = F.col("surface").rlike(_ABBREV)
     key_last = F.element_at(F.split(F.col("surface"), " "), -1)
     key_init = F.substring(F.col("surface"), 1, 1)
     abbrevs = persons.where(is_abbrev).select(
@@ -154,33 +230,32 @@ def abbreviation_pairs(link_stats: DataFrame) -> DataFrame:
     return best.select("label", "a", "b", F.lit(1.0).alias("sim"))
 
 
+def py_abbreviation_pairs(rows) -> list[tuple[str, str, str]]:
+    """Serial twin of `abbreviation_pairs` over [(label, surface,
+    n_mentions)]: (label, abbreviation, expansion) for every resolvable
+    Person abbreviation, in row order; the expansion is the max
+    (n_mentions, surface) full name sharing the last token and initial."""
+    fulls: dict = {}
+    for label, surface, n in rows:
+        if label == "Person" and not _is_abbrev(surface):
+            fulls.setdefault((surface.split(" ")[-1], surface[:1]), []).append((n, surface))
+    out = []
+    for label, surface, _ in rows:
+        if label == "Person" and _is_abbrev(surface):
+            cands = fulls.get((surface.split(" ")[-1], surface[:1]))
+            if cands:
+                out.append((label, surface, max(cands)[1]))
+    return out
+
+
 def _driver_union_find(edge_rows) -> dict:
-    """{(label, surface): comp} for every NON-singleton vertex, computed on
-    the driver. comp = min over the component of xxhash64(label, surface) —
-    bit-identical to the distributed min-propagation loop's result (the
-    pure-Python xxhash64 twin is parity-locked by tests/test_oracle_hashes)."""
-    from ..oracle import spark_xxhash64
-
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in edge_rows:
-        a, b = (r["label"], r["a"]), (r["label"], r["b"])
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    groups: dict = {}
-    for v in parent:
-        groups.setdefault(find(v), []).append(v)
+    """{(label, surface): comp} for every NON-singleton vertex of the
+    (label, a, b) edges, computed on the driver. comp = min over the
+    component of xxhash64(label, surface) — bit-identical to the
+    distributed min-propagation loop's result (the pure-Python xxhash64
+    twin is parity-locked by tests/test_oracle_hashes)."""
     out: dict = {}
-    for members in groups.values():
+    for members in components(((l, a), (l, b)) for l, a, b in edge_rows):
         comp = min(spark_xxhash64(label, surface) for label, surface in members)
         for v in members:
             out[v] = comp
@@ -321,56 +396,10 @@ def _driver_entity_map(
 
     ``rows`` = [(label, surface, n_mentions)]; returns
     [(label, surface, canonical)]."""
-    import re
-
-    from ..oracle import spark_hash, spark_xxhash64
-
-    rows_per_band = num_hashes // bands
-    is_abbrev = re.compile(r"[A-Z]\. ")
-
-    # --- min-hash LSH candidate pairs (abbreviations excluded) ---
-    grams_of: dict = {}
-    for label, surface, _ in rows:
-        if is_abbrev.match(surface):
-            continue
-        low = surface.lower()
-        grams_of[(label, surface)] = list(
-            dict.fromkeys(low[i : i + 3] for i in range(max(len(low) - 2, 1)))
-        )
-    buckets: dict = {}
-    for (label, surface), grams in grams_of.items():
-        for b in range(bands):
-            mins = [
-                min(spark_hash(g, b * rows_per_band + r) for g in grams)
-                for r in range(rows_per_band)
-            ]
-            buckets.setdefault((label, b, spark_xxhash64(*mins)), []).append(surface)
-    pairs = set()
-    for (label, _, _), members in buckets.items():
-        members = sorted(set(members))
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                a, b_ = members[i], members[j]
-                sa, sb = set(grams_of[(label, a)]), set(grams_of[(label, b_)])
-                if len(sa & sb) / len(sa | sb) >= jaccard_threshold:
-                    pairs.add((label, a, b_))
-
-    # --- abbreviation resolution (popularity prior) ---
-    fulls: dict = {}
-    for label, surface, n in rows:
-        if label == "Person" and not is_abbrev.match(surface):
-            key = (label, surface.split(" ")[-1], surface[:1])
-            fulls.setdefault(key, []).append((n, surface))
-    for label, surface, _ in rows:
-        if label == "Person" and is_abbrev.match(surface):
-            cands = fulls.get((label, surface.split(" ")[-1], surface[:1]))
-            if cands:
-                pairs.add((label, surface, max(cands)[1]))
-
-    # --- connected components + representative election ---
-    mapping = _driver_union_find(
-        [{"label": l, "a": a, "b": b} for l, a, b in pairs]
-    )
+    buckets = py_lsh_buckets(((l, s) for l, s, _ in rows), num_hashes, bands)
+    pairs = py_verified_pairs(buckets, jaccard_threshold)
+    pairs.update(py_abbreviation_pairs(rows))
+    mapping = _driver_union_find(pairs)
     comp_of = {
         (label, surface): mapping.get(
             (label, surface), spark_xxhash64(label, surface)
@@ -482,31 +511,6 @@ def canonicalize_triples(triples_raw: DataFrame, entity_map: DataFrame) -> DataF
     )
 
 
-def _banded_surfaces(
-    surfaces: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """(label, surface, band, band_hash) LSH keys — the same one-expression
-    banding as minhash_candidate_pairs (shingle array bound once),
-    abbreviation forms excluded for the same chaining reason."""
-    rows_per_band = num_hashes // bands
-    sh = surface_shingles(surfaces.where(~F.col("surface").rlike(r"^[A-Z]\. ")))
-    band_struct = (
-        "named_struct('band', b, 'band_hash', xxhash64("
-        + ", ".join(
-            f"array_min(transform(shingles, x -> hash(x, b * {rows_per_band} + {r})))"
-            for r in range(rows_per_band)
-        )
-        + "))"
-    )
-    bands_expr = F.expr(
-        f"transform(array(shingles), shingles -> transform(sequence(0, {bands - 1}), "
-        f"b -> {band_struct}))[0]"
-    )
-    return sh.select(
-        "surface", "label", F.explode(bands_expr).alias("bb")
-    ).select("surface", "label", "bb.band", "bb.band_hash")
-
-
 def blocking_report(
     surfaces: DataFrame, num_hashes: int = 16, bands: int = 8
 ) -> DataFrame:
@@ -548,6 +552,15 @@ def blocking_report(
             .alias("candidate_rows"),
         )
     )
+
+
+def py_blocking_report(
+    surfaces, num_hashes: int = 16, bands: int = 8
+) -> list[tuple[int, int, int]]:
+    """Serial twin of `blocking_report` over (label, surface) pairs:
+    [(block_size, n_blocks, candidate_rows)] ascending by block size."""
+    hist = Counter(len(m) for m in py_lsh_buckets(surfaces, num_hashes, bands).values())
+    return [(s, nb, nb * s * (s - 1) // 2) for s, nb in sorted(hist.items())]
 
 
 def update_entity_map(
@@ -626,16 +639,9 @@ def update_entity_map(
         )
         .dropDuplicates(["label", "a", "b"])
     )
-    sh = surface_shingles(all_surf).select("label", "surface", "shingles")
-    ver = cand.join(
-        sh.select("label", F.col("surface").alias("a"), F.col("shingles").alias("sa")),
-        ["label", "a"],
-    ).join(
-        sh.select("label", F.col("surface").alias("b"), F.col("shingles").alias("sb")),
-        ["label", "b"],
+    mh_pairs = _jaccard_verified(cand, all_surf, jaccard_threshold).select(
+        "label", "a", "b"
     )
-    sim = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
-    mh_pairs = ver.where(sim >= jaccard_threshold).select("label", "a", "b")
     # abbreviation pairs within the new batch, novel-involved only
     ab_pairs = (
         abbreviation_pairs(new_link_stats)

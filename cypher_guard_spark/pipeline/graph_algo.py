@@ -33,6 +33,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..oracle import UnionFind, round6, spark_xxhash64
 from ..spark.session import local_frame
 
 
@@ -646,6 +647,25 @@ def k_core(
     )
 
 
+
+def py_k_core(edges, k: int) -> list[tuple]:
+    """Serial twin of `k_core`: classic peeling of the undirected
+    distinct adjacency of `edges` ((src, dst) pairs, self-loops dropped)
+    to the unique k-core; [(entity, core_degree)] in adjacency order."""
+    adj: dict = {}
+    for s, d in edges:
+        if s != d:
+            adj.setdefault(s, set()).add(d)
+            adj.setdefault(d, set()).add(s)
+    changed = True
+    while changed:
+        changed = False
+        for v in [v for v, nbrs in adj.items() if len(nbrs) < k]:
+            for nb in adj.pop(v):
+                adj[nb].discard(v)
+            changed = True
+    return [(v, len(nbrs)) for v, nbrs in adj.items() if nbrs]
+
 def sample_neighbors(
     edges: DataFrame,
     k: int,
@@ -864,6 +884,35 @@ def hits(
     return hub.join(auth, "entity").select("entity", "hub", "auth")
 
 
+
+def py_hits(edges, iters: int = 3) -> list[tuple]:
+    """Serial twin of `hits(exact=True)` over the distinct directed
+    `edges` sans self-loops: value-sorted fold sums, max-normalize and
+    6-dp rounding per half-update; [(entity, hub, auth)] by entity."""
+    es = {(s, d) for s, d in edges if s != d}
+    verts = sorted({v for e in es for v in e})
+    into: dict = defaultdict(list)
+    outof: dict = defaultdict(list)
+    for s, d in es:
+        into[d].append(s)
+        outof[s].append(d)
+
+    def half(scores, arriving):
+        sums = {}
+        for v in verts:
+            acc = 0.0
+            for c in sorted(scores[u] for u in arriving.get(v, ())):
+                acc += c
+            sums[v] = acc
+        m = max(sums.values())
+        return {v: round6(x / m) for v, x in sums.items()}
+
+    hub = {v: 1.0 for v in verts}
+    for _ in range(iters):
+        auth = half(hub, into)
+        hub = half(auth, outof)
+    return [(v, hub[v], auth[v]) for v in verts]
+
 def random_walks(
     spark: SparkSession,
     edges: DataFrame,
@@ -938,6 +987,41 @@ def random_walks(
         )
     return out
 
+
+
+def _py_out_adjacency(edges) -> dict:
+    """{src: {dst}} over directed `edges` sans self-loops, in first-seen
+    source order — the walk twins' adjacency."""
+    adj: dict = {}
+    for s, d in edges:
+        if s != d:
+            adj.setdefault(s, set()).add(d)
+    return adj
+
+
+def py_random_walks(
+    edges, length: int = 4, walks_per_node: int = 1, seed: int = 1
+) -> list[tuple]:
+    """Serial twin of `random_walks`: the hash-min next-step draw over the
+    distinct out-adjacency, truncation at out-degree-0 vertices;
+    [(start, rep, step, vertex)] walk by walk, starts in first-seen
+    source order."""
+    adj = _py_out_adjacency(edges)
+    rows = []
+    for start in adj:
+        for rep in range(walks_per_node):
+            cur = start
+            rows.append((start, rep, 0, cur))
+            for t in range(1, length + 1):
+                nbrs = adj.get(cur)
+                if not nbrs:
+                    break
+                cur = min(
+                    nbrs,
+                    key=lambda nb: (spark_xxhash64(start, rep, t, nb, seed), nb),
+                )
+                rows.append((start, rep, t, cur))
+    return rows
 
 def shortest_paths(
     spark: SparkSession,
@@ -2957,6 +3041,56 @@ def node2vec_walks(
     return out
 
 
+
+def py_node2vec_walks(
+    edges,
+    length: int = 4,
+    walks_per_node: int = 1,
+    w_return: int = 1,
+    w_in: int = 1,
+    w_out: int = 1,
+    seed: int = 1,
+) -> list[tuple]:
+    """Serial twin of `node2vec_walks`: step 1 the uniform hash-min, steps
+    >= 2 the virtual-copy weighted hash-min with node2vec classes (return
+    / in / out by (prev, nbr) edge membership), truncation at out-degree-0
+    vertices and all-zero-weight candidate sets; rows ordered as in
+    `py_random_walks`."""
+    adj = _py_out_adjacency(edges)
+    rows = []
+    for start in adj:
+        for rep in range(walks_per_node):
+            rows.append((start, rep, 0, start))
+            prev, cur = None, start
+            for t in range(1, length + 1):
+                nbrs = adj.get(cur)
+                if not nbrs:
+                    break
+                if t == 1:
+                    nxt = min(
+                        nbrs,
+                        key=lambda nb: (spark_xxhash64(start, rep, 1, nb, seed), nb),
+                    )
+                else:
+                    best = None
+                    for nb in nbrs:
+                        if nb == prev:
+                            w = w_return
+                        elif nb in adj.get(prev, set()):
+                            w = w_in
+                        else:
+                            w = w_out
+                        for copy in range(1, w + 1):
+                            k = (spark_xxhash64(start, rep, t, nb, copy, seed), nb)
+                            if best is None or k < best[0]:
+                                best = (k, nb)
+                    if best is None:
+                        break
+                    nxt = best[1]
+                rows.append((start, rep, t, nxt))
+                prev, cur = cur, nxt
+    return rows
+
 def max_spanning_forest(
     spark: SparkSession,
     edges: DataFrame,
@@ -3070,6 +3204,18 @@ def max_spanning_forest(
         return e.select("u", "v", "w").limit(0)
     return forest.dropDuplicates(["u", "v"])
 
+
+
+def py_max_spanning_forest(edges) -> list[tuple]:
+    """Serial twin of `max_spanning_forest`: Kruskal over (u, v, w) edges
+    under the same strict (w DESC, u ASC, v ASC) order; the forest's
+    (u, v, w) edges in acceptance order."""
+    uf = UnionFind()
+    return [
+        (u, v, w)
+        for u, v, w in sorted(edges, key=lambda e: (-e[2], e[0], e[1]))
+        if uf.union(u, v)
+    ]
 
 def louvain(
     spark: SparkSession,
@@ -3310,8 +3456,6 @@ def py_louvain(pair_w: dict, iters: int = 6, max_levels: int = 8) -> dict:
     gain scores, xxhash64(vertex, level) parity gating, tie order
     (stay beats move, then smallest community id), fixed rounds per
     level, merge-progress level rule, min-member canonical labels."""
-    from ..oracle.sparkhash import spark_xxhash64
-
     pairs: dict = {}
     for (a, b), w in pair_w.items():
         if a == b:

@@ -17,6 +17,7 @@ UDF aggregations alive at 1000-executor scale.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import numpy as np
@@ -29,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .synth import _render_doc
 
 TRIPLE_STRUCT = StructType(
     [
@@ -115,6 +118,40 @@ def extract_triples_raw(documents: DataFrame) -> DataFrame:
     )
 
 
+# The serial twin's own spelling of the templates, kept apart from
+# _PATTERNS on purpose: the oracle must not inherit an edit to the kernel's.
+_PY_TEMPLATES = (
+    (re.compile(r"^(.+) works for (.+)\.$"), "WORKS_FOR", "Person", "Company"),
+    (re.compile(r"^(.+) knows (.+)\.$"), "KNOWS", "Person", "Person"),
+    (re.compile(r"^(.+) is located in (.+)\.$"), "LOCATED_IN", "Company", "Location"),
+)
+
+
+def py_extract_triples(n_docs: int) -> list[tuple]:
+    """Serial twin of `extract_triples_raw` over
+    `synthesize_documents(n_docs)`: render each doc with the same
+    deterministic generator, match each text span against the templates
+    (first match wins) and apply the UDF's confidence formula in the same
+    IEEE op order. Rows (doc_id, span_idx, subj, pred, obj, subj_label,
+    obj_label, conf) in document then span order; span_idx counts ALL
+    spans (text and media), like posexplode."""
+    rows = []
+    for i in range(n_docs):
+        doc_id, spans = _render_doc(i)
+        for span_idx, span in enumerate(spans):
+            if span["kind"] != "text":
+                continue
+            for pat, rel, sl, ol in _PY_TEMPLATES:
+                m = pat.match(span["text"])
+                if m:
+                    conf = 0.9 + 0.1 * min(len(span["text"]) / 80.0, 1.0)
+                    rows.append(
+                        (doc_id, span_idx, m.group(1), rel, m.group(2), sl, ol, conf)
+                    )
+                    break
+    return rows
+
+
 def mentions_from_triples(triples_raw: DataFrame) -> DataFrame:
     """(doc_id, span_idx, mention_id, surface, label, score) — subject and
     object mentions stacked; mention_id is a deterministic hash."""
@@ -162,6 +199,17 @@ def link_scores(mentions: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.sum("pn").alias("n_mentions"),
         (F.sum("ps") / F.sum("pn")).alias("avg_score"),
     )
+
+
+def py_mention_counts(triples) -> dict:
+    """Serial twin of `link_scores`' n_mentions over `py_extract_triples`
+    rows: {(label, surface): count}, one count per triple endpoint, keys
+    in first-mention order."""
+    counts: dict = {}
+    for _d, _i, s, _r, o, sl, ol, _c in triples:
+        counts[(sl, s)] = counts.get((sl, s), 0) + 1
+        counts[(ol, o)] = counts.get((ol, o), 0) + 1
+    return counts
 
 
 def media_entity_links(documents: DataFrame, triples_raw: DataFrame) -> DataFrame:

@@ -6,6 +6,7 @@ contract CORRECTNESS_r{N}.json is built from. Entries run in driver
 order; only the named ones (all when none are named) build their oracle.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+(sf_dir defaults to sf0.01, the dir the driver compares at)
 """
 
 from __future__ import annotations
@@ -41,7 +42,8 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    # default: the dir the driver compares at
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else entry._ORACLE_SF_DIR_DEFAULT
     only = set(sys.argv[2:])
     # VALUES oracles that recompute from the documents parquet (minhash /
     # simhash) must read the same sf dir the Spark side is handed

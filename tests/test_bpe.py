@@ -4,48 +4,16 @@ plan-shape contracts (one corpus scan for training; map-only encode)."""
 
 from __future__ import annotations
 
-from collections import Counter
-
 import pytest
 from pyspark.sql import functions as F
 
-from cypher_guard_spark.ops.bpe import bpe_encode, bpe_word, train_bpe, word_table
-
-
-def _py_train(docs: list[str], num_merges: int, min_pair_count: int = 2):
-    """Independent serial BPE trainer (dict/Counter, no Spark code):
-    the ground truth the distributed trainer must reproduce exactly."""
-    import re
-
-    words: Counter = Counter()
-    for text in docs:
-        for w in re.split(r"\s+", text.strip(" ").lower(), flags=re.ASCII):
-            words[w] += 1
-    vocab = {w: list(w) for w in words}
-    merges = []
-    for rank in range(num_merges):
-        pairs: Counter = Counter()
-        for w, syms in vocab.items():
-            for p in zip(syms, syms[1:]):
-                pairs[p] += words[w]
-        if not pairs:
-            break
-        # total order: count DESC, then (l, r) ASC
-        (left, right), cnt = min(
-            pairs.items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        if cnt < min_pair_count:
-            break
-        merges.append((rank, left, right, cnt))
-        for w, syms in vocab.items():
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == left and s == right:
-                    out[-1] = left + right
-                else:
-                    out.append(s)
-            vocab[w] = out
-    return merges
+from cypher_guard_spark.ops.bpe import (
+    bpe_encode,
+    bpe_word,
+    py_train_bpe,
+    train_bpe,
+    word_table,
+)
 
 
 CORPUS = [
@@ -61,7 +29,7 @@ def test_train_bpe_matches_independent_twin(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
-    want = _py_train(CORPUS, 12)
+    want = py_train_bpe(CORPUS, 12)
     # BOTH execution paths must reproduce the serial ground truth exactly:
     # the driver fast path (collected word table, incremental counts) and
     # the distributed loop (driver_max_vocab=0 forces it)

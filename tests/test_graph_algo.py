@@ -6,6 +6,14 @@ import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from cypher_guard_spark.oracle import round6  # noqa: E402
+from cypher_guard_spark.pipeline.graph_algo import (  # noqa: E402
+    py_hits,
+    py_k_core,
+    py_max_spanning_forest,
+    py_random_walks,
+)
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -25,11 +33,6 @@ EDGES = [
 
 
 def _reference(iters=3, damping=0.85):
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
     verts = sorted({v for e in EDGES for v in e})
     n = len(verts)
     outdeg = {}
@@ -42,7 +45,7 @@ def _reference(iters=3, damping=0.85):
         for s, o in EDGES:
             contribs[o].append(rank[s] / outdeg[s])
         rank = {
-            v: r6(base + damping * sum(sorted(contribs[v]), 0.0)) for v in verts
+            v: round6(base + damping * sum(sorted(contribs[v]), 0.0)) for v in verts
         }
     return rank
 
@@ -123,8 +126,6 @@ def test_pagerank_empty_edges(spark):
 def test_entity_similarity_matches_python_twin(spark):
     """Jaccard over the undirected distinct adjacency of a crafted graph,
     vs an inline set-arithmetic reference (exact ints + one division)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.pipeline.graph_algo import entity_similarity
 
     edges = [
@@ -148,10 +149,7 @@ def test_entity_similarity_matches_python_twin(spark):
             inter = len(adj[a] & adj[b])
             if inter == 0:
                 continue
-            sim = float(
-                Decimal(repr(inter / (len(adj[a]) + len(adj[b]) - inter)))
-                .quantize(Decimal("0.000001"), ROUND_HALF_UP)
-            )
+            sim = round6(inter / (len(adj[a]) + len(adj[b]) - inter))
             want[(a, b)] = (inter, sim)
     assert got == want
 
@@ -319,22 +317,6 @@ def test_bfs_depths_early_exit_and_cap(spark):
     assert full == {f"p{i}": i for i in range(9)}
 
 
-def _py_kcore(edges, k):
-    und = _und(edges)
-    adj = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for v in [v for v, nbrs in adj.items() if len(nbrs) < k]:
-            for nb in adj.pop(v):
-                adj[nb].discard(v)
-            changed = True
-    return {v: len(nbrs) for v, nbrs in adj.items() if nbrs}
-
-
 def test_k_core_matches_bruteforce(spark):
     from cypher_guard_spark.pipeline.graph_algo import k_core
 
@@ -345,7 +327,7 @@ def test_k_core_matches_bruteforce(spark):
             r["entity"]: r["core_degree"]
             for r in k_core(spark, e, k=k).collect()
         }
-        assert got == _py_kcore(edges, k), (seed, k)
+        assert got == dict(py_k_core(edges, k)), (seed, k)
 
 
 def test_k_core_peeling_cascade_and_empty(spark):
@@ -378,11 +360,6 @@ def test_link_prediction_ra_matches_bruteforce(spark):
     for a, b in und:
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
     want = []
     ids = sorted(adj)
     for i, a in enumerate(ids):
@@ -395,7 +372,7 @@ def test_link_prediction_ra_matches_bruteforce(spark):
             acc = 0.0
             for w in sorted(1.0 / len(adj[z]) for z in shared):
                 acc += w
-            want.append((a, b, len(shared), r6(acc)))
+            want.append((a, b, len(shared), round6(acc)))
     want.sort(key=lambda t: (-t[3], t[0], t[1]))
     assert got == want[:30]
     # fast mode returns the same pair SET with scores within FP slack
@@ -409,12 +386,8 @@ def test_link_prediction_ra_matches_bruteforce(spark):
 
 
 def test_personalized_pagerank_seed_mass_and_twin(spark):
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.pipeline.graph_algo import pagerank
 
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
     e = spark.createDataFrame(EDGES, "src string, dst string")
     seeds = spark.createDataFrame([("a",), ("d",)], "entity string")
@@ -427,14 +400,14 @@ def test_personalized_pagerank_seed_mass_and_twin(spark):
     for s, _ in EDGES:
         outdeg[s] = outdeg.get(s, 0) + 1
     S = {"a", "d"}
-    rank = {v: (r6(1.0 / len(S)) if v in S else 0.0) for v in verts}
+    rank = {v: (round6(1.0 / len(S)) if v in S else 0.0) for v in verts}
     base = {v: ((1.0 - 0.85) / len(S) if v in S else 0.0) for v in verts}
     for _ in range(3):
         contribs = {v: [] for v in verts}
         for s, o in EDGES:
             contribs[o].append(rank[s] / outdeg[s])
         rank = {
-            v: r6(base[v] + 0.85 * sum(sorted(contribs[v]), 0.0)) for v in verts
+            v: round6(base[v] + 0.85 * sum(sorted(contribs[v]), 0.0)) for v in verts
         }
     assert got == rank
     # seeds outside the graph contribute nothing; all-foreign seeds -> empty
@@ -560,44 +533,6 @@ def test_clustering_coefficient_edge_cases(spark):
     }
 
 
-def _py_hits(edges, iters=3):
-    """Serial twin of hits(exact=True): sorted-fold sums, max-normalize,
-    round half-up at 6dp per half-update."""
-    from collections import defaultdict
-
-    es = {(s, d) for s, d in edges if s != d}
-    verts = sorted({v for e in es for v in e})
-    hub = {v: 1.0 for v in verts}
-    auth = {v: 1.0 for v in verts}
-
-    def _r6(x):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
-
-    def half(scores, arriving):  # arriving: v -> list of contributing nbrs
-        sums = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(scores[u] for u in arriving.get(v, ())):
-                acc += c
-            sums[v] = acc
-        m = max(sums.values())
-        return {v: _r6(s / m) for v, s in sums.items()}
-
-    into = defaultdict(list)
-    outof = defaultdict(list)
-    for s, d in es:
-        into[d].append(s)
-        outof[s].append(d)
-    for _ in range(iters):
-        auth = half(hub, into)
-        hub = half(auth, outof)
-    return {v: (hub[v], auth[v]) for v in verts}
-
-
 def test_hits_exact_matches_twin(spark):
     from cypher_guard_spark.pipeline.graph_algo import hits
 
@@ -607,7 +542,7 @@ def test_hits_exact_matches_twin(spark):
         r["entity"]: (r["hub"], r["auth"])
         for r in hits(spark, e, iters=3, exact=True).collect()
     }
-    assert got == _py_hits(edges, iters=3)
+    assert got == {v: (h, a) for v, h, a in py_hits(edges, iters=3)}
 
 
 def test_hits_fast_mode_close_and_structure(spark):
@@ -623,8 +558,7 @@ def test_hits_fast_mode_close_and_structure(spark):
         }
         assert got["h"][0] == 1.0  # max-normalized top hub
         assert max(got[f"s{i}"][1] for i in range(4)) == 1.0
-        twin = _py_hits(edges, iters=3)
-        for v, (h, a) in twin.items():
+        for v, h, a in py_hits(edges, iters=3):
             assert abs(got[v][0] - h) < 1e-9 and abs(got[v][1] - a) < 1e-9
 
 
@@ -633,33 +567,6 @@ def test_hits_empty(spark):
 
     e = spark.createDataFrame([], "src string, dst string")
     assert hits(spark, e).count() == 0
-
-
-def _py_walks(edges, length, walks_per_node, seed):
-    from cypher_guard_spark.oracle import spark_xxhash64
-
-    adj = {}
-    for s, d in edges:
-        if s != d:
-            adj.setdefault(s, set()).add(d)
-    rows = set()
-    for start in adj:
-        for rep in range(walks_per_node):
-            cur = start
-            rows.add((start, rep, 0, cur))
-            for t in range(1, length + 1):
-                nbrs = adj.get(cur)
-                if not nbrs:
-                    break
-                cur = min(
-                    nbrs,
-                    key=lambda nb: (
-                        spark_xxhash64(start, rep, t, nb, seed),
-                        nb,
-                    ),
-                )
-                rows.add((start, rep, t, cur))
-    return rows
 
 
 def test_random_walks_match_hash_twin(spark):
@@ -676,7 +583,7 @@ def test_random_walks_match_hash_twin(spark):
             spark, e, length=4, walks_per_node=2, seed=9
         ).collect()
     }
-    assert got == _py_walks(edges, 4, 2, 9)
+    assert got == set(py_random_walks(edges, 4, 2, 9))
     # every step-t row extends a step-(t-1) row along a real edge
     es = {(s, d) for s, d in edges if s != d}
     pos = {(s, r, t): v for s, r, t, v in got}
@@ -714,24 +621,19 @@ def test_random_walks_seed_and_rep_independence(spark):
 
 def _sp_twin(edges, seeds, max_rounds=8, directed=False):
     from collections import defaultdict
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
     adj = defaultdict(list)
     for u, v, w in edges:
         if u == v:
             continue
-        adj[u].append((v, r6(w)))
+        adj[u].append((v, round6(w)))
         if not directed:
-            adj[v].append((u, r6(w)))
+            adj[v].append((u, round6(w)))
     dist = {s: 0.0 for s in seeds}
     for _ in range(max_rounds):
         new = dict(dist)
         for u, d in dist.items():
             for v, w in adj[u]:
-                nd = r6(d + w)
+                nd = round6(d + w)
                 if v not in new or nd < new[v]:
                     new[v] = nd
         if new == dist:
@@ -1819,8 +1721,6 @@ def test_pagerank_weighted_matches_bruteforce(spark):
     """exact=True weighted PageRank is bit-identical to the serial
     reference (sorted wsum fold, sorted contribution folds, HALF_UP 6dp
     per round); fast mode agrees to 1e-9."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.pipeline.graph_algo import pagerank
 
     wedges = [
@@ -1830,10 +1730,6 @@ def test_pagerank_weighted_matches_bruteforce(spark):
     ]
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
 
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
 
     verts = sorted({v for s, d, _ in wedges for v in (s, d)})
     n = len(verts)
@@ -1853,7 +1749,7 @@ def test_pagerank_weighted_matches_bruteforce(spark):
                 rank[s] * w / wsum[s] for s, d, w in wedges if d == v
             ):
                 acc += c
-            new[v] = r6(base + damping * acc)
+            new[v] = round6(base + damping * acc)
         rank = new
 
     got = {
@@ -2137,8 +2033,6 @@ def test_pagerank_weighted_personalized_composition(spark):
     """weight= composes with seeds=: teleport mass returns only to the
     seeds while rank still splits by edge weight — locked against a
     serial reference with the same fold conventions."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.pipeline.graph_algo import pagerank
 
     wedges = [
@@ -2148,10 +2042,6 @@ def test_pagerank_weighted_personalized_composition(spark):
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
     seeds = spark.createDataFrame([("a",)], ["entity"])
 
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
 
     verts = sorted({v for s, d, _ in wedges for v in (s, d)})
     wsum = {}
@@ -2171,7 +2061,7 @@ def test_pagerank_weighted_personalized_composition(spark):
                 rank[s] * w / wsum[s] for s, d, w in wedges if d == v
             ):
                 acc += c
-            new[v] = r6(base[v] + damping * acc)
+            new[v] = round6(base[v] + damping * acc)
         rank = new
 
     got = {
@@ -2214,23 +2104,6 @@ def test_max_spanning_forest_hand_and_kruskal(spark):
     got = sorted(tuple(r) for r in max_spanning_forest(spark, e).collect())
     assert got == [("A", "B", 5), ("B", "D", 6), ("C", "D", 4)]
 
-    def kruskal(es):
-        parent = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        out = []
-        for w, u, v in sorted(((w, u, v) for u, v, w in es), key=lambda t: (-t[0], t[1], t[2])):
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[ru] = rv
-                out.append((u, v, w))
-        return sorted(out)
-
     rng = random.Random(11)
     names = [f"n{i:02d}" for i in range(18)]
     seen = set()
@@ -2245,7 +2118,7 @@ def test_max_spanning_forest_hand_and_kruskal(spark):
         res.append((a, b, rng.randint(1, 6)))  # heavy ties on purpose
     e2 = spark.createDataFrame(res, ["u", "v", "w"])
     got2 = sorted(tuple(r) for r in max_spanning_forest(spark, e2).collect())
-    assert got2 == kruskal(res)
+    assert got2 == sorted(py_max_spanning_forest(res))
 
 
 def test_max_spanning_forest_ties_disconnected_empty(spark):

@@ -8,6 +8,8 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from cypher_guard_spark.oracle import round6  # noqa: E402
+
 
 @pytest.fixture(scope="module")
 def spark(tmp_path_factory):
@@ -150,12 +152,8 @@ def _fuse_df(spark):
 
 
 def test_fuse_exact_matches_twin(spark):
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.pipeline.graph_store import fuse_triples
 
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
     got = {
         (r["subj"], r["pred"], r["obj"]): r
@@ -165,10 +163,10 @@ def test_fuse_exact_matches_twin(spark):
     assert (a["n_obs"], a["n_docs"], a["first_doc"], a["last_doc"]) == (3, 2, "d1", "d2")
     assert a["max_conf"] == 1.0 and a["agg_conf"] == 1.0  # certain evidence
     b = got[("x", "R", "y")]
-    assert b["n_obs"] == 1 and b["agg_conf"] == r6(0.9)
+    assert b["n_obs"] == 1 and b["agg_conf"] == round6(0.9)
     c = got[("p", "S", "q")]
     # noisy-or of two 0.5s: 1 - 0.5*0.5 = 0.75
-    assert c["n_obs"] == 2 and c["agg_conf"] == r6(1.0 - 0.5 * 0.5)
+    assert c["n_obs"] == 2 and c["agg_conf"] == round6(1.0 - 0.5 * 0.5)
 
 
 def test_fuse_fast_mode_close_and_hub_safe_plan(spark):

@@ -6,49 +6,7 @@ row), plus closed-form zero-weight class exclusions."""
 import pytest
 from pyspark.sql import functions as F
 
-from cypher_guard_spark.oracle import spark_xxhash64
-from cypher_guard_spark.pipeline.graph_algo import node2vec_walks
-
-
-def _py_node2vec(adj, length, reps, wr, wi, wo, seed):
-    rows = []
-    for start in sorted(adj):
-        for rep in range(reps):
-            rows.append((start, rep, 0, start))
-            prev, cur = None, start
-            for t in range(1, length + 1):
-                nbrs = adj.get(cur, set())
-                if not nbrs:
-                    break
-                if t == 1:
-                    nxt = min(
-                        nbrs,
-                        key=lambda nb: (
-                            spark_xxhash64(start, rep, 1, nb, seed), nb,
-                        ),
-                    )
-                else:
-                    best = None
-                    for nb in nbrs:
-                        if nb == prev:
-                            w = wr
-                        elif nb in adj.get(prev, set()):
-                            w = wi
-                        else:
-                            w = wo
-                        for copy in range(1, w + 1):
-                            k = (
-                                spark_xxhash64(start, rep, t, nb, copy, seed),
-                                nb,
-                            )
-                            if best is None or k < best[0]:
-                                best = (k, nb)
-                    if best is None:
-                        break
-                    nxt = best[1]
-                rows.append((start, rep, t, nxt))
-                prev, cur = cur, nxt
-    return sorted(rows)
+from cypher_guard_spark.pipeline.graph_algo import node2vec_walks, py_node2vec_walks
 
 
 def _edges(spark, pairs):
@@ -63,9 +21,6 @@ FIXTURE = [
 
 @pytest.mark.parametrize("wr,wi,wo", [(1, 1, 1), (1, 2, 4), (3, 1, 2)])
 def test_matches_serial_twin(spark, wr, wi, wo):
-    adj = {}
-    for s, d in FIXTURE:
-        adj.setdefault(s, set()).add(d)
     got = sorted(
         (r.start, r.rep, r.step, r.vertex)
         for r in node2vec_walks(
@@ -73,7 +28,7 @@ def test_matches_serial_twin(spark, wr, wi, wo):
             w_return=wr, w_in=wi, w_out=wo, seed=7,
         ).collect()
     )
-    assert got == _py_node2vec(adj, 5, 2, wr, wi, wo, 7)
+    assert got == sorted(py_node2vec_walks(FIXTURE, 5, 2, wr, wi, wo, 7))
 
 
 def test_zero_out_weight_forces_backtrack(spark):

@@ -12,6 +12,8 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from cypher_guard_spark.oracle import round6  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -700,15 +702,12 @@ def test_fuzzy_decontam_crafted(spark):
 def _py_tfidf_rows(texts):
     """Pure-Python twin of text.doc_token_freqs + corpus doc-frequency:
     returns ({doc_id: {token: tf}}, {token: df}, n_docs)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from __spark_entry__ import _py_tokens
+    from cypher_guard_spark.ops.text import py_tokens
 
     per = {}
     for doc_id, text in texts:
         tf = {}
-        for t in _py_tokens(text):
+        for t in py_tokens(text):
             tf[t] = tf.get(t, 0) + 1
         per[doc_id] = tf
     dfreq = {}
@@ -721,24 +720,18 @@ def _py_tfidf_rows(texts):
 def test_tfidf_keywords_matches_python_twin(spark, docs):
     """Top-k keywords by the rational (log-free) BM25 idf vs an exact
     pure-Python twin — scores, doc_freq, and the tie-broken ranking."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.ops.text import tfidf_keywords
 
     texts = [(r["doc_id"], r["text"]) for r in docs.select("doc_id", "text").collect()]
     per, dfreq, n = _py_tfidf_rows(texts)
 
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
 
     want = {}
     for doc_id, tf in per.items():
         scored = sorted(
             (
                 (
-                    -r6(c * (float(n) - dfreq[t] + 0.5) / (dfreq[t] + 0.5)),
+                    -round6(c * (float(n) - dfreq[t] + 0.5) / (dfreq[t] + 0.5)),
                     t,
                     c,
                 )
@@ -756,17 +749,11 @@ def test_tfidf_keywords_matches_python_twin(spark, docs):
 
 
 def test_rarity_scores_matches_python_twin(spark, docs):
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cypher_guard_spark.ops.text import rarity_scores
 
     texts = [(r["doc_id"], r["text"]) for r in docs.select("doc_id", "text").collect()]
     per, dfreq, _n = _py_tfidf_rows(texts)
 
-    def r6(x):
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
 
     got = {
         r["doc_id"]: (r["n_tokens"], r["n_rare"], r["rare_ratio"], r["avg_doc_freq"])
@@ -779,8 +766,8 @@ def test_rarity_scores_matches_python_twin(spark, docs):
         assert got[doc_id] == (
             n_tokens,
             n_rare,
-            r6(n_rare / max(n_tokens, 1)),
-            r6(wsum / max(n_tokens, 1)),
+            round6(n_rare / max(n_tokens, 1)),
+            round6(wsum / max(n_tokens, 1)),
         ), doc_id
 
 
@@ -1363,11 +1350,6 @@ def test_dup_ngram_coverage_matches_bruteforce(spark):
 def _py_bm25(texts, terms, k1=1.2, b=0.75, topk=20):
     """Serial twin of text.bm25_topk: same rational idf, same fixed-order
     term chain, same rounding."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
     toks = {d: t.lower().strip().split() for d, t in texts}
     # python split() collapses whitespace like the \s+ regex; doc length
     # parity is asserted separately by the token_stats oracle
@@ -1385,7 +1367,7 @@ def _py_bm25(texts, terms, k1=1.2, b=0.75, topk=20):
             score = ts if score is None else score + ts
             matched += tf > 0
         if matched:
-            out.append((d, matched, r6(score)))
+            out.append((d, matched, round6(score)))
     out.sort(key=lambda r: (-r[2], r[0]))
     return [(d, m, s, i + 1) for i, (d, m, s) in enumerate(out[:topk])]
 

@@ -261,9 +261,11 @@ def test_local_frame_schema_matches_list_path(spark):
 
 
 def test_driver_built_frames_are_local_table_scans(spark, result, tmp_path, monkeypatch):
-    """The entity-map fast path, the CC driver path's comp_map and the
-    `_lineage` frame reach the JVM as one Arrow batch: a LocalTableScan,
-    no Python-RDD scan that would start workers to re-pickle the rows."""
+    """The entity-map fast path, the CC driver path's comp_map, the
+    near-dup clusters' driver-path assignment and the `_lineage` frame
+    reach the JVM as one Arrow batch: a LocalTableScan, no Python-RDD
+    scan that would start workers to re-pickle the rows."""
+    from cypher_guard_spark.ops.dedup import neardup_clusters
     from cypher_guard_spark.pipeline import lineage
     from cypher_guard_spark.pipeline.canonicalize import (
         build_entity_map,
@@ -288,6 +290,12 @@ def test_driver_built_frames_are_local_table_scans(spark, result, tmp_path, monk
     comps = connected_components(spark, vertices, edges)
     local_only(comps)
     assert comps.where(comps.surface.isin(a, b)).select("comp").distinct().count() == 1
+
+    # documents come from parquet: the LocalTableScan is the assignment
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    clusters = neardup_clusters(spark, docs, threshold=0.3)
+    local_only(clusters)
+    assert clusters.where("cluster_size > 1").count() > 0
 
     built = []
 
@@ -771,15 +779,12 @@ def test_blocking_report_predicts_band_join_rows(spark):
     self-join that minhash_candidate_pairs runs (before dedup), and the
     histogram matches a serial recomputation via the bit-exact oracle
     hashes; abbreviation surfaces are excluded just as in production."""
-    import re
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
-    from cypher_guard_spark.oracle import spark_hash, spark_xxhash64
     from cypher_guard_spark.pipeline.canonicalize import (
         _banded_surfaces,
         blocking_report,
+        py_blocking_report,
     )
 
     rows = [
@@ -810,23 +815,8 @@ def test_blocking_report_predicts_band_join_rows(spark):
     assert sum(c for _, c in got.values()) == join_rows
 
     # serial twin via the oracle hashes
-    buckets: Counter = Counter()
-    for surf, label in rows:
-        if re.match(r"^[A-Z]\. ", surf):
-            continue
-        sl = surf.lower()
-        sh = list(
-            dict.fromkeys(sl[i : i + 3] for i in range(max(len(sl) - 2, 1)))
-        )
-        for b in range(8):
-            mh = [
-                min(spark_hash(x, b * 2 + rr) for x in sh) for rr in range(2)
-            ]
-            buckets[(label, b, spark_xxhash64(*mh))] += 1
-    hist: Counter = Counter(buckets.values())
-    want = {
-        s: (nb, nb * s * (s - 1) // 2) for s, nb in hist.items()
-    }
+    twin = py_blocking_report([(label, surf) for surf, label in rows], 16, 8)
+    want = {s: (nb, cr) for s, nb, cr in twin}
     assert got == want
     # the abbreviation surface contributes no block at all
-    assert sum(nb for nb, _ in got.values()) == sum(hist.values())
+    assert sum(nb for nb, _ in got.values()) == sum(nb for _, nb, _ in twin)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 from cypher_guard_spark.ops.similarity import pq_encode, pq_topk, train_pq
+from cypher_guard_spark.oracle import round6
 
 M, K, ITERS, DIM = 4, 8, 2, 16
 
@@ -88,7 +89,7 @@ def test_pq_topk_matches_adc_twin(spark, emb):
             centers, assign = twin[s]
             c = centers[assign[vid]]
             acc += entry._py_dist2(qv[s * d_m : (s + 1) * d_m], c)
-        return entry._round6(acc)
+        return round6(acc)
 
     want = []
     for qid, qv in [(100, vecs[7]), (200, [0.0] * DIM)]:
