@@ -228,6 +228,14 @@ def _rand_edges(seed, n_verts=40, n_edges=160):
     return [(rng.choice(vs), rng.choice(vs)) for _ in range(n_edges)]
 
 
+def _rows_sha256(rows):
+    """sha256 of the sorted row tuples — pins a long, deterministic
+    estimator output without spelling it out."""
+    import hashlib
+
+    return hashlib.sha256(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()
+
+
 def _und(edges):
     return {
         (min(s, d), max(s, d)) for s, d in edges if s != d
@@ -1810,10 +1818,12 @@ def test_neighborhood_function_hyperball_close_to_exact(spark):
         r["hops"]: (r["pairs_at"], r["pairs_cum"], r["frac_cum"])
         for r in neighborhood_function(spark, e, k=k).collect()
     }
-    est = {
-        r["hops"]: (r["pairs_at"], r["pairs_cum"], r["frac_cum"])
-        for r in neighborhood_function_approx(spark, e, k=k).collect()
-    }
+    rows = neighborhood_function_approx(spark, e, k=k).collect()
+    # Datasketches estimates are deterministic: the exact rows are pinned
+    assert sorted(tuple(r) for r in rows) == [
+        (1, 78, 78, 0.18705), (2, 135, 213, 0.510791), (3, 204, 417, 1.0)
+    ]
+    est = {r["hops"]: (r["pairs_at"], r["pairs_cum"], r["frac_cum"]) for r in rows}
     assert set(est) == set(range(1, k + 1))
     prev = 0
     for h in range(1, k + 1):
@@ -1883,10 +1893,11 @@ def test_harmonic_approx_close_to_exact(spark):
         r["entity"]: r["harmonic"]
         for r in harmonic_centrality(spark, e, k=3).collect()
     }
-    est = {
-        r["entity"]: r["harmonic"]
-        for r in harmonic_centrality_approx(spark, e, k=3).collect()
-    }
+    rows = harmonic_centrality_approx(spark, e, k=3).collect()
+    assert _rows_sha256(rows) == (  # deterministic estimates, pinned
+        "1bdb665c61f07bc0e0f4c0ecc736ac75d77a502c1dad623570fc9f66d7e95552"
+    )
+    est = {r["entity"]: r["harmonic"] for r in rows}
     assert set(est) == set(exact)
     for v in exact:
         assert abs(est[v] - exact[v]) <= max(0.05 * exact[v], 0.02), (
@@ -1929,9 +1940,13 @@ def test_closeness_approx_close_to_exact(spark):
         r["entity"]: (r["n_reachable"], r["total_hops"], r["closeness"])
         for r in closeness_centrality(spark, e, k=3).collect()
     }
+    rows = closeness_centrality_approx(spark, e, k=3).collect()
+    assert _rows_sha256(rows) == (  # deterministic estimates, pinned
+        "d221382a4b5db441f45ee1f15c5fdf8d1cbf337857c60dcabe0fa05b65523992"
+    )
     est = {
         r["entity"]: (r["n_reachable"], r["total_hops"], r["closeness"])
-        for r in closeness_centrality_approx(spark, e, k=3).collect()
+        for r in rows
     }
     assert set(est) == set(exact)
     for v in exact:
