@@ -1573,38 +1573,36 @@ def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kg_shortest_paths_values(max_rounds: int = 8) -> str:
-    """Serial twin: directed pair counts → w=round6(1/cnt), both
-    orientations relaxed, synchronous Bellman-Ford with per-round 6dp
-    rounding, hub seed by the kg_bfs_depths rule (over the DISTINCT
-    undirected adjacency — degree counts ignore weights)."""
+def _kg_path_tree_state(max_rounds: int = 8) -> dict:
+    """Serial twin shared by kg_shortest_paths and kg_path_tree: directed
+    pair counts → w=round6(1/cnt), both orientations relaxed, hub seed by
+    the kg_bfs_depths rule (over the DISTINCT undirected adjacency —
+    degree counts ignore weights); {entity: (dist, pred)}."""
     from collections import defaultdict
+
+    from cypher_guard_spark.pipeline.graph_algo import py_shortest_path_tree
 
     cnt: dict = defaultdict(int)
     for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
         if s != o:
             cnt[(s, o)] += 1
-    adj: dict = defaultdict(list)
     und: dict = defaultdict(set)
-    for (a, b), c in cnt.items():
-        w = round6(1.0 / c)
-        adj[a].append((b, w))
-        adj[b].append((a, w))
+    for a, b in cnt:
         und[a].add(b)
         und[b].add(a)
     hub = min(und, key=lambda v: (-len(und[v]), v))
-    dist = {hub: 0.0}
-    for _ in range(max_rounds):
-        new = dict(dist)
-        for u, d in dist.items():
-            for v, w in adj[u]:
-                nd = round6(d + w)
-                if v not in new or nd < new[v]:
-                    new[v] = nd
-        if new == dist:
-            break
-        dist = new
-    rows = [f"({_sql_quote(v)}, {d!r}::DOUBLE)" for v, d in dist.items()]
+    return py_shortest_path_tree(
+        [(a, b, 1.0 / c) for (a, b), c in cnt.items()], [hub], max_rounds
+    )
+
+
+def _kg_shortest_paths_values(max_rounds: int = 8) -> str:
+    """Serial twin: the dist of `_kg_path_tree_state` (the same synchronous
+    Bellman-Ford, per-round 6dp rounding)."""
+    rows = [
+        f"({_sql_quote(v)}, {d!r}::DOUBLE)"
+        for v, (d, _p) in _kg_path_tree_state(max_rounds).items()
+    ]
     return (
         "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, dist)"
     )
@@ -1645,35 +1643,9 @@ def q_kg_path_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_path_tree_values(max_rounds: int = 8) -> str:
     """Serial twin of the synchronous (dist, pred) tuple-min relaxation:
     same hub seed, same round6 per round, same lexicographic tie rule."""
-    from collections import defaultdict
-
-    cnt: dict = defaultdict(int)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            cnt[(s, o)] += 1
-    adj: dict = defaultdict(list)
-    und: dict = defaultdict(set)
-    for (a, b), c in cnt.items():
-        w = round6(1.0 / c)
-        adj[a].append((b, w))
-        adj[b].append((a, w))
-        und[a].add(b)
-        und[b].add(a)
-    hub = min(und, key=lambda v: (-len(und[v]), v))
-    state = {hub: (0.0, hub)}
-    for _ in range(max_rounds):
-        new = dict(state)
-        for u, (d, _p) in state.items():
-            for v, w in adj[u]:
-                cand = (round6(d + w), u)
-                if v not in new or cand < new[v]:
-                    new[v] = cand
-        if new == state:
-            break
-        state = new
     rows = [
         f"({_sql_quote(v)}, {d!r}::DOUBLE, {_sql_quote(p)})"
-        for v, (d, p) in state.items()
+        for v, (d, p) in _kg_path_tree_state(max_rounds).items()
     ]
     return (
         "SELECT * FROM (VALUES "
@@ -1759,51 +1731,17 @@ def q_kg_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _py_weighted_pagerank(
-    edges: list, iters: int, damping: float
-) -> dict:
-    """Serial weighted-PageRank kernel shared by the trust- and
-    recency-weighted twins: value-sorted wsum denominator fold,
-    value-sorted contribution folds, HALF_UP 6dp per-iteration rounding
-    — bit-identical doubles vs pagerank(exact=True, weight=...)."""
-    from collections import defaultdict
-
-    verts = sorted({v for s, o, _w in edges for v in (s, o)})
-    n = len(verts)
-    ws: defaultdict = defaultdict(list)
-    for s, _o, w in edges:
-        ws[s].append(w)
-    wsum = {}
-    for s, lst in ws.items():
-        acc = 0.0
-        for v in sorted(lst):
-            acc += v
-        wsum[s] = acc
-    base = (1.0 - damping) / n
-    rank = {v: round(1.0 / n, 6) for v in verts}
-    for _ in range(iters):
-        contribs: defaultdict = defaultdict(list)
-        for s, o, w in edges:
-            contribs[o].append(rank[s] * w / wsum[s])
-        new = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(contribs.get(v, [])):
-                acc += c
-            new[v] = round6(base + damping * acc)
-        rank = new
-    return rank
-
-
 def _kg_pagerank_weighted_values(iters: int = 3, damping: float = 0.85) -> str:
     """Serial twin: fused-fact edges (one per distinct (subj,pred,obj),
-    weight = sorted-fold noisy-OR rounded 6dp), then the shared serial
-    weighted-PageRank kernel."""
+    weight = sorted-fold noisy-OR rounded 6dp), then the serial
+    weighted-PageRank twin `py_pagerank`."""
+    from cypher_guard_spark.pipeline.graph_algo import py_pagerank
+
     edges = [
         (s, o, _py_noisy_or(obs))
         for (s, _r, o), obs in _py_kg_fused_groups().items()
     ]
-    rank = _py_weighted_pagerank(edges, iters, damping)
+    rank = py_pagerank(edges, iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
 
@@ -2606,8 +2544,10 @@ def q_kg_pagerank_recency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_pagerank_recency_values(iters: int = 3, damping: float = 0.85) -> str:
     """Serial twin: per-(subj,obj) max valid_to over the serial history
-    rows → the same (vt+1)/n weight → the shared serial weighted-PageRank
-    kernel."""
+    rows → the same (vt+1)/n weight → the serial weighted-PageRank
+    twin `py_pagerank`."""
+    from cypher_guard_spark.pipeline.graph_algo import py_pagerank
+
     vt: dict = {}
     for s, _r, o, _a, b in _py_triple_history_rows():
         key = (s, o)
@@ -2615,7 +2555,7 @@ def _kg_pagerank_recency_values(iters: int = 3, damping: float = 0.85) -> str:
             vt[key] = b
     n = float(len(_HIST_WINDOWS))
     edges = [(s, o, (b + 1) / n) for (s, o), b in vt.items()]
-    rank = _py_weighted_pagerank(edges, iters, damping)
+    rank = py_pagerank(edges, iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
 
@@ -3519,24 +3459,15 @@ def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_ppr_values(iters: int = 3, damping: float = 0.85) -> str:
     """Pure-Python twin of personalized pagerank from the hub seed over
     the canonical edge MULTISET (out-degree counts repeats, like the
-    engine's groupBy count), value-sorted folds, 6dp half-up rounding."""
-    edges = _kg_edges()
+    engine's groupBy count): `py_pagerank` at weight 1.0 seeded at the
+    hub, value-sorted folds, 6dp half-up rounding."""
+    from cypher_guard_spark.pipeline.graph_algo import py_pagerank
+
     adj = _kg_und_adj()
     hub = min(adj, key=lambda v: (-len(adj[v]), v))
-    verts = sorted({v for e_ in edges for v in e_})
-    outdeg: dict = {}
-    for s, _o in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    rank = {v: (round(1.0, 6) if v == hub else 0.0) for v in verts}
-    base = {v: ((1.0 - damping) if v == hub else 0.0) for v in verts}
-    for _ in range(iters):
-        contribs: dict = {v: [] for v in verts}
-        for s, o in edges:
-            contribs[o].append(rank[s] / outdeg[s])
-        rank = {
-            v: round6(base[v] + damping * sum(sorted(contribs[v]), 0.0))
-            for v in verts
-        }
+    rank = py_pagerank(
+        [(s, o, 1.0) for s, o in _kg_edges()], iters, damping, seeds=[hub]
+    )
     rows = [f"({_sql_quote(v)}, {r!r})" for v, r in rank.items()]
     return (
         "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
@@ -3892,30 +3823,13 @@ def _kg_entity_similarity_values(threshold: float = 0.2) -> str:
 
 def _kg_pagerank_values(iters: int = 3, damping: float = 0.85) -> str:
     """Pure-Python twin of pipeline.graph_algo.pagerank(exact=True) over
-    the canonical-triple edge multiset: same uniform 6dp start, same
-    base + damping*fold arithmetic with value-sorted sequential sums and
-    HALF_UP 6dp rounding per iteration — bit-identical doubles."""
-    from collections import defaultdict
+    the canonical-triple edge multiset: `py_pagerank` at weight 1.0 —
+    same uniform 6dp start, same base + damping*fold arithmetic with
+    value-sorted sequential sums and HALF_UP 6dp rounding per iteration
+    — bit-identical doubles."""
+    from cypher_guard_spark.pipeline.graph_algo import py_pagerank
 
-    edges = _kg_edges()
-    verts = sorted({v for e in edges for v in e})
-    n = len(verts)
-    outdeg: defaultdict = defaultdict(int)
-    for s, _o in edges:
-        outdeg[s] += 1
-    base = (1.0 - damping) / n
-    rank = {v: round(1.0 / n, 6) for v in verts}
-    for _ in range(iters):
-        contribs: defaultdict = defaultdict(list)
-        for s, o in edges:
-            contribs[o].append(rank[s] / outdeg[s])
-        new = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(contribs.get(v, [])):
-                acc += c
-            new[v] = round6(base + damping * acc)
-        rank = new
+    rank = py_pagerank([(s, o, 1.0) for s, o in _kg_edges()], iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
 

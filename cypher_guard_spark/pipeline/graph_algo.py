@@ -37,16 +37,74 @@ from ..oracle import UnionFind, round6, spark_xxhash64
 from ..spark.session import local_frame
 
 
+def _ends(df: DataFrame, a: str, b: str, name: str = "entity") -> DataFrame:
+    """(name) — both endpoints of every (a, b) row of `df`, one row each:
+    `.distinct()` gives the vertex set, a grouped count the degrees."""
+    return df.select(F.col(a).alias(name)).unionByName(
+        df.select(F.col(b).alias(name))
+    )
+
+
 def _vertex_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(entity) — distinct endpoints of the non-self-loop edges: the
     derived vertex set a centrality left-joins back onto so zero-score
     vertices (sinks, isolated-in-ball) report 0 instead of vanishing."""
-    e = edges.where(F.col(src) != F.col(dst))
+    return _ends(edges.where(F.col(src) != F.col(dst)), src, dst).distinct()
+
+
+def _pair(x, y) -> list:
+    """[a, b] — the undirected edge {x, y} with its smaller endpoint
+    first: the one key every undirected kernel normalizes to."""
+    return [F.least(x, y).alias("a"), F.greatest(x, y).alias("b")]
+
+
+def _undirected_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) — the distinct undirected edges, a < b, self-loops dropped.
+    Not checkpointed: a caller that reads it more than once adds its own
+    lazy localCheckpoint."""
     return (
-        e.select(F.col(src).alias("entity"))
-        .unionByName(e.select(F.col(dst).alias("entity")))
+        edges.select(*_pair(F.col(src), F.col(dst)))
+        .where(F.col("a") != F.col("b"))
         .distinct()
     )
+
+
+def _directed_adjacency(
+    edges: DataFrame, src: str, dst: str, directed: bool = True
+) -> DataFrame:
+    """(u, v) — the distinct directed edges sans self-loops, each also
+    reversed when ``directed=False``; lazily checkpointed, since every
+    kernel that walks it reads it once per round."""
+    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if not directed:
+        adj = adj.unionByName(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        )
+    return (
+        adj.where(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _fold_sum(c, exact: bool):
+    """Σ c over the group: with ``exact`` the value-sorted sequential fold
+    of the module docstring (bit-identical to the serial twins at any
+    partitioning), else the partial-aggregating `sum`."""
+    if exact:
+        return F.aggregate(
+            F.array_sort(F.collect_list(c)), F.lit(0.0), lambda a, x: a + x
+        )
+    return F.sum(c)
+
+
+def py_fold_sum(xs) -> float:
+    """Serial twin of `_fold_sum(exact=True)`: a left fold of the sorted
+    values from 0.0 (not `sum`, which compensates from Python 3.12)."""
+    acc = 0.0
+    for x in sorted(xs):
+        acc += x
+    return acc
 
 
 def pagerank(
@@ -95,29 +153,15 @@ def pagerank(
     if weight is not None:
         cols.append(F.col(weight).cast("double").alias("w"))
     e = edges.select(*cols).localCheckpoint(eager=False)
-    verts = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    verts = _ends(e, "src", "dst").distinct().localCheckpoint(eager=False)
     n = verts.count()  # entity-scaled driver scalar (same class as CC's)
     if n == 0:
         # empty edge set: no vertices, no ranks — guard the 1/n start
         return local_frame(spark, [], "entity string, rank double")
-    if weight is None:
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    elif exact:
-        # value-sorted fold: the Σw denominator is order-deterministic
-        outdeg = e.groupBy("src").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list("w")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("outdeg")
-        )
-    else:
-        outdeg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
+    # weighted exact mode: the Σw denominator is the value-sorted fold
+    outdeg = e.groupBy("src").agg(
+        (F.count("*") if weight is None else _fold_sum("w", exact)).alias("outdeg")
+    )
     if seeds is None:
         base = F.lit((1.0 - damping) / n)
         ranks = verts.select("entity", F.lit(round(1.0 / n, 6)).alias("rank"))
@@ -150,6 +194,36 @@ def pagerank(
             e, verts, outdeg, ranks, base, damping, exact
         ).localCheckpoint(eager=False)
     return ranks
+
+
+def py_pagerank(
+    edges, iters: int = 3, damping: float = 0.85, seeds=None
+) -> dict:
+    """Serial twin of `pagerank(exact=True, weight=...)` over the
+    (src, dst, w) edge multiset; w = 1.0 everywhere is the unweighted
+    kernel bit for bit. Value-sorted folds for the Σw denominators and
+    the contributions, HALF_UP 6dp per iteration; ``seeds`` makes it
+    personalized. {entity: rank} in entity order."""
+    verts = sorted({v for s, o, _w in edges for v in (s, o)})
+    ws: dict = defaultdict(list)
+    for s, _o, w in edges:
+        ws[s].append(w)
+    wsum = {s: py_fold_sum(lst) for s, lst in ws.items()}
+    start = set(verts) if seeds is None else set(seeds) & set(verts)
+    if not start:
+        return {}
+    ns = len(start)
+    base = {v: (1.0 - damping) / ns if v in start else 0.0 for v in verts}
+    rank = {v: round(1.0 / ns, 6) if v in start else 0.0 for v in verts}
+    for _ in range(iters):
+        contribs: dict = defaultdict(list)
+        for s, o, w in edges:
+            contribs[o].append(rank[s] * w / wsum[s])
+        rank = {
+            v: round6(base[v] + damping * py_fold_sum(contribs[v]))
+            for v in verts
+        }
+    return rank
 
 
 def entity_similarity(
@@ -300,21 +374,9 @@ def triangle_count(
     agg, wedge self-join, closing probe), all on vertex/pair keys carrying
     id-sized rows. Vertices in no triangle report 0.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))  # self-loops close no triangle
-        .distinct()
-        .localCheckpoint(eager=False)  # referenced by degrees + orientation
-    )
-    verts = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity"))
-        )
-        .distinct()
-    )
+    # self-loops close no triangle; referenced by degrees + orientation
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
+    verts = _ends(und, "a", "b").distinct()
     tris = _enumerate_triangles(und)
     credits = (
         tris.select(F.explode(F.array("u", "v", "w")).alias("entity"))
@@ -331,12 +393,7 @@ def _enumerate_triangles(und: DataFrame) -> DataFrame:
     """(u, v, w) — each triangle of the normalized undirected distinct
     edge set `und` exactly once, via the degree-ordered orientation
     documented in `triangle_count` (shared by the truss peeler)."""
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _ends(und, "a", "b").groupBy("entity").agg(F.count("*").alias("deg"))
     # attach each endpoint's (deg, id) rank, orient small -> large
     ranked = (
         und.join(deg.select(F.col("entity").alias("a"), F.col("deg").alias("da")), "a")
@@ -397,15 +454,7 @@ def k_truss(
     exact worst case, never a spurious raise — with `max_rounds=` kept
     as an explicit override; the raise survives only as the honest
     backstop against a non-terminating plan bug."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
     need = k - 2
     bound = max_rounds
     if bound is None:
@@ -419,18 +468,9 @@ def k_truss(
             tris.select(
                 F.explode(
                     F.array(
-                        F.struct(
-                            F.least("u", "v").alias("a"),
-                            F.greatest("u", "v").alias("b"),
-                        ),
-                        F.struct(
-                            F.least("u", "w").alias("a"),
-                            F.greatest("u", "w").alias("b"),
-                        ),
-                        F.struct(
-                            F.least("v", "w").alias("a"),
-                            F.greatest("v", "w").alias("b"),
-                        ),
+                        F.struct(*_pair("u", "v")),
+                        F.struct(*_pair("u", "w")),
+                        F.struct(*_pair("v", "w")),
                     )
                 ).alias("e")
             )
@@ -526,15 +566,8 @@ def link_prediction_ra(
     oracle mode); the default partial-agg `sum` is the hub-safe
     production mode (same convention as `pagerank`).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)  # adjacency + deg + anti-join reuse it
-    )
+    # adjacency + deg + anti-join reuse it
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
     adj = und.select(F.col("a").alias("entity"), F.col("b").alias("nbr")).unionByName(
         und.select(F.col("b").alias("entity"), F.col("a").alias("nbr"))
     )
@@ -550,18 +583,10 @@ def link_prediction_ra(
             F.col("l.entity") < F.col("r.entity"),
         ],
     ).groupBy(F.col("l.entity").alias("a"), F.col("r.entity").alias("b"))
-    w = 1.0 / F.col("l.nd")
-    if exact:
-        scored = grouped.agg(
-            F.count("*").alias("n_shared"),
-            F.aggregate(
-                F.array_sort(F.collect_list(w)), F.lit(0.0), lambda acc, x: acc + x
-            ).alias("s"),
-        )
-    else:
-        scored = grouped.agg(
-            F.count("*").alias("n_shared"), F.sum(w).alias("s")
-        )
+    scored = grouped.agg(
+        F.count("*").alias("n_shared"),
+        _fold_sum(1.0 / F.col("l.nd"), exact).alias("s"),
+    )
     cands = (
         scored.where(F.col("n_shared") >= min_shared)
         .join(und, ["a", "b"], "left_anti")  # only MISSING edges are predictions
@@ -600,15 +625,7 @@ def k_core(
     override, and exhausting it raises rather than returning a capped
     (and therefore wrong) subgraph.
     """
-    live = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    live = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
     n_edges = live.count()
     bound = max_rounds if max_rounds is not None else max(30, n_edges)
     converged = False
@@ -616,12 +633,7 @@ def k_core(
         if n_edges == 0:
             converged = True
             break
-        deg = (
-            live.select(F.col("a").alias("entity"))
-            .unionByName(live.select(F.col("b").alias("entity")))
-            .groupBy("entity")
-            .agg(F.count("*").alias("deg"))
-        )
+        deg = _ends(live, "a", "b").groupBy("entity").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("entity").localCheckpoint(
             eager=False
         )
@@ -639,8 +651,7 @@ def k_core(
     if not converged and n_edges:
         raise RuntimeError(f"k_core did not converge within {bound} rounds")
     return (
-        live.select(F.col("a").alias("entity"))
-        .unionByName(live.select(F.col("b").alias("entity")))
+        _ends(live, "a", "b")
         .groupBy("entity")
         .agg(F.count("*").alias("core_degree"))
         .where(F.col("core_degree") >= k)
@@ -730,24 +741,16 @@ def _pagerank_round(
     numer = (
         F.col("rank") * F.col("w") if "w" in e.columns else F.col("rank")
     )
-    contribs = (
+    sums = (
         e.join(ranks.withColumnRenamed("entity", "src"), "src")
         .join(outdeg, "src")
         .select(
             F.col("dst").alias("entity"),
             (numer / F.col("outdeg")).alias("c"),
         )
+        .groupBy("entity")
+        .agg(_fold_sum("c", exact).alias("s"))
     )
-    if exact:
-        sums = contribs.groupBy("entity").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list("c")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("s")
-        )
-    else:
-        sums = contribs.groupBy("entity").agg(F.sum("c").alias("s"))
     return verts.join(sums, "entity", "left").select(
         "entity",
         F.round(base + damping * F.coalesce("s", F.lit(0.0)), 6).alias(
@@ -771,20 +774,8 @@ def clustering_coefficient(
     undirected degree on the entity key — one extra keyed agg + join over
     the triangle plan, integer inputs with one correctly-rounded division
     at the end, so the oracle is exact."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-    )
+    und = _undirected_pairs(edges, src, dst)
+    deg = _ends(und, "a", "b").groupBy("entity").agg(F.count("*").alias("deg"))
     tri = triangle_count(edges, src=src, dst=dst)
     cc = F.when(
         F.col("deg") >= 2,
@@ -811,22 +802,17 @@ def _hits_half_round(
     Exact mode uses the value-sorted sequential fold (engine-portable
     doubles, same contract as the PageRank trainer); default is the
     hub-safe partial-agg sum."""
-    contribs = edges.join(
-        scores.withColumnRenamed("entity", from_col).withColumnRenamed(
-            scores.columns[1], "c"
-        ),
-        from_col,
-    ).select(F.col(to_col).alias("entity"), "c")
-    if exact:
-        sums = contribs.groupBy("entity").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list("c")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("s")
+    sums = (
+        edges.join(
+            scores.withColumnRenamed("entity", from_col).withColumnRenamed(
+                scores.columns[1], "c"
+            ),
+            from_col,
         )
-    else:
-        sums = contribs.groupBy("entity").agg(F.sum("c").alias("s"))
+        .select(F.col(to_col).alias("entity"), "c")
+        .groupBy("entity")
+        .agg(_fold_sum("c", exact).alias("s"))
+    )
     filled = verts.join(sums, "entity", "left").select(
         "entity", F.coalesce("s", F.lit(0.0)).alias("s")
     )
@@ -858,18 +844,8 @@ def hits(
     the partial-agg sum that survives hubs. Per-round lineage is truncated
     with lazy localCheckpoints like every other iterative kernel here.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    verts = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed_adjacency(edges, src, dst).toDF("src", "dst")
+    verts = _ends(e, "src", "dst").distinct().localCheckpoint(eager=False)
     if verts.count() == 0:
         return local_frame(spark, [], "entity string, hub double, auth double")
     hub = verts.select("entity", F.lit(1.0).alias("hub"))
@@ -898,12 +874,9 @@ def py_hits(edges, iters: int = 3) -> list[tuple]:
         outof[s].append(d)
 
     def half(scores, arriving):
-        sums = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(scores[u] for u in arriving.get(v, ())):
-                acc += c
-            sums[v] = acc
+        sums = {
+            v: py_fold_sum(scores[u] for u in arriving.get(v, ())) for v in verts
+        }
         m = max(sums.values())
         return {v: round6(x / m) for v, x in sums.items()}
 
@@ -942,12 +915,7 @@ def random_walks(
     partial-agg min; lineage truncated per round like every iterative
     kernel here; total output rows <= verts * walks_per_node * (length+1).
     """
-    adj = (
-        edges.select(F.col(src).alias("cur"), F.col(dst).alias("nbr"))
-        .where(F.col("cur") != F.col("nbr"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst).toDF("cur", "nbr")
     verts = adj.select(F.col("cur").alias("start")).distinct()
     reps = F.explode(
         F.array(*[F.lit(r) for r in range(walks_per_node)])
@@ -1051,57 +1019,24 @@ def shortest_paths(
     bit-identical to the serial twin at any partitioning, and hubs
     combine map-side.
 
-    Scale posture: per round ONE equi-join of the current distance table
-    against the adjacency (keyed on the relaxed vertex) + one
-    partial-agg min over (entity) — rows are (id, double) pairs only;
-    lineage truncated per round; convergence check is one driver-side
-    count of improved vertices (the same entity-scaled scalar class as
-    CC's). Negative weights are rejected up front: Bellman-Ford would
-    need V-1 rounds and cycle detection, and 1/evidence weights are
-    positive by construction.
+    One relaxation loop: this is the `dist` column of `shortest_path_tree`.
+    Per round, the dist of its (dist, pred) struct-min is exactly the min
+    over dist, and a dist that stops improving never moves again, so the
+    projection is the same at any ``max_rounds``; the tree only keeps
+    going while a late equal-dist predecessor can still change a `pred`.
+
+    Scale posture: per round ONE equi-join of the current state against
+    the adjacency (keyed on the relaxed vertex) + one partial-agg min
+    over (entity); lineage truncated per round; convergence check is one
+    driver-side count of changed vertices (the same entity-scaled scalar
+    class as CC's). Negative weights are rejected up front: Bellman-Ford
+    would need V-1 rounds and cycle detection, and 1/evidence weights
+    are positive by construction. Null weights (or ones that do not cast
+    to double) are rejected too: they have no distance to add.
     """
-    w = (
-        F.round(F.col(weight).cast("double"), 6)
-        if weight
-        else F.lit(1.0)
-    ).alias("w")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), w)
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"), w)
-        )
-    adj = e.where(F.col("u") != F.col("v")).localCheckpoint(eager=False)
-    if weight and adj.where(F.col("w") < 0).take(1):
-        raise ValueError("shortest_paths requires non-negative weights")
-    dist = (
-        seeds.select("entity")
-        .distinct()
-        .select("entity", F.lit(0.0).alias("dist"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_rounds):
-        cand = (
-            dist.join(adj, dist["entity"] == adj["u"])
-            .select(
-                F.col("v").alias("entity"),
-                F.round(F.col("dist") + F.col("w"), 6).alias("dist"),
-            )
-        )
-        new = (
-            dist.unionByName(cand)
-            .groupBy("entity")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        improved = (
-            new.join(dist.withColumnRenamed("dist", "old"), "entity", "left")
-            .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .count()
-        )
-        dist = new
-        if improved == 0:
-            break
-    return dist
+    return shortest_path_tree(
+        spark, edges, seeds, src, dst, weight, max_rounds, directed
+    ).select("entity", "dist")
 
 
 def walk_skipgram_pairs(
@@ -1239,16 +1174,7 @@ def khop_neighborhoods(
     rows are id pairs only. A hub inside many k-hop balls inflates its
     column fan-in, but every join here is partial-agg/anti-join keyed, so
     skew lands on AQE's split, not a single task."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst, directed)
     known = (
         adj.select(
             F.col("u").alias("src"),
@@ -1476,20 +1402,8 @@ def betweenness(
     Undirected graphs count each pair twice (s→t and t→s), halved at the
     end per Brandes. Per-round lineage truncated via lazy
     localCheckpoint like every iterative kernel here."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
-    )
-    verts = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst, directed)
+    verts = _ends(adj, "u", "v").distinct().localCheckpoint(eager=False)
     scale_est = 1.0
     if pivots is not None:
         piv = pivots.select(F.col(pivots.columns[0]).alias("s")).distinct()
@@ -1568,21 +1482,9 @@ def betweenness(
                 ).alias("c"),
             )
         )
-        if exact:
-            agg = contribs.groupBy("s", "v").agg(
-                F.round(
-                    F.aggregate(
-                        F.array_sort(F.collect_list("c")),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    ),
-                    6,
-                ).alias("delta")
-            )
-        else:
-            agg = contribs.groupBy("s", "v").agg(
-                F.round(F.sum("c"), 6).alias("delta")
-            )
+        agg = contribs.groupBy("s", "v").agg(
+            F.round(_fold_sum("c", exact), 6).alias("delta")
+        )
         deltas[d - 1] = (
             layers[d - 1]
             .select("s", "v")
@@ -1595,22 +1497,9 @@ def betweenness(
         part = df.where(F.col("s") != F.col("v")).select("v", "delta")
         allde = part if allde is None else allde.unionByName(part)
     scale = (0.5 if not directed else 1.0) * scale_est
-    if exact:
-        summed = allde.groupBy(F.col("v").alias("entity")).agg(
-            F.round(
-                F.aggregate(
-                    F.array_sort(F.collect_list("delta")),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-                * F.lit(scale),
-                6,
-            ).alias("betweenness")
-        )
-    else:
-        summed = allde.groupBy(F.col("v").alias("entity")).agg(
-            F.round(F.sum("delta") * F.lit(scale), 6).alias("betweenness")
-        )
+    summed = allde.groupBy(F.col("v").alias("entity")).agg(
+        F.round(_fold_sum("delta", exact) * F.lit(scale), 6).alias("betweenness")
+    )
     return verts.join(summed, "entity", "left").select(
         "entity", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )
@@ -1642,15 +1531,7 @@ def modularity(
     community joins, two partial aggs (intra-edge counts per community,
     degree sums per community), then three single-row aggregates
     cross-joined — no collect, the output is one row."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
     com = communities.select(
         F.col(communities.columns[0]).alias("v"),
         F.col(communities.columns[1]).alias("c"),
@@ -1665,8 +1546,7 @@ def modularity(
         .agg(F.coalesce(F.sum("ec"), F.lit(0)).cast("long").alias("sum_ec"))
     )
     deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
+        _ends(und, "a", "b", "v")
         .groupBy("v")
         .agg(F.count("*").alias("d"))
         .join(com, "v")
@@ -1681,13 +1561,7 @@ def modularity(
         )
     )
     meta = und.agg(F.count("*").cast("long").alias("m_edges")).crossJoin(
-        com.join(
-            und.select(F.col("a").alias("v")).unionByName(
-                und.select(F.col("b").alias("v"))
-            ).distinct(),
-            "v",
-            "leftsemi",
-        )
+        com.join(_ends(und, "a", "b", "v").distinct(), "v", "leftsemi")
         .agg(F.countDistinct("c").alias("n_communities"))
     )
     return (
@@ -1740,12 +1614,8 @@ def graph_profile(
     )
     loops = e.where(F.col("u") == F.col("v"))
     clean = e.where(F.col("u") != F.col("v")).localCheckpoint(eager=False)
-    verts = clean.select(F.col("u").alias("x")).unionByName(
-        clean.select(F.col("v").alias("x"))
-    ).distinct()
-    und = clean.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-    ).distinct()
+    verts = _ends(clean, "u", "v", "x").distinct()
+    und = clean.select(*_pair("u", "v")).distinct()
     rev = clean.select(F.col("v").alias("u"), F.col("u").alias("v"))
     recip = clean.join(rev, ["u", "v"], "leftsemi")
     outdeg = clean.groupBy("u").agg(F.count("*").alias("d"))
@@ -1809,7 +1679,8 @@ def shortest_path_tree(
     `shortest_paths`' plain MIN, extended to the pair). Per round: one
     adjacency equi-join + one struct-min partial agg, per-round 6dp
     rounding of dist, lineage truncated, early exit when no (dist, pred)
-    state changes. Same non-negative-weight contract as shortest_paths."""
+    state changes. Same non-negative, non-null weight contract as
+    shortest_paths."""
     w = (
         F.round(F.col(weight).cast("double"), 6)
         if weight
@@ -1821,8 +1692,10 @@ def shortest_path_tree(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"), w)
         )
     adj = e.where(F.col("u") != F.col("v")).localCheckpoint(eager=False)
-    if weight and adj.where(F.col("w") < 0).take(1):
-        raise ValueError("shortest_path_tree requires non-negative weights")
+    # null sorts first in the (dist, pred) struct-min: one null weight
+    # would turn every dist it reaches null, the seeds' included
+    if weight and adj.where(F.col("w").isNull() | (F.col("w") < 0)).take(1):
+        raise ValueError("shortest paths require non-negative, non-null weights")
     state = (
         seeds.select("entity")
         .distinct()
@@ -1869,6 +1742,34 @@ def shortest_path_tree(
     return state
 
 
+def py_shortest_path_tree(
+    edges, seeds, max_rounds: int = 8, directed: bool = False
+) -> dict:
+    """Serial twin of `shortest_path_tree`, and through its dist of
+    `shortest_paths`: synchronous Bellman-Ford over (u, v, w) `edges`
+    sans self-loops, weights and per-round dists rounded to 6dp, each
+    vertex keeping the min (dist, pred); {entity: (dist, pred)}, seeds
+    first, then in discovery order."""
+    adj: dict = defaultdict(list)
+    for u, v, w in edges:
+        if u != v:
+            adj[u].append((v, round6(w)))
+            if not directed:
+                adj[v].append((u, round6(w)))
+    state = {s: (0.0, s) for s in seeds}
+    for _ in range(max_rounds):
+        new = dict(state)
+        for u, (d, _p) in state.items():
+            for v, w in adj[u]:
+                cand = (round6(d + w), u)
+                if v not in new or cand < new[v]:
+                    new[v] = cand
+        if new == state:
+            break
+        state = new
+    return state
+
+
 def assortativity(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -1894,21 +1795,8 @@ def assortativity(
     Plan: a<b distinct normalization, one degree partial agg, two
     broadcast-eligible degree joins back onto edges, one single-row sum
     agg — no collect."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-    )
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
+    deg = _ends(und, "a", "b", "v").groupBy("v").agg(F.count("*").alias("d"))
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("x"))
     db = deg.select(F.col("v").alias("b"), F.col("d").alias("y"))
     j = und.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
@@ -1987,18 +1875,8 @@ def strongly_connected_components(
     collision under change is negligible), and the backward mark loop
     carries the previous round's count in a driver variable — one agg
     per round instead of r4's join + two counts (VERDICT r4 task 7)."""
-    adj = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    active_v = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst)
+    active_v = _ends(adj, "u", "v").distinct().localCheckpoint(eager=False)
     active_e = adj
     assigned = local_frame(spark, [], "entity string, scc_id string")
 
@@ -2233,11 +2111,7 @@ def reciprocity(
     (u,v) with (v,u) present via a leftsemi self-join on the swapped
     key — an equi-join on (dst, src), skew lands on AQE like every
     other edge-keyed join here; nothing quadratic, output is one row."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _directed_adjacency(edges, src, dst)
     rev = e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     recip = e.join(rev, ["u", "v"], "leftsemi")
     return (
@@ -2296,16 +2170,7 @@ def katz_centrality(
     arithmetic overflow, not silent wrap (Spark ANSI sum overflow), the
     honest-failure pattern. Sinks with no inbound walks report (0, 0.0)
     via the uniform vertex-set left join."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst, directed)
     verts = _vertex_set(edges, src, dst)
     hop_counts = []
     cur = adj.groupBy(F.col("v").alias("entity")).agg(
@@ -2419,6 +2284,58 @@ def neighborhood_function(
     )
 
 
+def _hyperball(adj: DataFrame, lgk: int, k: int, step, **acc) -> list:
+    """HyperBall (Boldi & Vigna, "HyperANF") over the (u, v) adjacency:
+    the per-vertex states (entity, sk, est, *acc) before hop 1 and after
+    each of the `k` hops, each lazily checkpointed; no Spark action. `sk`
+    is a Datasketches HLL sketch (2^lgk registers) of the vertex's h-hop
+    reach ball and `est` its size estimate. `acc` names the estimator's
+    accumulator columns with their start values, and `step(h, delta)`
+    returns their hop-h update, `delta` being the ball growth clamped at
+    0 (register maxima only grow, the estimate can wobble a hair)."""
+    state = (
+        _ends(adj, "u", "v")
+        .distinct()
+        .groupBy("entity")
+        .agg(F.hll_sketch_agg("entity", F.lit(lgk)).alias("sk"))
+        .select(
+            "entity",
+            "sk",
+            F.hll_sketch_estimate("sk").alias("est"),
+            *[F.lit(v).alias(name) for name, v in acc.items()],
+        )
+        .localCheckpoint(eager=False)
+    )
+    states = [state]
+    for h in range(1, k + 1):
+        state = _hyperball_round(adj, state, h, step).localCheckpoint(eager=False)
+        states.append(state)
+    return states
+
+
+def _hyperball_round(adj: DataFrame, state: DataFrame, h: int, step) -> DataFrame:
+    """One HyperBall hop (un-checkpointed plan): each vertex's sketch
+    unions its out-neighbors' previous sketches — ONE edge-keyed join +
+    ONE partial-aggregating `hll_union_agg` (register maxima merge
+    map-side, so a 10^8-in-degree hub's fan-in collapses in the
+    combiner)."""
+    nbr = (
+        adj.join(state.select(F.col("entity").alias("v"), "sk"), "v")
+        .groupBy(F.col("u").alias("entity"))
+        .agg(F.hll_union_agg("sk").alias("nsk"))
+    )
+    merged = state.join(nbr, "entity", "left").select(
+        "entity",
+        F.when(F.col("nsk").isNull(), F.col("sk"))
+        .otherwise(F.hll_union("sk", "nsk"))
+        .alias("sk"),
+        *state.columns[2:],
+    )
+    est = F.hll_sketch_estimate("sk")
+    delta = F.greatest(est - F.col("est"), F.lit(0.0))
+    return merged.select("entity", "sk", est.alias("est"), *step(h, delta))
+
+
 def neighborhood_function_approx(
     spark: SparkSession,
     edges: DataFrame,
@@ -2449,56 +2366,21 @@ def neighborhood_function_approx(
     variant. Relative error ~1.04/sqrt(2^lgk) (~1.6% at the default
     lgk=12); the exact twin remains the oracle-gated entry, this is the
     scale estimator (pytest-locked against it)."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    states = _hyperball(
+        _directed_adjacency(edges, src, dst, directed), lgk, k, lambda h, d: []
     )
-    verts = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-    )
-    state = (
-        verts.groupBy("entity")
-        .agg(F.hll_sketch_agg("entity", F.lit(lgk)).alias("sk"))
-        .localCheckpoint(eager=False)
-    )
-    n = state.count()
+    n = states[0].count()
     if n == 0:
         return local_frame(
             spark,
             [(h, 0, 0, 0.0) for h in range(1, k + 1)],
             "hops int, pairs_at long, pairs_cum long, frac_cum double",
         )
-    cum = []
-    for _h in range(1, k + 1):
-        nbr = (
-            adj.join(
-                state.select(F.col("entity").alias("v"), "sk"), "v"
-            )
-            .groupBy(F.col("u").alias("entity"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        state = (
-            state.join(nbr, "entity", "left")
-            .select(
-                "entity",
-                F.when(F.col("nsk").isNull(), F.col("sk"))
-                .otherwise(F.hll_union("sk", "nsk"))
-                .alias("sk"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        total = state.agg(
-            F.sum(F.hll_sketch_estimate("sk")).alias("t")
-        ).first()["t"]
-        cum.append(max(int(round(total)) - n, 0))
+    # N(h): one O(V) estimate sum to a driver scalar per hop
+    cum = [
+        max(int(round(st.agg(F.sum("est").alias("t")).first()["t"])) - n, 0)
+        for st in states[1:]
+    ]
     # monotone-adjust the cumulative curve first (register maxima only
     # grow, but the estimator can wobble a hair), then derive the rows
     for i in range(1, len(cum)):
@@ -2545,58 +2427,13 @@ def harmonic_centrality_approx(
     exact operator. Estimates are Datasketches-deterministic; pytest
     locks the estimator inside the sketch error envelope of the exact
     operator on fixture graphs."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    verts = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-    )
-    state = (
-        verts.groupBy("entity")
-        .agg(F.hll_sketch_agg("entity", F.lit(lgk)).alias("sk"))
-        .select(
-            "entity",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            F.lit(0.0).alias("harm"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    for h in range(1, k + 1):
-        nbr = (
-            adj.join(state.select(F.col("entity").alias("v"), "sk"), "v")
-            .groupBy(F.col("u").alias("entity"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        merged = state.join(nbr, "entity", "left").select(
-            "entity",
-            F.when(F.col("nsk").isNull(), F.col("sk"))
-            .otherwise(F.hll_union("sk", "nsk"))
-            .alias("sk"),
-            "est",
-            "harm",
-        )
-        state = merged.select(
-            "entity",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            (
-                F.col("harm")
-                + F.greatest(
-                    F.hll_sketch_estimate("sk") - F.col("est"), F.lit(0.0)
-                )
-                / F.lit(float(h))
-            ).alias("harm"),
-        ).localCheckpoint(eager=False)
+    state = _hyperball(
+        _directed_adjacency(edges, src, dst, directed),
+        lgk,
+        k,
+        lambda h, d: [(F.col("harm") + d / F.lit(float(h))).alias("harm")],
+        harm=0.0,
+    )[-1]
     return state.select("entity", F.round("harm", 6).alias("harmonic"))
 
 
@@ -2623,58 +2460,17 @@ def closeness_centrality_approx(
     ball never grows — same sink contract as the exact operator).
     Deltas wobble-clamped at 0; Datasketches-deterministic; pytest
     locks the estimator inside the exact operator's error envelope."""
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not directed:
-        adj = adj.unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    verts = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-    )
-    state = (
-        verts.groupBy("entity")
-        .agg(F.hll_sketch_agg("entity", F.lit(lgk)).alias("sk"))
-        .select(
-            "entity",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            F.lit(0.0).alias("reach"),
-            F.lit(0.0).alias("hopsum"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    for h in range(1, k + 1):
-        nbr = (
-            adj.join(state.select(F.col("entity").alias("v"), "sk"), "v")
-            .groupBy(F.col("u").alias("entity"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        merged = state.join(nbr, "entity", "left").select(
-            "entity",
-            F.when(F.col("nsk").isNull(), F.col("sk"))
-            .otherwise(F.hll_union("sk", "nsk"))
-            .alias("sk"),
-            "est",
-            "reach",
-            "hopsum",
-        )
-        delta = F.greatest(
-            F.hll_sketch_estimate("sk") - F.col("est"), F.lit(0.0)
-        )
-        state = merged.select(
-            "entity",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            (F.col("reach") + delta).alias("reach"),
-            (F.col("hopsum") + F.lit(float(h)) * delta).alias("hopsum"),
-        ).localCheckpoint(eager=False)
+    state = _hyperball(
+        _directed_adjacency(edges, src, dst, directed),
+        lgk,
+        k,
+        lambda h, d: [
+            (F.col("reach") + d).alias("reach"),
+            (F.col("hopsum") + F.lit(float(h)) * d).alias("hopsum"),
+        ],
+        reach=0.0,
+        hopsum=0.0,
+    )[-1]
     return state.select(
         "entity",
         F.round("reach").cast("long").alias("n_reachable"),
@@ -2832,15 +2628,7 @@ def community_quality(
     as a one-row broadcast.  All integers; the single final division is
     one IEEE op (bit-identical cross-engine); try_divide guards the
     all-self-loop community whose volume is 0."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected_pairs(edges, src, dst).localCheckpoint(eager=False)
     com = communities.select(
         F.col(communities.columns[0]).alias("v"),
         F.col(communities.columns[1]).alias("c"),
@@ -2857,8 +2645,7 @@ def community_quality(
     )
     boundary = tagged.where(F.col("ca") != F.col("cb"))
     cut = (
-        boundary.select(F.col("ca").alias("community"))
-        .unionByName(boundary.select(F.col("cb").alias("community")))
+        _ends(boundary, "ca", "cb", "community")
         .groupBy("community")
         .agg(F.count("*").alias("cut_edges"))
     )
@@ -2945,12 +2732,7 @@ def node2vec_walks(
             raise ValueError(f"{name} must be a non-negative int, got {w!r}")
     if w_return + w_in + w_out == 0:
         raise ValueError("at least one node2vec weight must be positive")
-    adj = (
-        edges.select(F.col(src).alias("cur"), F.col(dst).alias("nbr"))
-        .where(F.col("cur") != F.col("nbr"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _directed_adjacency(edges, src, dst).toDF("cur", "nbr")
     verts = adj.select(F.col("cur").alias("start")).distinct()
     reps = F.explode(
         F.array(*[F.lit(r) for r in range(walks_per_node)])
@@ -3281,21 +3063,14 @@ def louvain(
     `weight`, or DISTINCT pairs at weight 1 when `weight` is None).
     """
     if weight is None:
-        pairs = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .select("a", "b", F.lit(1).cast("long").alias("w"))
+        pairs = _undirected_pairs(edges, src, dst).select(
+            "a", "b", F.lit(1).cast("long").alias("w")
         )
     else:
         pairs = (
             edges.where(F.col(src) != F.col(dst))
             .select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
+                *_pair(F.col(src), F.col(dst)),
                 F.col(weight).cast("long").alias("w"),
             )
             .groupBy("a", "b")
@@ -3308,20 +3083,14 @@ def louvain(
     m2 = int(row["m2"])  # 2m — invariant under coarsening
 
     vmap = (
-        pairs.select(F.col("a").alias("entity"))
-        .unionByName(pairs.select(F.col("b").alias("entity")))
+        _ends(pairs, "a", "b")
         .distinct()
         .select("entity", F.col("entity").alias("cur"))
         .localCheckpoint(eager=False)
     )
 
     for level in range(max_levels):
-        verts = (
-            pairs.select(F.col("a").alias("x"))
-            .unionByName(pairs.select(F.col("b").alias("x")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        verts = _ends(pairs, "a", "b", "x").distinct().localCheckpoint(eager=False)
         n_verts = verts.count()
         if n_verts <= 1:
             break
@@ -3436,11 +3205,7 @@ def louvain(
         pairs = (
             pairs.join(ca, "a")
             .join(cb, "b")
-            .select(
-                F.least("ca", "cb").alias("a"),
-                F.greatest("ca", "cb").alias("b"),
-                "w",
-            )
+            .select(*_pair("ca", "cb"), "w")
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
             .localCheckpoint(eager=True)

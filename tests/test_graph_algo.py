@@ -2,6 +2,8 @@
 inline reference implementation on a crafted multigraph, and fast-mode
 (partial-agg sum) agreement within FP tolerance."""
 
+import hashlib
+
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -11,7 +13,9 @@ from cypher_guard_spark.pipeline.graph_algo import (  # noqa: E402
     py_hits,
     py_k_core,
     py_max_spanning_forest,
+    py_pagerank,
     py_random_walks,
+    py_shortest_path_tree,
 )
 
 
@@ -33,21 +37,7 @@ EDGES = [
 
 
 def _reference(iters=3, damping=0.85):
-    verts = sorted({v for e in EDGES for v in e})
-    n = len(verts)
-    outdeg = {}
-    for s, _ in EDGES:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    base = (1.0 - damping) / n
-    rank = {v: round(1.0 / n, 6) for v in verts}
-    for _ in range(iters):
-        contribs = {v: [] for v in verts}
-        for s, o in EDGES:
-            contribs[o].append(rank[s] / outdeg[s])
-        rank = {
-            v: round6(base + damping * sum(sorted(contribs[v]), 0.0)) for v in verts
-        }
-    return rank
+    return py_pagerank([(s, o, 1.0) for s, o in EDGES], iters, damping)
 
 
 def test_pagerank_exact_matches_reference(spark):
@@ -229,11 +219,8 @@ def _rand_edges(seed, n_verts=40, n_edges=160):
 
 
 def _rows_sha256(rows):
-    """sha256 of the sorted row tuples — pins a long, deterministic
-    estimator output without spelling it out."""
-    import hashlib
-
-    return hashlib.sha256(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()
+    """sha256 of the sorted row tuples: pins a long deterministic output."""
+    return hashlib.sha256(repr(sorted(map(tuple, rows))).encode()).hexdigest()
 
 
 def _und(edges):
@@ -403,20 +390,7 @@ def test_personalized_pagerank_seed_mass_and_twin(spark):
         r["entity"]: r["rank"]
         for r in pagerank(spark, e, iters=3, exact=True, seeds=seeds).collect()
     }
-    verts = sorted({v for ed in EDGES for v in ed})
-    outdeg = {}
-    for s, _ in EDGES:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    S = {"a", "d"}
-    rank = {v: (round6(1.0 / len(S)) if v in S else 0.0) for v in verts}
-    base = {v: ((1.0 - 0.85) / len(S) if v in S else 0.0) for v in verts}
-    for _ in range(3):
-        contribs = {v: [] for v in verts}
-        for s, o in EDGES:
-            contribs[o].append(rank[s] / outdeg[s])
-        rank = {
-            v: round6(base[v] + 0.85 * sum(sorted(contribs[v]), 0.0)) for v in verts
-        }
+    rank = py_pagerank([(s, o, 1.0) for s, o in EDGES], 3, 0.85, seeds=["a", "d"])
     assert got == rank
     # seeds outside the graph contribute nothing; all-foreign seeds -> empty
     foreign = spark.createDataFrame([("zz",)], "entity string")
@@ -628,26 +602,8 @@ def test_random_walks_seed_and_rep_independence(spark):
 # ---------------------------------------------------------------------------
 
 def _sp_twin(edges, seeds, max_rounds=8, directed=False):
-    from collections import defaultdict
-    adj = defaultdict(list)
-    for u, v, w in edges:
-        if u == v:
-            continue
-        adj[u].append((v, round6(w)))
-        if not directed:
-            adj[v].append((u, round6(w)))
-    dist = {s: 0.0 for s in seeds}
-    for _ in range(max_rounds):
-        new = dict(dist)
-        for u, d in dist.items():
-            for v, w in adj[u]:
-                nd = round6(d + w)
-                if v not in new or nd < new[v]:
-                    new[v] = nd
-        if new == dist:
-            break
-        dist = new
-    return dist
+    tree = py_shortest_path_tree(edges, seeds, max_rounds, directed)
+    return {v: d for v, (d, _p) in tree.items()}
 
 
 WEIGHTED = [
@@ -1253,6 +1209,17 @@ def test_shortest_path_tree_undirected_and_negative_reject(spark):
         shortest_path_tree(spark, neg, seeds, weight="w")
 
 
+def test_shortest_paths_reject_null_weights(spark):
+    """A null weight has no distance to add: both kernels refuse it."""
+    from cypher_guard_spark.pipeline.graph_algo import shortest_path_tree, shortest_paths
+
+    e = spark.createDataFrame([("a", "b", None)], "src string, dst string, w double")
+    seeds = spark.createDataFrame([("a",)], ["entity"])
+    for kernel in (shortest_paths, shortest_path_tree):
+        with pytest.raises(ValueError, match="non-null"):
+            kernel(spark, e, seeds, weight="w")
+
+
 def test_assortativity_known_values(spark):
     from cypher_guard_spark.pipeline.graph_algo import assortativity
 
@@ -1737,29 +1704,7 @@ def test_pagerank_weighted_matches_bruteforce(spark):
         ("b", "d", 0.2), ("d", "b", 0.99),
     ]
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
-
-
-    verts = sorted({v for s, d, _ in wedges for v in (s, d)})
-    n = len(verts)
-    wsum = {}
-    for s in verts:
-        acc = 0.0
-        for w in sorted(w for a, _b, w in wedges if a == s):
-            acc += w
-        wsum[s] = acc
-    damping, base = 0.85, 0.15 / n
-    rank = {v: round(1.0 / n, 6) for v in verts}
-    for _ in range(3):
-        new = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(
-                rank[s] * w / wsum[s] for s, d, w in wedges if d == v
-            ):
-                acc += c
-            new[v] = round6(base + damping * acc)
-        rank = new
-
+    rank = py_pagerank(wedges, iters=3)
     got = {
         r["entity"]: r["rank"]
         for r in pagerank(spark, e, iters=3, exact=True, weight="w").collect()
@@ -1851,27 +1796,21 @@ def test_neighborhood_function_hyperball_empty(spark):
 def test_neighborhood_function_hyperball_partial_agg_plan(spark):
     """The per-round register merge must be a partial-aggregating
     hll_union_agg (map-side combine) so hub fan-in collapses in the
-    combiner — lock the ObjectHashAggregate partial/final split for the
-    sketch-union subplan."""
-    from pyspark.sql import functions as F
+    combiner — lock the ObjectHashAggregate partial/final split in the
+    round the three HyperBall estimators share."""
+    from cypher_guard_spark.pipeline.graph_algo import (
+        _directed_adjacency,
+        _hyperball,
+        _hyperball_round,
+    )
 
     e = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "c")], ["src", "dst"]
     )
-    adj = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    state = (
-        adj.select(F.col("u").alias("entity"))
-        .unionByName(adj.select(F.col("v").alias("entity")))
-        .distinct()
-        .groupBy("entity")
-        .agg(F.hll_sketch_agg("entity", F.lit(12)).alias("sk"))
-    )
-    nbr = (
-        adj.join(state.select(F.col("entity").alias("v"), "sk"), "v")
-        .groupBy(F.col("u").alias("entity"))
-        .agg(F.hll_union_agg("sk").alias("nsk"))
-    )
-    plan = nbr._jdf.queryExecution().executedPlan().toString()
+    adj = _directed_adjacency(e, "src", "dst")
+    state = _hyperball(adj, 12, 0, None)[0]
+    hop = _hyperball_round(adj, state, 1, lambda h, d: [])
+    plan = hop._jdf.queryExecution().executedPlan().toString()
     # partial aggregate before the exchange, final after: two
     # ObjectHashAggregate nodes with hll_union_agg, one partial_
     assert plan.count("hll_union_agg") >= 2
@@ -2056,29 +1995,7 @@ def test_pagerank_weighted_personalized_composition(spark):
     ]
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
     seeds = spark.createDataFrame([("a",)], ["entity"])
-
-
-    verts = sorted({v for s, d, _ in wedges for v in (s, d)})
-    wsum = {}
-    for s in verts:
-        acc = 0.0
-        for w in sorted(w for a, _b, w in wedges if a == s):
-            acc += w
-        wsum[s] = acc
-    damping = 0.85
-    base = {v: (0.15 if v == "a" else 0.0) for v in verts}  # ns=1
-    rank = {v: (round(1.0, 6) if v == "a" else 0.0) for v in verts}
-    for _ in range(3):
-        new = {}
-        for v in verts:
-            acc = 0.0
-            for c in sorted(
-                rank[s] * w / wsum[s] for s, d, w in wedges if d == v
-            ):
-                acc += c
-            new[v] = round6(base[v] + damping * acc)
-        rank = new
-
+    rank = py_pagerank(wedges, iters=3, seeds=["a"])
     got = {
         r["entity"]: r["rank"]
         for r in pagerank(
