@@ -6425,7 +6425,16 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
     `$SPARK_GRAFT_ORACLE_SF_DIR` (default sf0.01 — the dir the driver
     compares at). Consumers comparing at another scale pass `sf_dir`
     explicitly so the recomputed oracles and the Spark queries can never
-    silently read different datasets (ADVICE r2)."""
-    if sf_dir is not None:
-        os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    return {n: o() for n, _, o in registry() if o}
+    silently read different datasets (ADVICE r2). The explicit dir holds
+    for this call only: the previous value is restored on the way out."""
+    if sf_dir is None:
+        return {n: o() for n, _, o in registry() if o}
+    prev = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+    try:
+        return {n: o() for n, _, o in registry() if o}
+    finally:
+        if prev is None:
+            del os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
+        else:
+            os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = prev

@@ -144,6 +144,22 @@ def test_entry_contract(spark, monkeypatch):
         assert out.count() >= 0
 
 
+def test_oracle_sql_sf_dir_holds_for_one_call(monkeypatch):
+    """`oracle_sql(sf_dir)` reads `sf_dir` for that call only; later
+    no-argument calls read the dir they read before."""
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(
+        entry, "registry", lambda: [("probe", None, entry._oracle_sf_dir)]
+    )
+    monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF_DIR", raising=False)
+    assert entry.oracle_sql("/other/sf") == {"probe": "/other/sf"}
+    assert entry.oracle_sql() == {"probe": entry._ORACLE_SF_DIR_DEFAULT}
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", "/pinned/sf")
+    assert entry.oracle_sql("/other/sf") == {"probe": "/other/sf"}
+    assert entry.oracle_sql() == {"probe": "/pinned/sf"}
+
+
 def test_set_built_oracles_do_not_depend_on_hash_seed():
     """kg_triple_diff and kg_ktruss build their VALUES rows from Python
     sets; the oracle text must still be the same in every process."""
