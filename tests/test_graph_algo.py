@@ -1,5 +1,5 @@
-"""PageRank kernel tests: exact-mode determinism + agreement with an
-inline reference implementation on a crafted multigraph, and fast-mode
+"""PageRank kernel tests: exact-mode determinism + agreement with the
+serial twin `py_pagerank` on a crafted multigraph, and fast-mode
 (partial-agg sum) agreement within FP tolerance."""
 
 import hashlib
