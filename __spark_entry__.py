@@ -1545,32 +1545,9 @@ def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical graph, edge cost = round(1/evidence_count, 6) so strongly
     attested links are closer (`pipeline/graph_algo.py:shortest_paths`,
     multi-source Bellman-Ford; min-combine ⇒ bit-identical to the serial
-    twin with no exact/fast split)."""
-    from cypher_guard_spark.pipeline.graph_algo import shortest_paths
-
-    canon = q_kg_canonical_triples(spark, sf_dir).localCheckpoint(eager=False)
-    pairs = (
-        canon.where(F.col("subj") != F.col("obj"))
-        .groupBy(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .agg(F.round(1.0 / F.count("*"), 6).alias("w"))
-    )
-    und = (
-        pairs.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(
-            pairs.select(F.col("dst").alias("entity"), F.col("src").alias("nbr"))
-        )
-        .distinct()
-    )
-    hub = (
-        und.groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("entity").asc())
-        .limit(1)
-        .select("entity")
-    )
-    return shortest_paths(
-        spark, pairs, hub, weight="w", max_rounds=8, directed=False
-    )
+    twin with no exact/fast split). `shortest_paths` is the dist column
+    of `shortest_path_tree`, so this is kg_path_tree without `pred`."""
+    return q_kg_path_tree(spark, sf_dir).select("entity", "dist")
 
 
 def _kg_path_tree_state(max_rounds: int = 8) -> dict:

@@ -73,18 +73,14 @@ def _directed_adjacency(
     edges: DataFrame, src: str, dst: str, directed: bool = True
 ) -> DataFrame:
     """(u, v) — the distinct directed edges sans self-loops, each also
-    reversed when ``directed=False``; lazily checkpointed, since every
-    kernel that walks it reads it once per round."""
+    reversed when ``directed=False``. Not checkpointed: a caller that
+    reads it more than once adds its own lazy localCheckpoint."""
     adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not directed:
         adj = adj.unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-    return (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    return adj.where(F.col("u") != F.col("v")).distinct()
 
 
 def _fold_sum(c, exact: bool):
@@ -844,7 +840,11 @@ def hits(
     the partial-agg sum that survives hubs. Per-round lineage is truncated
     with lazy localCheckpoints like every other iterative kernel here.
     """
-    e = _directed_adjacency(edges, src, dst).toDF("src", "dst")
+    e = (
+        _directed_adjacency(edges, src, dst)
+        .localCheckpoint(eager=False)
+        .toDF("src", "dst")
+    )
     verts = _ends(e, "src", "dst").distinct().localCheckpoint(eager=False)
     if verts.count() == 0:
         return local_frame(spark, [], "entity string, hub double, auth double")
@@ -915,7 +915,11 @@ def random_walks(
     partial-agg min; lineage truncated per round like every iterative
     kernel here; total output rows <= verts * walks_per_node * (length+1).
     """
-    adj = _directed_adjacency(edges, src, dst).toDF("cur", "nbr")
+    adj = (
+        _directed_adjacency(edges, src, dst)
+        .localCheckpoint(eager=False)
+        .toDF("cur", "nbr")
+    )
     verts = adj.select(F.col("cur").alias("start")).distinct()
     reps = F.explode(
         F.array(*[F.lit(r) for r in range(walks_per_node)])
@@ -1174,7 +1178,7 @@ def khop_neighborhoods(
     rows are id pairs only. A hub inside many k-hop balls inflates its
     column fan-in, but every join here is partial-agg/anti-join keyed, so
     skew lands on AQE's split, not a single task."""
-    adj = _directed_adjacency(edges, src, dst, directed)
+    adj = _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False)
     known = (
         adj.select(
             F.col("u").alias("src"),
@@ -1402,7 +1406,7 @@ def betweenness(
     Undirected graphs count each pair twice (s→t and t→s), halved at the
     end per Brandes. Per-round lineage truncated via lazy
     localCheckpoint like every iterative kernel here."""
-    adj = _directed_adjacency(edges, src, dst, directed)
+    adj = _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False)
     verts = _ends(adj, "u", "v").distinct().localCheckpoint(eager=False)
     scale_est = 1.0
     if pivots is not None:
@@ -1875,7 +1879,7 @@ def strongly_connected_components(
     collision under change is negligible), and the backward mark loop
     carries the previous round's count in a driver variable — one agg
     per round instead of r4's join + two counts (VERDICT r4 task 7)."""
-    adj = _directed_adjacency(edges, src, dst)
+    adj = _directed_adjacency(edges, src, dst).localCheckpoint(eager=False)
     active_v = _ends(adj, "u", "v").distinct().localCheckpoint(eager=False)
     active_e = adj
     assigned = local_frame(spark, [], "entity string, scc_id string")
@@ -2170,7 +2174,7 @@ def katz_centrality(
     arithmetic overflow, not silent wrap (Spark ANSI sum overflow), the
     honest-failure pattern. Sinks with no inbound walks report (0, 0.0)
     via the uniform vertex-set left join."""
-    adj = _directed_adjacency(edges, src, dst, directed)
+    adj = _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False)
     verts = _vertex_set(edges, src, dst)
     hop_counts = []
     cur = adj.groupBy(F.col("v").alias("entity")).agg(
@@ -2367,7 +2371,10 @@ def neighborhood_function_approx(
     lgk=12); the exact twin remains the oracle-gated entry, this is the
     scale estimator (pytest-locked against it)."""
     states = _hyperball(
-        _directed_adjacency(edges, src, dst, directed), lgk, k, lambda h, d: []
+        _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False),
+        lgk,
+        k,
+        lambda h, d: [],
     )
     n = states[0].count()
     if n == 0:
@@ -2428,7 +2435,7 @@ def harmonic_centrality_approx(
     locks the estimator inside the sketch error envelope of the exact
     operator on fixture graphs."""
     state = _hyperball(
-        _directed_adjacency(edges, src, dst, directed),
+        _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False),
         lgk,
         k,
         lambda h, d: [(F.col("harm") + d / F.lit(float(h))).alias("harm")],
@@ -2461,7 +2468,7 @@ def closeness_centrality_approx(
     Deltas wobble-clamped at 0; Datasketches-deterministic; pytest
     locks the estimator inside the exact operator's error envelope."""
     state = _hyperball(
-        _directed_adjacency(edges, src, dst, directed),
+        _directed_adjacency(edges, src, dst, directed).localCheckpoint(eager=False),
         lgk,
         k,
         lambda h, d: [
@@ -2732,7 +2739,11 @@ def node2vec_walks(
             raise ValueError(f"{name} must be a non-negative int, got {w!r}")
     if w_return + w_in + w_out == 0:
         raise ValueError("at least one node2vec weight must be positive")
-    adj = _directed_adjacency(edges, src, dst).toDF("cur", "nbr")
+    adj = (
+        _directed_adjacency(edges, src, dst)
+        .localCheckpoint(eager=False)
+        .toDF("cur", "nbr")
+    )
     verts = adj.select(F.col("cur").alias("start")).distinct()
     reps = F.explode(
         F.array(*[F.lit(r) for r in range(walks_per_node)])

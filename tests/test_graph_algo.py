@@ -1,5 +1,5 @@
-"""PageRank kernel tests: exact-mode determinism + agreement with the
-serial twin `py_pagerank` on a crafted multigraph, and fast-mode
+"""PageRank kernel tests: exact-mode determinism + agreement with an
+inline reference implementation on a crafted multigraph, and fast-mode
 (partial-agg sum) agreement within FP tolerance."""
 
 import hashlib
@@ -13,9 +13,7 @@ from cypher_guard_spark.pipeline.graph_algo import (  # noqa: E402
     py_hits,
     py_k_core,
     py_max_spanning_forest,
-    py_pagerank,
     py_random_walks,
-    py_shortest_path_tree,
 )
 
 
@@ -37,7 +35,21 @@ EDGES = [
 
 
 def _reference(iters=3, damping=0.85):
-    return py_pagerank([(s, o, 1.0) for s, o in EDGES], iters, damping)
+    verts = sorted({v for e in EDGES for v in e})
+    n = len(verts)
+    outdeg = {}
+    for s, _ in EDGES:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    base = (1.0 - damping) / n
+    rank = {v: round(1.0 / n, 6) for v in verts}
+    for _ in range(iters):
+        contribs = {v: [] for v in verts}
+        for s, o in EDGES:
+            contribs[o].append(rank[s] / outdeg[s])
+        rank = {
+            v: round6(base + damping * sum(sorted(contribs[v]), 0.0)) for v in verts
+        }
+    return rank
 
 
 def test_pagerank_exact_matches_reference(spark):
@@ -390,7 +402,20 @@ def test_personalized_pagerank_seed_mass_and_twin(spark):
         r["entity"]: r["rank"]
         for r in pagerank(spark, e, iters=3, exact=True, seeds=seeds).collect()
     }
-    rank = py_pagerank([(s, o, 1.0) for s, o in EDGES], 3, 0.85, seeds=["a", "d"])
+    verts = sorted({v for ed in EDGES for v in ed})
+    outdeg = {}
+    for s, _ in EDGES:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    S = {"a", "d"}
+    rank = {v: (round6(1.0 / len(S)) if v in S else 0.0) for v in verts}
+    base = {v: ((1.0 - 0.85) / len(S) if v in S else 0.0) for v in verts}
+    for _ in range(3):
+        contribs = {v: [] for v in verts}
+        for s, o in EDGES:
+            contribs[o].append(rank[s] / outdeg[s])
+        rank = {
+            v: round6(base[v] + 0.85 * sum(sorted(contribs[v]), 0.0)) for v in verts
+        }
     assert got == rank
     # seeds outside the graph contribute nothing; all-foreign seeds -> empty
     foreign = spark.createDataFrame([("zz",)], "entity string")
@@ -602,8 +627,26 @@ def test_random_walks_seed_and_rep_independence(spark):
 # ---------------------------------------------------------------------------
 
 def _sp_twin(edges, seeds, max_rounds=8, directed=False):
-    tree = py_shortest_path_tree(edges, seeds, max_rounds, directed)
-    return {v: d for v, (d, _p) in tree.items()}
+    from collections import defaultdict
+    adj = defaultdict(list)
+    for u, v, w in edges:
+        if u == v:
+            continue
+        adj[u].append((v, round6(w)))
+        if not directed:
+            adj[v].append((u, round6(w)))
+    dist = {s: 0.0 for s in seeds}
+    for _ in range(max_rounds):
+        new = dict(dist)
+        for u, d in dist.items():
+            for v, w in adj[u]:
+                nd = round6(d + w)
+                if v not in new or nd < new[v]:
+                    new[v] = nd
+        if new == dist:
+            break
+        dist = new
+    return dist
 
 
 WEIGHTED = [
@@ -677,6 +720,36 @@ def test_shortest_paths_multi_source_and_negative_reject(spark):
     neg = spark.createDataFrame([("a", "b", -1.0)], ["src", "dst", "w"])
     with pytest.raises(ValueError, match="non-negative"):
         shortest_paths(spark, neg, seeds, weight="w")
+
+
+def test_shortest_paths_random_graphs_match_min_dist_twin(spark):
+    """Random weighted multigraphs (ties, cycles, self-loops), truncated
+    and converged, either direction: the kernel's dist equals the plain
+    min-dist Bellman-Ford at every ``max_rounds``."""
+    import random
+
+    from cypher_guard_spark.pipeline.graph_algo import shortest_paths
+
+    seeds = spark.createDataFrame([("v0",), ("v1",)], ["entity"])
+    for seed in (0, 1):
+        rng = random.Random(seed)
+        vs = [f"v{i}" for i in range(12)]
+        edges = [
+            (rng.choice(vs), rng.choice(vs), rng.choice([0.5, 1.0, 2.0, 0.333333]))
+            for _ in range(30)
+        ]
+        e = spark.createDataFrame(edges, "src string, dst string, w double")
+        for max_rounds in (1, 2, 8):
+            for directed in (False, True):
+                got = {
+                    r["entity"]: r["dist"]
+                    for r in shortest_paths(
+                        spark, e, seeds, weight="w",
+                        max_rounds=max_rounds, directed=directed,
+                    ).collect()
+                }
+                want = _sp_twin(edges, {"v0", "v1"}, max_rounds, directed)
+                assert got == want, (seed, max_rounds, directed)
 
 
 # ---------------------------------------------------------------- walk pairs
@@ -1704,7 +1777,29 @@ def test_pagerank_weighted_matches_bruteforce(spark):
         ("b", "d", 0.2), ("d", "b", 0.99),
     ]
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
-    rank = py_pagerank(wedges, iters=3)
+
+
+    verts = sorted({v for s, d, _ in wedges for v in (s, d)})
+    n = len(verts)
+    wsum = {}
+    for s in verts:
+        acc = 0.0
+        for w in sorted(w for a, _b, w in wedges if a == s):
+            acc += w
+        wsum[s] = acc
+    damping, base = 0.85, 0.15 / n
+    rank = {v: round(1.0 / n, 6) for v in verts}
+    for _ in range(3):
+        new = {}
+        for v in verts:
+            acc = 0.0
+            for c in sorted(
+                rank[s] * w / wsum[s] for s, d, w in wedges if d == v
+            ):
+                acc += c
+            new[v] = round6(base + damping * acc)
+        rank = new
+
     got = {
         r["entity"]: r["rank"]
         for r in pagerank(spark, e, iters=3, exact=True, weight="w").collect()
@@ -1995,7 +2090,29 @@ def test_pagerank_weighted_personalized_composition(spark):
     ]
     e = spark.createDataFrame(wedges, ["src", "dst", "w"])
     seeds = spark.createDataFrame([("a",)], ["entity"])
-    rank = py_pagerank(wedges, iters=3, seeds=["a"])
+
+
+    verts = sorted({v for s, d, _ in wedges for v in (s, d)})
+    wsum = {}
+    for s in verts:
+        acc = 0.0
+        for w in sorted(w for a, _b, w in wedges if a == s):
+            acc += w
+        wsum[s] = acc
+    damping = 0.85
+    base = {v: (0.15 if v == "a" else 0.0) for v in verts}  # ns=1
+    rank = {v: (round(1.0, 6) if v == "a" else 0.0) for v in verts}
+    for _ in range(3):
+        new = {}
+        for v in verts:
+            acc = 0.0
+            for c in sorted(
+                rank[s] * w / wsum[s] for s, d, w in wedges if d == v
+            ):
+                acc += c
+            new[v] = round6(base[v] + damping * acc)
+        rank = new
+
     got = {
         r["entity"]: r["rank"]
         for r in pagerank(
