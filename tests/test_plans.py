@@ -134,6 +134,40 @@ def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     assert 1 <= len(set(cells)) <= 2, hit[0]
 
 
+def test_similarity_topk_windows_plan_group_limits(spark):
+    """Every per-query top-k rank window must plan under a
+    WindowGroupLimit, so each partition keeps only k rows per query
+    before the sort: at least one limit per Window node in the executed
+    plan of each top-k kernel."""
+    import re
+
+    from cypher_guard_spark.ops import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") < 5)
+    codebooks = similarity.train_pq(emb, m=4, k=16, iters=2)
+    pq_queries = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    kernels = {
+        "brute_force_topk": similarity.brute_force_topk(emb, queries, k=10),
+        "ann_lsh_topk": similarity.ann_lsh_topk(emb, queries, k=5, bits=8),
+        "ivf_topk": similarity.ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=2),
+        "pq_topk": similarity.pq_topk(emb, codebooks, pq_queries, k=5),
+        "ivfpq_topk": similarity.ivfpq_topk(
+            emb, queries, k=5, n_centroids=8, nprobe=2, m=4, pq_k=16
+        ),
+        "hard_negatives": similarity.hard_negatives(
+            emb, emb.where(F.col("vec_id") < 50), k=20, per_anchor=5
+        ),
+    }
+    for name, df in kernels.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        windows = len(re.findall(r"\bWindow\b", plan))
+        limits = plan.count("WindowGroupLimit")
+        assert windows >= 1 and limits >= windows, (name, limits, windows, plan)
+
+
 def test_sampling_and_pii_map_only_topngrams_take_ordered(spark):
     """stratified_sample and pii_counts must stay exchange-free (the keep
     predicate / regex counts evaluate inside the scan's codegen stage);
