@@ -16,7 +16,7 @@ Everything is built-in functions; no Python UDF anywhere in this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..oracle import components
@@ -312,8 +312,6 @@ def neardup_clusters(
     join (distributed path — the same key the scan is typically bucketed
     by at rest). The cluster_size window is one shuffle on cluster_id.
     """
-    from pyspark.sql import Window
-
     pairs = minhash_near_duplicates(
         df, text_col, n=n, num_hashes=num_hashes, bands=bands, threshold=threshold
     ).select("a", "b")
@@ -624,8 +622,6 @@ def ingest_new_batch(
     `stream_dedup_exact` with an infinite horizon — this is the batch
     backstop the streaming docstring promises.
     """
-    from pyspark.sql import Window
-
     digest = F.md5(F.lower(F.trim(F.col(text_col))))
     batch = new_df.withColumn("digest", digest)
     w = Window.partitionBy("digest").orderBy("doc_id")

@@ -525,8 +525,6 @@ def source_cap(
     proof.) Determinism: total order (score DESC, doc_id ASC); ties in
     the score resolve by id, so the kept set is a pure function of the
     table."""
-    from pyspark.sql import Window
-
     order = ([F.desc(score_col)] if score_col else []) + [F.asc("doc_id")]
     df = docs.withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(salt))

@@ -1,21 +1,38 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search and embedding curation over an embedding column
+(array<float>). Dot products, distances and means are `F.zip_with` +
+`F.aggregate` folds (JVM-side, codegen'd — no Python).
 
-Two paths:
-- brute-force cosine top-k — the exactness baseline; dot products via
-  `F.zip_with` + `F.aggregate` (JVM-side, codegen'd — no Python);
-- sign-LSH bucketed ANN — the scale path: 2^B hyperoctant buckets from the
-  signs of the first B dimensions, candidates restricted to the query's
-  bucket. At 100 TB the bucket column becomes the table's partition key so
-  a query probes one partition instead of the corpus.
+Kernels:
+- top-k search: brute-force cosine (`brute_force_topk`, the exactness
+  baseline), sign-LSH buckets (`ann_lsh_topk`), IVF over a k-means coarse
+  quantizer (`ivf_topk`, or `write_ivf_index` + `ivf_probe_indexed` for the
+  at-rest layout), product quantization (`train_pq`, `pq_encode`,
+  `pq_topk`) and the two composed (`ivfpq_topk`);
+- vector statistics and compression: `label_centroids`, `dim_ranges`,
+  `quantize_embeddings` (int8) and `project_embeddings` (sparse JL);
+- curation: `knn_label_noise` and `hard_negatives` over the exact kNN.
 
-Centroid computation (per-label mean vector) shows the posexplode-and-
-aggregate pattern for vector columns.
+Each building block has one copy, shared by the kernels above:
+- `_topk`: the per-query `row_number` window cut at k (planned as a
+  WindowGroupLimit);
+- `_cosine_topk` / `_adc_topk`: score already-joined pairs by rounded
+  cosine / PQ asymmetric distance, then rank;
+- `_ivf_probes` and `_base_cells`: a query's nearest cells and every base
+  vector's cell;
+- `_argmin_cid`: the plan-baked literal nearest-centroid argmin;
+- `_lloyd_init` / `_lloyd_update`: the deterministic Lloyd trainer behind
+  both `kmeans_centroids` and `train_pq`;
+- `_subvectors`, `_vector_codes` and `_adc_lut`: the PQ subspace split,
+  per-vector code arrays and driver-side lookup tables;
+- `_labeled_knn`: the exact kNN with query and neighbor labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_ADC_SCHEMA = "query_id long, neighbor_id long, rank int, adist double"
 
 
 def _dot(a, b):
@@ -34,6 +51,31 @@ def _norm2(a):
 
 def cosine(a, b):
     return _dot(a, b) / (_norm2(a) * _norm2(b))
+
+
+def _topk(df: DataFrame, order: list, k: int, rank_col: str) -> DataFrame:
+    """`df` ranked per query_id under `order` into `rank_col` (1-based),
+    keeping ranks <= k. Spark plans the cut as a WindowGroupLimit before
+    the query_id shuffle, so each partition ships at most k rows per
+    query."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(
+        F.col(rank_col) <= k
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, sim) over already-joined
+    (query_id, qvec, neighbor_id, nvec) pairs: self excluded, sim the
+    6dp-rounded cosine, ranked by (sim desc, neighbor id asc)."""
+    scored = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
+    )
+    return _topk(
+        scored, [F.col("sim").desc(), F.col("neighbor_id").asc()], k, "rank"
+    ).select("query_id", "neighbor_id", "rank", "sim")
 
 
 def brute_force_topk(
@@ -55,21 +97,7 @@ def brute_force_topk(
         )
     )
     c = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    scored = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _cosine_topk(q.crossJoin(c), k)
 
 
 def sign_lsh_bucket(vec_col: str, bits: int = 8):
@@ -104,21 +132,7 @@ def ann_lsh_topk(
         F.col(vec_col).alias("nvec"),
         sign_lsh_bucket(vec_col, bits).alias("bucket"),
     )
-    scored = q.join(c, "bucket").where(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _cosine_topk(q.join(c, "bucket"), k)
 
 
 def _to_double(vec_col):
@@ -136,38 +150,99 @@ def _dist2(a, b):
     )
 
 
-def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vid, v, centroid_id): nearest centroid by (rounded L2², id).
+def _collect_centroids(centroids: DataFrame) -> list:
+    """[(cid, center), ...] sorted by cid — k rows, driver-safe."""
+    return sorted(
+        (int(r["centroid_id"]), [float(x) for x in r["center"]])
+        for r in centroids.collect()
+    )
 
-    MAP-ONLY: the k centroid vectors are collected (k rows — driver-safe at
-    any corpus size) and baked into the plan as literals; each row folds
-    over them picking the argmin, with `<` (strict) so a distance tie keeps
-    the earlier = lower centroid_id — exactly `min((round6(d²), cid))`.
-    The previous shape (crossJoin ×k then groupBy(vid)) re-shuffled the
-    FULL corpus per assignment; this one is a single scan with zero
-    exchanges, the only defensible shape at 10^12 rows."""
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+
+def _argmin_cid(centers: list):
+    """Id of the literal center nearest to the `v` column, by
+    (6dp-rounded L2², cid) over the cid-sorted (cid, center) pairs.
+
+    array_min on structs orders by (rdist, cid), so a distance tie keeps
+    the lower cid — exactly `min((round6(d²), cid))`. Each distance
+    expression appears exactly ONCE (an unrolled when-chain would
+    duplicate the accumulator subtree per step — 2^k blowup)."""
     keys = F.array(
         *[
             F.struct(
                 F.round(
-                    _dist2(
-                        F.col("v"),
-                        F.array(*[F.lit(float(x)) for x in r["center"]]),
-                    ),
-                    6,
+                    _dist2(F.col("v"), F.array(*[F.lit(x) for x in center])), 6
                 ).alias("rdist"),
-                F.lit(int(r["centroid_id"])).alias("cid"),
+                F.lit(cid).alias("cid"),
             )
-            for r in rows
+            for cid, center in centers
         ]
     )
-    # array_min on structs orders by (rdist, cid) — identical to the old
-    # min(key) over the crossJoin, incl. the lower-cid tie-break. Each
-    # distance expression appears exactly ONCE (an unrolled when-chain
-    # would duplicate the accumulator subtree per step — 2^k blowup).
-    return vecs.select(
-        "vid", "v", F.array_min(keys).getField("cid").alias("centroid_id")
+    return F.array_min(keys).getField("cid")
+
+
+def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vid, v, centroid_id): nearest centroid by (rounded L2², id).
+
+    MAP-ONLY: the k centroid vectors are collected (k rows — driver-safe at
+    any corpus size) and baked into the plan as literals (`_argmin_cid`,
+    ties to the lower centroid_id). The previous shape (crossJoin ×k then
+    groupBy(vid)) re-shuffled the FULL corpus per assignment; this one is
+    a single scan with zero exchanges, the only defensible shape at 10^12
+    rows."""
+    cid = _argmin_cid(_collect_centroids(centroids))
+    return vecs.select("vid", "v", cid.alias("centroid_id"))
+
+
+def _lloyd_init(vecs: DataFrame, k: int) -> DataFrame:
+    """(centroid_id, center): the 6dp-rounded vectors of the k smallest
+    vids, numbered from 0 in vid order."""
+    w = Window.orderBy("vid")
+    return (
+        vecs.orderBy("vid")
+        .limit(k)
+        .withColumn("centroid_id", F.row_number().over(w) - 1)
+        .select(
+            "centroid_id",
+            F.transform("v", lambda x: F.round(x, 6)).alias("center"),
+        )
+    )
+
+
+def _lloyd_update(centers: DataFrame, assigned: DataFrame, keys: list) -> DataFrame:
+    """One Lloyd update of the (*keys, center) table from the (*keys, v)
+    assignment rows: each coordinate becomes the 6dp-rounded mean of a
+    VALUE-SORTED sequential fold, and an empty cluster keeps its previous
+    center.
+
+    The result is lazily localCheckpointed (k rows): without it every
+    iteration's plan NESTS the previous assignment's full DAG and the
+    trainer re-evaluates super-linearly (docs/PERFORMANCE.md §14 —
+    measured 10.9s -> ~2s for 2 rounds over 2k vectors)."""
+    means = (
+        assigned.select(*keys, F.posexplode("v").alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg(F.array_sort(F.collect_list("x")).alias("xs"))
+        .select(
+            *keys,
+            "dim",
+            F.round(
+                F.aggregate("xs", F.lit(0.0), lambda a, x: a + x) / F.size("xs"),
+                6,
+            ).alias("cx"),
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "cx"))),
+                lambda st: st.getField("cx"),
+            ).alias("center")
+        )
+    )
+    return (
+        centers.select(*keys, F.col("center").alias("old_center"))
+        .join(means, keys, "left")
+        .select(*keys, F.coalesce("center", "old_center").alias("center"))
+        .localCheckpoint(eager=False)
     )
 
 
@@ -201,60 +276,50 @@ def kmeans_centroids(
     whatever centroids came out). fraction=1.0 (default) keeps the exact
     cross-engine oracle; sampled training trades bit-parity for trainer
     cost, and `tests/test_similarity.py` locks a recall floor for it."""
-    from pyspark.sql import Window
-
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")
     )
     if train_fraction < 1.0:
         vecs = vecs.sample(fraction=train_fraction, seed=seed)
-    w = Window.orderBy("vid")
-    centroids = (
-        vecs.orderBy("vid")
-        .limit(k)
-        .withColumn("centroid_id", F.row_number().over(w) - 1)
-        .select(
-            "centroid_id",
-            F.transform("v", lambda x: F.round(x, 6)).alias("center"),
-        )
-    )
+    centroids = _lloyd_init(vecs, k)
     for _ in range(iters):
         assigned = _assign(vecs, centroids)
-        means = (
-            assigned.select("centroid_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.array_sort(F.collect_list("x")).alias("xs"))
-            .select(
-                "centroid_id",
-                "dim",
-                F.round(
-                    F.aggregate("xs", F.lit(0.0), lambda a, x: a + x)
-                    / F.size("xs"),
-                    6,
-                ).alias("cx"),
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-                    lambda s: s.getField("cx"),
-                ).alias("center")
-            )
-        )
-        # empty clusters keep their previous center. Each round's result is
-        # lazily localCheckpointed (k rows): without it every iteration's
-        # plan NESTS the previous assignment's full DAG and the trainer
-        # re-evaluates super-linearly (docs/PERFORMANCE.md §14 — measured
-        # 10.9s -> ~2s for 2 rounds over 2k vectors).
-        centroids = (
-            centroids.select("centroid_id", F.col("center").alias("old_center"))
-            .join(means, "centroid_id", "left")
-            .select(
-                "centroid_id", F.coalesce("center", "old_center").alias("center")
-            )
-            .localCheckpoint(eager=False)
-        )
+        centroids = _lloyd_update(centroids, assigned, ["centroid_id"])
     return centroids
+
+
+def _base_cells(
+    embeddings: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, nvec, centroid_id): every base vector in its nearest
+    cell."""
+    vecs = embeddings.select(
+        F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")
+    )
+    return _assign(vecs, centroids).select(
+        F.col("vid").alias("neighbor_id"), F.col("v").alias("nvec"), "centroid_id"
+    )
+
+
+def _ivf_probes(
+    queries: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, qvec, centroid_id): each query's `nprobe` nearest cells
+    by (6dp-rounded L2², centroid_id), the centroids broadcast."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _to_double(vec_col).alias("qvec")
+    )
+    order = [
+        F.round(_dist2(F.col("qvec"), F.col("center")), 6).asc(),
+        F.col("centroid_id").asc(),
+    ]
+    return _topk(
+        q.crossJoin(F.broadcast(centroids)), order, nprobe, "probe_rank"
+    ).select("query_id", "qvec", "centroid_id")
 
 
 def ivf_topk(
@@ -286,49 +351,13 @@ def ivf_topk(
     (shared with `semantic_duplicates` / read from `write_ivf_index`'s
     at-rest layout) and skips the inline trainer — train Lloyd once per
     curation run, not once per operator."""
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = kmeans_centroids(
             embeddings, n_centroids, iters, id_col, vec_col, train_fraction
         ).localCheckpoint(eager=False)
-    base = _assign(
-        embeddings.select(F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")),
-        centroids,
-    ).select(
-        F.col("vid").alias("neighbor_id"),
-        F.col("v").alias("nvec"),
-        "centroid_id",
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), _to_double(vec_col).alias("qvec"))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.round(_dist2(F.col("qvec"), F.col("center")), 6).asc(),
-        F.col("centroid_id").asc(),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "qvec", "centroid_id")
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(base, "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    base = _base_cells(embeddings, centroids, id_col, vec_col)
+    probes = _ivf_probes(queries, centroids, nprobe, id_col, vec_col)
+    return _cosine_topk(F.broadcast(probes).join(base, "centroid_id"), k)
 
 
 def write_ivf_index(
@@ -358,12 +387,7 @@ def write_ivf_index(
         centroids = kmeans_centroids(
             embeddings, n_centroids, iters, id_col, vec_col, train_fraction
         ).localCheckpoint(eager=False)
-    base = _assign(
-        embeddings.select(F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")),
-        centroids,
-    ).select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("nvec"), "centroid_id"
-    )
+    base = _base_cells(embeddings, centroids, id_col, vec_col)
     base.repartition("centroid_id").write.partitionBy("centroid_id").mode(
         "overwrite"
     ).parquet(f"{path}/base")
@@ -389,42 +413,11 @@ def ivf_probe_indexed(
     per-query cell restriction is then the same broadcast probe join as
     `ivf_topk`. Same result contract as `ivf_topk` given the same
     centroids."""
-    from pyspark.sql import Window
-
     centroids = spark.read.parquet(f"{path}/centroids")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(vec_col).alias("qvec")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.round(_dist2(F.col("qvec"), F.col("center")), 6).asc(),
-        F.col("centroid_id").asc(),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "qvec", "centroid_id")
-    )
+    probes = _ivf_probes(queries, centroids, nprobe, id_col, vec_col)
     cells = sorted(r["centroid_id"] for r in probes.select("centroid_id").distinct().collect())
     base = spark.read.parquet(f"{path}/base").where(F.col("centroid_id").isin(cells))
-    scored = (
-        F.broadcast(probes)
-        .join(base, "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _cosine_topk(F.broadcast(probes).join(base, "centroid_id"), k)
 
 
 def label_centroids(
@@ -536,7 +529,7 @@ def project_embeddings(
     function of (d, out_dim, seed) (`jl_signs` — no RNG state, no
     training pass) and baked into the plan as literals, so the operator
     is MAP-ONLY with zero exchanges — same plan-baked-literal pattern as
-    the IVF centroid assignment (`ops/similarity.py` `_assign_literal`).
+    the IVF centroid assignment (`_assign`).
     Each output value is a sequential index-order fold (zip_with +
     aggregate), deterministic in any partitioning. The input width d is
     probed from one row (a driver scalar, not data).
@@ -547,7 +540,7 @@ def project_embeddings(
             [], f"{id_col} long, dim int, value double"
         )
     signs = jl_signs(first["d"], out_dim, seed)
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+    x = _to_double(vec_col)
     cols = []
     for j in range(out_dim):
         sj = F.array(*[F.lit(signs[i][j]) for i in range(len(signs))])
@@ -603,7 +596,6 @@ def train_pq(
     oracle; sampled training trades bit-parity for trainer cost, and
     `tests/test_pq.py` locks a recall floor for it.
     """
-    spark = embeddings.sparkSession
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")
     )
@@ -614,92 +606,42 @@ def train_pq(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_m = dim // m
-    sub = F.explode(
+    subs = (
+        vecs.select("vid", _subvectors("v", m, d_m))
+        .select("vid", "sub.subspace", "sub.v")
+        .localCheckpoint(eager=False)
+    )
+    codebooks = (
+        _lloyd_init(vecs, k)
+        .select("centroid_id", _subvectors("center", m, d_m))
+        .select("sub.subspace", "centroid_id", F.col("sub.v").alias("center"))
+        .localCheckpoint(eager=False)
+    )
+    keys = ["subspace", "centroid_id"]
+    for _ in range(iters):
+        assigned = subs.select(
+            "subspace",
+            "v",
+            _pq_assign_expr(_collect_codebooks(codebooks)).alias("centroid_id"),
+        )
+        codebooks = _lloyd_update(codebooks, assigned, keys)
+    return codebooks
+
+
+def _subvectors(vec_col: str, m: int, d_m: int):
+    """Explode of `vec_col` into m rows `sub` = (subspace, v), v the
+    subspace's contiguous d_m-wide slice."""
+    return F.explode(
         F.array(
             *[
                 F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice("v", s * d_m + 1, d_m).alias("sv"),
+                    F.lit(s).alias("subspace"),
+                    F.slice(vec_col, s * d_m + 1, d_m).alias("v"),
                 )
                 for s in range(m)
             ]
         )
     ).alias("sub")
-    subs = vecs.select("vid", sub).select(
-        "vid", F.col("sub.s").alias("s"), F.col("sub.sv").alias("v")
-    ).localCheckpoint(eager=False)
-
-    from pyspark.sql import Window
-
-    w = Window.orderBy("vid")
-    codebooks = (
-        vecs.orderBy("vid")
-        .limit(k)
-        .withColumn("centroid_id", F.row_number().over(w) - 1)
-        .select("centroid_id", "v")
-        .select(
-            "centroid_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.transform(
-                                F.slice("v", s * d_m + 1, d_m),
-                                lambda x: F.round(x, 6),
-                            ).alias("center"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("sub"),
-        )
-        .select("sub.s", "centroid_id", "sub.center")
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(iters):
-        assigned = subs.select(
-            "s", "v", _pq_assign_expr(codebooks, m).alias("centroid_id")
-        )
-        means = (
-            assigned.select(
-                "s", "centroid_id", F.posexplode("v").alias("dim", "x")
-            )
-            .groupBy("s", "centroid_id", "dim")
-            .agg(F.array_sort(F.collect_list("x")).alias("xs"))
-            .select(
-                "s",
-                "centroid_id",
-                "dim",
-                F.round(
-                    F.aggregate("xs", F.lit(0.0), lambda a, x: a + x)
-                    / F.size("xs"),
-                    6,
-                ).alias("cx"),
-            )
-            .groupBy("s", "centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-                    lambda st: st.getField("cx"),
-                ).alias("center")
-            )
-        )
-        codebooks = (
-            codebooks.select(
-                "s", "centroid_id", F.col("center").alias("old_center")
-            )
-            .join(means, ["s", "centroid_id"], "left")
-            .select(
-                "s",
-                "centroid_id",
-                F.coalesce("center", "old_center").alias("center"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return codebooks.select(
-        F.col("s").alias("subspace"), "centroid_id", "center"
-    )
 
 
 def _collect_codebooks(codebooks: DataFrame) -> dict:
@@ -712,37 +654,13 @@ def _collect_codebooks(codebooks: DataFrame) -> dict:
     return {s: sorted(v) for s, v in out.items()}
 
 
-def _pq_assign_expr(codebooks, m: int):
+def _pq_assign_expr(cb: dict):
     """Per-subspace literal argmin over `v` (a subvector column), selected
-    by the `s` column via a when-chain. codebooks: DataFrame or the
-    _collect_codebooks dict."""
-    if not isinstance(codebooks, dict):
-        cb = {}
-        for r in codebooks.collect():
-            cb.setdefault(int(r["s"] if "s" in r else r["subspace"]), []).append(
-                (int(r["centroid_id"]), [float(x) for x in r["center"]])
-            )
-        codebooks = {s: sorted(v) for s, v in cb.items()}
+    by the `subspace` column via a when-chain over the _collect_codebooks
+    dict."""
     expr = F.lit(None).cast("int")
-    for s in range(m - 1, -1, -1):
-        keys = F.array(
-            *[
-                F.struct(
-                    F.round(
-                        _dist2(
-                            F.col("v"),
-                            F.array(*[F.lit(x) for x in center]),
-                        ),
-                        6,
-                    ).alias("rdist"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, center in codebooks[s]
-            ]
-        )
-        expr = F.when(
-            F.col("s") == s, F.array_min(keys).getField("cid")
-        ).otherwise(expr)
+    for s in sorted(cb, reverse=True):
+        expr = F.when(F.col("subspace") == s, _argmin_cid(cb[s])).otherwise(expr)
     return expr
 
 
@@ -758,31 +676,69 @@ def pq_encode(
     assignment), exploded to scalar rows. The codes table is the at-rest
     compressed index ADC search scans instead of the float vectors."""
     cb = _collect_codebooks(codebooks)
-    m = len(cb)
-    d_m = len(cb[0][0][1])
     vecs = embeddings.select(
         F.col(id_col).alias("vec_id"), _to_double(vec_col).alias("fv")
     )
-    sub = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice("fv", s * d_m + 1, d_m).alias("v"),
-                )
-                for s in range(m)
-            ]
-        )
-    ).alias("sub")
     return (
-        vecs.select("vec_id", sub)
-        .select("vec_id", F.col("sub.s").alias("s"), F.col("sub.v").alias("v"))
-        .select(
-            "vec_id",
-            F.col("s").alias("subspace"),
-            _pq_assign_expr(cb, m).alias("code"),
+        vecs.select("vec_id", _subvectors("fv", len(cb), len(cb[0][0][1])))
+        .select("vec_id", "sub.subspace", "sub.v")
+        .select("vec_id", "subspace", _pq_assign_expr(cb).alias("code"))
+    )
+
+
+def _vector_codes(
+    embeddings: DataFrame, codebooks: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, codes): each vector's PQ codes as one array in subspace
+    order."""
+    return (
+        pq_encode(embeddings, codebooks, id_col, vec_col)
+        .groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("subspace", "code"))),
+                lambda st: st.getField("code"),
+            ).alias("codes")
         )
     )
+
+
+def _adc_lut(qv: list, cb: dict):
+    """Literal m×k ADC lookup table of the query vector `qv`: entry [s][c]
+    is dist²(qv's subvector s, codebook[s][c])."""
+    d_m = len(cb[0][0][1])
+    return F.array(
+        *[
+            F.array(
+                *[F.lit(_py_sub_dist2(qv, s * d_m, center)) for _cid, center in cb[s]]
+            )
+            for s in range(len(cb))
+        ]
+    )
+
+
+def _adc_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, adist) over already-joined
+    (query_id, lut, neighbor_id, codes) pairs: adist is the m LUT lookups
+    folded in subspace order and rounded once to 6dp, ranked by
+    (adist asc, neighbor id asc)."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(
+            F.aggregate(
+                F.zip_with(
+                    F.col("lut"), F.col("codes"), lambda l, c: F.element_at(l, c + 1)
+                ),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            ),
+            6,
+        ).alias("adist"),
+    )
+    return _topk(
+        scored, [F.col("adist").asc(), F.col("neighbor_id").asc()], k, "rank"
+    ).select("query_id", "neighbor_id", "rank", "adist")
 
 
 def pq_topk(
@@ -805,68 +761,23 @@ def pq_topk(
     the scan reads m bytes/vector instead of 4d). Top-k per query via the
     (adist asc, neighbor asc) rank window. Exact twin: lookups are exact,
     the sum runs in subspace order, one final 6dp rounding."""
-    from pyspark.sql import Window
-
     cb = _collect_codebooks(codebooks)
-    m = len(cb)
-    codes = (
-        pq_encode(embeddings, codebooks, id_col, vec_col)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "code"))),
-                lambda st: st.getField("code"),
-            ).alias("codes")
-        )
-    )
-    d_m = len(cb[0][0][1])
+    codes = _vector_codes(embeddings, codebooks, id_col, vec_col)
     qrows = queries.select(query_id_col, query_vec_col).collect()
     if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adist double"
+        return embeddings.sparkSession.createDataFrame([], _ADC_SCHEMA)
+    per_query = [
+        F.struct(
+            F.lit(qr[query_id_col]).alias("query_id"),
+            _adc_lut([float(x) for x in qr[query_vec_col]], cb).alias("lut"),
         )
-    per_query = []
-    for qr in qrows:
-        qv = [float(x) for x in qr[query_vec_col]]
-        lut = F.array(
-            *[
-                F.array(
-                    *[
-                        F.lit(_py_sub_dist2(qv, s * d_m, center))
-                        for _cid, center in cb[s]
-                    ]
-                )
-                for s in range(m)
-            ]
-        )
-        per_query.append(
-            F.struct(F.lit(qr[query_id_col]).alias("query_id"), lut.alias("lut"))
-        )
+        for qr in qrows
+    ]
     q = F.explode(F.array(*per_query)).alias("q")
-    scored = codes.select("vec_id", "codes", q).select(
-        F.col("q.query_id").alias("query_id"),
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("q.lut"),
-                    F.col("codes"),
-                    lambda l, c: F.element_at(l, c + 1),
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-            6,
-        ).alias("adist"),
+    pairs = codes.select("vec_id", "codes", q).select(
+        "q.query_id", F.col("vec_id").alias("neighbor_id"), "codes", "q.lut"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
-    )
+    return _adc_topk(pairs, k)
 
 
 def _py_sub_dist2(qv: list, offset: int, center: list) -> float:
@@ -919,8 +830,6 @@ def ivfpq_topk(
     top-k. Exactness: every fold order is fixed, LUT entries replicate
     _dist2's sequential order, probe selection uses the same
     (round6(dist²), centroid_id) key as ivf_topk."""
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = kmeans_centroids(
             embeddings, n_centroids, iters, id_col, vec_col
@@ -930,32 +839,18 @@ def ivfpq_topk(
             embeddings, m=m, k=pq_k, iters=iters, id_col=id_col, vec_col=vec_col
         )
     cb = _collect_codebooks(codebooks)
-    cents = sorted(
-        (int(r["centroid_id"]), [float(x) for x in r["center"]])
-        for r in centroids.collect()
+    cents = _collect_centroids(centroids)
+    cells = _base_cells(embeddings, centroids, id_col, vec_col).select(
+        "neighbor_id", "centroid_id"
     )
-    d_m = len(cb[0][0][1])
-    cells = _assign(
-        embeddings.select(F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")),
-        centroids,
-    ).select(F.col("vid").alias("neighbor_id"), "centroid_id")
     codes = (
-        pq_encode(embeddings, codebooks, id_col, vec_col)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "code"))),
-                lambda st: st.getField("code"),
-            ).alias("codes")
-        )
+        _vector_codes(embeddings, codebooks, id_col, vec_col)
         .withColumnRenamed("vec_id", "neighbor_id")
         .join(cells, "neighbor_id")
     )
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adist double"
-        )
+        return embeddings.sparkSession.createDataFrame([], _ADC_SCHEMA)
     probes = []
     for qr in qrows:
         qv = [float(x) for x in qr[vec_col]]
@@ -963,17 +858,7 @@ def ivfpq_topk(
             (round(_py_sub_dist2(qv, 0, center), 6), cid)
             for cid, center in cents
         )[:nprobe]
-        lut = F.array(
-            *[
-                F.array(
-                    *[
-                        F.lit(_py_sub_dist2(qv, s * d_m, center))
-                        for _cid, center in cb[s]
-                    ]
-                )
-                for s in range(m)
-            ]
-        )
+        lut = _adc_lut(qv, cb)
         for _d, cid in ranked:
             probes.append(
                 F.struct(
@@ -991,35 +876,37 @@ def ivfpq_topk(
             F.col("q.lut").alias("lut"),
         )
     )
-    scored = (
+    pairs = (
         F.broadcast(p)
         .join(codes, "centroid_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("lut"),
-                        F.col("codes"),
-                        lambda l, c: F.element_at(l, c + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-                6,
-            ).alias("adist"),
+    )
+    return _adc_topk(pairs, k)
+
+
+def _labeled_knn(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+) -> DataFrame:
+    """`brute_force_topk` rows plus the query's `label` (a broadcast join)
+    and the neighbor's `neighbor_label` (an id-keyed join)."""
+    topk = brute_force_topk(
+        embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
+    )
+    qlab = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(label_col).alias("label")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
+    nlab = embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(label_col).alias("neighbor_label"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
-    )
+    return topk.join(qlab, "query_id").join(nlab, "neighbor_id")
 
 
 def knn_label_noise(
@@ -1054,23 +941,11 @@ def knn_label_noise(
     only (query, neighbor) pairs), or by auditing per-label stratified
     samples; label noise is a population estimate, it does not need
     every point."""
-    topk = brute_force_topk(
-        embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
-    )
-    qlab = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(label_col).alias("label")
-        )
-    )
-    nlab = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("_nlabel"),
-    )
-    per = topk.join(qlab, "query_id").join(nlab, "neighbor_id")
+    per = _labeled_knn(embeddings, queries, k, id_col, vec_col, label_col)
     agg = per.groupBy("query_id", "label").agg(
         F.count("*").alias("n_neighbors"),
         F.sum(
-            (F.col("_nlabel") == F.col("label")).cast("long")
+            (F.col("neighbor_label") == F.col("label")).cast("long")
         ).alias("n_agree"),
     )
     return agg.select(
@@ -1120,37 +995,16 @@ def hard_negatives(
     At 10^12 rows swap the exact kernel for `ivf_topk`/`ivfpq_topk` over
     the at-rest index — the mining plan downstream of the (anchor,
     neighbor, sim) pairs is unchanged."""
-    from pyspark.sql import Window
-
-    topk = brute_force_topk(
-        embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
+    neg = _labeled_knn(embeddings, queries, k, id_col, vec_col, label_col).where(
+        F.col("neighbor_label") != F.col("label")
     )
-    qlab = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(label_col).alias("label")
-        )
-    )
-    nlab = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("negative_label"),
-    )
-    neg = (
-        topk.join(qlab, "query_id")
-        .join(nlab, "neighbor_id")
-        .where(F.col("negative_label") != F.col("label"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        neg.withColumn("neg_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("neg_rank") <= per_anchor)
-        .select(
-            F.col("query_id").alias("anchor_id"),
-            "label",
-            F.col("neighbor_id").alias("negative_id"),
-            "negative_label",
-            "neg_rank",
-            "sim",
-        )
+    return _topk(
+        neg, [F.desc("sim"), F.asc("neighbor_id")], per_anchor, "neg_rank"
+    ).select(
+        F.col("query_id").alias("anchor_id"),
+        "label",
+        F.col("neighbor_id").alias("negative_id"),
+        F.col("neighbor_label").alias("negative_label"),
+        F.col("neg_rank").cast("long").alias("neg_rank"),
+        "sim",
     )

@@ -364,8 +364,6 @@ def tfidf_keywords(
     the per-doc top-k window is one shuffle on doc_id carrying only
     (doc_id, token, tf, df) — never text. N is a driver scalar from a
     count(*) over parquet metadata, baked into the plan as a literal."""
-    from pyspark.sql import Window
-
     n_docs = df.count()
     per = doc_token_freqs(df, text_col)
     dfreq = per.groupBy("token").agg(F.count("*").alias("doc_freq"))
@@ -474,7 +472,6 @@ def length_quantiles(
             F.col("p.q").alias("q"),
             F.col("p.v").cast("long").alias("n_tokens_q"),
         )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("source").orderBy(
         F.col("n_tokens").asc(), F.col("doc_id").asc()
@@ -547,8 +544,6 @@ def search_inverted_index(
     The only shuffle is a partial-aggregating groupBy(doc_id) over the
     matched postings — O(postings of the query terms), corpus-size-
     independent."""
-    from pyspark.sql import Window
-
     from ..oracle import spark_xxhash64
 
     buckets = sorted({spark_xxhash64(t) % n_buckets for t in terms})
@@ -1001,7 +996,6 @@ def bm25_topk(
         hit = (F.element_at("tfs", i + 1) > 0).cast("int")
         score = term_score if score is None else score + term_score
         matched = hit if matched is None else matched + hit
-    from pyspark.sql import Window
 
     top = (
         base.select(
