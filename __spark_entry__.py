@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
 import os
 import sys
 from collections.abc import Callable, Mapping
@@ -39,6 +40,8 @@ from cypher_guard_spark.ops.text import py_tokens  # noqa: E402
 from cypher_guard_spark.oracle import round6  # noqa: E402
 
 GOLDEN_PATH = REPO / "tests/golden/verdicts.json"
+
+logger = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -81,6 +84,15 @@ def _golden_corpus_df(spark: SparkSession) -> DataFrame:
     )
 
 
+# logged (with the missing path) when the golden corpus's eval entries
+# fall back to pipeline_db_schema(); scripts/check_oracles.py keys on it
+EVAL_SCHEMA_ABSENT = (
+    "reference schema absent: %s is missing, so the golden corpus's eval "
+    "entries are validated against pipeline_db_schema() and the guard "
+    "entries built on them cannot match their frozen verdicts"
+)
+
+
 def _eval_schema():
     from cypher_guard_spark.guard import DbSchema
 
@@ -89,6 +101,7 @@ def _eval_schema():
         return DbSchema.from_dict(json.loads(ref.read_text()))
     from cypher_guard_spark.pipeline import pipeline_db_schema
 
+    logger.warning(EVAL_SCHEMA_ABSENT, ref)
     return pipeline_db_schema()
 
 

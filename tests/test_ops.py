@@ -160,6 +160,29 @@ def test_oracle_sql_sf_dir_holds_for_one_call(monkeypatch):
     assert entry.oracle_sql() == {"probe": "/pinned/sf"}
 
 
+def test_eval_schema_fallback_warns(monkeypatch, caplog):
+    """Without the reference's eval_schema.json, `_eval_schema()` falls
+    back to pipeline_db_schema() and says so in a warning that names the
+    missing file."""
+    from pathlib import Path
+
+    import __spark_entry__ as entry
+    from cypher_guard_spark.pipeline import pipeline_db_schema
+
+    exists = Path.exists
+    monkeypatch.setattr(
+        Path, "exists", lambda p: p.name != "eval_schema.json" and exists(p)
+    )
+    with caplog.at_level("WARNING", logger=entry.logger.name):
+        schema = entry._eval_schema()
+    assert schema.to_dict() == pipeline_db_schema().to_dict()
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert rec.msg is entry.EVAL_SCHEMA_ABSENT
+    assert "eval_schema.json" in rec.getMessage()
+    assert "reference schema absent" in rec.getMessage()
+
+
 def test_set_built_oracles_do_not_depend_on_hash_seed():
     """kg_triple_diff and kg_ktruss build their VALUES rows from Python
     sets; the oracle text must still be the same in every process."""

@@ -13,6 +13,7 @@ pyspark = pytest.importorskip("pyspark")
 
 GOLDEN = json.loads((Path(__file__).parent / "golden/verdicts.json").read_text())
 EVAL_SCHEMA_PATH = Path("/root/reference/data/schema/eval_schema.json")
+N_EVAL = sum(1 for e in GOLDEN if e.get("schema", "eval") == "eval")
 
 
 @pytest.fixture(scope="session")
@@ -27,7 +28,10 @@ def spark():
 @pytest.fixture(scope="module")
 def eval_schema():
     if not EVAL_SCHEMA_PATH.exists():
-        pytest.skip("reference eval schema not available")
+        pytest.skip(
+            f"the {N_EVAL} eval-schema cases need the reference's "
+            "eval_schema.json, which is not in the repo"
+        )
     return DbSchema.from_dict(json.loads(EVAL_SCHEMA_PATH.read_text()))
 
 
@@ -38,19 +42,20 @@ def unit_schema():
     )
 
 
-def test_udf_matches_golden_corpus(spark, eval_schema, unit_schema):
+@pytest.mark.parametrize("kind", ["eval", "unit"])
+def test_udf_matches_golden_corpus(spark, kind, request):
+    """One half of the corpus per schema; the unit half needs only the
+    repo's unit schema, so it runs on every host."""
     from cypher_guard_spark.spark import validate_dataframe
 
-    rows = []
-    for kind, schema in (("eval", eval_schema), ("unit", unit_schema)):
-        subset = [e for e in GOLDEN if e.get("schema", "eval") == kind]
-        df = spark.createDataFrame(
-            [(e["query_id"], e["cypher"]) for e in subset], ["query_id", "cypher"]
-        ).repartition(4)
-        rows.extend(validate_dataframe(spark, df, schema).collect())
-    got = {r["query_id"]: r for r in rows}
-    assert len(got) == len(GOLDEN)
-    for e in GOLDEN:
+    schema = request.getfixturevalue(f"{kind}_schema")
+    subset = [e for e in GOLDEN if e.get("schema", "eval") == kind]
+    df = spark.createDataFrame(
+        [(e["query_id"], e["cypher"]) for e in subset], ["query_id", "cypher"]
+    ).repartition(4)
+    got = {r["query_id"]: r for r in validate_dataframe(spark, df, schema).collect()}
+    assert len(got) == len(subset)
+    for e in subset:
         r = got[e["query_id"]]
         assert r["is_valid"] == e["has_valid_cypher"], e["query_id"]
         assert r["syntax_ok"] == e["parse_ok"], e["query_id"]
@@ -76,11 +81,13 @@ def test_partition_error_summary(spark, eval_schema):
     assert total_errors == expected
 
 
-def test_udf_plan_is_single_arrow_stage(spark, eval_schema):
-    """No shuffle in the validation plan — ArrowEvalPython over the scan."""
+def test_udf_plan_is_single_arrow_stage(spark, unit_schema):
+    """No shuffle in the validation plan — ArrowEvalPython over the scan.
+    The plan does not depend on the schema, so the repo's unit schema
+    serves."""
     from cypher_guard_spark.spark import validate_dataframe
 
     df = spark.createDataFrame([("MATCH (p:Person) RETURN p.firstName",)], ["cypher"])
-    plan = validate_dataframe(spark, df, eval_schema)._jdf.queryExecution().executedPlan().toString()
+    plan = validate_dataframe(spark, df, unit_schema)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan
     assert "Exchange" not in plan
