@@ -15,7 +15,6 @@ Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
-import logging
 import logging.handlers
 import sys
 from pathlib import Path
