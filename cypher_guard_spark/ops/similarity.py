@@ -275,7 +275,7 @@ def kmeans_centroids(
     `ivf_topk`/`write_ivf_index`, which always assign every vector against
     whatever centroids came out). fraction=1.0 (default) keeps the exact
     cross-engine oracle; sampled training trades bit-parity for trainer
-    cost, and `tests/test_similarity.py` locks a recall floor for it."""
+    cost, and `tests/test_ops.py` locks a recall floor for it."""
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")
     )
