@@ -16,7 +16,20 @@ oracle_sql()   — {name: oracle()}, a view of registry(): exact DuckDB
 
 Adding an entry is one tuple in registry(): `build(spark, sf_dir)`
 returns the DataFrame, `oracle` is a zero-argument callable returning
-the twin's SQL, or None for a rows-only entry.
+the twin's SQL, or None for a rows-only entry. A pure-Python twin
+renders its rows and returns `_values_sql(rows, "t(col, ...)")`.
+
+The KG entries share one copy of each view of the canonical graph:
+- Spark side: `_kg_edge_frame` (the directed (src, dst) edge frame),
+  `_kg_hub` (the max-degree, min-name seed) and `_kg_evidence_pairs`
+  (the evidence-weighted undirected pairs);
+- twin side, over `_py_kg_canonical_triples()`: `_kg_edges` (the
+  directed edge multiset), `_kg_und_adj` (the loop-free undirected
+  adjacency), `_kg_und_pairs` (the a < b distinct pairs), `_kg_hub_twin`
+  and `_kg_evidence_weights`; label propagation's twin is
+  `graph_algo.py_label_propagation`.
+The embedding twins read `_oracle_embeddings()`, as the document twins
+read `_oracle_documents()`.
 """
 
 from __future__ import annotations
@@ -210,11 +223,7 @@ def _guard_accuracy_values() -> str:
         rows.append(
             f"({_sql_quote(scope)}, {n}, {c}, round({c} * 100.0 / {n}, 2))"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(scope, n_queries, n_correct, accuracy_pct)"
-    )
+    return _values_sql(rows, "t(scope, n_queries, n_correct, accuracy_pct)")
 
 
 def _guard_is_write_values() -> str:
@@ -223,11 +232,18 @@ def _guard_is_write_values() -> str:
         for e in _golden()
         if e["parse_ok"]
     ]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(query_id, is_write)"
+    return _values_sql(rows, "t(query_id, is_write)")
 
 
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
+
+
+def _values_sql(rows, alias: str) -> str:
+    """The VALUES relation every pure-Python twin returns: `rows` are the
+    rendered `(...)` tuples, `alias` the `t(col, ...)` that names them.
+    An empty twin spells its own typed empty relation instead."""
+    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS " + alias
 
 
 def _guard_verdicts_values() -> str:
@@ -241,9 +257,7 @@ def _guard_verdicts_values() -> str:
             f"({_sql_quote(e['query_id'])}, {int(e['has_valid_cypher'])}, "
             f"{int(e['parse_ok'])}, {n_errors})"
         )
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(query_id, is_valid, syntax_ok, n_errors)"
-    )
+    return _values_sql(rows, "t(query_id, is_valid, syntax_ok, n_errors)")
 
 
 def _error_code_of(msg: str) -> str:
@@ -274,7 +288,7 @@ def _guard_error_codes_values() -> str:
             for m in e["error_messages"]:
                 counts[_error_code_of(m)] += 1
     rows = [f"({_sql_quote(c)}, {n})" for c, n in sorted(counts.items())]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(code, n)"
+    return _values_sql(rows, "t(code, n)")
 
 
 # ---------------------------------------------------------------------------
@@ -512,6 +526,47 @@ def q_kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kg_canonical_full(spark).select("doc_id", "subj", "pred", "obj")
 
 
+def _kg_edge_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) — the canonical triples as the directed edge multiset
+    every graph-kernel entry reads. Not checkpointed: an entry that reads
+    it more than once adds its own lazy localCheckpoint."""
+    canon = q_kg_canonical_triples(spark, sf_dir)
+    return canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+
+
+def _kg_hub(edges: DataFrame) -> DataFrame:
+    """(entity) — one row, the seed of kg_bfs_depths, kg_ppr and
+    kg_path_tree: the max-degree entity of the loop-free undirected
+    distinct adjacency of the (src, dst) `edges`, ties to the smallest
+    name (a 1-row driver scalar: the seed choice, not graph data)."""
+    from cypher_guard_spark.pipeline.graph_algo import _directed_adjacency
+
+    return (
+        _directed_adjacency(edges, "src", "dst", directed=False)
+        .groupBy(F.col("u").alias("entity"))
+        .agg(F.count("*").alias("deg"))
+        .orderBy(F.col("deg").desc(), F.col("entity").asc())
+        .limit(1)
+        .select("entity")
+    )
+
+
+def _kg_evidence_pairs(spark: SparkSession) -> DataFrame:
+    """(u, v, w) — the undirected entity graph (u < v, self-loops
+    dropped) weighted by evidence: w = the distinct (doc_id, pred)
+    assertions supporting the unordered pair. kg_backbone's and
+    kg_louvain's input."""
+    pairs = _kg_canonical_full(spark).where(F.col("subj") != F.col("obj")).select(
+        F.least("subj", "obj").alias("u"),
+        F.greatest("subj", "obj").alias("v"),
+        "doc_id",
+        "pred",
+    )
+    return pairs.groupBy("u", "v").agg(
+        F.countDistinct("doc_id", "pred").alias("w")
+    )
+
+
 def q_kg_extraction_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north rule's headline metric as a queryable one-row DataFrame:
     doc-level (doc_id, subj, pred, obj) precision/recall/F1 of the full
@@ -641,11 +696,7 @@ def _kg_extraction_pr_sql() -> str:
         f"({_sql_quote(d)}, {_sql_quote(s)}, {_sql_quote(r)}, {_sql_quote(o)})"
         for d, s, r, o, _sl, _ol in _py_kg_canonical_triples(_PR_DOCS)
     ]
-    e_vals = (
-        "SELECT * FROM (VALUES "
-        + ", ".join(e_rows)
-        + ") AS t(doc_id, subj, pred, obj)"
-    )
+    e_vals = _values_sql(e_rows, "t(doc_id, subj, pred, obj)")
     return f"""
 WITH e AS (SELECT DISTINCT doc_id, subj, pred, obj
            FROM ({e_vals})),
@@ -714,11 +765,7 @@ def _kg_canonical_labeled_values() -> str:
         f" {_sql_quote(sl)}, {_sql_quote(ol)})"
         for _d, s, r, o, sl, ol in _py_kg_canonical_triples()
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(subj, pred, obj, subj_label, obj_label)"
-    )
+    return _values_sql(rows, "t(subj, pred, obj, subj_label, obj_label)")
 
 
 def _node_fields_sql(col: str, prefix: str) -> str:
@@ -1268,30 +1315,16 @@ def q_kg_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge."""
     from cypher_guard_spark.pipeline.graph_algo import max_spanning_forest
 
-    canon = _kg_canonical_full(spark)
-    pairs = canon.where(F.col("subj") != F.col("obj")).select(
-        F.least("subj", "obj").alias("u"),
-        F.greatest("subj", "obj").alias("v"),
-        "doc_id",
-        "pred",
-    )
-    weighted = pairs.groupBy("u", "v").agg(
-        F.countDistinct("doc_id", "pred").alias("w")
-    )
-    return max_spanning_forest(spark, weighted)
+    return max_spanning_forest(spark, _kg_evidence_pairs(spark))
 
 
 def _py_kg_backbone() -> list:
     """Serial Kruskal twin under the same strict total order."""
     from cypher_guard_spark.pipeline.graph_algo import py_max_spanning_forest
 
-    pairs: dict = {}
-    for d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s == o:
-            continue
-        a, b = (s, o) if s < o else (o, s)
-        pairs.setdefault((a, b), set()).add((d, _r))
-    return py_max_spanning_forest((u, v, len(ev)) for (u, v), ev in pairs.items())
+    return py_max_spanning_forest(
+        (u, v, w) for (u, v), w in _kg_evidence_weights().items()
+    )
 
 
 def _kg_backbone_sql() -> str:
@@ -1316,38 +1349,18 @@ def q_kg_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`kg_communities`), explicitly maximizing the `kg_modularity` gate."""
     from cypher_guard_spark.pipeline.graph_algo import louvain
 
-    canon = _kg_canonical_full(spark)
-    pairs = canon.where(F.col("subj") != F.col("obj")).select(
-        F.least("subj", "obj").alias("u"),
-        F.greatest("subj", "obj").alias("v"),
-        "doc_id",
-        "pred",
-    )
-    weighted = pairs.groupBy("u", "v").agg(
-        F.countDistinct("doc_id", "pred").alias("w")
-    )
-    return louvain(spark, weighted, src="u", dst="v", weight="w")
+    return louvain(spark, _kg_evidence_pairs(spark), src="u", dst="v", weight="w")
 
 
 def _kg_louvain_sql() -> str:
     from cypher_guard_spark.pipeline.graph_algo import py_louvain
 
-    pair_w: dict = {}
-    for d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s == o:
-            continue
-        a, b = (s, o) if s < o else (o, s)
-        pair_w.setdefault((a, b), set()).add((d, _r))
-    assign = py_louvain({k: len(v) for k, v in pair_w.items()})
+    assign = py_louvain(_kg_evidence_weights())
     rows = [
         f"({_sql_quote(e)}, {_sql_quote(c)})"
         for e, c in sorted(assign.items())
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, community)"
-    )
+    return _values_sql(rows, "t(entity, community)")
 
 
 def q_kg_entity_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1419,11 +1432,7 @@ def _kg_media_links_values() -> str:
                         f"{_sql_quote(span['kind'])}, {adj}, {_sql_quote(s)}, "
                         f"{_sql_quote(r)}, {_sql_quote(o)})"
                     )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, media_ref, kind, span_idx, subj, pred, obj)"
-    )
+    return _values_sql(rows, "t(doc_id, media_ref, kind, span_idx, subj, pred, obj)")
 
 
 def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1432,10 +1441,9 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline/graph_algo.py for the at-scale `exact=False` variant)."""
     from cypher_guard_spark.pipeline.graph_algo import pagerank
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return pagerank(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         iters=3,
         exact=True,  # oracle gate opts in; production default is exact=False
     )
@@ -1451,10 +1459,9 @@ def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg mode."""
     from cypher_guard_spark.pipeline.graph_algo import hits
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return hits(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         iters=3,
         exact=True,
     )
@@ -1468,9 +1475,7 @@ def _kg_hits_values(iters: int = 3) -> str:
         f"({_sql_quote(v)}, {hub!r}::DOUBLE, {auth!r}::DOUBLE)"
         for v, hub, auth in py_hits(_kg_edges(), iters)
     ]
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, hub, auth)"
-    )
+    return _values_sql(rows, "t(entity, hub, auth)")
 
 
 def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1480,10 +1485,9 @@ def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of (edge set, seed)."""
     from cypher_guard_spark.pipeline.graph_algo import random_walks
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return random_walks(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         length=4,
         walks_per_node=2,
         seed=7,
@@ -1506,11 +1510,7 @@ def _kg_random_walks_values(
         f"({_sql_quote(s)}, {rep}, {t}, {_sql_quote(v)})"
         for s, rep, t, v in _py_kg_walks(length, walks_per_node, seed)
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(start, rep, step, vertex)"
-    )
+    return _values_sql(rows, "t(start, rep, step, vertex)")
 
 
 def q_kg_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1523,10 +1523,9 @@ def q_kg_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     min combines map-side on hubs."""
     from cypher_guard_spark.pipeline.graph_algo import node2vec_walks
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return node2vec_walks(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         length=4,
         walks_per_node=2,
         w_return=1,
@@ -1545,11 +1544,7 @@ def _kg_node2vec_walks_values() -> str:
         f"({_sql_quote(s)}, {rep}, {t}, {_sql_quote(v)})"
         for s, rep, t, v in py_node2vec_walks(_kg_edges(), 4, 2, 1, 2, 4, 7)
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(start, rep, step, vertex)"
-    )
+    return _values_sql(rows, "t(start, rep, step, vertex)")
 
 
 def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1566,23 +1561,15 @@ def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_path_tree_state(max_rounds: int = 8) -> dict:
     """Serial twin shared by kg_shortest_paths and kg_path_tree: directed
     pair counts → w=round6(1/cnt), both orientations relaxed, hub seed by
-    the kg_bfs_depths rule (over the DISTINCT undirected adjacency —
-    degree counts ignore weights); {entity: (dist, pred)}."""
-    from collections import defaultdict
+    the kg_bfs_depths rule (`_kg_hub_twin` — degree counts ignore
+    weights); {entity: (dist, pred)}."""
+    from collections import Counter
 
     from cypher_guard_spark.pipeline.graph_algo import py_shortest_path_tree
 
-    cnt: dict = defaultdict(int)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            cnt[(s, o)] += 1
-    und: dict = defaultdict(set)
-    for a, b in cnt:
-        und[a].add(b)
-        und[b].add(a)
-    hub = min(und, key=lambda v: (-len(und[v]), v))
+    cnt = Counter((s, o) for s, o in _kg_edges() if s != o)
     return py_shortest_path_tree(
-        [(a, b, 1.0 / c) for (a, b), c in cnt.items()], [hub], max_rounds
+        [(a, b, 1.0 / c) for (a, b), c in cnt.items()], [_kg_hub_twin()], max_rounds
     )
 
 
@@ -1593,9 +1580,7 @@ def _kg_shortest_paths_values(max_rounds: int = 8) -> str:
         f"({_sql_quote(v)}, {d!r}::DOUBLE)"
         for v, (d, _p) in _kg_path_tree_state(max_rounds).items()
     ]
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, dist)"
-    )
+    return _values_sql(rows, "t(entity, dist)")
 
 
 def q_kg_path_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,22 +1596,8 @@ def q_kg_path_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .agg(F.round(1.0 / F.count("*"), 6).alias("w"))
     )
-    und = (
-        pairs.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(
-            pairs.select(F.col("dst").alias("entity"), F.col("src").alias("nbr"))
-        )
-        .distinct()
-    )
-    hub = (
-        und.groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("entity").asc())
-        .limit(1)
-        .select("entity")
-    )
     return shortest_path_tree(
-        spark, pairs, hub, weight="w", max_rounds=8, directed=False
+        spark, pairs, _kg_hub(pairs), weight="w", max_rounds=8, directed=False
     )
 
 
@@ -1637,11 +1608,7 @@ def _kg_path_tree_values(max_rounds: int = 8) -> str:
         f"({_sql_quote(v)}, {d!r}::DOUBLE, {_sql_quote(p)})"
         for v, (d, p) in _kg_path_tree_state(max_rounds).items()
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, dist, pred)"
-    )
+    return _values_sql(rows, "t(entity, dist, pred)")
 
 
 def q_kg_triple_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1691,11 +1658,9 @@ def _kg_triple_fusion_values() -> str:
             f"{_sql_quote(max(docs))}, {max(c for _d, c in obs)!r}::DOUBLE, "
             f"{_py_noisy_or(obs)!r}::DOUBLE)"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(subj, pred, obj, n_obs, n_docs, first_doc, last_doc,"
-        " max_conf, agg_conf)"
+    return _values_sql(
+        rows,
+        "t(subj, pred, obj, n_obs, n_docs, first_doc, last_doc, max_conf, agg_conf)",
     )
 
 
@@ -1733,7 +1698,7 @@ def _kg_pagerank_weighted_values(iters: int = 3, damping: float = 0.85) -> str:
     ]
     rank = py_pagerank(edges, iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
+    return _values_sql(rows, "t(entity, rank)")
 
 
 def q_kg_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1746,10 +1711,9 @@ def q_kg_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         walk_skipgram_pairs,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     walks = random_walks(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         length=4,
         walks_per_node=2,
         seed=7,
@@ -1782,10 +1746,9 @@ def q_kg_walk_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         walk_skipgram_pairs,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     walks = random_walks(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         length=4,
         walks_per_node=2,
         seed=7,
@@ -1831,11 +1794,7 @@ def _kg_walk_negatives_values(k: int = 2, seed: int = 11) -> str:
                     f"({_sql_quote(center)}, {_sql_quote(context)}, {j}, "
                     f"{_sql_quote(neg)})"
                 )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(center, context, j, negative)"
-    )
+    return _values_sql(rows, "t(center, context, j, negative)")
 
 
 def q_kg_entity_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,10 +1881,9 @@ def q_kg_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against."""
     from cypher_guard_spark.pipeline.graph_algo import khop_neighborhoods
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return khop_neighborhoods(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -1959,10 +1917,9 @@ def q_kg_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg_khop materialization plus a k-row window."""
     from cypher_guard_spark.pipeline.graph_algo import neighborhood_function
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return neighborhood_function(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2006,10 +1963,9 @@ def q_kg_neighborhood_hyperball(
         neighborhood_function_approx,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return neighborhood_function_approx(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2025,10 +1981,9 @@ def q_kg_harmonic_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
         harmonic_centrality_approx,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return harmonic_centrality_approx(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2043,10 +1998,9 @@ def q_kg_closeness_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
         closeness_centrality_approx,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return closeness_centrality_approx(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2063,10 +2017,9 @@ def q_kg_spectral_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-seed reproducibility, and the empty graph."""
     from cypher_guard_spark.pipeline.graph_algo import spectral_embeddings
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return spectral_embeddings(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         dim=8,
         power_iters=1,
         seed=42,
@@ -2098,10 +2051,9 @@ def q_kg_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg pass over the kg_khop neighborhood table."""
     from cypher_guard_spark.pipeline.graph_algo import harmonic_centrality
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return harmonic_centrality(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2135,28 +2087,17 @@ def q_kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical graph (`pipeline/graph_algo.py:betweenness`, exact mode
     for the oracle: value-sorted dependency folds + 6dp per-round
     rounding; all vertices as pivots)."""
-    from cypher_guard_spark.pipeline.graph_algo import betweenness
+    from cypher_guard_spark.pipeline.graph_algo import _vertex_set, betweenness
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
-    edges = canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+    edges = _kg_edge_frame(spark, sf_dir)
     # the full vertex set passed EXPLICITLY as pivots: exact truncated
     # betweenness is the oracle contract; the operator's default is the
     # sampled Brandes-Pich estimator (graph_algo.py:betweenness)
-    all_pivots = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("entity"))
-        .unionByName(
-            edges.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("entity")
-            )
-        )
-        .distinct()
-    )
     return betweenness(
         spark,
         edges,
         max_depth=4,
-        pivots=all_pivots,
+        pivots=_vertex_set(edges, "src", "dst"),
         directed=False,
         exact=True,
     )
@@ -2169,11 +2110,9 @@ def _kg_betweenness_values(max_depth: int = 4) -> str:
     all pivots' deltas, halved (undirected), rounded 6dp."""
     from collections import defaultdict, deque
 
-    und: dict = defaultdict(set)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            und[s].add(o)
-            und[o].add(s)
+    from cypher_guard_spark.pipeline.graph_algo import py_fold_sum
+
+    und = _kg_und_adj()
     verts = sorted(und)
     bc_vals: dict = defaultdict(list)
     for s0 in verts:
@@ -2205,27 +2144,15 @@ def _kg_betweenness_values(max_depth: int = 4) -> str:
                             sigma[u] / sigma[w] * (1.0 + delta[w])
                         )
             for u in layers[d - 1]:
-                if u in contribs:
-                    t = 0.0
-                    for c in sorted(contribs[u]):
-                        t = t + c
-                    delta[u] = round6(t)
-                else:
-                    delta[u] = 0.0
+                delta[u] = round6(py_fold_sum(contribs[u])) if u in contribs else 0.0
         for v in dist:
             if v != s0:
                 bc_vals[v].append(delta[v])
-    rows = []
-    for v in verts:
-        t = 0.0
-        for x in sorted(bc_vals.get(v, [])):
-            t = t + x
-        rows.append(f"({_sql_quote(v)}, {round6(t * 0.5)!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, betweenness)"
-    )
+    rows = [
+        f"({_sql_quote(v)}, {round6(py_fold_sum(bc_vals.get(v, ())) * 0.5)!r}::DOUBLE)"
+        for v in verts
+    ]
+    return _values_sql(rows, "t(entity, betweenness)")
 
 
 def q_kg_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2234,10 +2161,9 @@ def q_kg_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the kg_khop table, integer sums + one division."""
     from cypher_guard_spark.pipeline.graph_algo import closeness_centrality
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return closeness_centrality(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2275,10 +2201,9 @@ def q_kg_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0, 0) via the uniform vertex-set left join."""
     from cypher_guard_spark.pipeline.graph_algo import eccentricity
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return eccentricity(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
@@ -2312,10 +2237,9 @@ def q_kg_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one try_divide."""
     from cypher_guard_spark.pipeline.graph_algo import reciprocity
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return reciprocity(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
     )
 
 
@@ -2342,10 +2266,9 @@ def q_kg_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk counts per hop, fixed-order α^h fold, sinks (0, 0.0)."""
     from cypher_guard_spark.pipeline.graph_algo import katz_centrality
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return katz_centrality(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
         alpha=0.1,
     )
@@ -2491,17 +2414,12 @@ def _py_triple_history_rows() -> list:
 
 def _kg_triple_history_values() -> str:
     """Serial twin: `_py_triple_history_rows` as a VALUES relation."""
-    rows = _py_triple_history_rows()
-    vals = ", ".join(
+    rows = [
         f"({_sql_quote(s)}, {_sql_quote(r)}, {_sql_quote(o)}, "
         f"{a}::BIGINT, {b}::BIGINT)"
-        for s, r, o, a, b in rows
-    )
-    return (
-        "SELECT * FROM (VALUES "
-        + vals
-        + ") AS t(subj, pred, obj, valid_from, valid_to)"
-    )
+        for s, r, o, a, b in _py_triple_history_rows()
+    ]
+    return _values_sql(rows, "t(subj, pred, obj, valid_from, valid_to)")
 
 
 def q_kg_pagerank_recency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2547,7 +2465,7 @@ def _kg_pagerank_recency_values(iters: int = 3, damping: float = 0.85) -> str:
     edges = [(s, o, (b + 1) / n) for (s, o), b in vt.items()]
     rank = py_pagerank(edges, iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
+    return _values_sql(rows, "t(entity, rank)")
 
 
 def q_kg_fact_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2696,11 +2614,7 @@ def _kg_triple_diff_values() -> str:
         f"({_sql_quote(s)}, {_sql_quote(p)}, {_sql_quote(o)}, 'removed')"
         for s, p, o in sorted(old - new)
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(subj, pred, obj, status)"
-    )
+    return _values_sql(rows, "t(subj, pred, obj, status)")
 
 
 def q_kg_entity_map_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2791,11 +2705,7 @@ def _kg_entity_map_update_values() -> str:
         f"({_sql_quote(l)}, {_sql_quote(s)}, {_sql_quote(c)}, {_sql_quote(st)})"
         for l, s, c, st in out
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(label, surface, canonical, status)"
-    )
+    return _values_sql(rows, "t(label, surface, canonical, status)")
 
 
 def q_kg_entity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2806,9 +2716,8 @@ def q_kg_entity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline/graph_algo.entity_similarity)."""
     from cypher_guard_spark.pipeline.graph_algo import entity_similarity
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return entity_similarity(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         threshold=0.2,
     )
 
@@ -2820,43 +2729,24 @@ def q_kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank)."""
     from cypher_guard_spark.pipeline.graph_algo import label_propagation
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return label_propagation(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         iters=5,
     )
 
 
 def _kg_communities_values(iters: int = 5) -> str:
-    """Pure-Python twin of pipeline.graph_algo.label_propagation over the
-    canonical-triple edge set: undirected distinct adjacency, synchronous
-    rounds, argmax neighbor label with min-label tie-break."""
-    from collections import defaultdict
+    """`py_label_propagation`, the serial twin of
+    pipeline.graph_algo.label_propagation, over the canonical-triple
+    edges."""
+    from cypher_guard_spark.pipeline.graph_algo import py_label_propagation
 
-    adj: defaultdict = defaultdict(set)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        adj[s].add(o)
-        adj[o].add(s)
-    labels = {v: v for v in adj}
-    for _ in range(iters):
-        new = {}
-        for v, nbrs in adj.items():
-            counts: defaultdict = defaultdict(int)
-            for nb in nbrs:
-                counts[labels[nb]] += 1
-            new[v] = min(
-                counts, key=lambda lbl: (-counts[lbl], lbl)
-            )
-        labels = new
     rows = [
-        f"({_sql_quote(v)}, {_sql_quote(c)})" for v, c in labels.items()
+        f"({_sql_quote(v)}, {_sql_quote(c)})"
+        for v, c in py_label_propagation(_kg_edges(), iters).items()
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, community)"
-    )
+    return _values_sql(rows, "t(entity, community)")
 
 
 def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2869,8 +2759,7 @@ def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         modularity,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir).localCheckpoint(eager=False)
-    e = canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+    e = _kg_edge_frame(spark, sf_dir).localCheckpoint(eager=False)
     com = label_propagation(spark, e, iters=5)
     return modularity(e, com)
 
@@ -2880,23 +2769,10 @@ def _kg_modularity_values(iters: int = 5) -> str:
     single-division Q over the a<b distinct undirected edge set."""
     from collections import defaultdict
 
-    und = set()
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            und.add((min(s, o), max(s, o)))
-    adj: defaultdict = defaultdict(set)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        adj[s].add(o)
-        adj[o].add(s)
-    labels = {v: v for v in adj}
-    for _ in range(iters):
-        new = {}
-        for v, nbrs in adj.items():
-            counts: defaultdict = defaultdict(int)
-            for nb in nbrs:
-                counts[labels[nb]] += 1
-            new[v] = min(counts, key=lambda lbl: (-counts[lbl], lbl))
-        labels = new
+    from cypher_guard_spark.pipeline.graph_algo import py_label_propagation
+
+    und = _kg_und_pairs()
+    labels = py_label_propagation(_kg_edges(), iters)
     m = len(und)
     sum_ec = sum(1 for a, b in und if labels[a] == labels[b])
     deg: defaultdict = defaultdict(int)
@@ -2928,8 +2804,7 @@ def q_kg_community_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         label_propagation,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir).localCheckpoint(eager=False)
-    e = canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+    e = _kg_edge_frame(spark, sf_dir).localCheckpoint(eager=False)
     com = label_propagation(spark, e, iters=5)
     return community_quality(e, com)
 
@@ -3062,10 +2937,7 @@ def q_kg_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline publishes so drift shows up as a diff of two tiny rows."""
     from cypher_guard_spark.pipeline.graph_algo import graph_profile
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
-    return graph_profile(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
+    return graph_profile(_kg_edge_frame(spark, sf_dir))
 
 
 def _kg_graph_profile_values() -> str:
@@ -3082,7 +2954,7 @@ def _kg_graph_profile_values() -> str:
         else:
             e.add((s, o))
     verts = {u for u, _v in e} | {v for _u, v in e}
-    und = {(min(u, v), max(u, v)) for u, v in e}
+    und = _kg_und_pairs()
     outdeg: defaultdict = defaultdict(int)
     indeg: defaultdict = defaultdict(int)
     for u, v in e:
@@ -3116,25 +2988,20 @@ def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     at least one mutual neighbor survive — the noise-edge stripper."""
     from cypher_guard_spark.pipeline.graph_algo import k_truss
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return k_truss(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
     )
 
 
 def _kg_ktruss_values(k: int = 3) -> str:
     """Serial peeling twin over the canonical a<b distinct edge set."""
-    und = set()
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            und.add((min(s, o), max(s, o)))
+    from cypher_guard_spark.pipeline.graph_algo import _py_und_adjacency
+
+    und = _kg_und_pairs()
     while True:
-        adj: dict = {}
-        for a, b in und:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
+        adj = _py_und_adjacency(und)
         keep = {
             (a, b) for a, b in und if len(adj[a] & adj[b]) >= k - 2
         }
@@ -3146,7 +3013,7 @@ def _kg_ktruss_values(k: int = 3) -> str:
         return (
             "SELECT * FROM (VALUES ('', '')) AS t(a, b) WHERE 1 = 0"
         )
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(a, b)"
+    return _values_sql(rows, "t(a, b)")
 
 
 def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3158,10 +3025,9 @@ def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         strongly_connected_components,
     )
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return strongly_connected_components(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
     )
 
 
@@ -3228,9 +3094,7 @@ def _kg_scc_values() -> str:
     rows = [
         f"({_sql_quote(v)}, {_sql_quote(c)})" for v, c in out.items()
     ]
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, scc_id)"
-    )
+    return _values_sql(rows, "t(entity, scc_id)")
 
 
 def q_kg_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3239,10 +3103,7 @@ def q_kg_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over edge endpoint degrees, the hub-mixing health number."""
     from cypher_guard_spark.pipeline.graph_algo import assortativity
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
-    return assortativity(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
+    return assortativity(_kg_edge_frame(spark, sf_dir))
 
 
 def _kg_assortativity_values() -> str:
@@ -3250,10 +3111,7 @@ def _kg_assortativity_values() -> str:
     single division."""
     from collections import defaultdict
 
-    und = set()
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s != o:
-            und.add((min(s, o), max(s, o)))
+    und = _kg_und_pairs()
     deg: defaultdict = defaultdict(int)
     for a, b in und:
         deg[a] += 1
@@ -3278,21 +3136,22 @@ def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard clustering-structure report, exact integer output."""
     from cypher_guard_spark.pipeline.graph_algo import triangle_count
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
-    return triangle_count(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
+    return triangle_count(_kg_edge_frame(spark, sf_dir))
 
 
 def _kg_und_adj() -> dict:
-    """Undirected distinct adjacency of the canonical-triple twin."""
-    adj: dict = {}
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        if s == o:
-            continue
-        adj.setdefault(s, set()).add(o)
-        adj.setdefault(o, set()).add(s)
-    return adj
+    """Loop-free undirected distinct adjacency of the canonical-triple
+    twin, in first-seen order."""
+    from cypher_guard_spark.pipeline.graph_algo import _py_und_adjacency
+
+    return _py_und_adjacency((s, o) for s, o in _kg_edges() if s != o)
+
+
+def _kg_hub_twin() -> str:
+    """`_kg_hub`'s seed: the max-degree entity of `_kg_und_adj`, ties to
+    the smallest name."""
+    adj = _kg_und_adj()
+    return min(adj, key=lambda v: (-len(adj[v]), v))
 
 
 def _kg_triangles_values() -> str:
@@ -3305,11 +3164,7 @@ def _kg_triangles_values() -> str:
                 if a < b and b in adj.get(a, ()):  # wedge at v closed by (a,b)
                     counts[v] += 1
     rows = [f"({_sql_quote(v)}, {c})" for v, c in counts.items()]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, n_triangles)"
-    )
+    return _values_sql(rows, "t(entity, n_triangles)")
 
 
 def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3319,10 +3174,7 @@ def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     community-tightness score on top of the triangle kernel."""
     from cypher_guard_spark.pipeline.graph_algo import clustering_coefficient
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
-    return clustering_coefficient(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
+    return clustering_coefficient(_kg_edge_frame(spark, sf_dir))
 
 
 def _kg_clustering_values() -> str:
@@ -3340,11 +3192,7 @@ def _kg_clustering_values() -> str:
         deg = len(nbrs)
         cc = round6(2.0 * t / (deg * (deg - 1))) if deg >= 2 else 0.0
         rows.append(f"({_sql_quote(v)}, {deg}, {t}, {cc!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, deg, n_triangles, cc)"
-    )
+    return _values_sql(rows, "t(entity, deg, n_triangles, cc)")
 
 
 def q_kg_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3354,22 +3202,8 @@ def q_kg_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard connectivity-radius QA view."""
     from cypher_guard_spark.pipeline.graph_algo import bfs_depths
 
-    canon = q_kg_canonical_triples(spark, sf_dir).localCheckpoint(eager=False)
-    e = canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    und = (
-        e.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(e.select(F.col("dst").alias("entity"), F.col("src").alias("nbr")))
-        .where(F.col("entity") != F.col("nbr"))
-        .distinct()
-    )
-    hub = (
-        und.groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("entity").asc())
-        .limit(1)  # 1-row driver scalar: the seed choice, not graph data
-        .select("entity")
-    )
-    return bfs_depths(spark, e, hub, max_depth=6)
+    e = _kg_edge_frame(spark, sf_dir).localCheckpoint(eager=False)
+    return bfs_depths(spark, e, _kg_hub(e), max_depth=6)
 
 
 def _kg_bfs_depths_values(max_depth: int = 6) -> str:
@@ -3377,7 +3211,7 @@ def _kg_bfs_depths_values(max_depth: int = 6) -> str:
     from collections import deque
 
     adj = _kg_und_adj()
-    hub = min(adj, key=lambda v: (-len(adj[v]), v))
+    hub = _kg_hub_twin()
     depth = {hub: 0}
     q = deque([hub])
     while q:
@@ -3389,9 +3223,7 @@ def _kg_bfs_depths_values(max_depth: int = 6) -> str:
                 depth[nb] = depth[v] + 1
                 q.append(nb)
     rows = [f"({_sql_quote(v)}, {d})" for v, d in depth.items()]
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, depth)"
-    )
+    return _values_sql(rows, "t(entity, depth)")
 
 
 def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3400,10 +3232,9 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-1 tendrils, with each survivor's in-core degree."""
     from cypher_guard_spark.pipeline.graph_algo import k_core
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return k_core(
         spark,
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=2,
     )
 
@@ -3415,11 +3246,7 @@ def _kg_kcore_values(k: int = 2) -> str:
     rows = [f"({_sql_quote(v)}, {deg})" for v, deg in py_k_core(_kg_edges(), k)]
     if not rows:
         return "SELECT * FROM (VALUES (NULL, NULL)) AS t(entity, core_degree) WHERE FALSE"
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, core_degree)"
-    )
+    return _values_sql(rows, "t(entity, core_degree)")
 
 
 def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3428,22 +3255,8 @@ def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity to the hub (exact sorted-fold mode for the oracle gate)."""
     from cypher_guard_spark.pipeline.graph_algo import pagerank
 
-    canon = q_kg_canonical_triples(spark, sf_dir).localCheckpoint(eager=False)
-    e = canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    und = (
-        e.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(e.select(F.col("dst").alias("entity"), F.col("src").alias("nbr")))
-        .where(F.col("entity") != F.col("nbr"))
-        .distinct()
-    )
-    hub = (
-        und.groupBy("entity")
-        .agg(F.count("*").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("entity").asc())
-        .limit(1)
-        .select("entity")
-    )
-    return pagerank(spark, e, iters=3, exact=True, seeds=hub)
+    e = _kg_edge_frame(spark, sf_dir).localCheckpoint(eager=False)
+    return pagerank(spark, e, iters=3, exact=True, seeds=_kg_hub(e))
 
 
 def _kg_ppr_values(iters: int = 3, damping: float = 0.85) -> str:
@@ -3453,15 +3266,11 @@ def _kg_ppr_values(iters: int = 3, damping: float = 0.85) -> str:
     hub, value-sorted folds, 6dp half-up rounding."""
     from cypher_guard_spark.pipeline.graph_algo import py_pagerank
 
-    adj = _kg_und_adj()
-    hub = min(adj, key=lambda v: (-len(adj[v]), v))
     rank = py_pagerank(
-        [(s, o, 1.0) for s, o in _kg_edges()], iters, damping, seeds=[hub]
+        [(s, o, 1.0) for s, o in _kg_edges()], iters, damping, seeds=[_kg_hub_twin()]
     )
     rows = [f"({_sql_quote(v)}, {r!r})" for v, r in rank.items()]
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
-    )
+    return _values_sql(rows, "t(entity, rank)")
 
 
 def q_kg_entity_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3492,11 +3301,7 @@ def _kg_entity_map_values() -> str:
         f"({_sql_quote(l)}, {_sql_quote(s)}, {_sql_quote(c)})"
         for (l, s), c in _py_entity_map(_py_kg_mention_counts()).items()
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(label, surface, canonical)"
-    )
+    return _values_sql(rows, "t(label, surface, canonical)")
 
 
 def q_kg_blocking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3526,15 +3331,11 @@ def _kg_blocking_report_values(num_hashes: int = 16, bands: int = 8) -> str:
     vocabulary."""
     from cypher_guard_spark.pipeline.canonicalize import py_blocking_report
 
-    vals = ", ".join(
+    rows = [
         f"({s}::BIGINT, {nb}::BIGINT, {cr}::BIGINT)"
         for s, nb, cr in py_blocking_report(_py_kg_mention_counts(), num_hashes, bands)
-    )
-    return (
-        "SELECT * FROM (VALUES "
-        + vals
-        + ") AS t(block_size, n_blocks, candidate_rows)"
-    )
+    ]
+    return _values_sql(rows, "t(block_size, n_blocks, candidate_rows)")
 
 
 def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3572,9 +3373,7 @@ def _kg_components_values() -> str:
     for members in components(edges, sorted({v for e in edges for v in e})):
         cid = min(spark_xxhash64("E", m) for m in members)
         rows.extend(f"({_sql_quote(m)}, {cid})" for m in members)
-    return (
-        "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, comp)"
-    )
+    return _values_sql(rows, "t(entity, comp)")
 
 
 def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3583,9 +3382,8 @@ def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_neighbors`): the per-epoch fan-out a GNN trainer reads."""
     from cypher_guard_spark.pipeline.graph_algo import sample_neighbors
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return sample_neighbors(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         k=3,
         seed=0,
     )
@@ -3605,11 +3403,7 @@ def _kg_neighbor_sample_values(k: int = 3, seed: int = 0) -> str:
         )[:k]
         for i, (_h, nb) in enumerate(ranked, start=1):
             rows.append(f"({_sql_quote(ent)}, {_sql_quote(nb)}, {i})")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, nbr, rank)"
-    )
+    return _values_sql(rows, "t(entity, nbr, rank)")
 
 
 def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3619,9 +3413,8 @@ def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the KG-completion suggestion list."""
     from cypher_guard_spark.pipeline.graph_algo import link_prediction_ra
 
-    canon = q_kg_canonical_triples(spark, sf_dir)
     return link_prediction_ra(
-        canon.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        _kg_edge_frame(spark, sf_dir),
         min_shared=2,
         k=100,
         exact=True,  # oracle gate opts in; production default is exact=False
@@ -3631,6 +3424,8 @@ def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_link_prediction_values(min_shared: int = 2, k: int = 100) -> str:
     """Pure-Python twin: RA index over shared neighbors of non-adjacent
     pairs, value-sorted float64 fold, half-up 6dp rounding."""
+    from cypher_guard_spark.pipeline.graph_algo import py_fold_sum
+
     adj = _kg_und_adj()
     scores = {}
     ids = sorted(adj)
@@ -3641,10 +3436,8 @@ def _kg_link_prediction_values(min_shared: int = 2, k: int = 100) -> str:
             shared = adj[a] & adj[b]
             if len(shared) < min_shared:
                 continue
-            acc = 0.0
-            for wv in sorted(1.0 / len(adj[z]) for z in shared):
-                acc = acc + wv
-            scores[(a, b)] = (len(shared), round6(acc))
+            ra = py_fold_sum(1.0 / len(adj[z]) for z in shared)
+            scores[(a, b)] = (len(shared), round6(ra))
     top = sorted(scores.items(), key=lambda kv: (-kv[1][1], kv[0]))[:k]
     rows = [
         f"({_sql_quote(a)}, {_sql_quote(b)}, {n}, {ra!r})"
@@ -3655,11 +3448,7 @@ def _kg_link_prediction_values(min_shared: int = 2, k: int = 100) -> str:
             "SELECT * FROM (VALUES (NULL, NULL, NULL, NULL))"
             " AS t(a, b, n_shared, ra) WHERE FALSE"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(a, b, n_shared, ra)"
-    )
+    return _values_sql(rows, "t(a, b, n_shared, ra)")
 
 
 def q_corpus_curated_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3786,12 +3575,9 @@ def _kg_entity_similarity_values(threshold: float = 0.2) -> str:
     """Pure-Python twin of pipeline.graph_algo.entity_similarity over the
     canonical-triple edge set: distinct undirected adjacency, pairwise
     Jaccard (exact ints + one correctly-rounded division, HALF_UP 6dp)."""
-    from collections import defaultdict
+    from cypher_guard_spark.pipeline.graph_algo import _py_und_adjacency
 
-    adj: defaultdict = defaultdict(set)
-    for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples():
-        adj[s].add(o)
-        adj[o].add(s)
+    adj = _py_und_adjacency(_kg_edges())
     ents = sorted(adj)
     rows = []
     for i, a in enumerate(ents):
@@ -3804,11 +3590,7 @@ def _kg_entity_similarity_values(threshold: float = 0.2) -> str:
                 rows.append(
                     f"({_sql_quote(a)}, {_sql_quote(b)}, {inter}, {sim!r}::DOUBLE)"
                 )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(a, b, n_shared, sim)"
-    )
+    return _values_sql(rows, "t(a, b, n_shared, sim)")
 
 
 def _kg_pagerank_values(iters: int = 3, damping: float = 0.85) -> str:
@@ -3821,7 +3603,7 @@ def _kg_pagerank_values(iters: int = 3, damping: float = 0.85) -> str:
 
     rank = py_pagerank([(s, o, 1.0) for s, o in _kg_edges()], iters, damping)
     rows = [f"({_sql_quote(v)}, {r!r}::DOUBLE)" for v, r in rank.items()]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(entity, rank)"
+    return _values_sql(rows, "t(entity, rank)")
 
 
 def _py_kg_triples(n_docs: int = _KG_DOCS) -> list:
@@ -3875,12 +3657,28 @@ def _kg_edges() -> list:
     return [(s, o) for _d, s, _r, o, _sl, _ol in _py_kg_canonical_triples()]
 
 
+def _kg_und_pairs() -> set:
+    """The canonical-triple twin's distinct undirected edges (a, b),
+    a < b, self-loops dropped."""
+    return {(min(s, o), max(s, o)) for s, o in _kg_edges() if s != o}
+
+
+def _kg_evidence_weights() -> dict:
+    """{(u, v): w} in first-seen order — `_kg_evidence_pairs`' twin: w =
+    the distinct (doc_id, pred) assertions of the unordered pair u < v."""
+    ev: dict = {}
+    for d, s, r, o, _sl, _ol in _py_kg_canonical_triples():
+        if s != o:
+            ev.setdefault((min(s, o), max(s, o)), set()).add((d, r))
+    return {k: len(v) for k, v in ev.items()}
+
+
 def _kg_canonical_triples_values() -> str:
     rows = [
         f"({_sql_quote(d)}, {_sql_quote(s)}, {_sql_quote(r)}, {_sql_quote(o)})"
         for d, s, r, o, _sl, _ol in _py_kg_canonical_triples()
     ]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(doc_id, subj, pred, obj)"
+    return _values_sql(rows, "t(doc_id, subj, pred, obj)")
 
 
 def _kg_entity_degrees_values() -> str:
@@ -3897,11 +3695,7 @@ def _kg_entity_degrees_values() -> str:
         f"({_sql_quote(e)}, {_sql_quote(l)}, {n}, {len(nbrs[(e, l)])})"
         for (e, l), n in deg.items()
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(entity, label, degree, n_neighbors)"
-    )
+    return _values_sql(rows, "t(entity, label, degree, n_neighbors)")
 
 
 def _kg_triples_raw_values() -> str:
@@ -3910,7 +3704,7 @@ def _kg_triples_raw_values() -> str:
         f"({_sql_quote(d)}, {_sql_quote(s)}, {_sql_quote(r)}, {_sql_quote(o)})"
         for d, _i, s, r, o, _sl, _ol, _c in _py_kg_triples()
     ]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(doc_id, subj, pred, obj)"
+    return _values_sql(rows, "t(doc_id, subj, pred, obj)")
 
 
 # ---------------------------------------------------------------------------
@@ -3949,11 +3743,7 @@ def _doc_compression_values(level: int = 6) -> str:
             f"({doc_id}::BIGINT, {len(b)}::BIGINT, {c}::BIGINT, "
             f"{ratio!r}::DOUBLE)"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, raw_bytes, compressed_bytes, ratio)"
-    )
+    return _values_sql(rows, "t(doc_id, raw_bytes, compressed_bytes, ratio)")
 
 
 def _oracle_documents() -> list[tuple[int, str]]:
@@ -3963,6 +3753,17 @@ def _oracle_documents() -> list[tuple[int, str]]:
         str(Path(_oracle_sf_dir()) / "documents.parquet"), columns=["doc_id", "text"]
     )
     return list(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
+
+
+def _oracle_embeddings() -> dict:
+    """{vec_id: embedding} of the oracle dir's embeddings table."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        str(Path(_oracle_sf_dir()) / "embeddings.parquet"),
+        columns=["vec_id", "embedding"],
+    )
+    return dict(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()))
 
 
 def _py_bpe_train(
@@ -3988,11 +3789,7 @@ def _corpus_bpe_merges_values() -> str:
             ' \'\' AS "right", CAST(NULL AS BIGINT) AS pair_count WHERE 1=0'
         )
     # left/right are reserved words in DuckDB — quote the aliases
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ') AS t(merge_rank, "left", "right", pair_count)'
-    )
+    return _values_sql(rows, 't(merge_rank, "left", "right", pair_count)')
 
 
 def _doc_bpe_tokens_values() -> str:
@@ -4015,23 +3812,7 @@ def _doc_bpe_tokens_values() -> str:
                 got = memo[w] = len(bpe_word(w, ranks))
             n_sub += got
         rows.append(f"({doc_id}, {len(ws)}, {n_sub})")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, n_words, n_subwords)"
-    )
-
-
-def _sorted_fold_sum(values) -> float:
-    """Sequential left-fold over VALUE-SORTED doubles — the exact twin of
-    the engine's `aggregate(array_sort(collect_list(x)), 0.0, +)` trainer
-    mean (ops/similarity.py kmeans_centroids): both sides sum the same
-    multiset in the same canonical order, so the IEEE754 result is
-    bit-identical regardless of row/partition order."""
-    acc = 0.0
-    for v in sorted(values):
-        acc += v
-    return acc
+    return _values_sql(rows, "t(doc_id, n_words, n_subwords)")
 
 
 def _py_minhash_pairs(
@@ -4139,11 +3920,7 @@ def _doc_neardup_incremental_values(threshold: float = 0.3) -> str:
             "SELECT * FROM (VALUES (NULL, NULL, NULL))"
             " AS t(new_id, old_id, sim) WHERE FALSE"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(new_id, old_id, sim)"
-    )
+    return _values_sql(rows, "t(new_id, old_id, sim)")
 
 
 def _doc_minhash_values(
@@ -4153,7 +3930,7 @@ def _doc_minhash_values(
         f"({a}, {b}, {sim!r}::DOUBLE)"
         for a, b, sim in _py_minhash_pairs(n, num_hashes, bands, threshold)
     ]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(a, b, sim)"
+    return _values_sql(rows, "t(a, b, sim)")
 
 
 def _doc_neardup_survivors_sql(threshold: float = 0.3) -> str:
@@ -4189,11 +3966,7 @@ def _doc_neardup_clusters_values(threshold: float = 0.3) -> str:
         f"({d}, {c}, {sizes[c]}, {1 if d == c else 0})"
         for d, c in sorted(assignment.items())
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, cluster_id, cluster_size, is_canonical)"
-    )
+    return _values_sql(rows, "t(doc_id, cluster_id, cluster_size, is_canonical)")
 
 
 def _doc_leakage_split_values(
@@ -4210,11 +3983,7 @@ def _doc_leakage_split_values(
         h = int(hashlib.md5(str(cid).encode()).hexdigest()[:15], 16) % 100
         side = "eval" if h < eval_pct else "train"
         rows.append(f"({doc_id}, {cid}, '{side}')")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, cluster_id, split)"
-    )
+    return _values_sql(rows, "t(doc_id, cluster_id, split)")
 
 
 
@@ -4257,7 +4026,7 @@ def _doc_fuzzy_decontam_values(
             "SELECT * FROM (VALUES (0, 0, 0.0::DOUBLE)) "
             "AS t(doc_id, bench_id, sim) WHERE 1 = 0"
         )
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(doc_id, bench_id, sim)"
+    return _values_sql(rows, "t(doc_id, bench_id, sim)")
 
 
 _SAMPLE_FRACTIONS = {0: 1.0, 1: 0.5, 2: 0.25, 3: 0.125}
@@ -4331,17 +4100,9 @@ def _emb_projected_values(out_dim: int = 8, seed: int = 0) -> str:
     """Pure-Python twin of ops.similarity.project_embeddings: identical
     sign matrix (shared `jl_signs` derivation), identical index-order
     fold in float64, identical half-up 6dp rounding."""
-    import pyarrow.parquet as pq
-
     from cypher_guard_spark.ops.similarity import jl_signs
 
-    t = pq.read_table(
-        str(Path(_oracle_sf_dir()) / "embeddings.parquet"),
-        columns=["vec_id", "embedding"],
-    )
-    vecs = dict(
-        zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist())
-    )
+    vecs = _oracle_embeddings()
     d = len(next(iter(vecs.values())))
     signs = jl_signs(d, out_dim, seed)
     rows = []
@@ -4352,11 +4113,7 @@ def _emb_projected_values(out_dim: int = 8, seed: int = 0) -> str:
             for i in range(d):
                 acc = acc + float(x[i]) * signs[i][j]
             rows.append(f"({vid}, {j}, {round6(acc)!r})")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(vec_id, dim, value)"
-    )
+    return _values_sql(rows, "t(vec_id, dim, value)")
 
 
 def _doc_dsir_sql(buckets: int = 4096, mod: int = 23) -> str:
@@ -4439,7 +4196,7 @@ def _doc_stratified_sample_values() -> str:
         h = spark_xxhash64(doc_id, int_widths=("long",)) % SAMPLE_DENOM
         if h < thr:
             rows.append(f"({doc_id}, {stratum})")
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(doc_id, stratum)"
+    return _values_sql(rows, "t(doc_id, stratum)")
 
 
 def _doc_pack_shards_values(n_shards: int = 4) -> str:
@@ -4472,11 +4229,7 @@ def _doc_balanced_sample_values(k: int = 25) -> str:
     for stratum, entries in strata.items():
         for rnk, (_h, doc_id) in enumerate(sorted(entries)[:k], start=1):
             rows.append(f"({doc_id}, {stratum}, {rnk})")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, stratum, rnk)"
-    )
+    return _values_sql(rows, "t(doc_id, stratum, rnk)")
 
 
 def _doc_simhash_values(bands: int = 4, max_hamming: int = 12) -> str:
@@ -4511,29 +4264,39 @@ def _doc_simhash_values(bands: int = 4, max_hamming: int = 12) -> str:
         hamming = ((sh[a] ^ sh[b])).bit_count()
         if hamming <= max_hamming:
             rows.append(f"({a}, {b}, {hamming})")
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(a, b, hamming)"
+    return _values_sql(rows, "t(a, b, hamming)")
 
 
-def _py_dist2(a, b) -> float:
-    acc = 0.0
+def _py_cosine(a, b) -> float:
+    """6dp-rounded cosine of two vectors, folded in array order like the
+    engine's `cosine`."""
+    import math
+
+    dot = na = nb = 0.0
     for x, y in zip(a, b):
-        acc += (x - y) * (x - y)
-    return acc
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return round6(dot / (math.sqrt(na) * math.sqrt(nb)))
 
 
 def _py_lloyd_assign(vecs: dict, n_centroids: int, iters: int):
     """Pure-Python twin of ops.similarity.kmeans_centroids + _assign:
     fixed init (vectors of the k smallest ids, 6dp-rounded), exactly
     `iters` update rounds, assignment key (6dp-rounded L2², centroid_id),
-    value-sorted sequential-fold trainer mean — bit-identical to the
-    engine on every double. Returns (centers, assignment) dicts."""
+    value-sorted sequential-fold trainer mean (`py_fold_sum`) —
+    bit-identical to the engine on every double. Returns (centers,
+    assignment) dicts."""
+    from cypher_guard_spark.ops.similarity import _py_sub_dist2
+    from cypher_guard_spark.pipeline.graph_algo import py_fold_sum
+
     centers = {
         cid: [round6(x) for x in vecs[vid]]
         for cid, vid in enumerate(sorted(vecs)[:n_centroids])
     }
     for _ in range(iters):
         assign = {
-            vid: min((round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
+            vid: min((round6(_py_sub_dist2(v, 0, centers[c])), c) for c in centers)[1]
             for vid, v in vecs.items()
         }
         new_centers = {}
@@ -4542,14 +4305,14 @@ def _py_lloyd_assign(vecs: dict, n_centroids: int, iters: int):
             if members:
                 dims = len(members[0])
                 new_centers[c] = [
-                    round6(_sorted_fold_sum(m[d] for m in members) / len(members))
+                    round6(py_fold_sum(m[d] for m in members) / len(members))
                     for d in range(dims)
                 ]
             else:
                 new_centers[c] = centers[c]
         centers = new_centers
     assign = {
-        vid: min((round6(_py_dist2(v, centers[c])), c) for c in centers)[1]
+        vid: min((round6(_py_sub_dist2(v, 0, centers[c])), c) for c in centers)[1]
         for vid, v in vecs.items()
     }
     return centers, assign
@@ -4560,15 +4323,7 @@ def _py_pq_codebooks(m: int = 4, k: int = 16, iters: int = 2) -> tuple:
     slice every embedding into m subvectors and run the shared Lloyd twin
     per slice (the engine trains all m in one tagged loop; the math per
     subspace is identical)."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        str(Path(_oracle_sf_dir()) / "embeddings.parquet"),
-        columns=["vec_id", "embedding"],
-    )
-    vecs = dict(
-        zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist())
-    )
+    vecs = _oracle_embeddings()
     dim = len(next(iter(vecs.values())))
     d_m = dim // m
     out = {}
@@ -4581,6 +4336,18 @@ def _py_pq_codebooks(m: int = 4, k: int = 16, iters: int = 2) -> tuple:
     return out, vecs, d_m
 
 
+def _py_adc(qv: list, books: dict, vid, d_m: int) -> float:
+    """ADC twin: dist² of each query subvector to `vid`'s code center
+    (the `_dist2` fold order), summed in subspace order, one final 6dp
+    rounding."""
+    from cypher_guard_spark.ops.similarity import _py_sub_dist2
+
+    acc = 0.0
+    for s, (centers, assign) in books.items():
+        acc += _py_sub_dist2(qv, s * d_m, centers[assign[vid]])
+    return round6(acc)
+
+
 def _emb_pq_codebooks_values(m: int = 4, k: int = 16, iters: int = 2) -> str:
     books, _vecs, _dm = _py_pq_codebooks(m, k, iters)
     rows = []
@@ -4588,42 +4355,22 @@ def _emb_pq_codebooks_values(m: int = 4, k: int = 16, iters: int = 2) -> str:
         for cid, center in centers.items():
             for d, x in enumerate(center):
                 rows.append(f"({s}, {cid}, {d}, {x!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(subspace, centroid_id, dim, cx)"
-    )
+    return _values_sql(rows, "t(subspace, centroid_id, dim, cx)")
 
 
 def _emb_pq_topk_values(
     m: int = 4, k_codes: int = 16, iters: int = 2, k: int = 5
 ) -> str:
-    """ADC twin: LUT per (query, subspace, code) with the _dist2 fold
-    order, approx distance summed in subspace order, one final 6dp
-    rounding, (adist, neighbor) rank order."""
+    """ADC twin: `_py_adc` of every vector per query, (adist, neighbor)
+    rank order."""
     books, vecs, d_m = _py_pq_codebooks(m, k_codes, iters)
     rows = []
     for qid in sorted(v for v in vecs if v < 5):
         qv = [float(x) for x in vecs[qid]]
-        scored = []
-        for vid in vecs:
-            acc = 0.0
-            for s in range(m):
-                centers, assign = books[s]
-                c = centers[assign[vid]]
-                sacc = 0.0
-                for i, cx in enumerate(c):
-                    dd = qv[s * d_m + i] - cx
-                    sacc += dd * dd
-                acc += sacc
-            scored.append((round6(acc), vid))
+        scored = [(_py_adc(qv, books, vid, d_m), vid) for vid in vecs]
         for rank, (d, vid) in enumerate(sorted(scored)[:k], start=1):
             rows.append(f"({qid}, {vid}, {rank}, {d!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(query_id, neighbor_id, rank, adist)"
-    )
+    return _values_sql(rows, "t(query_id, neighbor_id, rank, adist)")
 
 
 def _emb_ivfpq_values(
@@ -4636,7 +4383,9 @@ def _emb_ivfpq_values(
 ) -> str:
     """IVF-PQ twin: coarse Lloyd twin for cells + per-subspace PQ twin for
     codes (both shared helpers), python-round probe selection mirroring
-    the operator's driver-side code, ADC fold in subspace order."""
+    the operator's driver-side code, `_py_adc` in subspace order."""
+    from cypher_guard_spark.ops.similarity import _py_sub_dist2
+
     books, vecs, d_m = _py_pq_codebooks(m, pq_k, iters)
     centers, assign = _py_lloyd_assign(vecs, n_centroids, iters)
     rows = []
@@ -4645,30 +4394,17 @@ def _emb_ivfpq_values(
         probed = {
             c
             for _d, c in sorted(
-                (round(_py_dist2(qv, centers[c]), 6), c) for c in centers
+                (round(_py_sub_dist2(qv, 0, centers[c]), 6), c) for c in centers
             )[:nprobe]
         }
-        scored = []
-        for vid in vecs:
-            if vid == qid or assign[vid] not in probed:
-                continue
-            acc = 0.0
-            for s in range(m):
-                scenters, sassign = books[s]
-                c = scenters[sassign[vid]]
-                sacc = 0.0
-                for i, cx in enumerate(c):
-                    dd = qv[s * d_m + i] - cx
-                    sacc += dd * dd
-                acc += sacc
-            scored.append((round6(acc), vid))
+        scored = [
+            (_py_adc(qv, books, vid, d_m), vid)
+            for vid in vecs
+            if vid != qid and assign[vid] in probed
+        ]
         for rank, (d, vid) in enumerate(sorted(scored)[:k], start=1):
             rows.append(f"({qid}, {vid}, {rank}, {d!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(query_id, neighbor_id, rank, adist)"
-    )
+    return _values_sql(rows, "t(query_id, neighbor_id, rank, adist)")
 
 
 def _emb_semdedup_values(
@@ -4677,17 +4413,9 @@ def _emb_semdedup_values(
     """Pure-Python twin of ops.dedup.semantic_duplicates (SemDeDup):
     deterministic Lloyd clustering (shared twin `_py_lloyd_assign`), then
     within-cluster pairs with 6dp-rounded cosine ≥ threshold. The cosine
-    fold runs in array order on both engines, so the doubles are
-    bit-identical."""
-    import math
-
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        str(Path(_oracle_sf_dir()) / "embeddings.parquet"),
-        columns=["vec_id", "embedding"],
-    )
-    vecs = dict(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()))
+    fold runs in array order on both engines (`_py_cosine`), so the
+    doubles are bit-identical."""
+    vecs = _oracle_embeddings()
     _, assign = _py_lloyd_assign(vecs, n_clusters, iters)
     rows = []
     ids = sorted(vecs)
@@ -4695,12 +4423,7 @@ def _emb_semdedup_values(
         for b in ids[i + 1:]:
             if assign[a] != assign[b]:
                 continue
-            dot = na = nb = 0.0
-            for x, y in zip(vecs[a], vecs[b]):
-                dot += x * y
-                na += x * x
-                nb += y * y
-            sim = round6(dot / (math.sqrt(na) * math.sqrt(nb)))
+            sim = _py_cosine(vecs[a], vecs[b])
             if sim >= threshold:
                 rows.append(f"({a}, {b}, {assign[a]}, {sim!r}::DOUBLE)")
     if not rows:
@@ -4708,11 +4431,7 @@ def _emb_semdedup_values(
             "SELECT * FROM (VALUES (0, 0, 0, 0.0::DOUBLE)) "
             "AS t(a, b, centroid_id, sim) WHERE 1 = 0"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(a, b, centroid_id, sim)"
-    )
+    return _values_sql(rows, "t(a, b, centroid_id, sim)")
 
 
 def _emb_ivf_values(
@@ -4724,46 +4443,26 @@ def _emb_ivf_values(
     trainer mean is a VALUE-SORTED sequential fold on both sides (so the
     sum depends on the value multiset only, never on row/partition order)
     — the doubles are bit-identical."""
-    import math
+    from cypher_guard_spark.ops.similarity import _py_sub_dist2
 
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        str(Path(_oracle_sf_dir()) / "embeddings.parquet"),
-        columns=["vec_id", "embedding"],
-    )
-    vecs = dict(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()))
+    vecs = _oracle_embeddings()
     centers, assign = _py_lloyd_assign(vecs, n_centroids, iters)
-
-    def dist2(a, b):
-        return _py_dist2(a, b)
-
     rows = []
     for qid in sorted(v for v in vecs if v < 5):
         probed = {
             c
             for _, c in sorted(
-                (round6(dist2(vecs[qid], centers[c])), c) for c in centers
+                (round6(_py_sub_dist2(vecs[qid], 0, centers[c])), c) for c in centers
             )[:nprobe]
         }
-        scored = []
-        for nid, nv in vecs.items():
-            if nid == qid or assign[nid] not in probed:
-                continue
-            dot = na = nb = 0.0
-            for x, y in zip(vecs[qid], nv):
-                dot += x * y
-                na += x * x
-                nb += y * y
-            scored.append((-round6(dot / (math.sqrt(na) * math.sqrt(nb))), nid))
-        scored.sort()
+        scored = sorted(
+            (-_py_cosine(vecs[qid], nv), nid)
+            for nid, nv in vecs.items()
+            if nid != qid and assign[nid] in probed
+        )
         for rank, (negsim, nid) in enumerate(scored[:k], 1):
             rows.append(f"({qid}, {nid}, {rank}, {-negsim!r}::DOUBLE)")
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(query_id, neighbor_id, rank, sim)"
-    )
+    return _values_sql(rows, "t(query_id, neighbor_id, rank, sim)")
 
 
 # ---------------------------------------------------------------------------
@@ -4831,11 +4530,7 @@ def _media_phash_dups_values(max_dist: int = 3) -> str:
                 rows.append(
                     f"({_sql_quote(ida)}, {_sql_quote(idb)}, {d})"
                 )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(media_id_a, media_id_b, dist)"
-    )
+    return _values_sql(rows, "t(media_id_a, media_id_b, dist)")
 
 
 def q_media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4873,11 +4568,7 @@ def _media_features_values() -> str:
         rows.append(
             f"({_sql_quote(media_id)}, {_sql_quote(kind)}, {len(payload)}, {_sql_quote(csv)})"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(media_id, kind, n_bytes, feature_csv)"
-    )
+    return _values_sql(rows, "t(media_id, kind, n_bytes, feature_csv)")
 
 
 def _media_resize_values() -> str:
@@ -4888,11 +4579,7 @@ def _media_resize_values() -> str:
         for mid, kind, payload, _ in _media_rows()
         if kind == "image"
     ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(media_id, out_w, out_h, pixel_digest)"
-    )
+    return _values_sql(rows, "t(media_id, out_w, out_h, pixel_digest)")
 
 
 def _media_frame_plan_sql() -> str:

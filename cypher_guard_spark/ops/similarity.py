@@ -25,6 +25,10 @@ Each building block has one copy, shared by the kernels above:
 - `_subvectors`, `_vector_codes` and `_adc_lut`: the PQ subspace split,
   per-vector code arrays and driver-side lookup tables;
 - `_labeled_knn`: the exact kNN with query and neighbor labels.
+
+The driver-sized trained structures are collected once per search:
+`_collect_centroids` and `_collect_codebooks` feed their list / dict to
+`_base_cells`, `_pq_codes` and `_vector_codes` instead of the DataFrame.
 """
 
 from __future__ import annotations
@@ -289,15 +293,17 @@ def kmeans_centroids(
 
 
 def _base_cells(
-    embeddings: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+    embeddings: DataFrame, centers: list, id_col: str, vec_col: str
 ) -> DataFrame:
     """(neighbor_id, nvec, centroid_id): every base vector in its nearest
-    cell."""
+    cell of the `_collect_centroids` list `centers` (the `_assign` rule)."""
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), _to_double(vec_col).alias("v")
     )
-    return _assign(vecs, centroids).select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("nvec"), "centroid_id"
+    return vecs.select(
+        F.col("vid").alias("neighbor_id"),
+        F.col("v").alias("nvec"),
+        _argmin_cid(centers).alias("centroid_id"),
     )
 
 
@@ -355,7 +361,7 @@ def ivf_topk(
         centroids = kmeans_centroids(
             embeddings, n_centroids, iters, id_col, vec_col, train_fraction
         ).localCheckpoint(eager=False)
-    base = _base_cells(embeddings, centroids, id_col, vec_col)
+    base = _base_cells(embeddings, _collect_centroids(centroids), id_col, vec_col)
     probes = _ivf_probes(queries, centroids, nprobe, id_col, vec_col)
     return _cosine_topk(F.broadcast(probes).join(base, "centroid_id"), k)
 
@@ -387,7 +393,7 @@ def write_ivf_index(
         centroids = kmeans_centroids(
             embeddings, n_centroids, iters, id_col, vec_col, train_fraction
         ).localCheckpoint(eager=False)
-    base = _base_cells(embeddings, centroids, id_col, vec_col)
+    base = _base_cells(embeddings, _collect_centroids(centroids), id_col, vec_col)
     base.repartition("centroid_id").write.partitionBy("centroid_id").mode(
         "overwrite"
     ).parquet(f"{path}/base")
@@ -675,7 +681,11 @@ def pq_encode(
     (zero exchanges — the same plan shape as the literal-centroid IVF
     assignment), exploded to scalar rows. The codes table is the at-rest
     compressed index ADC search scans instead of the float vectors."""
-    cb = _collect_codebooks(codebooks)
+    return _pq_codes(embeddings, _collect_codebooks(codebooks), id_col, vec_col)
+
+
+def _pq_codes(embeddings: DataFrame, cb: dict, id_col: str, vec_col: str) -> DataFrame:
+    """`pq_encode` against the `_collect_codebooks` dict `cb`."""
     vecs = embeddings.select(
         F.col(id_col).alias("vec_id"), _to_double(vec_col).alias("fv")
     )
@@ -687,12 +697,12 @@ def pq_encode(
 
 
 def _vector_codes(
-    embeddings: DataFrame, codebooks: DataFrame, id_col: str, vec_col: str
+    embeddings: DataFrame, cb: dict, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(vec_id, codes): each vector's PQ codes as one array in subspace
-    order."""
+    """(vec_id, codes): each vector's PQ codes against the
+    `_collect_codebooks` dict `cb`, as one array in subspace order."""
     return (
-        pq_encode(embeddings, codebooks, id_col, vec_col)
+        _pq_codes(embeddings, cb, id_col, vec_col)
         .groupBy("vec_id")
         .agg(
             F.transform(
@@ -762,7 +772,7 @@ def pq_topk(
     (adist asc, neighbor asc) rank window. Exact twin: lookups are exact,
     the sum runs in subspace order, one final 6dp rounding."""
     cb = _collect_codebooks(codebooks)
-    codes = _vector_codes(embeddings, codebooks, id_col, vec_col)
+    codes = _vector_codes(embeddings, cb, id_col, vec_col)
     qrows = queries.select(query_id_col, query_vec_col).collect()
     if not qrows:
         return embeddings.sparkSession.createDataFrame([], _ADC_SCHEMA)
@@ -840,11 +850,11 @@ def ivfpq_topk(
         )
     cb = _collect_codebooks(codebooks)
     cents = _collect_centroids(centroids)
-    cells = _base_cells(embeddings, centroids, id_col, vec_col).select(
+    cells = _base_cells(embeddings, cents, id_col, vec_col).select(
         "neighbor_id", "centroid_id"
     )
     codes = (
-        _vector_codes(embeddings, codebooks, id_col, vec_col)
+        _vector_codes(embeddings, cb, id_col, vec_col)
         .withColumnRenamed("vec_id", "neighbor_id")
         .join(cells, "neighbor_id")
     )

@@ -28,6 +28,7 @@ twin mirrors it exactly.
 
 from __future__ import annotations
 
+import logging
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +36,8 @@ from pyspark.sql import functions as F
 
 from ..oracle import UnionFind, round6, spark_xxhash64
 from ..spark.session import local_frame
+
+logger = logging.getLogger(__name__)
 
 
 def _ends(df: DataFrame, a: str, b: str, name: str = "entity") -> DataFrame:
@@ -346,6 +349,36 @@ def label_propagation(
             )
             .localCheckpoint(eager=False)
         )
+    return labels
+
+
+def _py_und_adjacency(edges) -> dict:
+    """{v: {nbr}} — the undirected distinct adjacency of the (src, dst)
+    `edges`, self-loops kept, in first-seen order: the adjacency
+    `label_propagation` and `entity_similarity` read."""
+    adj: dict = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+        adj.setdefault(d, set()).add(s)
+    return adj
+
+
+def py_label_propagation(edges, iters: int = 5) -> dict:
+    """Serial twin of `label_propagation` over the (src, dst) `edges`:
+    synchronous rounds over the undirected distinct adjacency (self-loops
+    kept, as the kernel keeps them), each vertex taking its neighbors'
+    most frequent label, ties to the smallest. {entity: community} in
+    first-seen order."""
+    adj = _py_und_adjacency(edges)
+    labels = {v: v for v in adj}
+    for _ in range(iters):
+        new = {}
+        for v, nbrs in adj.items():
+            counts: dict = defaultdict(int)
+            for nb in nbrs:
+                counts[labels[nb]] += 1
+            new[v] = min(counts, key=lambda lbl: (-counts[lbl], lbl))
+        labels = new
     return labels
 
 
@@ -1425,6 +1458,14 @@ def betweenness(
                 .select(F.col("entity").alias("s"))
             )
             scale_est = n_verts / sample_pivots
+            # rides the vertex count above: no extra Spark job
+            logger.warning(
+                "betweenness: %d vertices > sample_pivots=%d, so the result is "
+                "the sampled estimate scaled by %s; pass pivots= for exact",
+                n_verts,
+                sample_pivots,
+                scale_est,
+            )
         else:
             piv = verts.select(F.col("entity").alias("s"))
     piv = piv.localCheckpoint(eager=False)

@@ -4,9 +4,12 @@ its oracle twin on DuckDB over the same parquet, compare row count,
 schema (column names), and an order-insensitive value hash — the same
 contract CORRECTNESS_r{N}.json is built from. Entries run in driver
 order; only the named ones (all when none are named) build their oracle.
-An entry that fails after its build logged `EVAL_SCHEMA_ABSENT` (the
-guard entries on a host without the reference's eval schema) is reported
-as "reference schema absent" and listed apart from the failures.
+A name the registry does not hold is rejected (exit 2) before Spark
+starts. A rows-only entry (no oracle) prints its row count and the
+value hash of its rows, so two runs can be compared. An entry that fails
+after its build logged `EVAL_SCHEMA_ABSENT` (the guard entries on a host
+without the reference's eval schema) is reported as "reference schema
+absent" and listed apart from the failures.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 (sf_dir defaults to sf0.01, the dir the driver compares at)
@@ -49,6 +52,11 @@ def main():
     # default: the dir the driver compares at
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else entry._ORACLE_SF_DIR_DEFAULT
     only = set(sys.argv[2:])
+    registry = entry.registry()
+    unknown = sorted(only - {name for name, _b, _o in registry})
+    if unknown:
+        print(f"unknown registry entries: {unknown}", file=sys.stderr)
+        sys.exit(2)
     # VALUES oracles that recompute from the documents parquet (minhash /
     # simhash) must read the same sf dir the Spark side is handed
     import os
@@ -69,14 +77,17 @@ def main():
     entry.logger.addHandler(logged)
 
     failures, absent = [], []
-    for name, build, oracle in entry.registry():
+    for name, build, oracle in registry:
         if only and name not in only:
             continue
         logged.buffer.clear()
         sdf = build(spark, sf_dir).toPandas()
         no_schema = any(r.msg is entry.EVAL_SCHEMA_ABSENT for r in logged.buffer)
         if oracle is None:
-            print(f"{name:28s} rows={len(sdf):6d}  (rows-only: no oracle)")
+            print(
+                f"{name:28s} rows={len(sdf):6d}  value_hash={value_hash(sdf)}"
+                "  (rows-only: no oracle)"
+            )
             continue
         odf = con.sql(oracle()).df()
         ok_rows = len(sdf) == len(odf)

@@ -184,40 +184,54 @@ def test_entity_similarity_hub_cap_drops_hub_blocked_pairs(spark):
 
 
 def test_label_propagation_matches_python_twin(spark):
-    """Fixed-round synchronous LPA vs an inline reference on a two-
-    community barbell (two triangles + one bridge)."""
-    from cypher_guard_spark.pipeline.graph_algo import label_propagation
+    """Fixed-round synchronous LPA vs an inline reference and the serial
+    twin `py_label_propagation`, on a two-community barbell (two
+    triangles + one bridge) and on a graph with self-loops and a
+    duplicate edge (the kernel keeps self-loops: a vertex counts its own
+    label)."""
+    from cypher_guard_spark.pipeline.graph_algo import (
+        label_propagation,
+        py_label_propagation,
+    )
 
-    edges = [
+    barbell = [
         ("a", "b"), ("b", "c"), ("c", "a"),        # triangle 1
         ("x", "y"), ("y", "z"), ("z", "x"),        # triangle 2
         ("c", "x"),                                  # bridge
     ]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    for iters in (1, 3, 5):
-        got = {
-            r["entity"]: r["community"]
-            for r in label_propagation(spark, e, iters=iters).collect()
-        }
-        adj = {}
-        for s, d in edges:
-            adj.setdefault(s, set()).add(d)
-            adj.setdefault(d, set()).add(s)
-        labels = {v: v for v in adj}
-        for _ in range(iters):
-            labels = {
-                v: min(
-                    {lbl: sum(1 for nb in nbrs if labels[nb] == lbl)
-                     for lbl in {labels[nb] for nb in nbrs}}.items(),
-                    key=lambda kv: (-kv[1], kv[0]),
-                )[0]
-                for v, nbrs in adj.items()
+    looped = [
+        ("a", "a"), ("a", "b"), ("a", "b"),          # self-loop + duplicate
+        ("b", "c"), ("c", "d"), ("d", "d"), ("d", "b"),
+    ]
+    for edges in (barbell, looped):
+        e = spark.createDataFrame(edges, "src string, dst string")
+        for iters in (1, 3, 5):
+            got = {
+                r["entity"]: r["community"]
+                for r in label_propagation(spark, e, iters=iters).collect()
             }
-        assert got == labels, iters
-    # 5 rounds on this graph: each triangle collapses to one community
+            adj = {}
+            for s, d in edges:
+                adj.setdefault(s, set()).add(d)
+                adj.setdefault(d, set()).add(s)
+            labels = {v: v for v in adj}
+            for _ in range(iters):
+                labels = {
+                    v: min(
+                        {lbl: sum(1 for nb in nbrs if labels[nb] == lbl)
+                         for lbl in {labels[nb] for nb in nbrs}}.items(),
+                        key=lambda kv: (-kv[1], kv[0]),
+                    )[0]
+                    for v, nbrs in adj.items()
+                }
+            assert got == labels, (edges, iters)
+            assert py_label_propagation(edges, iters) == labels, (edges, iters)
+    # 5 rounds on the barbell: each triangle collapses to one community
     final = {
         r["entity"]: r["community"]
-        for r in label_propagation(spark, e, iters=5).collect()
+        for r in label_propagation(
+            spark, spark.createDataFrame(barbell, "src string, dst string"), iters=5
+        ).collect()
     }
     assert len(set(final.values())) <= 2
 
@@ -1104,6 +1118,27 @@ def test_betweenness_directed_and_pivots(spark):
         ).collect()
     }
     assert gp == {"a": 0.0, "b": 1.0, "c": 0.0}
+
+
+def test_betweenness_warns_when_it_samples_pivots(spark, caplog):
+    """pivots=None on a graph larger than sample_pivots logs one warning
+    naming the vertex count, the sample size and the scale factor; an
+    explicit pivot set (what kg_betweenness passes) and a sample that
+    covers every vertex stay silent."""
+    from cypher_guard_spark.pipeline.graph_algo import betweenness
+
+    edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    piv = spark.createDataFrame([(v,) for v in "abcde"], ["entity"])
+    with caplog.at_level("WARNING", logger=betweenness.__module__):
+        betweenness(spark, df, max_depth=2, pivots=piv).collect()
+        betweenness(spark, df, max_depth=2, sample_pivots=5).collect()
+        assert caplog.records == []
+        betweenness(spark, df, max_depth=2, sample_pivots=2).collect()
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert rec.args == (5, 2, 2.5)
+    assert "sample_pivots=2" in rec.getMessage()
 
 
 def test_betweenness_sampled_default_is_bounded_estimator(spark):

@@ -210,6 +210,32 @@ def test_set_built_oracles_do_not_depend_on_hash_seed():
     assert len(texts) == 1
 
 
+def test_check_oracles_rejects_unknown_entry():
+    """A name the registry does not hold fails scripts/check_oracles.py
+    with exit 2 before any Spark session starts, instead of being skipped
+    under an "all oracles match" verdict."""
+    import subprocess
+    import sys
+
+    import __spark_entry__ as entry
+
+    run = subprocess.run(
+        [
+            sys.executable,
+            str(entry.REPO / "scripts/check_oracles.py"),
+            SF_DIR,
+            "kg_pagerank",
+            "kg_pagernk",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode == 2, run.stdout + run.stderr
+    assert "unknown registry entries: ['kg_pagernk']" in run.stderr
+    assert "oracles match" not in run.stdout
+
+
 def test_ivf_topk_structure_and_recall(spark):
     from pyspark.sql import functions as F
 

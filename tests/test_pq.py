@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
-from cypher_guard_spark.ops.similarity import pq_encode, pq_topk, train_pq
+from cypher_guard_spark.ops.similarity import (
+    _py_sub_dist2,
+    pq_encode,
+    pq_topk,
+    train_pq,
+)
 from cypher_guard_spark.oracle import round6
 
 M, K, ITERS, DIM = 4, 8, 2, 16
@@ -88,7 +93,7 @@ def test_pq_topk_matches_adc_twin(spark, emb):
         for s in range(M):
             centers, assign = twin[s]
             c = centers[assign[vid]]
-            acc += entry._py_dist2(qv[s * d_m : (s + 1) * d_m], c)
+            acc += _py_sub_dist2(qv, s * d_m, c)
         return round6(acc)
 
     want = []
@@ -168,6 +173,42 @@ def test_ivfpq_pruning_restricts_to_probed_cells(spark, emb):
     assert got
     for r in got:
         assert cells[r["neighbor_id"]] == cells[r["query_id"]], r
+
+
+def test_pq_searches_collect_each_trained_table_once(spark, emb, monkeypatch):
+    """`pq_topk` and `ivfpq_topk` collect the codebooks (and, for IVF-PQ,
+    the coarse centroids) once per call and hand the collected table to
+    the encode and cell-assignment steps, instead of collecting again."""
+    import cypher_guard_spark.ops.similarity as sim
+
+    df, vecs = emb
+    books = train_pq(df, m=M, k=K, iters=ITERS).localCheckpoint()
+    cents = sim.kmeans_centroids(df, 4, ITERS).localCheckpoint()
+    calls = {"_collect_codebooks": 0, "_collect_centroids": 0}
+
+    def count_calls(name):
+        real = getattr(sim, name)
+
+        def counted(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(sim, name, counted)
+
+    for name in calls:
+        count_calls(name)
+    queries = spark.createDataFrame(
+        [(100, vecs[7])], "query_id long, qvec array<double>"
+    )
+    assert sim.pq_topk(df, books, queries, k=3).count() == 3
+    assert calls == {"_collect_codebooks": 1, "_collect_centroids": 0}
+    calls.update(_collect_codebooks=0)
+    got = sim.ivfpq_topk(
+        df, df.where("vec_id < 2"), k=3, nprobe=2, m=M, pq_k=K,
+        centroids=cents, codebooks=books,
+    )
+    assert got.count() == 6
+    assert calls == {"_collect_codebooks": 1, "_collect_centroids": 1}
 
 
 def test_search_only_entries_never_retrain(spark, monkeypatch):
