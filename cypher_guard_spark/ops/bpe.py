@@ -310,17 +310,11 @@ def bpe_encode(
     ranks = {p: i for i, p in enumerate(pairs)}
 
     def _enc_batch(texts):
-        import re
-
         memo: dict[str, list[str]] = {}
 
         def encode(text: str) -> list[str]:
             out: list[str] = []
-            # twin of tokens(): ASCII \s+ split on lower(trim), see
-            # __spark_entry__._py_tokens
-            for w in re.split(
-                r"\s+", (text or "").strip(" ").lower(), flags=re.ASCII
-            ):
+            for w in py_tokens(text or ""):
                 got = memo.get(w)
                 if got is None:
                     got = memo[w] = bpe_word(w, ranks)

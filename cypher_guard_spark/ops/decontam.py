@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import band_rows, word_shingles
+from .dedup import band_rows, shingle_jaccard
+from .text import word_shingles
 
 
 def benchmark_ngrams(benchmark: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
@@ -198,11 +199,7 @@ def fuzzy_contamination(
             F.array_distinct(word_shingles(text_col, n)).alias("s_bench"),
         )
     )
-    sim = F.round(
-        F.size(F.array_intersect("s_doc", "s_bench"))
-        / F.size(F.array_union("s_doc", "s_bench")),
-        6,
-    )
+    sim = shingle_jaccard(F.col("s_doc"), F.col("s_bench"))
     return (
         cand.join(corpus_sh, "doc_id")
         .join(bench_sh, "bench_id")

@@ -16,38 +16,48 @@ Everything is built-in functions; no Python UDF anywhere in this module.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..oracle import components
 from ..pipeline.canonicalize import connected_components, lsh_bands
 from ..spark.session import local_frame
-from .text import _norm, tokens
+from .similarity import (
+    _assign,
+    _dot,
+    _norm2,
+    _to_double,
+    kmeans_centroids,
+    sign_lsh_bucket,
+)
+from .text import norm_digest, tokens, word_shingles
 
 
-def word_shingles(text_col: str, n: int = 3):
-    """Array of n-word shingles of the normalized text (JVM transform).
+def shingle_jaccard(a, b):
+    """Jaccard similarity of two shingle-set Columns, rounded to 6dp."""
+    return F.round(F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6)
 
-    The token array is bound ONCE via the single-element-array lambda trick
-    (`transform(array(split(...)), ws -> ...)[0]`): referencing the split
-    directly would let CollapseProject inline the regex split into every
-    element access (O(tokens²) work per row, and O(tokens² × K) once K
-    minhash columns reference the shingles). NB Spark SQL `arr[i]` is
-    0-based; the sequence loop is 1-based, hence the `i - 1 + k` index
-    (mirrors the 1-based DuckDB oracle).
 
-    Tokenizer parity: Java regex `\\s` is ASCII-only, as is DuckDB/RE2's —
-    and the pure-Python oracles pin `re.ASCII` to match
-    (`__spark_entry__._py_tokens`). Residual divergence is limited to
-    locale-special lowercasings outside ASCII."""
-    concat = " || ' ' || ".join(f"ws[i - 1 + {k}]" for k in range(n))
-    # NB sub-n-token docs: sequence(1, 0) would count DOWN ([1, 0]) — the
-    # CASE guard returns an empty shingle array instead of indexing out of
-    # bounds on short rows.
-    return F.expr(
-        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), ws -> "
-        f"CASE WHEN size(ws) < {n} THEN array() "
-        f"ELSE transform(sequence(1, size(ws) - {n - 1}), i -> {concat}) END)[0]"
+def _candidate_shingles(
+    src: DataFrame, ids: DataFrame, side: str, text_col: str, n: int
+) -> DataFrame:
+    """(side, s_side): shingle sets of the `src` docs listed in column
+    `side` of `ids`; the leftsemi runs before the shingling."""
+    sub = src.join(ids.select(F.col(side).alias("doc_id")), "doc_id", "leftsemi")
+    return sub.select(
+        F.col("doc_id").alias(side),
+        F.array_distinct(word_shingles(text_col, n)).alias(f"s_{side}"),
+    )
+
+
+def _pair_cosine(vec: str):
+    """6dp cosine of the `l`/`r` sides of a self-join over column `vec`,
+    dividing by each side's precomputed norm `nrm`."""
+    return F.round(
+        _dot(F.col(f"l.{vec}"), F.col(f"r.{vec}")) / (F.col("l.nrm") * F.col("r.nrm")),
+        6,
     )
 
 
@@ -80,9 +90,7 @@ def line_dedup(
     `newline` is LITERAL text (not a regex): the split side regex-escapes
     it so a regex-special delimiter ('.', '|') splits on the same literal
     the rebuild's array_join re-inserts."""
-    import re as _re
-
-    sep = _re.escape(newline)
+    sep = re.escape(newline)
     lines = df.select(
         "doc_id",
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
@@ -126,9 +134,8 @@ def line_dedup(
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(digest, dup_count, canonical_doc_id) for exact (normalized) dup
     groups; dup_count=1 groups are unique docs. Shuffles only the digest."""
-    digest = F.md5(_norm(F.col(text_col)))
     return (
-        df.select(digest.alias("digest"), "doc_id")
+        df.select(norm_digest(text_col).alias("digest"), "doc_id")
         .groupBy("digest")
         .agg(F.count("*").alias("dup_count"), F.min("doc_id").alias("canonical_doc_id"))
     )
@@ -136,9 +143,8 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def dedup_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Survivors of exact dedup: the min-doc_id row per normalized text."""
-    digest = F.md5(_norm(F.col(text_col)))
     keep = (
-        df.select(digest.alias("digest"), "doc_id")
+        df.select(norm_digest(text_col).alias("digest"), "doc_id")
         .groupBy("digest")
         .agg(F.min("doc_id").alias("doc_id"))
     )
@@ -179,11 +185,7 @@ def ngram_jaccard_pairs(
         b,
         on=[F.col("a.block") == F.col("b.block"), F.col("a.doc_id") < F.col("b.doc_id")],
     )
-    sim = F.round(
-        F.size(F.array_intersect("a.sh", "b.sh"))
-        / F.size(F.array_union("a.sh", "b.sh")),
-        6,
-    )
+    sim = shingle_jaccard(F.col("a.sh"), F.col("b.sh"))
     return pairs.select(
         F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"), sim.alias("sim")
     ).where(F.col("sim") >= threshold)
@@ -264,16 +266,10 @@ def minhash_near_duplicates(
         .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    def cand_shingles(side: str) -> DataFrame:
-        ids = cand.select(F.col(side).alias("doc_id"))
-        sub = df.join(ids, "doc_id", "leftsemi")
-        return sub.select(
-            F.col("doc_id").alias(side),
-            F.array_distinct(word_shingles(text_col, n)).alias(f"s{side}"),
-        )
-
-    ver = cand.join(cand_shingles("a"), "a").join(cand_shingles("b"), "b")
-    sim = F.round(F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb")), 6)
+    ver = cand.join(_candidate_shingles(df, cand, "a", text_col, n), "a").join(
+        _candidate_shingles(df, cand, "b", text_col, n), "b"
+    )
+    sim = shingle_jaccard(F.col("s_a"), F.col("s_b"))
     return ver.select("a", "b", sim.alias("sim")).where(F.col("sim") >= threshold)
 
 
@@ -376,8 +372,6 @@ def embedding_near_duplicates(
     path — near-identical vectors share signs, so high-threshold near-dups
     rarely escape the block). The bucket equi-join replaces the n² cross
     join; exact cosine verifies survivors."""
-    from .similarity import _dot, _norm2, sign_lsh_bucket
-
     # norm precomputed per ROW (not per candidate pair) — same doubles,
     # one fold per vector instead of two per pair in the verify stage
     b = embeddings.select(
@@ -393,10 +387,7 @@ def embedding_near_duplicates(
     ).select(
         F.col("l.id").alias("a"),
         F.col("r.id").alias("b"),
-        F.round(
-            _dot(F.col("l.vec"), F.col("r.vec")) / (F.col("l.nrm") * F.col("r.nrm")),
-            6,
-        ).alias("sim"),
+        _pair_cosine("vec").alias("sim"),
     )
     return cand.where(F.col("sim") >= threshold)
 
@@ -437,8 +428,6 @@ def semantic_duplicates(
     it per operator instead of per run is the difference VERDICT r3
     flagged (nit 2). Results are bit-identical to inline training with
     the same parameters (tests/test_ops.py::test_shared_centroids_*)."""
-    from .similarity import _assign, _dot, _norm2, _to_double, kmeans_centroids
-
     cents = centroids if centroids is not None else kmeans_centroids(
         embeddings,
         k=n_clusters,
@@ -472,9 +461,7 @@ def semantic_duplicates(
         F.col("l.vid").alias("a"),
         F.col("r.vid").alias("b"),
         F.col("l.centroid_id").alias("centroid_id"),
-        F.round(
-            _dot(F.col("l.v"), F.col("r.v")) / (F.col("l.nrm") * F.col("r.nrm")), 6
-        ).alias("sim"),
+        _pair_cosine("v").alias("sim"),
     )
     return pairs.where(F.col("sim") >= threshold)
 
@@ -585,9 +572,8 @@ def write_digest_index(
     digest's xxhash64) partitions the store so appends of novel digests
     land in stable directories and a future compaction can merge
     per-bucket."""
-    digest = F.md5(F.lower(F.trim(F.col(text_col))))
     (
-        df.select(digest.alias("digest"))
+        df.select(norm_digest(text_col).alias("digest"))
         .distinct()
         .withColumn(
             "bucket",
@@ -622,8 +608,7 @@ def ingest_new_batch(
     `stream_dedup_exact` with an infinite horizon — this is the batch
     backstop the streaming docstring promises.
     """
-    digest = F.md5(F.lower(F.trim(F.col(text_col))))
-    batch = new_df.withColumn("digest", digest)
+    batch = new_df.withColumn("digest", norm_digest(text_col))
     w = Window.partitionBy("digest").orderBy("doc_id")
     first = (
         batch.withColumn("__rn", F.row_number().over(w))
@@ -792,23 +777,10 @@ def neardup_incremental(
         .dropDuplicates(["new_id", "old_id"])
     )
 
-    def side_shingles(side: str, src: DataFrame) -> DataFrame:
-        ids = cand.select(F.col(side).alias("doc_id"))
-        sub = src.join(ids, "doc_id", "leftsemi")
-        return sub.select(
-            F.col("doc_id").alias(side),
-            F.array_distinct(word_shingles(text_col, n)).alias(f"s_{side}"),
-        )
-
-    ver = (
-        cand.join(side_shingles("new_id", new_df), "new_id")
-        .join(side_shingles("old_id", corpus_df), "old_id")
-    )
-    sim = F.round(
-        F.size(F.array_intersect("s_new_id", "s_old_id"))
-        / F.size(F.array_union("s_new_id", "s_old_id")),
-        6,
-    )
+    ver = cand.join(
+        _candidate_shingles(new_df, cand, "new_id", text_col, n), "new_id"
+    ).join(_candidate_shingles(corpus_df, cand, "old_id", text_col, n), "old_id")
+    sim = shingle_jaccard(F.col("s_new_id"), F.col("s_old_id"))
     return ver.select("new_id", "old_id", sim.alias("sim")).where(
         F.col("sim") >= threshold
     )

@@ -26,12 +26,50 @@ aims for, but stable under task retry and engine-portable).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import adjacent_pairs, tokens
 
 SAMPLE_DENOM = 1 << 20  # power of two: per-stratum rates are exact
+
+
+def _hash_keep(key_col: str, threshold):
+    """pmod(xxhash64(key), SAMPLE_DENOM) < threshold: a reproducible
+    Bernoulli keep at rate threshold / SAMPLE_DENOM."""
+    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(SAMPLE_DENOM)) < threshold
+
+
+def _salted_top_k(
+    df: DataFrame,
+    group: str,
+    salt,
+    order: list,
+    k: int,
+    rank_col: str,
+) -> DataFrame:
+    """The first `k` rows of each `group` under the total `order` plus
+    their 1-based `rank_col`: local top-k per (group, `salt` Column),
+    then top-k of the survivors per group (see `balanced_sample`)."""
+    w1 = Window.partitionBy(group, "_salt").orderBy(*order)
+    survivors = (
+        df.withColumn("_salt", salt)
+        .withColumn("_rn", F.row_number().over(w1))
+        .where(F.col("_rn") <= k)
+        .drop("_rn", "_salt")
+    )
+    w2 = Window.partitionBy(group).orderBy(*order)
+    return survivors.withColumn(rank_col, F.row_number().over(w2)).where(
+        F.col(rank_col) <= k
+    )
+
+
+def _exclusive_sum(col: str, w):
+    """Sum of `col` over the rows before this one in window `w` (0 first)."""
+    frame = w.rowsBetween(Window.unboundedPreceding, -1)
+    return F.coalesce(F.sum(col).over(frame), F.lit(0))
 
 
 def length_bucket(
@@ -72,8 +110,7 @@ def stratified_sample(
         F.create_map(*thresholds)[F.col("stratum")],
         F.lit(int(round(default_fraction * SAMPLE_DENOM))),
     )
-    h = F.pmod(F.xxhash64(F.col(key_col)), F.lit(SAMPLE_DENOM))
-    return df.withColumn("stratum", stratum).where(h < thr)
+    return df.withColumn("stratum", stratum).where(_hash_keep(key_col, thr))
 
 
 def balanced_sample(
@@ -95,20 +132,13 @@ def balanced_sample(
     hash order are broken by the key itself, making `rnk` total and the
     result set unique.
     """
-    h = F.xxhash64(F.col(key_col))
-    salted = df.withColumn("stratum", stratum).withColumn(
-        "_salt", F.pmod(F.col(key_col), F.lit(n_salts))
-    )
-    w1 = Window.partitionBy("stratum", "_salt").orderBy(h.asc(), F.col(key_col).asc())
-    survivors = (
-        salted.withColumn("_rn", F.row_number().over(w1))
-        .where(F.col("_rn") <= k)
-        .drop("_rn", "_salt")
-    )
-    w2 = Window.partitionBy("stratum").orderBy(h.asc(), F.col(key_col).asc())
-    return (
-        survivors.withColumn("rnk", F.row_number().over(w2))
-        .where(F.col("rnk") <= k)
+    return _salted_top_k(
+        df.withColumn("stratum", stratum),
+        "stratum",
+        F.pmod(F.col(key_col), F.lit(n_salts)),
+        [F.xxhash64(F.col(key_col)).asc(), F.col(key_col).asc()],
+        k,
+        "rnk",
     )
 
 
@@ -149,11 +179,13 @@ def token_budget_mixture(
     exchange (the repartition implied by the (source, bucket) window) +
     one broadcast — `n_buckets` is the dial exactly like
     `pack_sequences.n_shards`. The final filter is a map-only predicate,
-    so downstream consumers see a pruned scan."""
-    import math
-
-    shift = 64 - int(math.log2(n_buckets))
-    assert 1 << (64 - shift) == n_buckets, "n_buckets must be a power of two"
+    so downstream consumers see a pruned scan. `n_buckets` must be a
+    power of two >= 2: at 1 the shift would be 64, a no-op in Spark."""
+    if n_buckets < 2 or n_buckets & (n_buckets - 1):
+        raise ValueError(
+            f"n_buckets must be a power of two >= 2, got {n_buckets!r}"
+        )
+    shift = 64 - (n_buckets.bit_length() - 1)
     quotas = [
         x
         for s, w in weights.items()
@@ -171,10 +203,8 @@ def token_budget_mixture(
         # arithmetic shift: contiguous blocks of the SIGNED hash order
         F.shiftright(h, shift).alias("_b"),
     )
-    w_local = (
-        Window.partitionBy(source_col, "_b")
-        .orderBy(F.col("_h").asc(), F.col(key_col).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w_local = Window.partitionBy(source_col, "_b").orderBy(
+        F.col("_h").asc(), F.col(key_col).asc()
     )
     # the windowed output is referenced twice (row side of the final join
     # + the bucket-totals aggregate); without a checkpoint, column pruning
@@ -186,17 +216,15 @@ def token_budget_mixture(
     # (source, _b) plans WITHOUT an exchange on top of it
     # (plan-locked by test_token_budget_mixture_single_corpus_pass).
     local = base.withColumn(
-        "_local_cum", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
+        "_local_cum", _exclusive_sum("n_tokens", w_local)
     ).localCheckpoint(eager=False)
-    w_off = (
-        Window.partitionBy(source_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     offsets = (
         local.groupBy(source_col, "_b")
         .agg(F.sum("n_tokens").alias("_bt"))
-        .withColumn("_off", F.coalesce(F.sum("_bt").over(w_off), F.lit(0)))
+        .withColumn(
+            "_off",
+            _exclusive_sum("_bt", Window.partitionBy(source_col).orderBy("_b")),
+        )
         .select(source_col, "_b", "_off")
     )
     return (
@@ -241,12 +269,9 @@ def pack_sequences(
         nt.alias("n_tokens"),
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int").alias("shard"),
     )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy(key_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    cum_excl = _exclusive_sum(
+        "n_tokens", Window.partitionBy("shard").orderBy(key_col)
     )
-    cum_excl = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     return base.select(
         key_col,
         "shard",
@@ -320,8 +345,9 @@ def weighted_sample(
     used, so the decision is auditable and the oracle exact (the
     threshold is integer arithmetic; no float comparison at the cut)."""
     thr = F.round(weight * SAMPLE_DENOM).cast("long")
-    h = F.pmod(F.xxhash64(F.col(key_col)), F.lit(SAMPLE_DENOM))
-    return df.withColumn("keep_threshold", thr).where(h < F.col("keep_threshold"))
+    return df.withColumn("keep_threshold", thr).where(
+        _hash_keep(key_col, F.col("keep_threshold"))
+    )
 
 
 def chunk_documents(
@@ -390,13 +416,7 @@ def _hashed_gram_buckets(
     value as CAST('0x'||substr(md5(g),1,15) AS BIGINT) % B). Map-only:
     tokenize, build the gram array, explode, hash — no shuffle here."""
     t = tokens(F.col(text_col))
-    bi = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.get(t, i), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bi = adjacent_pairs(t, lambda a, b: F.concat_ws(" ", a, b), "array<string>")
     grams = F.concat(t, bi)
     return df.select("doc_id", F.explode(grams).alias("__g")).select(
         "doc_id",
@@ -526,18 +546,11 @@ def source_cap(
     the score resolve by id, so the kept set is a pure function of the
     table."""
     order = ([F.desc(score_col)] if score_col else []) + [F.asc("doc_id")]
-    df = docs.withColumn(
-        "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(salt))
-    )
-    w1 = Window.partitionBy("source", "_bucket").orderBy(*order)
-    survivors = (
-        df.withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= cap)
-        .drop("_r1", "_bucket")
-    )
-    w2 = Window.partitionBy("source").orderBy(*order)
-    return (
-        survivors.withColumn("keep_rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("keep_rank") <= cap)
-        .select("doc_id", "source", "keep_rank")
-    )
+    return _salted_top_k(
+        docs,
+        "source",
+        F.pmod(F.xxhash64("doc_id"), F.lit(salt)),
+        order,
+        cap,
+        "keep_rank",
+    ).select("doc_id", "source", F.col("keep_rank").cast("long").alias("keep_rank"))

@@ -1,16 +1,26 @@
 """Text analysis operators over a document corpus.
 
 All hot paths are built-in pyspark.sql.functions (JVM, whole-stage
-codegen) — no Python in any of these operators. Each has a matching
-ANSI-SQL oracle in __spark_entry__.oracle_sql().
+codegen); the one Python operator is `compression_ratios`, an
+Arrow-batched mapInPandas UDF (DEFLATE has no Catalyst expression). Each
+operator has a matching ANSI-SQL oracle in __spark_entry__.oracle_sql().
+The text building blocks (digest, bound token array, word n-grams,
+quality, language, adjacent pairs, ranks) are written here once each.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import zlib
+from typing import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from ..oracle import spark_xxhash64
 
 # Tiny per-language function-word lists for the n-gram/stopword language-ID
 # heuristic. The heuristic IS the operator contract (the corpus's `lang`
@@ -43,6 +53,118 @@ def py_tokens(text: str) -> list[str]:
     return re.split(r"\s+", text.strip(" ").lower(), flags=re.ASCII)
 
 
+def norm_digest(text_col: str):
+    """md5 of the normalized text: the exact-duplicate key."""
+    return F.md5(_norm(F.col(text_col)))
+
+
+def _bound_tokens(text_col: str, body: str) -> str:
+    """SQL for `body` over `ws`, the token array of `text_col` bound ONCE
+    by the single-element-array lambda trick: a direct split would be
+    inlined by CollapseProject into every element access."""
+    return (
+        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), ws -> "
+        f"{body})[0]"
+    )
+
+
+def _shingles_sql(text_col: str, n: int) -> str:
+    """SQL for the word n-grams of `text_col`, in order. `arr[i]` is
+    0-based and the loop 1-based (as in the DuckDB oracle), hence
+    `i - 1 + k`; sequence(1, 0) counts DOWN, so the CASE guard gives
+    sub-n-token docs an empty array."""
+    concat = " || ' ' || ".join(f"ws[i - 1 + {k}]" for k in range(n))
+    return _bound_tokens(
+        text_col,
+        f"CASE WHEN size(ws) < {n} THEN array() "
+        f"ELSE transform(sequence(1, size(ws) - {n - 1}), i -> {concat}) END",
+    )
+
+
+def word_shingles(text_col: str, n: int = 3):
+    """Array of n-word shingles of the normalized text (JVM transform).
+
+    Tokenizer parity: Java regex `\\s` is ASCII-only, as is DuckDB/RE2's —
+    and the pure-Python oracles pin `re.ASCII` to match (`py_tokens`).
+    Residual divergence is limited to locale-special lowercasings outside
+    ASCII."""
+    return F.expr(_shingles_sql(text_col, n))
+
+
+def _quality(text_col: str):
+    """(toks, n_tokens, punct_ratio, quality) Columns of the quality
+    heuristic, quality = least(n_tokens/32, 1) · (1 − punct_ratio)."""
+    t = _norm(F.col(text_col))
+    toks = F.split(t, r"\s+")
+    n_tokens = F.size(toks)
+    n_chars = F.length(t)
+    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
+    punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
+    quality = F.round(
+        F.least(n_tokens / F.lit(32.0), F.lit(1.0)) * (F.lit(1.0) - punct_ratio), 6
+    )
+    return toks, n_tokens, punct_ratio, quality
+
+
+def _dup_token_ratio(toks, n_tokens):
+    """Fraction of tokens that repeat an earlier token, 6dp."""
+    return F.round(
+        F.lit(1.0) - F.size(F.array_distinct(toks)) / F.greatest(n_tokens, F.lit(1)), 6
+    )
+
+
+def _lang_pred(text_col: str):
+    """The stopword language classifier as ONE bound-lambda expression:
+    the distinct-token array would otherwise be inlined by
+    CollapseProject into every per-language hit count."""
+
+    def hit(lang):
+        arr = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
+        return f"size(array_intersect(ts, array({arr})))"
+
+    best = f"greatest({', '.join(hit(lang) for lang in LANG_STOPWORDS)})"
+    case = f"CASE WHEN {best} <= 0 THEN 'und' " + " ".join(
+        f"WHEN {hit(lang)} = {best} THEN '{lang}'" for lang in sorted(LANG_STOPWORDS)
+    ) + " END"
+    return F.expr(
+        f"transform(array(array_distinct(split(lower(trim({text_col})), '\\\\s+'))), "
+        f"ts -> {case})[0]"
+    )
+
+
+def adjacent_pairs(t, pair, empty_type: str):
+    """Array of `pair(t[i], t[i + 1])` over array Column `t`; an empty
+    `empty_type` array below two elements (sequence(0, -1) counts DOWN)."""
+    sz = F.size(t)
+    return F.when(
+        sz >= 2,
+        F.transform(
+            F.sequence(F.lit(0), sz - 2),
+            lambda i: pair(F.get(t, i), F.get(t, i + 1)),
+        ),
+    ).otherwise(F.array().cast(empty_type))
+
+
+def _group_ranked(df: DataFrame, group: str, order: list) -> DataFrame:
+    """`df` + __r, the 1-based rank within `group` under the total
+    `order`, and __n, the group's size (sorts one group per task)."""
+    w = Window.partitionBy(group).orderBy(*order)
+    return df.withColumn("__r", F.row_number().over(w)).withColumn(
+        "__n", F.count("*").over(Window.partitionBy(group))
+    )
+
+
+def _ranked_top_k(df: DataFrame, order: list, k: int, rank_col: str) -> DataFrame:
+    """The first `k` rows of `df` under the total `order` plus their
+    1-based `rank_col`. orderBy().limit(k) is TakeOrderedAndProject
+    (per-task partial top-k), so the window ranks k rows only."""
+    return (
+        df.orderBy(*order)
+        .limit(k)
+        .withColumn(rank_col, F.row_number().over(Window.orderBy(*order)))
+    )
+
+
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, n_chars_norm)."""
     return df.select(
@@ -63,17 +185,9 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, punct_ratio, stopword_ratio, quality) — simple
     length/punctuation/stopword quality heuristic, ratios rounded to 6dp
     for cross-engine comparability."""
-    t = _norm(F.col(text_col))
-    toks = F.split(t, r"\s+")
-    n_tokens = F.size(toks)
-    n_chars = F.length(t)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
+    toks, n_tokens, punct_ratio, quality = _quality(text_col)
     n_stop = F.size(F.filter(toks, lambda x: x.isin(LANG_STOPWORDS["en"])))
-    punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
     stop_ratio = F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 6)
-    quality = F.round(
-        F.least(n_tokens / F.lit(32.0), F.lit(1.0)) * (F.lit(1.0) - punct_ratio), 6
-    )
     return df.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -106,26 +220,15 @@ def quality_floor(
     10^12-doc plan; boundary docs within the sketch's error band may
     differ from the exact rule (same fast-vs-exact contract as
     `length_quantiles`)."""
-    # quality computed inline (same formula as quality_scores) so the
-    # operator stays single-scan — joining quality_scores back on doc_id
-    # would be a corpus-vs-corpus exchange for three columns
-    t = _norm(F.col(text_col))
-    toks = F.split(t, r"\s+")
-    n_tokens = F.size(toks)
-    n_chars = F.length(t)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
-    quality = F.round(
-        F.least(n_tokens / F.lit(32.0), F.lit(1.0)) * (F.lit(1.0) - punct_ratio), 6
-    )
+    # quality as a Column so the operator stays single-scan — joining
+    # quality_scores back on doc_id would be a corpus-vs-corpus exchange
+    quality = _quality(text_col)[3]
     base = df.select(
         "doc_id", F.col(source_col).alias("source"), quality.alias("quality")
     )
     if exact:
-        w = Window.partitionBy("source").orderBy("quality", "doc_id")
         return (
-            base.withColumn("__r", F.row_number().over(w))
-            .withColumn("__n", F.count("*").over(Window.partitionBy("source")))
+            _group_ranked(base, "source", ["quality", "doc_id"])
             .where(F.col("__r") > F.floor(F.lit(q) * F.col("__n")))
             .select("doc_id", "source", "quality")
         )
@@ -141,25 +244,8 @@ def quality_floor(
 
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, lang_pred) — argmax of per-language stopword hits; ties and
-    zero-hit docs resolve to 'und' (deterministic).
-
-    The whole classifier is ONE bound-lambda expression: the distinct-token
-    array would otherwise be inlined by CollapseProject into every
-    per-language hit count (~2 x n_langs re-tokenizations per row)."""
-
-    def hit(lang):
-        arr = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-        return f"size(array_intersect(ts, array({arr})))"
-
-    best = f"greatest({', '.join(hit(lang) for lang in LANG_STOPWORDS)})"
-    case = f"CASE WHEN {best} <= 0 THEN 'und' " + " ".join(
-        f"WHEN {hit(lang)} = {best} THEN '{lang}'" for lang in sorted(LANG_STOPWORDS)
-    ) + " END"
-    pred = F.expr(
-        f"transform(array(array_distinct(split(lower(trim({text_col})), '\\\\s+'))), "
-        f"ts -> {case})[0]"
-    )
-    return df.select("doc_id", pred.alias("lang_pred"))
+    zero-hit docs resolve to 'und' (deterministic); see `_lang_pred`."""
+    return df.select("doc_id", _lang_pred(text_col).alias("lang_pred"))
 
 
 def fingerprints(df: DataFrame, text_col: str = "text", prefix_tokens: int = 8) -> DataFrame:
@@ -186,20 +272,9 @@ def top_ngrams(
     skew-immune: partials combine associatively, no single reduce task
     sees raw rows.
     """
-    toks = tokens(F.col(text_col))
-    # CASE guard: sequence(1, 0) counts DOWN in Spark, so sub-n-token docs
-    # get an empty gram array instead of an out-of-bounds index
-    grams = F.expr(
-        "transform(array(split(lower(trim({t})), '\\\\s+')), ws -> "
-        "CASE WHEN size(ws) < {n} THEN array() "
-        "ELSE transform(sequence(1, size(ws) - {m}), i -> {c}) END)[0]".format(
-            t=text_col,
-            n=n,
-            m=n - 1,
-            c=" || ' ' || ".join(f"ws[i - 1 + {j}]" for j in range(n)),
-        )
+    per_doc = df.select(
+        "doc_id", F.explode(word_shingles(text_col, n)).alias("ngram")
     )
-    per_doc = df.select("doc_id", F.explode(grams).alias("ngram"))
     return (
         per_doc.groupBy("ngram")
         .agg(
@@ -226,14 +301,8 @@ def repetition_scores(df: DataFrame, text_col: str = "text", n: int = 2) -> Data
     arrays are each bound once with the single-element-array lambda trick
     so CollapseProject cannot inline the regex split into every
     consumer."""
-    concat = " || ' ' || ".join(f"ws[i - 1 + {j}]" for j in range(n))
-    grams = (
-        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), ws -> "
-        f"CASE WHEN size(ws) < {n} THEN array() "
-        f"ELSE transform(sequence(1, size(ws) - {n - 1}), i -> {concat}) END)[0]"
-    )
     top_ratio = F.expr(
-        f"transform(array(array_sort({grams})), gs -> "
+        f"transform(array(array_sort({_shingles_sql(text_col, n)})), gs -> "
         "round(aggregate(gs, "
         "named_struct('prev', cast(null as string), 'run', 0, 'best', 0), "
         "(acc, x) -> named_struct('prev', x, "
@@ -243,13 +312,10 @@ def repetition_scores(df: DataFrame, text_col: str = "text", n: int = 2) -> Data
     )
     toks = tokens(F.col(text_col))
     n_tokens = F.size(toks)
-    dup_ratio = F.round(
-        F.lit(1.0) - F.size(F.array_distinct(toks)) / F.greatest(n_tokens, F.lit(1)), 6
-    )
     return df.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
-        dup_ratio.alias("dup_token_ratio"),
+        _dup_token_ratio(toks, n_tokens).alias("dup_token_ratio"),
         top_ratio.alias("top_ngram_ratio"),
     )
 
@@ -266,9 +332,11 @@ def source_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
     countDistinct into a two-stage expand+agg — partials combine, no raw
     rows cross). avg_chars divides two exactly-summed integers, so the
     double is engine-portable without ordering caveats."""
-    norm = _norm(F.col(text_col))
     base = df.select(
-        "source", "lang", F.length(norm).alias("nc"), F.md5(norm).alias("digest")
+        "source",
+        "lang",
+        F.length(_norm(F.col(text_col))).alias("nc"),
+        norm_digest(text_col).alias("digest"),
     )
     return (
         base.groupBy("source", "lang")
@@ -333,13 +401,23 @@ def doc_token_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
     Per-token counting is O(distinct × tokens) JVM comparisons per row,
     fine at document lengths; row-local, nothing leaves the task."""
     pairs = F.expr(
-        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), ws -> "
-        "transform(array_distinct(ws), t -> "
-        "named_struct('token', t, 'tf', size(filter(ws, x -> x = t)))))[0]"
+        _bound_tokens(
+            text_col,
+            "transform(array_distinct(ws), t -> "
+            "named_struct('token', t, 'tf', size(filter(ws, x -> x = t))))",
+        )
     )
     return df.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.token", "p.tf"
     )
+
+
+def _token_doc_freqs(df: DataFrame, text_col: str) -> DataFrame:
+    """(token, doc_id, tf, doc_freq): `doc_token_freqs` joined to each
+    token's corpus document frequency."""
+    per = doc_token_freqs(df, text_col)
+    dfreq = per.groupBy("token").agg(F.count("*").alias("doc_freq"))
+    return per.join(dfreq, "token")
 
 
 def tfidf_keywords(
@@ -365,15 +443,13 @@ def tfidf_keywords(
     (doc_id, token, tf, df) — never text. N is a driver scalar from a
     count(*) over parquet metadata, baked into the plan as a literal."""
     n_docs = df.count()
-    per = doc_token_freqs(df, text_col)
-    dfreq = per.groupBy("token").agg(F.count("*").alias("doc_freq"))
     score = F.round(
         F.col("tf")
         * (F.lit(float(n_docs)) - F.col("doc_freq") + F.lit(0.5))
         / (F.col("doc_freq") + F.lit(0.5)),
         6,
     )
-    scored = per.join(dfreq, "token").select(
+    scored = _token_doc_freqs(df, text_col).select(
         "doc_id", "token", "tf", "doc_freq", score.alias("score")
     )
     w = Window.partitionBy("doc_id").orderBy(
@@ -402,11 +478,9 @@ def rarity_scores(
     agg on token, score join on token), then one groupBy(doc_id)
     re-aggregation of integer partials — every shuffle carries
     (doc_id, token, tf)-shaped rows, never text."""
-    per = doc_token_freqs(df, text_col)
-    dfreq = per.groupBy("token").agg(F.count("*").alias("doc_freq"))
-    joined = per.join(dfreq, "token")
     return (
-        joined.groupBy("doc_id")
+        _token_doc_freqs(df, text_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.sum(
@@ -473,19 +547,13 @@ def length_quantiles(
             F.col("p.v").cast("long").alias("n_tokens_q"),
         )
 
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_tokens").asc(), F.col("doc_id").asc()
-    )
-    ranked = base.select(
-        "source",
-        "n_tokens",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("source")).alias("n"),
+    ranked = _group_ranked(
+        base, "source", [F.col("n_tokens").asc(), F.col("doc_id").asc()]
     )
     picks = None
     for q in qs:
         p = ranked.where(
-            F.col("rn") == F.floor(F.lit(q) * (F.col("n") - 1)) + 1
+            F.col("__r") == F.floor(F.lit(q) * (F.col("__n") - 1)) + 1
         ).select(
             "source", F.lit(float(q)).alias("q"), F.col("n_tokens").alias("n_tokens_q")
         )
@@ -544,8 +612,6 @@ def search_inverted_index(
     The only shuffle is a partial-aggregating groupBy(doc_id) over the
     matched postings — O(postings of the query terms), corpus-size-
     independent."""
-    from ..oracle import spark_xxhash64
-
     buckets = sorted({spark_xxhash64(t) % n_buckets for t in terms})
     post = spark.read.parquet(f"{path}/postings").where(
         F.col("bucket").isin(buckets) & F.col("token").isin(list(terms))
@@ -559,12 +625,7 @@ def search_inverted_index(
         F.col("total_tf").desc(),
         F.col("doc_id").asc(),
     ]
-    # global top-k as orderBy().limit(k) → TakeOrderedAndProject (per-task
-    # partial top-k, no single-task global sort even when a hot term
-    # matches much of the corpus); the row_number window then runs over
-    # the k survivors only.
-    top = scored.orderBy(*order).limit(k)
-    return top.withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
+    return _ranked_top_k(scored, order, k, "rnk")
 
 
 def curation_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -575,39 +636,14 @@ def curation_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     is the bit-identical twin of its standalone operator (quality_scores,
     repetition_scores, language_id) — the standalone forms exist for
     per-signal reporting; this one exists for filtering."""
-    t = _norm(F.col(text_col))
-    toks = F.split(t, r"\s+")
-    n_tokens = F.size(toks)
-    n_chars = F.length(t)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
-    quality = F.round(
-        F.least(n_tokens / F.lit(32.0), F.lit(1.0)) * (F.lit(1.0) - punct_ratio), 6
-    )
-    dup_ratio = F.round(
-        F.lit(1.0) - F.size(F.array_distinct(toks)) / F.greatest(n_tokens, F.lit(1)),
-        6,
-    )
-
-    def hit(lang):
-        arr = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-        return f"size(array_intersect(ts, array({arr})))"
-
-    best = f"greatest({', '.join(hit(lang) for lang in LANG_STOPWORDS)})"
-    case = f"CASE WHEN {best} <= 0 THEN 'und' " + " ".join(
-        f"WHEN {hit(lang)} = {best} THEN '{lang}'" for lang in sorted(LANG_STOPWORDS)
-    ) + " END"
-    lang_pred = F.expr(
-        f"transform(array(array_distinct(split(lower(trim({text_col})), '\\\\s+'))), "
-        f"ts -> {case})[0]"
-    )
+    toks, n_tokens, _punct_ratio, quality = _quality(text_col)
     return df.select(
         "doc_id",
         F.col(text_col),
         n_tokens.alias("n_tokens"),
         quality.alias("quality"),
-        dup_ratio.alias("dup_token_ratio"),
-        lang_pred.alias("lang_pred"),
+        _dup_token_ratio(toks, n_tokens).alias("dup_token_ratio"),
+        _lang_pred(text_col).alias("lang_pred"),
     )
 
 
@@ -642,7 +678,7 @@ def corpus_cardinality(
     )
     base = df.select(
         F.col(source_col).alias("source"),
-        F.md5(_norm(F.col(text_col))).alias("digest"),
+        norm_digest(text_col).alias("digest"),
         tokens(F.col(text_col)).alias("toks"),
     )
     docs = base.groupBy("source").agg(
@@ -762,8 +798,6 @@ def clean_text(
     shuffle, no Python; composes with `curation_features` upstream of
     any wide stage, so at 100 TB the cleaner rides the first scan free.
     """
-    import functools
-
     lines = F.split(F.col(text_col), "\n")
 
     def keep(l):  # noqa: E741
@@ -791,22 +825,23 @@ def doc_bigrams(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, w1, w2, tf) — per-document bigram frequencies over the
     standard tokenizer (map-only explode + one doc-local partial agg)."""
     base = df.select("doc_id", tokens(F.col(text_col)).alias("__t"))
-    t = F.col("__t")
-    sz = F.size(t)
-    bg = F.when(
-        sz >= 2,
-        F.transform(
-            F.sequence(F.lit(0), sz - 2),
-            lambda i: F.struct(
-                F.get(t, i).alias("w1"), F.get(t, i + 1).alias("w2")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    bg = adjacent_pairs(
+        F.col("__t"),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+        "array<struct<w1:string,w2:string>>",
+    )
     return (
         base.select("doc_id", F.explode(bg).alias("b"))
         .groupBy("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
         .agg(F.count("*").alias("tf"))
     )
+
+
+def _bigram_lm(bg: DataFrame) -> DataFrame:
+    """(w1, w2, c12, c1) bigram LM counts of a `doc_bigrams` frame."""
+    c12 = bg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
+    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    return c12.join(c1, "w1").select("w1", "w2", "c12", "c1")
 
 
 def train_bigram_lm(df: DataFrame, path: str, text_col: str = "text") -> None:
@@ -818,12 +853,7 @@ def train_bigram_lm(df: DataFrame, path: str, text_col: str = "text") -> None:
     the same shared-artifact pattern as `write_ivf_index` /
     `quantize_embeddings(ranges=)`. Two partial-agg shuffles + one
     vocabulary-sized join; rows are (token-pair, counts), never text."""
-    bg = doc_bigrams(df, text_col)
-    c12 = bg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
-    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    c12.join(c1, "w1").select("w1", "w2", "c12", "c1").write.mode(
-        "overwrite"
-    ).parquet(path)
+    _bigram_lm(doc_bigrams(df, text_col)).write.mode("overwrite").parquet(path)
 
 
 def bigram_cohesion(
@@ -850,9 +880,7 @@ def bigram_cohesion(
     """
     bg = doc_bigrams(df, text_col)
     if lm is None:
-        c12 = bg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
-        c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-        lm = c12.join(c1, "w1")
+        lm = _bigram_lm(bg)
     joined = bg.join(lm.select("w1", "w2", "c12", "c1"), ["w1", "w2"], "left")
     return (
         joined.groupBy("doc_id")
@@ -906,16 +934,18 @@ def build_vocab(
         )
         .where(F.col("n_occurrences") >= min_count)
     )
-    top = counts.orderBy(
-        F.col("n_occurrences").desc(), F.col("token").asc()
-    ).limit(vocab_size)
-    w = Window.orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
+    top = _ranked_top_k(
+        counts,
+        [F.col("n_occurrences").desc(), F.col("token").asc()],
+        vocab_size,
+        "token_id",
+    )
     return top.select(
         "token",
-        (F.row_number().over(w) - 1).alias("token_id"),
+        (F.col("token_id") - 1).alias("token_id"),
         "n_occurrences",
         "n_docs",
-    ).select("token", "token_id", "n_occurrences", "n_docs")
+    )
 
 
 def bm25_topk(
@@ -959,8 +989,9 @@ def bm25_topk(
         for t in terms
     )
     row = F.expr(
-        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), ws -> "
-        f"named_struct('dl', size(ws), 'tfs', array({tf_exprs})))[0]"
+        _bound_tokens(
+            text_col, f"named_struct('dl', size(ws), 'tfs', array({tf_exprs}))"
+        )
     )
     base = df.select("doc_id", row.alias("r")).select(
         "doc_id", F.col("r.dl").alias("dl"), F.col("r.tfs").alias("tfs")
@@ -997,19 +1028,14 @@ def bm25_topk(
         score = term_score if score is None else score + term_score
         matched = hit if matched is None else matched + hit
 
-    top = (
-        base.select(
-            "doc_id",
-            matched.alias("n_matched"),
-            F.round(score, 6).alias("score"),
-        )
-        .where(F.col("n_matched") > 0)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(topk)
+    scored = base.select(
+        "doc_id",
+        matched.alias("n_matched"),
+        F.round(score, 6).alias("score"),
+    ).where(F.col("n_matched") > 0)
+    return _ranked_top_k(
+        scored, [F.col("score").desc(), F.col("doc_id")], topk, "rnk"
     )
-    # rank over the already-limited topk rows (window on <=topk rows)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
-    return top.withColumn("rnk", F.row_number().over(w))
 
 
 def oov_rates(
@@ -1078,29 +1104,18 @@ def compression_ratios(
     is deterministic for a given library build; the oracle twin runs the
     same stdlib zlib, and a cross-build drift would surface as a hash
     mismatch rather than silently passing."""
-    import zlib
-    from typing import Iterator as _It
-
-    import pandas as _pd
-
-    from pyspark.sql.types import (
-        DoubleType as _D,
-        LongType as _L,
-        StructField as _F,
-        StructType as _T,
-    )
-
     sel = df.select(F.col(key_col).alias("doc_id"), F.col(text_col).alias("t"))
-    schema = _T(
+    schema = StructType(
         [
-            _F("doc_id", sel.schema["doc_id"].dataType),  # preserve key type
-            _F("raw_bytes", _L()),
-            _F("compressed_bytes", _L()),
-            _F("ratio", _D()),
+            # preserve key type
+            StructField("doc_id", sel.schema["doc_id"].dataType),
+            StructField("raw_bytes", LongType()),
+            StructField("compressed_bytes", LongType()),
+            StructField("ratio", DoubleType()),
         ]
     )
 
-    def batches(it: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             raws, comps, ratios = [], [], []
             for t in pdf["t"]:
@@ -1109,11 +1124,11 @@ def compression_ratios(
                 raws.append(len(b))
                 comps.append(c)
                 ratios.append(0.0 if not b else round(c / len(b), 6))
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "raw_bytes": _pd.array(raws, dtype="int64"),
-                    "compressed_bytes": _pd.array(comps, dtype="int64"),
+                    "raw_bytes": pd.array(raws, dtype="int64"),
+                    "compressed_bytes": pd.array(comps, dtype="int64"),
                     "ratio": ratios,
                 }
             )

@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..ops.decontam import benchmark_ngrams
-from ..ops.dedup import word_shingles
+from ..ops.text import word_shingles
 
 DOC_STREAM_SCHEMA = StructType(
     [

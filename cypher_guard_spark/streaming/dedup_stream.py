@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..ops.text import norm_digest
+
 DOC_STREAM_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -53,9 +55,8 @@ def stream_dedup_exact(
 ) -> DataFrame:
     """(digest, doc_id, event_time) — first-seen documents only, per
     normalized-text digest, within the watermark horizon."""
-    digest = F.md5(F.lower(F.trim(F.col(text_col))))
     return (
-        docs.select(digest.alias("digest"), "doc_id", "event_time")
+        docs.select(norm_digest(text_col).alias("digest"), "doc_id", "event_time")
         .withWatermark("event_time", horizon)
         .dropDuplicatesWithinWatermark(["digest"])
     )

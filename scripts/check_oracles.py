@@ -9,7 +9,9 @@ starts. A rows-only entry (no oracle) prints its row count and the
 value hash of its rows, so two runs can be compared. An entry that fails
 after its build logged `EVAL_SCHEMA_ABSENT` (the guard entries on a host
 without the reference's eval schema) is reported as "reference schema
-absent" and listed apart from the failures.
+absent" and listed apart from the failures. Every run ends with the
+counts it has ("N oracles checked, M rows-only, K unchecked"); it says
+"all oracles match" only when it compared at least one oracle.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 (sf_dir defaults to sf0.01, the dir the driver compares at)
@@ -77,6 +79,7 @@ def main():
     entry.logger.addHandler(logged)
 
     failures, absent = [], []
+    checked = rows_only = 0
     for name, build, oracle in registry:
         if only and name not in only:
             continue
@@ -88,6 +91,7 @@ def main():
                 f"{name:28s} rows={len(sdf):6d}  value_hash={value_hash(sdf)}"
                 "  (rows-only: no oracle)"
             )
+            rows_only += 1
             continue
         odf = con.sql(oracle()).df()
         ok_rows = len(sdf) == len(odf)
@@ -98,6 +102,7 @@ def main():
             absent.append(name)
             print(f"{name:28s} rows={len(sdf):6d}/{len(odf):6d} reference schema absent")
             continue
+        checked += 1
         print(
             f"{name:28s} rows={len(sdf):6d}/{len(odf):6d} cols={'='.join(['ok' if ok_cols else 'MISMATCH'])} hash={'ok' if ok_hash else 'MISMATCH'} {status}"
         )
@@ -115,8 +120,11 @@ def main():
         print("UNCHECKED (reference schema absent):", absent)
     if failures:
         print("FAILURES:", failures)
+    elif checked:
+        print("all checked oracles match" if absent else "all oracles match")
+    print(f"{checked} oracles checked, {rows_only} rows-only, {len(absent)} unchecked")
+    if failures:
         sys.exit(1)
-    print("all checked oracles match" if absent else "all oracles match")
 
 
 if __name__ == "__main__":

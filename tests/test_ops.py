@@ -236,6 +236,59 @@ def test_check_oracles_rejects_unknown_entry():
     assert "oracles match" not in run.stdout
 
 
+def test_check_oracles_reports_what_it_compared(monkeypatch, capsys):
+    """scripts/check_oracles.py ends with the counts it has, and claims
+    "all oracles match" only when it compared at least one oracle: a run
+    over rows-only entries compared nothing. Runs main() in-process over
+    a stub registry and session, so no Spark starts."""
+    import importlib.util
+    import sys
+    import types
+
+    import pandas as pd
+
+    import __spark_entry__ as entry
+    import cypher_guard_spark.spark as spark_pkg
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracles", entry.REPO / "scripts/check_oracles.py"
+    )
+    check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check)
+
+    def frame(rows):
+        return lambda spark, sf_dir: types.SimpleNamespace(
+            toPandas=lambda: pd.DataFrame({"x": rows})
+        )
+
+    session = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None),
+        stop=lambda: None,
+    )
+    monkeypatch.setattr(spark_pkg, "build_session", lambda *a, **k: session)
+    monkeypatch.setattr(entry.logger, "handlers", list(entry.logger.handlers))
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+    monkeypatch.setattr(sys, "argv", ["check_oracles.py", SF_DIR])
+
+    def run(registry):
+        monkeypatch.setattr(entry, "registry", lambda: registry)
+        check.main()
+        return capsys.readouterr().out.strip().splitlines()
+
+    out = run([("only_rows", frame([1, 2]), None)])
+    assert not any("oracles match" in line for line in out), out
+    assert out[-1] == "0 oracles checked, 1 rows-only, 0 unchecked"
+
+    out = run(
+        [
+            ("only_rows", frame([1, 2]), None),
+            ("matched", frame([1]), lambda: "SELECT 1 AS x"),
+        ]
+    )
+    assert "all oracles match" in out
+    assert out[-1] == "1 oracles checked, 1 rows-only, 0 unchecked"
+
+
 def test_ivf_topk_structure_and_recall(spark):
     from pyspark.sql import functions as F
 

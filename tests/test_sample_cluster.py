@@ -176,6 +176,17 @@ def test_token_budget_mixture_invariants(spark, docs):
     assert base == re7 == b4 and base
 
 
+@pytest.mark.parametrize("n_buckets", [0, 1, 48])
+def test_token_budget_mixture_rejects_bad_bucket_count(docs, n_buckets):
+    """n_buckets must be a power of two >= 2: a typed error, not an
+    assert (gone under `python -O`), a math domain error (0), or one
+    bucket per row (1, where shiftright(h, 64) is a no-op)."""
+    from cypher_guard_spark.ops.sample import token_budget_mixture
+
+    with pytest.raises(ValueError, match="power of two >= 2"):
+        token_budget_mixture(docs, {"src0": 1.0}, 1000, n_buckets=n_buckets)
+
+
 def test_token_budget_mixture_single_corpus_pass(spark, docs):
     """Plan lock for the 100-TB shape: the corpus is scanned, tokenized,
     and shuffled ONCE — inside the lazily checkpointed window subtree.
