@@ -390,3 +390,38 @@ def test_cross_source_matrix_pairs_side_joins_keyed(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = plan_of(cross_source_dup_matrix(docs, threshold=0.3))
     assert "CartesianProduct" not in plan
+
+
+def test_pipeline_write_stage_plans_locked(spark, tmp_path, monkeypatch):
+    """The optimized logical plans of the `merge_batches` and `verdicts`
+    stage frames of one `run_pipeline` call at 4,000 synthesized docs,
+    with expression ids stripped, equal the recorded ones in
+    tests/golden/pipeline_write_plans.json: the statement rendering and
+    the single Arrow verdict stage are the timed path of the pipeline
+    benchmark, so a refactor of codegen or the guard UDF must leave them
+    as they are. Regenerate the file only for a deliberate plan change."""
+    import json
+    import re
+    from pathlib import Path
+
+    from cypher_guard_spark.pipeline import lineage, run_pipeline, synthesize_documents
+
+    plans = {}
+    stage = lineage.CheckpointManager.stage
+
+    def recording_stage(self, name, compute, key_cols, materialize=True):
+        def build():
+            df = compute()
+            if name in ("merge_batches", "verdicts"):
+                text = df._jdf.queryExecution().optimizedPlan().toString()
+                plans[name] = re.sub(r"#\d+L?", "", text)
+            return df
+
+        return stage(self, name, build, key_cols, materialize)
+
+    monkeypatch.setattr(lineage.CheckpointManager, "stage", recording_stage)
+    run_pipeline(
+        spark, synthesize_documents(spark, 4000), checkpoint_dir=str(tmp_path / "ck")
+    )
+    golden = Path(__file__).parent / "golden" / "pipeline_write_plans.json"
+    assert plans == json.loads(golden.read_text())
