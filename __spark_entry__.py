@@ -769,11 +769,11 @@ def _kg_canonical_labeled_values() -> str:
 
 
 def _node_fields_sql(col: str, prefix: str) -> str:
-    """The executor's node-identity fields (label, firstName, lastName,
-    companyName, city) as DuckDB expressions over a surface column —
-    byte-identical to `pipeline/executor.py:_node_id_expr` /
-    `pipeline/codegen.py:_entity_props` (limit-2 split on the FIRST
-    space, then quote-stripping)."""
+    """The node-identity fields (label, firstName, lastName, companyName,
+    city) as DuckDB expressions over a surface column — byte-identical to
+    `pipeline/codegen.py:node_id`, the rendered property model (limit-2
+    split on the FIRST space, then quote-stripping). Spelled out here so
+    the oracle does not inherit an edit to the kernel."""
 
     def clean(x: str) -> str:
         return (

@@ -33,8 +33,8 @@ Typed refusals (honest subset — never silently dropped):
   INSIDE node identity (the codegen writes the full map in the MERGE
   pattern and never emits SET — codegen.py module docstring); a
   post-merge SET would mutate identity under the executor's feet.
-- property keys outside the codegen-rendered model (Person.firstName/
-  lastName, Company.companyName, other-label city): schema-VALID keys
+- property keys outside the codegen-rendered model
+  (`codegen.rendered_keys`): schema-VALID keys
   like Person.age pass the guard but are refused here, matching the
   executor's unmaterialized-property treatment (they are never written,
   so reads see NULL).
@@ -44,16 +44,15 @@ Typed refusals (honest subset — never silently dropped):
 
 Scale shape: statements parse in ONE Arrow-batched pandas UDF (broadcast
 DbSchema, stateless → embarrassingly parallel, no shuffle introduced —
-the `spark/validate_udf.py` pattern); the graph then falls out as
-distinct() over id-only columns. No driver loops, no collect on data.
+`spark/validate_udf.with_schema_udf`); the graph then falls out as
+distinct() over id-only columns (`executor.graph_from_edges`). No driver
+loops, no collect on data.
 """
 
 from __future__ import annotations
 
 import logging
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -64,18 +63,12 @@ from pyspark.sql.types import (
 
 from ..guard import api
 from ..guard.schema import DbSchema
+from ..spark.validate_udf import with_schema_udf
+from .codegen import node_id_text, rendered_keys
+from .executor import graph_from_edges
+from .synth import pipeline_db_schema
 
 logger = logging.getLogger(__name__)
-
-_SEP = "\x1f"
-
-# the codegen-rendered property model: label → (identity field slot, keys)
-# node id layout (executor._node_id_expr): label␟first␟last␟company␟city
-_RENDERED_KEYS = {
-    "Person": ("firstName", "lastName"),
-    "Company": ("companyName",),
-}
-_OTHER_KEYS = ("city",)
 
 _PARSED_SCHEMA = StructType(
     [
@@ -107,24 +100,16 @@ class MergeApplyRefused(Exception):
         )
 
 
-def _clean(text: str) -> str:
-    # codegen.py:_clean — the grammar has no escapes: quotes and
-    # newlines/CRs are dropped (byte-parallel with the write side)
-    for ch in ("'", '"', "\n", "\r"):
-        text = text.replace(ch, "")
-    return text
-
-
 def _node_identity(np) -> str:
-    """The node's 5-field identity string from its parsed property map —
-    byte-identical to executor._node_id_expr on the canonical surface,
-    because the codegen renders exactly these keys from that surface.
-    Raises ValueError (→ per-statement err) outside the rendered model."""
+    """The node's identity string from its parsed property map — equal to
+    `codegen.node_id` on the canonical surface, because the codegen
+    renders exactly these keys from that surface. Raises ValueError
+    (→ per-statement err) outside the rendered model."""
     label = np.label
     if not label:
         raise ValueError("MERGE node without a label")
     props = {p.key: p.value for p in (np.properties or [])}
-    keys = _RENDERED_KEYS.get(label, _OTHER_KEYS)
+    keys = rendered_keys(label)
     extra = set(props) - set(keys)
     if extra:
         raise ValueError(
@@ -137,23 +122,8 @@ def _node_identity(np) -> str:
         raise ValueError(
             f"MERGE {label} without its identity keys: {sorted(missing)}"
         )
-    vals = {}
-    for k in keys:
-        pv = props[k]
-        # number literals render through format_string %s the same way
-        vals[k] = _clean(str(pv.value))
-    first = vals.get("firstName", "")
-    last = vals.get("lastName", "")
-    company = vals.get("companyName", "")
-    city = vals.get("city", "")
-    if label == "Person":
-        company = city = ""
-    elif label == "Company":
-        first = last = city = ""
-    else:
-        first = last = company = ""
-        city = vals["city"]
-    return _SEP.join([label, first, last, company, city])
+    # number literals render through format_string %s the same way
+    return node_id_text(label, {k: str(props[k].value) for k in keys})
 
 
 def _parse_statement(stmt: str, schema: DbSchema) -> tuple:
@@ -250,19 +220,6 @@ def _parse_statement(stmt: str, schema: DbSchema) -> tuple:
         return (None, None, None, None, str(e))
 
 
-def _make_parse_fn(bc_schema):
-    def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # the worker's `_broadcastRegistry` loads `.value` once per process
-        schema = bc_schema.value
-        for series in series_iter:
-            rows = [_parse_statement(s, schema) for s in series]
-            yield pd.DataFrame(
-                rows, columns=["kind", "src", "rel_type", "dst", "err"]
-            )
-
-    return batch
-
-
 def parse_merge_statements(
     spark: SparkSession,
     statements: DataFrame,
@@ -271,16 +228,9 @@ def parse_merge_statements(
 ) -> DataFrame:
     """statements + (kind, src, rel_type, dst, err) — one Arrow-batched
     pandas UDF over the statement column, DbSchema on a broadcast."""
-    bc = spark.sparkContext.broadcast(schema)
-    udf = F.pandas_udf(_make_parse_fn(bc), _PARSED_SCHEMA)
-    return statements.withColumn("parsed", udf(F.col(statement_col))).select(
-        "*",
-        F.col("parsed.kind").alias("kind"),
-        F.col("parsed.src").alias("src"),
-        F.col("parsed.rel_type").alias("rel_type"),
-        F.col("parsed.dst").alias("dst"),
-        F.col("parsed.err").alias("err"),
-    ).drop("parsed")
+    return with_schema_udf(
+        spark, statements, statement_col, schema, _parse_statement, _PARSED_SCHEMA
+    )
 
 
 def apply_merge_batches(
@@ -306,8 +256,6 @@ def apply_merge_batches(
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     if schema is None:
-        from .synth import pipeline_db_schema
-
         schema = pipeline_db_schema()
     stmts = batches.select(
         F.explode(F.split(F.col(cypher_col), "\n")).alias("statement")
@@ -332,17 +280,9 @@ def apply_merge_batches(
             "are dropped; list them with parse_merge_statements"
         )
         parsed = parsed.where(F.col("err").isNull())
-    edges = (
-        parsed.where(F.col("kind") == "rel")
-        .select("src", F.col("rel_type").alias("pred"), "dst")
-        .dropDuplicates()
-        .withColumn("edge_id", F.concat_ws(_SEP, "src", "pred", "dst"))
+    return graph_from_edges(
+        parsed.where(F.col("kind") == "rel").select(
+            "src", F.col("rel_type").alias("pred"), "dst"
+        ),
+        parsed.where(F.col("kind") == "node").select(F.col("src").alias("node_id")),
     )
-    nodes = (
-        parsed.where(F.col("kind") == "node")
-        .select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("src").alias("node_id")))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .dropDuplicates()
-    )
-    return nodes, edges

@@ -7,14 +7,15 @@ validated read-only MATCH query compiles to a Spark DataFrame join plan
 over the canonical triple table, returning the same rows Neo4j would
 return for that query AFTER loading our emitted batches.
 
-Read-side parity with the write-side codegen (`pipeline/codegen.py`):
-node identity and properties are EXACTLY what the MERGE statements
-create — Person {firstName, lastName} via a limit-2 split of the
-canonical surface with quote characters stripped (the grammar has no
-escapes), Company {companyName}, any other label {city}; an edge exists
-per distinct (src node, rel_type, dst node). Two canonical surfaces that
-render to the same property map are therefore the SAME node here, just
-as MERGE would unify them in Neo4j.
+Read-side parity with the write-side codegen (`pipeline/codegen.py`,
+which owns the rendered property model): node identity and properties
+are EXACTLY what the MERGE statements create — Person {firstName,
+lastName} via a limit-2 split of the canonical surface with quote
+characters stripped (the grammar has no escapes), Company {companyName},
+any other label {city}; an edge exists per distinct (src node, rel_type,
+dst node). Two canonical surfaces that render to the same property map
+are therefore the SAME node here, just as MERGE would unify them in
+Neo4j.
 
 Execution gate: the query must pass the guard's own validation ladder
 (`guard.api.get_cypher_validation_errors` — parse errors raise the typed
@@ -122,9 +123,12 @@ joins.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..guard.api import get_cypher_validation_errors
 from ..guard.ast import (
     LengthRange,
     NodePattern,
@@ -133,9 +137,13 @@ from ..guard.ast import (
     RelationshipPattern,
     WhereCondition,
 )
+from ..guard.extract import extract_query_elements
+from ..guard.parser.clauses import parse_query
+from ..guard.validate import validate_query_elements
 from ..spark.session import local_frame
+from .codegen import NODE_FIELDS, NODE_SEP, node_id, per_label, renders
+from .synth import pipeline_db_schema
 
-_SEP = "\x1f"
 # the Neo4j catalog procedures with executable semantics against our
 # graph, each with its single canonical output name. All three answer
 # from THIS graph, not from the store: db.propertyKeys lists the keys of
@@ -147,17 +155,6 @@ _CATALOG_YIELDS = {
     "db.propertyKeys": "propertyKey",
 }
 _CATALOG_PROCS = frozenset(_CATALOG_YIELDS)
-# node-id layout: label SEP firstName SEP lastName SEP companyName SEP city
-_PROP_FIELD = {"firstName": 2, "lastName": 3, "companyName": 4, "city": 5}
-# which label materializes the property (codegen.py:_entity_props).
-# city is the codegen's `otherwise` branch — any label that is neither
-# Person nor Company — mirrored by owner=None meaning "not Person/Company".
-_PROP_OWNER = {
-    "firstName": "Person",
-    "lastName": "Person",
-    "companyName": "Company",
-    "city": None,
-}
 
 
 class CypherExecutionRefused(Exception):
@@ -177,29 +174,19 @@ class UnsupportedCypherFeature(Exception):
     variable...)."""
 
 
-def _clean(col):
-    # codegen.py:_clean — grammar has no escapes: quotes and
-    # newlines/CRs are dropped (byte-parallel with the write side)
-    return F.translate(col, "'\"\n\r", "")
-
-
-def _node_id_expr(label_col, surface_col):
-    """The node's identity string: label + the exact property values the
-    MERGE batch renders (codegen.py:_entity_props, same split-then-clean
-    order). concat_ws keeps empty strings, so the 5-field layout is
-    stable under split."""
-    first = F.element_at(F.split(surface_col, " ", 2), 1)
-    last = F.try_element_at(F.split(surface_col, " ", 2), F.lit(2))
-    is_person = label_col == "Person"
-    is_company = label_col == "Company"
-    return F.concat_ws(
-        _SEP,
-        label_col,
-        F.when(is_person, _clean(first)).otherwise(F.lit("")),
-        F.when(is_person, _clean(F.coalesce(last, F.lit("")))).otherwise(F.lit("")),
-        F.when(is_company, _clean(surface_col)).otherwise(F.lit("")),
-        F.when(~is_person & ~is_company, _clean(surface_col)).otherwise(F.lit("")),
+def graph_from_edges(spo: DataFrame, *node_ids: DataFrame) -> tuple:
+    """(nodes, edges) in the graph_frames layout from (src, pred, dst)
+    rows: one edge per distinct row, edge_id = src␟pred␟dst; nodes are the
+    distinct edge endpoints and the ids of any further (node_id) frames."""
+    edges = spo.dropDuplicates().withColumn(
+        "edge_id", F.concat_ws(NODE_SEP, "src", "pred", "dst")
     )
+    nodes = edges.select(F.col("src").alias("node_id")).unionByName(
+        edges.select(F.col("dst").alias("node_id"))
+    )
+    for ids in node_ids:
+        nodes = nodes.unionByName(ids)
+    return nodes.dropDuplicates(), edges
 
 
 def graph_frames(triples: DataFrame) -> tuple:
@@ -211,60 +198,38 @@ def graph_frames(triples: DataFrame) -> tuple:
     edges: (src, dst, pred, edge_id) distinct at node-id granularity —
     exactly one edge per distinct rendered MERGE path statement.
     """
-    src = _node_id_expr(F.col("subj_label"), F.col("subj"))
-    dst = _node_id_expr(F.col("obj_label"), F.col("obj"))
-    edges = (
+    return graph_from_edges(
         triples.select(
-            src.alias("src"), F.col("pred").alias("pred"), dst.alias("dst")
+            node_id(F.col("subj_label"), F.col("subj")).alias("src"),
+            F.col("pred").alias("pred"),
+            node_id(F.col("obj_label"), F.col("obj")).alias("dst"),
         )
-        .dropDuplicates()
-        .withColumn("edge_id", F.concat_ws(_SEP, "src", "pred", "dst"))
     )
-    nodes = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .dropDuplicates()
-    )
-    return nodes, edges
 
 
 def _field(col_name: str, idx: int):
-    return F.element_at(F.split(F.col(col_name), _SEP, -1), idx)
+    return F.element_at(F.split(F.col(col_name), NODE_SEP, -1), idx)
 
 
 def _prop_col(var: str, prop: str):
     """`var.prop` as a Column — NULL when the node's label doesn't
     materialize the property (Neo4j parity: the loaded graph simply has
     no such key on that node)."""
-    if prop not in _PROP_FIELD:
+    if prop not in NODE_FIELDS:
         return F.lit(None).cast("string")
-    owner = _PROP_OWNER[prop]
-    label = _field(var, 1)
-    cond = (
-        (label == owner)
-        if owner is not None
-        else (label != "Person") & (label != "Company")
-    )
-    return F.when(cond, _field(var, _PROP_FIELD[prop])).otherwise(
-        F.lit(None).cast("string")
-    )
+    return F.when(
+        renders(_field(var, 1), prop), _field(var, NODE_FIELDS.index(prop) + 2)
+    ).otherwise(F.lit(None).cast("string"))
 
 
-def _kind_of(var: str, bound_vars) -> str:
-    """Variable kind when the scope carries kinds (a dict), else 'node'
-    (legacy set callers — every member is a node variable there)."""
-    if isinstance(bound_vars, dict):
-        return bound_vars.get(var, "node")
-    return "node"
-
-
-def _prop_access_col(var: str, prop: str, bound_vars):
-    """Kind-aware `var.prop` for WHERE — mirrors base_expr/_apply_with:
-    node → materialized property (or NULL), rel/path → NULL (the codegen
-    writes no relationship properties, so comparisons never match and
-    exists() is false — Neo4j parity for an untyped rel variable the
-    validation ladder cannot catch), long/scalar → Neo4j type error."""
-    k = _kind_of(var, bound_vars)
+def _prop_access_col(var: str, prop: str, kinds: dict):
+    """Kind-aware `var.prop` for a bound variable (each caller refuses
+    unbound ones with its own message): node → materialized property (or
+    NULL), rel/path → NULL (the codegen writes no relationship
+    properties, so comparisons never match and exists() is false — Neo4j
+    parity for an untyped rel variable the validation ladder cannot
+    catch), long/scalar → Neo4j type error."""
+    k = kinds[var]
     if k in ("long", "scalar"):
         raise UnsupportedCypherFeature(
             f"property access on a non-entity value: {var}.{prop}"
@@ -274,7 +239,7 @@ def _prop_access_col(var: str, prop: str, bound_vars):
     return _prop_col(var, prop)
 
 
-def _value_expr(pv: PropertyValue, bound_vars: set):
+def _value_expr(pv: PropertyValue, kinds: dict):
     if pv.kind == "string":
         return F.lit(pv.value)
     if pv.kind == "number":
@@ -290,10 +255,10 @@ def _value_expr(pv: PropertyValue, bound_vars: set):
         name = pv.value
         if "." in name:
             var, prop = name.split(".", 1)
-            if var not in bound_vars:
+            if var not in kinds:
                 raise UnsupportedCypherFeature(f"unbound variable: {var}")
-            return _prop_access_col(var, prop, bound_vars)
-        if name in bound_vars:
+            return _prop_access_col(var, prop, kinds)
+        if name in kinds:
             return F.col(name)  # node identity comparison
         raise UnsupportedCypherFeature(f"unbound identifier: {name}")
     raise UnsupportedCypherFeature(f"WHERE value kind: {pv.kind}")
@@ -324,7 +289,7 @@ def _is_long(pv, long_vars: set) -> bool:
     )
 
 
-def _condition_col(c: WhereCondition, bound_vars: set, long_vars: set = frozenset()):
+def _condition_col(c: WhereCondition, kinds: dict, long_vars: set = frozenset()):
     if c.kind == "function_call":
         # The WHERE grammar admits bare function-call conditions; the
         # one with executable semantics is Neo4j's classic
@@ -337,14 +302,14 @@ def _condition_col(c: WhereCondition, bound_vars: set, long_vars: set = frozense
             arg = str(c.arguments[0]).strip()
             if "." in arg:
                 var, prop = arg.split(".", 1)
-                if var not in bound_vars:
+                if var not in kinds:
                     raise UnsupportedCypherFeature(f"unbound variable: {var}")
-                return _prop_access_col(var, prop, bound_vars).isNotNull()
+                return _prop_access_col(var, prop, kinds).isNotNull()
         raise UnsupportedCypherFeature(
             f"WHERE function call: {c.function}({', '.join(c.arguments or [])})"
         )
     if c.kind == "comparison":
-        left = _value_expr(c.left, bound_vars)
+        left = _value_expr(c.left, kinds)
         if c.operator == "IS NULL":
             return left.isNull() if left is not None else F.lit(True)
         if c.operator == "IS NOT NULL":
@@ -368,7 +333,7 @@ def _condition_col(c: WhereCondition, bound_vars: set, long_vars: set = frozense
             if c.operator not in _OPS:
                 raise UnsupportedCypherFeature(f"operator: {c.operator}")
             return _OPS[c.operator](lcol, rcol)
-        right = _value_expr(c.right, bound_vars)
+        right = _value_expr(c.right, kinds)
         if left is None or right is None:
             # cross-type comparison against a string property: no match
             return F.lit(None).cast("boolean")
@@ -376,17 +341,17 @@ def _condition_col(c: WhereCondition, bound_vars: set, long_vars: set = frozense
             raise UnsupportedCypherFeature(f"operator: {c.operator}")
         return _OPS[c.operator](left, right)
     if c.kind == "and":
-        return _condition_col(c.lhs, bound_vars, long_vars) & _condition_col(
-            c.rhs, bound_vars, long_vars
+        return _condition_col(c.lhs, kinds, long_vars) & _condition_col(
+            c.rhs, kinds, long_vars
         )
     if c.kind == "or":
-        return _condition_col(c.lhs, bound_vars, long_vars) | _condition_col(
-            c.rhs, bound_vars, long_vars
+        return _condition_col(c.lhs, kinds, long_vars) | _condition_col(
+            c.rhs, kinds, long_vars
         )
     if c.kind == "not":
-        return ~_condition_col(c.inner, bound_vars, long_vars)
+        return ~_condition_col(c.inner, kinds, long_vars)
     if c.kind == "parenthesized":
-        return _condition_col(c.inner, bound_vars, long_vars)
+        return _condition_col(c.inner, kinds, long_vars)
     raise UnsupportedCypherFeature(f"WHERE condition kind: {c.kind}")
 
 
@@ -473,15 +438,7 @@ def _apply_with(df: DataFrame, kinds: dict, wc) -> tuple:
     def entity_col(var: str, prop: str):
         if var not in kinds:
             raise UnsupportedCypherFeature(f"WITH of unbound: {var}")
-        k = kinds[var]
-        if k in ("long", "scalar"):
-            raise UnsupportedCypherFeature(
-                f"property access on a non-entity value: {var}.{prop}"
-            )
-        if k == "rel":
-            # relationship/path properties are never materialized
-            return F.lit(None).cast("string")
-        return _prop_col(var, prop)
+        return _prop_access_col(var, prop, kinds)
 
     keys = []  # (col, out_name, out_kind, identity_source_or_None)
     aggs = []  # (arg_col, out_name)
@@ -540,25 +497,27 @@ def _apply_with(df: DataFrame, kinds: dict, wc) -> tuple:
                 f"WITH alias shadows an in-scope variable: {n}"
             )
 
-    if aggs:
-        kf = df.select(
-            *[c.alias(n) for c, n, _k, _s in keys],
-            *[c.alias(f"__wagg{i}") for i, (c, _n) in enumerate(aggs)],
-        )
-        agg_cols = [
-            F.count(F.col(f"__wagg{i}")).alias(n)
-            for i, (_c, n) in enumerate(aggs)
-        ]
-        key_names = [n for _c, n, _k, _s in keys]
-        nf = kf.groupBy(*key_names).agg(*agg_cols) if key_names else kf.agg(
-            *agg_cols
-        )
-        nf = nf.select(*out_names)
-    else:
-        nf = df.select(*[c.alias(n) for c, n, _k, _s in keys])
+    nf = _project(df, [(c, n) for c, n, _k, _s in keys], aggs, out_names)
     nkinds = {n: k for _c, n, k, _s in keys}
     nkinds.update({n: "long" for _c, n in aggs})
     return nf, nkinds
+
+
+def _project(df: DataFrame, keys: list, counts: list, order: list) -> DataFrame:
+    """`keys` (col, name) and `counts` (count argument col, name) → one
+    column each, in `order`. With any count, openCypher implicit grouping:
+    the keys group the rows, each count skips NULL arguments, and no keys
+    means one global row."""
+    cols = [c.alias(n) for c, n in keys]
+    if counts:
+        df = (
+            df.select(*cols, *[c.alias(f"__agg{i}") for i, (c, _n) in enumerate(counts)])
+            .groupBy(*[n for _c, n in keys])
+            .agg(*[F.count(f"__agg{i}").alias(n) for i, (_c, n) in enumerate(counts)])
+        )
+    else:
+        df = df.select(*cols)
+    return df.select(*order)
 
 
 def _node_filter(col_name: str, np: NodePattern):
@@ -568,7 +527,7 @@ def _node_filter(col_name: str, np: NodePattern):
         c = _field(col_name, 1) == np.label
         cond = c if cond is None else cond & c
     for p in np.properties or ():
-        val = _value_expr(p.value, set())
+        val = _value_expr(p.value, {})
         pc = _prop_col(col_name, p.key)
         c = (pc == val) if val is not None else F.lit(None).cast("boolean")
         cond = c if cond is None else cond & c
@@ -704,10 +663,6 @@ def execute_cypher(
     Output columns: one per RETURN item — `a` → node identity string
     (column `a`), `a.firstName` → the property (column `a_firstName`).
     """
-    from ..guard.api import get_cypher_validation_errors
-    from ..guard.parser.clauses import parse_query
-    from .synth import pipeline_db_schema
-
     schema = db_schema if db_schema is not None else pipeline_db_schema()
     errors = get_cypher_validation_errors(query, schema)  # raises on parse
     if errors:
@@ -1081,41 +1036,17 @@ def _compile_query(
                     f"YIELD {expected} shadows a bound variable "
                     "(Neo4j compile error)"
                 )
-            labels = nodes_df.select(
-                F.element_at(F.split("node_id", _SEP, -1), 1).alias("label")
-            ).dropDuplicates()
+            labels = nodes_df.select(_field("node_id", 1).alias("label")).dropDuplicates()
             if cc.procedure == "db.labels":
                 pf = labels
             elif cc.procedure == "db.relationshipTypes":
                 pf = edges.select(F.col("pred").alias("rel_type")).dropDuplicates()
-            else:  # db.propertyKeys — derived from _PROP_OWNER, the
-                # module's single source of truth for the rendered model
-                person_keys = sorted(
-                    k for k, o in _PROP_OWNER.items() if o == "Person"
-                )
-                company_keys = sorted(
-                    k for k, o in _PROP_OWNER.items() if o == "Company"
-                )
-                other_keys = sorted(
-                    k for k, o in _PROP_OWNER.items() if o is None
-                )
-                pf = (
-                    labels.select(
-                        F.explode(
-                            F.when(
-                                F.col("label") == "Person",
-                                F.array(*[F.lit(k) for k in person_keys]),
-                            )
-                            .when(
-                                F.col("label") == "Company",
-                                F.array(*[F.lit(k) for k in company_keys]),
-                            )
-                            .otherwise(
-                                F.array(*[F.lit(k) for k in other_keys])
-                            )
-                        ).alias("key")
-                    ).dropDuplicates()
-                )
+            else:  # db.propertyKeys: the keys the labels present render
+                pf = labels.select(
+                    F.explode(
+                        per_label(F.col("label"), lambda keys: F.array(*map(F.lit, keys)))
+                    ).alias("key")
+                ).dropDuplicates()
             acc = acc.crossJoin(
                 pf.select(
                     *[
@@ -1125,9 +1056,6 @@ def _compile_query(
                 )
             )
             continue
-        from ..guard.extract import extract_query_elements
-        from ..guard.validate import validate_query_elements
-
         sub_errors = validate_query_elements(
             extract_query_elements(cc.subquery), schema
         )
@@ -1228,8 +1156,6 @@ def _compile_query(
                 _condition_col(cond, kinds, set())
         raise UnsupportedCypherFeature("WHERE with out-of-scope variables")
 
-    import re as _re
-
     def base_expr(text: str):
         """A RETURN-able value: `a` (node id / WITH-projected value),
         `a.prop` (property of a node variable), a relationship variable
@@ -1241,15 +1167,7 @@ def _compile_query(
             var, prop = text.split(".", 1)
             if var not in kinds:
                 raise UnsupportedCypherFeature(f"RETURN of unbound: {text}")
-            if kinds[var] in ("long", "scalar"):
-                raise UnsupportedCypherFeature(
-                    f"property access on a non-entity value: {text}"
-                )
-            if kinds[var] == "rel":
-                # relationship/path properties are never materialized by
-                # the codegen — NULL, like unmaterialized node props
-                return F.lit(None).cast("string"), f"{var}_{prop}"
-            return _prop_col(var, prop), f"{var}_{prop}"
+            return _prop_access_col(var, prop, kinds), f"{var}_{prop}"
         if text not in kinds:
             raise UnsupportedCypherFeature(f"RETURN of unbound: {text}")
         return F.col(text), text
@@ -1257,19 +1175,19 @@ def _compile_query(
     # RETURN items: `expr [AS alias]`, expr = value or count(value|*).
     # openCypher implicit grouping: with any aggregate present, the
     # non-aggregate items become the grouping keys.
-    keys, aggs = [], []  # (binding_col, out_name) / (arg_col_or_None, out_name)
+    keys, aggs = [], []  # (binding_col, out_name) / (arg_col, out_name)
     ordered_names = []  # output columns in written RETURN order
     for item in q.return_clauses[0].items:
         item = item.strip()
         alias = None
-        m = _re.split(r"\s+AS\s+", item, maxsplit=1)
+        m = re.split(r"\s+AS\s+", item, maxsplit=1)
         if len(m) == 2:
             item, alias = m[0].strip(), m[1].strip()
-        cm = _re.fullmatch(r"count\(\s*(.+?)\s*\)", item)
+        cm = re.fullmatch(r"count\(\s*(.+?)\s*\)", item)
         if cm:
             inner = cm.group(1)
             if inner == "*":
-                arg, default = None, "count_star"
+                arg, default = F.lit(1), "count_star"
             else:
                 arg, nm = base_expr(inner)
                 default = f"count_{nm}"
@@ -1282,24 +1200,6 @@ def _compile_query(
             keys.append((col, alias or default))
             ordered_names.append(alias or default)
 
-    def bindings(df: DataFrame) -> DataFrame:
-        """Binding-level projection of every needed expression (WHERE is
-        already applied at its pipeline position) — aggregation must
-        happen AFTER the alternatives union, never per branch."""
-        cols = [c.alias(n) for c, n in keys]
-        for i, (arg, _n) in enumerate(aggs):
-            cols.append((F.lit(1) if arg is None else arg).alias(f"__agg{i}"))
-        return df.select(*cols)
-
-    out = bindings(out_frame)
-    if not aggs:
-        return out.select(*ordered_names)
-    agg_cols = [
-        F.count(F.col(f"__agg{i}")).alias(n) for i, (_a, n) in enumerate(aggs)
-    ]
-    key_names = [n for _c, n in keys]
-    if key_names:
-        out = out.groupBy(*key_names).agg(*agg_cols)
-    else:
-        out = out.agg(*agg_cols)
-    return out.select(*ordered_names)  # written RETURN order
+    # aggregation runs after the alternatives union, never per branch
+    # (WHERE is already applied at its pipeline position)
+    return _project(out_frame, keys, aggs, ordered_names)

@@ -33,15 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The node property schema the MERGE materializer writes (codegen.py
-# _entity_props renders exactly these property maps per label); schema
-# inference reuses the mapping so the inferred DbSchema is consistent
-# with the statements codegen emits, by construction.
-ENTITY_PROPS: dict[str, list[str]] = {
-    "Person": ["firstName", "lastName"],
-    "Company": ["companyName"],
-    "Location": ["city"],
-}
+from ..guard import DbSchema
+from ..spark import validate_dataframe
+from .codegen import relationship_statements, rendered_keys
 
 
 def infer_relationship_schema(triples: DataFrame) -> DataFrame:
@@ -94,20 +88,18 @@ def infer_relationship_schema(triples: DataFrame) -> DataFrame:
     )
 
 
-def inferred_db_schema(inferred: DataFrame, entity_props: dict | None = None):
+def inferred_db_schema(inferred: DataFrame):
     """Inferred relationship rows → a `guard.DbSchema` ready for the
     vectorized validator. Collects only the schema grid (one row per
     (pred, subj_label, obj_label) — ontology-sized, never corpus-sized).
 
-    Node properties come from ``entity_props`` (default: the codegen
-    materializer's conventions, `ENTITY_PROPS`), all STRING — the types
-    codegen writes. Relationship property lists are empty: the MERGE
+    Every observed label declares the keys the codegen renders for it
+    (`codegen.rendered_keys`), all STRING — the types codegen writes — so
+    the inferred DbSchema agrees with the emitted statements by
+    construction. Relationship property lists are empty: the MERGE
     statements codegen emits carry no rel props, and the guard treats an
     absent rel_props entry as "no properties declared".
     """
-    from ..guard import DbSchema
-
-    props = ENTITY_PROPS if entity_props is None else entity_props
     grid = [
         (r["subj_label"], r["pred"], r["obj_label"])
         for r in inferred.select("subj_label", "pred", "obj_label").collect()
@@ -116,10 +108,7 @@ def inferred_db_schema(inferred: DataFrame, entity_props: dict | None = None):
     return DbSchema.from_dict(
         {
             "node_props": {
-                lab: [
-                    {"name": p, "neo4j_type": "STRING"}
-                    for p in props.get(lab, [])
-                ]
+                lab: [{"name": p, "neo4j_type": "STRING"} for p in rendered_keys(lab)]
                 for lab in labels
             },
             "rel_props": {},
@@ -145,9 +134,6 @@ def schema_roundtrip(spark, triples: DataFrame) -> DataFrame:
     pandas UDF, one pass over distinct statements); inference adds the
     three grid aggregations above; the DbSchema broadcast is KB-sized.
     """
-    from ..spark import validate_dataframe
-    from .codegen import relationship_statements
-
     # the triple stream feeds four plan references (three inference
     # aggregations + the statement render) and usually sits on the whole
     # extraction→canonicalize DAG — truncate lineage once up front

@@ -67,25 +67,41 @@ def _verdict_row(query: str, schema: DbSchema) -> tuple:
     return (not errors, True, api._is_write_ast(ast, query), errors)
 
 
-def _make_batch_fn(bc_schema):
-    def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # a task unpickles `bc_schema` as the worker's `_broadcastRegistry`
-        # entry, which loads `.value` once per worker process and keeps it
-        schema = bc_schema.value
-        for series in series_iter:
-            rows = [_verdict_row(q, schema) for q in series]
-            yield pd.DataFrame(
-                rows, columns=["is_valid", "syntax_ok", "is_write", "errors"]
-            )
+def schema_udf(
+    spark: SparkSession, schema: DbSchema, row_fn, out_schema: StructType
+):
+    """An Arrow-batched pandas UDF over one string column: ``row_fn(value,
+    schema)`` gives each row's tuple of `out_schema` fields, with the
+    DbSchema on a broadcast."""
+    bc = spark.sparkContext.broadcast(schema)
+    names = out_schema.fieldNames()
 
-    return batch
+    def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        # a task unpickles `bc` as the worker's `_broadcastRegistry`
+        # entry, which loads `.value` once per worker process and keeps it
+        db_schema = bc.value
+        for series in series_iter:
+            yield pd.DataFrame([row_fn(v, db_schema) for v in series], columns=names)
+
+    return F.pandas_udf(batch, out_schema)
+
+
+def with_schema_udf(
+    spark: SparkSession,
+    df: DataFrame,
+    col: str,
+    schema: DbSchema,
+    row_fn,
+    out_schema: StructType,
+) -> DataFrame:
+    """df + one column per `out_schema` field, from `schema_udf` over `col`."""
+    udf = schema_udf(spark, schema, row_fn, out_schema)
+    return df.withColumn("__udf", udf(F.col(col))).select("*", "__udf.*").drop("__udf")
 
 
 def validation_udf(spark: SparkSession, schema: DbSchema):
     """Returns a pandas UDF computing the verdict struct for a cypher column."""
-    bc = spark.sparkContext.broadcast(schema)
-    fn = _make_batch_fn(bc)
-    return F.pandas_udf(fn, VERDICT_SCHEMA)
+    return schema_udf(spark, schema, _verdict_row, VERDICT_SCHEMA)
 
 
 def validate_dataframe(
@@ -95,14 +111,7 @@ def validate_dataframe(
     cypher_col: str = "cypher",
 ) -> DataFrame:
     """df + verdict columns (is_valid, syntax_ok, is_write, errors)."""
-    udf = validation_udf(spark, schema)
-    return df.withColumn("verdict", udf(F.col(cypher_col))).select(
-        "*",
-        F.col("verdict.is_valid").alias("is_valid"),
-        F.col("verdict.syntax_ok").alias("syntax_ok"),
-        F.col("verdict.is_write").alias("is_write"),
-        F.col("verdict.errors").alias("errors"),
-    ).drop("verdict")
+    return with_schema_udf(spark, df, cypher_col, schema, _verdict_row, VERDICT_SCHEMA)
 
 
 def partition_error_summary(validated: DataFrame) -> DataFrame:

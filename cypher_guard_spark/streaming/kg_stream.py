@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..pipeline.codegen import _entity_props
+from ..pipeline.codegen import entity_props
 from ..pipeline.synth import pipeline_db_schema
 from ..spark.validate_udf import validation_udf
 from .link_state import stream_link_stats
@@ -89,7 +89,7 @@ def entity_upsert_statements(stats: DataFrame) -> DataFrame:
         " ON MATCH SET %s.mentionCount = %s",
         var,
         F.col("label"),
-        _entity_props(F.col("label"), F.col("surface")),
+        entity_props(F.col("label"), F.col("surface")),
         var,
         F.col("n_mentions").cast("string"),
         var,

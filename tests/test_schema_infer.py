@@ -9,8 +9,8 @@ its JSON fixtures feed (reference data/schema/eval_schema.json shape).
 import pytest
 from pyspark.sql import functions as F
 
+from cypher_guard_spark.pipeline.codegen import ENTITY_PROPS
 from cypher_guard_spark.pipeline.schema_infer import (
-    ENTITY_PROPS,
     infer_relationship_schema,
     inferred_db_schema,
     schema_roundtrip,
@@ -102,7 +102,8 @@ def test_inferred_db_schema_object(spark, mixed):
     assert {p["name"] for p in d["node_props"]["Person"]} == set(
         ENTITY_PROPS["Person"]
     )
-    # unknown labels get an empty (but present) prop list
+    # every observed label is present, with the keys the codegen renders
+    # for it (Location renders city)
     assert d["node_props"].keys() == {"Person", "Company", "Location"}
 
 
@@ -113,6 +114,43 @@ def test_roundtrip_all_valid(spark, mixed):
     assert set(rows) == {"HAS_PASSPORT", "WORKS_FOR", "OPERATES", "KNOWS"}
     for r in rows.values():
         assert r["n_valid"] == r["n_stmts"] > 0
+
+
+def test_roundtrip_other_label_renders_city(spark):
+    """A label other than Person/Company/Location (here Country) renders
+    {city: ...} in the codegen, so the inferred schema must declare city
+    for it: every statement validates against that schema, and applying
+    the MERGE batches with it gives the node ids graph_frames builds."""
+    from cypher_guard_spark.pipeline.apply_merge import apply_merge_batches
+    from cypher_guard_spark.pipeline.codegen import build_merge_batches
+    from cypher_guard_spark.pipeline.executor import graph_frames
+
+    t = _triples(
+        spark,
+        [
+            ("Alice Smith", "LIVES_IN", "France", "Person", "Country"),
+            ("acme", "BASED_IN", "France", "Company", "Country"),
+            ("France", "BORDERS", "Spain", "Country", "Country"),
+        ],
+    )
+    rows = schema_roundtrip(spark, t).collect()
+    assert {r["pred"] for r in rows} == {"LIVES_IN", "BASED_IN", "BORDERS"}
+    for r in rows:
+        assert r["n_valid"] == r["n_stmts"] > 0
+
+    schema = inferred_db_schema(infer_relationship_schema(t))
+    entities = t.select(
+        F.col("subj_label").alias("label"), F.col("subj").alias("canonical")
+    ).unionByName(
+        t.select(F.col("obj_label").alias("label"), F.col("obj").alias("canonical"))
+    )
+    nodes_a, _ = apply_merge_batches(
+        spark, build_merge_batches(entities, t), schema=schema
+    )
+    nodes_d, _ = graph_frames(t)
+    got = sorted(r["node_id"] for r in nodes_a.collect())
+    assert got == sorted(r["node_id"] for r in nodes_d.collect())
+    assert "Country\x1f\x1f\x1f\x1fSpain" in got
 
 
 def test_roundtrip_detects_schema_gap(spark, mixed):
