@@ -10,6 +10,7 @@ tests/test_reference_expectations.py). Any behavior drift in the guard
 shows up here as a verdict or error-string diff.
 """
 
+import hashlib
 import json
 from pathlib import Path
 
@@ -67,3 +68,23 @@ def test_corpus_summary():
     assert sum(1 for e in GOLDEN if e["parse_ok"]) == 103
     assert sum(1 for e in GOLDEN if e["has_valid_cypher"]) == 69
     assert sum(1 for e in GOLDEN if e.get("source") == "unittest") == 65
+
+
+PARSE_DIGESTS = json.loads((Path(__file__).parent / "golden/parse_digests.json").read_text())
+
+
+def parse_digest(cypher: str) -> str:
+    """sha256 of one query's parse result: the AST's dataclass repr, or the
+    parse error's code and message."""
+    ast, perr = api.parse_query_result(cypher)
+    text = repr(ast) if perr is None else f"{perr.code}: {perr.message}"
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def test_parse_digests():
+    # tests/golden/parse_digests.json maps every golden query_id to
+    # parse_digest(cypher); any drift in what the parser builds or reports
+    # shows up here, on every host and independently of any schema
+    assert len(PARSE_DIGESTS) == len(GOLDEN)
+    changed = [e["query_id"] for e in GOLDEN if parse_digest(e["cypher"]) != PARSE_DIGESTS[e["query_id"]]]
+    assert not changed, f"parse result changed for: {changed}"
