@@ -89,15 +89,10 @@ def extract_query_elements(query: Query) -> QueryElements:
     """validation.rs:195-247 — clause-vector order is load-bearing for the
     insertion order of property_accesses/comparisons."""
     elements = QueryElements()
-    for match_clause in query.match_clauses:
-        for element in match_clause.elements:
-            _extract_from_match_element(element, elements)
-    for merge_clause in query.merge_clauses:
-        for element in merge_clause.elements:
-            _extract_from_match_element(element, elements)
-    for create_clause in query.create_clauses:
-        for element in create_clause.elements:
-            _extract_from_match_element(element, elements)
+    for clauses in (query.match_clauses, query.merge_clauses, query.create_clauses):
+        for clause in clauses:
+            for element in clause.elements:
+                _extract_from_match_element(element, elements)
     for where_clause in query.where_clauses:
         for condition in where_clause.conditions:
             _extract_from_where_condition(condition, elements)
@@ -174,28 +169,19 @@ def _extract_from_where_condition(condition: WhereCondition, elements: QueryElem
     if k == "comparison":
         _extract_from_property_value(condition.left, elements, CTX_WHERE)
         _extract_from_property_value(condition.right, elements, CTX_WHERE)
-        if condition.left.kind == "identifier" and "." in condition.left.value:
-            parts = condition.left.value.split(".")
-            if len(parts) == 2:
-                elements.property_comparisons.append(
-                    PropertyComparison(
-                        variable=parts[0].strip(),
-                        property=parts[1].strip(),
-                        value=_value_string(condition.right),
-                        value_type=_value_type(condition.right),
+        # a `var.prop` on either side is compared with the other side
+        for side, other in ((condition.left, condition.right), (condition.right, condition.left)):
+            if side.kind == "identifier" and "." in side.value:
+                parts = side.value.split(".")
+                if len(parts) == 2:
+                    elements.property_comparisons.append(
+                        PropertyComparison(
+                            variable=parts[0].strip(),
+                            property=parts[1].strip(),
+                            value=_value_string(other),
+                            value_type=_value_type(other),
+                        )
                     )
-                )
-        if condition.right.kind == "identifier" and "." in condition.right.value:
-            parts = condition.right.value.split(".")
-            if len(parts) == 2:
-                elements.property_comparisons.append(
-                    PropertyComparison(
-                        variable=parts[0].strip(),
-                        property=parts[1].strip(),
-                        value=_value_string(condition.left),
-                        value_type=_value_type(condition.left),
-                    )
-                )
     elif k == "function_call":
         for arg in condition.arguments or []:
             extract_property_access_from_string(arg, elements, CTX_WHERE)

@@ -36,7 +36,18 @@ from ..ast import (
 )
 from .patterns import match_element
 from .template import parse_codegen_merge
-from .utils import digit1, identifier, tag, tag_no_case, ws0, ws1
+from .utils import (
+    digit1,
+    identifier,
+    keyword,
+    path_property,
+    separated_list,
+    string_literal,
+    tag,
+    tag_no_case,
+    ws0,
+    ws1,
+)
 
 # Clause kind tags used by the order FSM
 K_MATCH = "match"
@@ -64,23 +75,9 @@ class ParseFail(Exception):
 # match / return
 # --------------------------------------------------------------------------
 
-def match_element_list(s: str, i: int):
-    """Comma-separated match elements (clauses.rs:36-46). Elements never fail."""
-    i, first = match_element(s, i)
-    elements = [first]
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, ",")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        i, e = match_element(s, k)
-        elements.append(e)
-    return (i, elements)
-
-
 def match_clause(s: str, i: int):
-    """[OPTIONAL] MATCH — the only tag_no_case keywords (clauses.rs:49-67)."""
+    """[OPTIONAL] MATCH — the only tag_no_case keywords (clauses.rs:49-67).
+    Match elements never fail, so the list (clauses.rs:36-46) has one."""
     i = ws0(s, i)
     is_optional = False
     j = tag_no_case(s, i, "OPTIONAL")
@@ -95,7 +92,7 @@ def match_clause(s: str, i: int):
     j2 = ws1(s, j)
     if j2 is None:
         return None
-    i, elements = match_element_list(s, j2)
+    i, elements = separated_list(s, j2, match_element)
     return (i, MatchClause(elements=elements, is_optional=is_optional))
 
 
@@ -104,26 +101,15 @@ def return_item(s: str, i: int):
     r = function_call(s, i)
     if r is not None:
         j, (fn, args) = r
-        base = f"{fn}({', '.join(args)})"
-        r2 = _opt_as_alias(s, j)
-        if r2 is not None:
-            j, alias = r2
-            return (j, f"{base} AS {alias}")
-        return (j, base)
-    r = identifier(s, i)
-    if r is None:
-        return None
-    i, first = r
-    j = tag(s, i, ".")
-    base = first
-    if j is not None:
-        r = identifier(s, j)
-        if r is not None:
-            i, prop = r
-            base = f"{first}.{prop}"
-    r2 = _opt_as_alias(s, i)
-    if r2 is not None:
-        i, alias = r2
+        r = (j, f"{fn}({', '.join(args)})")
+    else:
+        r = property_access(s, i) or identifier(s, i)
+        if r is None:
+            return None
+    i, base = r
+    r = _opt_as_alias(s, i)
+    if r is not None:
+        i, alias = r
         return (i, f"{base} AS {alias}")
     return (i, base)
 
@@ -136,37 +122,17 @@ def _opt_as_alias(s: str, i: int):
     j = ws1(s, j)
     if j is None:
         return None
-    r = identifier(s, j)
-    if r is None:
-        return None
-    return r
+    return identifier(s, j)
 
 
 def return_clause(s: str, i: int):
     """RETURN item(,item)*; trailing comma rejected (clauses.rs:114-140)."""
-    i = ws0(s, i)
-    j = tag(s, i, "RETURN")
+    j = keyword(s, i, "RETURN")
     if j is None:
         return None
-    j = ws1(s, j)
-    if j is None:
+    i, items = separated_list(s, j, return_item)
+    if not items:
         return None
-    r = return_item(s, j)
-    if r is None:
-        return None
-    i, first = r
-    items = [first]
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, ",")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        r = return_item(s, k)
-        if r is None:
-            break
-        i, item = r
-        items.append(item)
     i = ws0(s, i)
     if i < len(s) and s[i] == ",":
         return None
@@ -174,44 +140,9 @@ def return_clause(s: str, i: int):
 
 
 # --------------------------------------------------------------------------
-# literals / accesses / function calls (clauses.rs:143-208)
+# literals / accesses / function calls (clauses.rs:143-208); the string
+# literal, numeric_literal and path_property live in utils
 # --------------------------------------------------------------------------
-
-def numeric_literal(s: str, i: int):
-    r = digit1(s, i)
-    if r is None:
-        return None
-    return r  # (i, digits-as-string)
-
-
-def string_literal_local(s: str, i: int):
-    """No escape handling; a quote char terminates (clauses.rs:149-154)."""
-    if i >= len(s) or s[i] not in "'\"":
-        return None
-    quote = s[i]
-    j = i + 1
-    n = len(s)
-    while j < n and s[j] != quote:
-        j += 1
-    if j >= n:
-        return None
-    return (j + 1, s[i + 1 : j])
-
-
-def path_property(s: str, i: int):
-    r = identifier(s, i)
-    if r is None:
-        return None
-    i, var = r
-    j = tag(s, i, ".")
-    if j is None:
-        return None
-    r = identifier(s, j)
-    if r is None:
-        return None
-    i, prop = r
-    return (i, (var, prop))
-
 
 def property_access(s: str, i: int):
     r = path_property(s, i)
@@ -232,23 +163,7 @@ def function_call(s: str, i: int):
     j = tag(s, i, "(")
     if j is None:
         return None
-    i = ws0(s, j)
-    args = []
-    r = _call_arg(s, i)
-    if r is not None:
-        i, a = r
-        args.append(a)
-        while True:
-            k = ws0(s, i)
-            k2 = tag(s, k, ",")
-            if k2 is None:
-                break
-            k = ws0(s, k2)
-            r = _call_arg(s, k)
-            if r is None:
-                break
-            i, a = r
-            args.append(a)
+    i, args = separated_list(s, ws0(s, j), _call_arg)
     i = ws0(s, i)
     j = tag(s, i, ")")
     if j is None:
@@ -266,10 +181,10 @@ def _call_arg(s: str, i: int):
     r = property_access(s, i)
     if r is not None:
         return r
-    r = string_literal_local(s, i)
+    r = string_literal(s, i)
     if r is not None:
         return r
-    r = numeric_literal(s, i)
+    r = digit1(s, i)
     if r is not None:
         return r
     j = tag_no_case(s, i, "true")
@@ -281,10 +196,7 @@ def _call_arg(s: str, i: int):
     j = tag_no_case(s, i, "NULL")
     if j is not None:
         return (j, "NULL")
-    r = identifier(s, i)
-    if r is not None:
-        return r
-    return None
+    return identifier(s, i)
 
 
 # --------------------------------------------------------------------------
@@ -292,40 +204,22 @@ def _call_arg(s: str, i: int):
 # --------------------------------------------------------------------------
 
 def parse_where_expr(s: str, i: int):
-    r = parse_and_expr(s, i)
-    if r is None:
-        return None
-    i, left = r
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, "OR")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        r = parse_and_expr(s, k)
-        if r is None:
-            break
-        i, right = r
-        left = WhereCondition(kind="or", lhs=left, rhs=right)
-    return (i, left)
+    i, terms = separated_list(s, i, parse_and_expr, "OR")
+    return _fold_left(i, terms, "or")
 
 
 def parse_and_expr(s: str, i: int):
-    r = parse_basic_condition(s, i)
-    if r is None:
+    i, terms = separated_list(s, i, parse_basic_condition, "AND")
+    return _fold_left(i, terms, "and")
+
+
+def _fold_left(i: int, terms: list, kind: str):
+    """(i, t0 kind t1 kind t2 …) nested to the left, or None for no terms."""
+    if not terms:
         return None
-    i, left = r
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, "AND")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        r = parse_basic_condition(s, k)
-        if r is None:
-            break
-        i, right = r
-        left = WhereCondition(kind="and", lhs=left, rhs=right)
+    left = terms[0]
+    for right in terms[1:]:
+        left = WhereCondition(kind=kind, lhs=left, rhs=right)
     return (i, left)
 
 
@@ -372,16 +266,11 @@ def parse_basic_condition(s: str, i: int):
 
 
 def _parse_comparison(s: str, i: int):
-    r = property_access(s, i)
-    if r is not None:
-        i2, acc = r
-        left = PropertyValue.identifier(acc)
-    else:
-        r = identifier(s, i)
-        if r is None:
-            return None
-        i2, name = r
-        left = PropertyValue.identifier(name)
+    r = property_access(s, i) or identifier(s, i)
+    if r is None:
+        return None
+    i2, name = r
+    left = PropertyValue.identifier(name)
     i = ws0(s, i2)
     op = None
     for candidate in _OPERATORS:
@@ -398,10 +287,10 @@ def _parse_comparison(s: str, i: int):
             WhereCondition(kind="comparison", left=left, operator=op, right=PropertyValue.null()),
         )
     i = ws0(s, i)
-    r = string_literal_local(s, i)
+    r = string_literal(s, i)
     if r is not None:
         return (r[0], WhereCondition(kind="comparison", left=left, operator=op, right=PropertyValue.string(r[1])))
-    r = numeric_literal(s, i)
+    r = digit1(s, i)
     if r is not None:
         return (r[0], WhereCondition(kind="comparison", left=left, operator=op, right=PropertyValue.number(int(r[1]))))
     j = tag_no_case(s, i, "true")
@@ -420,11 +309,7 @@ def _parse_comparison(s: str, i: int):
 
 
 def where_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "WHERE")
-    if j is None:
-        return None
-    j = ws1(s, j)
+    j = keyword(s, i, "WHERE")
     if j is None:
         return None
     r = parse_where_expr(s, j)
@@ -439,17 +324,10 @@ def where_clause(s: str, i: int):
 # --------------------------------------------------------------------------
 
 def set_clause(s: str, i: int):
-    r = identifier(s, i)
+    r = path_property(s, i)
     if r is None:
         return None
-    i, var = r
-    j = tag(s, i, ".")
-    if j is None:
-        return None
-    r = identifier(s, j)
-    if r is None:
-        return None
-    i, prop = r
+    i, (var, prop) = r
     i = ws0(s, i)
     j = tag(s, i, "=")
     if j is None:
@@ -462,89 +340,39 @@ def set_clause(s: str, i: int):
     return (i, SetClause(variable=var, property=prop, value=value))
 
 
-def _set_clause_list(s: str, i: int):
-    r = set_clause(s, i)
-    if r is None:
-        return None
-    i, first = r
-    clauses = [first]
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, ",")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        r = set_clause(s, k)
-        if r is None:
-            break
-        i, c = r
-        clauses.append(c)
-    return (i, clauses)
-
-
-def on_create_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "ON CREATE")
+def on_set_clause(s: str, i: int, kw: str, clause_type):
+    """``kw SET s(,s)*`` as a ``clause_type``: on_create_clause is
+    ("ON CREATE", OnCreateClause), on_match_clause ("ON MATCH",
+    OnMatchClause) (clauses.rs:387-396, :399-413)."""
+    j = keyword(s, i, kw)
     if j is None:
         return None
-    j = ws1(s, j)
+    j = keyword(s, j, "SET")
     if j is None:
         return None
-    j = tag(s, j, "SET")
-    if j is None:
+    i, set_clauses = separated_list(s, j, set_clause)
+    if not set_clauses:
         return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    r = _set_clause_list(s, j)
-    if r is None:
-        return None
-    i, set_clauses = r
-    return (i, OnCreateClause(set_clauses=set_clauses))
-
-
-def on_match_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "ON MATCH")
-    if j is None:
-        return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    j = tag(s, j, "SET")
-    if j is None:
-        return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    r = _set_clause_list(s, j)
-    if r is None:
-        return None
-    i, set_clauses = r
-    return (i, OnMatchClause(set_clauses=set_clauses))
+    return (i, clause_type(set_clauses=set_clauses))
 
 
 def merge_clause(s: str, i: int):
     """MERGE elems + ≤1 ON CREATE + ≤1 ON MATCH, any order (clauses.rs:416-459)."""
-    i = ws0(s, i)
-    j = tag(s, i, "MERGE")
+    j = keyword(s, i, "MERGE")
     if j is None:
         return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    i, elements = match_element_list(s, j)
+    i, elements = separated_list(s, j, match_element)
     found_on_create = None
     found_on_match = None
     for _ in range(2):
         i = ws0(s, i)
         if found_on_create is None:
-            r = on_create_clause(s, i)
+            r = on_set_clause(s, i, "ON CREATE", OnCreateClause)
             if r is not None:
                 i, found_on_create = r
                 continue
         if found_on_match is None:
-            r = on_match_clause(s, i)
+            r = on_set_clause(s, i, "ON MATCH", OnMatchClause)
             if r is not None:
                 i, found_on_match = r
                 continue
@@ -556,14 +384,10 @@ def merge_clause(s: str, i: int):
 
 
 def create_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "CREATE")
+    j = keyword(s, i, "CREATE")
     if j is None:
         return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    i, elements = match_element_list(s, j)
+    i, elements = separated_list(s, j, match_element)
     return (i, CreateClause(elements=elements))
 
 
@@ -578,10 +402,9 @@ def with_item(s: str, i: int):
         i = j
         expr = WithExpression(kind="wildcard")
     else:
-        r = property_access(s, i)
+        r = path_property(s, i)
         if r is not None:
-            i, acc = r
-            var, prop = acc.split(".", 1)
+            i, (var, prop) = r
             expr = WithExpression(kind="property_access", variable=var, property=prop)
         else:
             r = function_call(s, i)
@@ -606,29 +429,12 @@ def with_item(s: str, i: int):
 
 
 def with_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "WITH")
+    j = keyword(s, i, "WITH")
     if j is None:
         return None
-    j = ws1(s, j)
-    if j is None:
+    i, items = separated_list(s, j, with_item)
+    if not items:
         return None
-    r = with_item(s, j)
-    if r is None:
-        return None
-    i, first = r
-    items = [first]
-    while True:
-        k = ws0(s, i)
-        k2 = tag(s, k, ",")
-        if k2 is None:
-            break
-        k = ws0(s, k2)
-        r = with_item(s, k)
-        if r is None:
-            break
-        i, item = r
-        items.append(item)
     return (i, WithClause(items=items))
 
 
@@ -656,14 +462,9 @@ def parse_subquery(s: str, i: int):
 
 
 def call_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "CALL")
-    if j is None:
+    i = keyword(s, i, "CALL")
+    if i is None:
         return None
-    j = ws1(s, j)
-    if j is None:
-        return None
-    i = j
     # CALL { subquery }
     k = ws0(s, i)
     k2 = tag(s, k, "{")
@@ -678,17 +479,10 @@ def call_clause(s: str, i: int):
                 k = ws0(s, k2)
                 return (k, CallClause(subquery=subquery))
     # CALL ns.proc() — must be dotted, zero args (clauses.rs:611-619)
-    r = identifier(s, i)
+    r = path_property(s, i)
     if r is None:
         return None
-    i, ns = r
-    j = tag(s, i, ".")
-    if j is None:
-        return None
-    r = identifier(s, j)
-    if r is None:
-        return None
-    i, name = r
+    i, (ns, name) = r
     procedure = f"{ns}.{name}"
     i = ws0(s, i)
     j = tag(s, i, "(")
@@ -700,28 +494,11 @@ def call_clause(s: str, i: int):
         return None
     i = j
     yield_clause = None
-    k = ws0(s, i)
-    k2 = tag(s, k, "YIELD")
-    if k2 is not None:
-        k3 = ws1(s, k2)
-        if k3 is not None:
-            r = identifier(s, k3)
-            if r is not None:
-                k, first = r
-                names = [first]
-                while True:
-                    m = ws0(s, k)
-                    m2 = tag(s, m, ",")
-                    if m2 is None:
-                        break
-                    m = ws0(s, m2)
-                    r = identifier(s, m)
-                    if r is None:
-                        break
-                    k, nm = r
-                    names.append(nm)
-                i = k
-                yield_clause = names
+    k = keyword(s, i, "YIELD")
+    if k is not None:
+        k, names = separated_list(s, k, identifier)
+        if names:
+            i, yield_clause = k, names
     return (i, CallClause(procedure=procedure, yield_clause=yield_clause))
 
 
@@ -733,97 +510,61 @@ def parameter(s: str, i: int):
     j = tag(s, i, "$")
     if j is None:
         return None
-    r = identifier(s, j)
-    if r is None:
-        return None
-    return r
+    return identifier(s, j)
 
 
 def unwind_clause(s: str, i: int):
-    i = ws0(s, i)
-    j = tag(s, i, "UNWIND")
-    if j is None:
+    """UNWIND expr AS var (clauses.rs:648-734). Each expression alternative
+    is an `if let Ok(...)` block in the reference: once the expression
+    matches, the `AS var` suffix is mandatory and its failure fails the
+    whole clause (`?` propagation), with no fallthrough."""
+    i = keyword(s, i, "UNWIND")
+    if i is None:
         return None
-    j = ws1(s, j)
-    if j is None:
+    r = _unwind_expression(s, i)
+    if r is None:
         return None
-    i = j
+    k, expr = r
+    k = ws1(s, k)
+    if k is None:
+        return None
+    k = keyword(s, k, "AS")
+    if k is None:
+        return None
+    r = identifier(s, k)
+    if r is None:
+        return None
+    return (r[0], UnwindClause(expr, r[1]))
 
-    def _as_var(k):
-        k2 = ws1(s, k)
-        if k2 is None:
-            return None
-        k2 = tag(s, k2, "AS")
-        if k2 is None:
-            return None
-        k2 = ws1(s, k2)
-        if k2 is None:
-            return None
-        return identifier(s, k2)
 
+def _unwind_expression(s: str, i: int):
+    # alt order: parameter, list, function call, property access, identifier
     r = parameter(s, i)
     if r is not None:
-        k, param = r
-        r2 = _as_var(k)
-        if r2 is not None:
-            k, var = r2
-            return (k, UnwindClause(UnwindExpression(kind="parameter", value=param), var))
-        return None
-    # Each branch below mirrors an `if let Ok(...)` block in the reference:
-    # once the expression matches, the `AS var` suffix is mandatory and its
-    # failure fails the whole clause (`?` propagation), no fallthrough.
+        return (r[0], UnwindExpression(kind="parameter", value=r[1]))
     r = property_value(s, i)
     if r is not None and r[1].kind == "list":
-        k, value = r
-        r2 = _as_var(k)
-        if r2 is None:
-            return None
-        k, var = r2
-        return (k, UnwindClause(UnwindExpression(kind="list", value=value.value), var))
+        return (r[0], UnwindExpression(kind="list", value=r[1].value))
     r = function_call(s, i)
     if r is not None:
         k, (fn, args) = r
-        r2 = _as_var(k)
-        if r2 is None:
-            return None
-        k, var = r2
         return (
             k,
-            UnwindClause(
-                UnwindExpression(
-                    kind="function_call",
-                    name=fn,
-                    args=[PropertyValue.string(a) for a in args],
-                ),
-                var,
-            ),
+            UnwindExpression(kind="function_call", name=fn, args=[PropertyValue.string(a) for a in args]),
         )
-    r = property_access(s, i)
+    r = property_access(s, i) or identifier(s, i)
     if r is not None:
-        k, acc = r
-        r2 = _as_var(k)
-        if r2 is None:
-            return None
-        k, var = r2
-        return (k, UnwindClause(UnwindExpression(kind="identifier", value=acc), var))
-    r = identifier(s, i)
-    if r is not None:
-        k, name = r
-        r2 = _as_var(k)
-        if r2 is None:
-            return None
-        k, var = r2
-        return (k, UnwindClause(UnwindExpression(kind="identifier", value=name), var))
+        return (r[0], UnwindExpression(kind="identifier", value=r[1]))
     return None
 
 
 def _primitive_value(s: str, i: int):
-    # shared alt for list items and map values (clauses.rs:747-756, :769-778):
+    # list items and map values (clauses.rs:747-756, :769-778):
     # string | number | true | false | NULL | parameter
-    r = string_literal_local(s, i)
+    r = string_literal(s, i)
     if r is not None:
         return (r[0], PropertyValue.string(r[1]))
-    r = numeric_literal(s, i)
+    r = digit1(s, i)
     if r is not None:
         return (r[0], PropertyValue.number(int(r[1])))
     j = tag_no_case(s, i, "true")
@@ -852,74 +593,25 @@ def property_value(s: str, i: int):
         return (r[0], PropertyValue.parameter(r[1]))
     j = tag(s, i, "[")
     if j is not None:
-        i2 = j
-        items = []
-        r = _primitive_value(s, i2)
-        if r is not None:
-            i2, v = r
-            items.append(v)
-            while True:
-                k = ws0(s, i2)
-                k2 = tag(s, k, ",")
-                if k2 is None:
-                    break
-                k = ws0(s, k2)
-                r = _primitive_value(s, k)
-                if r is None:
-                    break
-                i2, v = r
-                items.append(v)
-        j = tag(s, i2, "]")
+        j, items = separated_list(s, j, _primitive_value)
+        j = tag(s, j, "]")
         if j is None:
             return None
         return (j, PropertyValue.list_(items))
     j = tag(s, i, "{")
     if j is not None:
-        i2 = j
-        pairs = {}
-        r = _map_pair(s, i2)
-        if r is not None:
-            i2, (k_, v) = r
-            pairs[k_] = v
-            while True:
-                k = ws0(s, i2)
-                k2 = tag(s, k, ",")
-                if k2 is None:
-                    break
-                k = ws0(s, k2)
-                r = _map_pair(s, k)
-                if r is None:
-                    break
-                i2, (k_, v) = r
-                pairs[k_] = v
-        j = tag(s, i2, "}")
+        j, pairs = separated_list(s, j, _map_pair)
+        j = tag(s, j, "}")
         if j is None:
             return None
-        return (j, PropertyValue.map_(pairs))
-    # primitive alt (clauses.rs:790-800): string, identifier→String, number,
-    # true, false, NULL, parameter
-    r = string_literal_local(s, i)
-    if r is not None:
-        return (r[0], PropertyValue.string(r[1]))
+        return (j, PropertyValue.map_(dict(pairs)))
+    # primitive alt (clauses.rs:790-800): string, identifier→String, then
+    # _primitive_value's tail. An identifier never starts with a quote, so
+    # trying it before the string literal keeps that order.
     r = identifier(s, i)
     if r is not None:
         return (r[0], PropertyValue.string(r[1]))
-    r = numeric_literal(s, i)
-    if r is not None:
-        return (r[0], PropertyValue.number(int(r[1])))
-    j = tag_no_case(s, i, "true")
-    if j is not None:
-        return (j, PropertyValue.boolean(True))
-    j = tag_no_case(s, i, "false")
-    if j is not None:
-        return (j, PropertyValue.boolean(False))
-    j = tag_no_case(s, i, "NULL")
-    if j is not None:
-        return (j, PropertyValue.null())
-    r = parameter(s, i)
-    if r is not None:
-        return (r[0], PropertyValue.parameter(r[1]))
-    return None
+    return _primitive_value(s, i)
 
 
 def _map_pair(s: str, i: int):
@@ -1011,32 +703,35 @@ def _parse_full(s: str):
     return _bucket_clauses(clauses)
 
 
+
+
+# kind → the Query vector its clauses are bucketed into (clauses.rs:890-925)
+_QUERY_VECTOR = {
+    K_MATCH: "match_clauses",
+    K_OPTIONAL_MATCH: "match_clauses",
+    K_MERGE: "merge_clauses",
+    K_CREATE: "create_clauses",
+    K_WITH: "with_clauses",
+    K_WHERE: "where_clauses",
+    K_RETURN: "return_clauses",
+    K_UNWIND: "unwind_clauses",
+    K_CALL: "call_clauses",
+}
+
+
 def _bucket_clauses(clauses) -> Query:
     query = Query()
     for spanned in clauses:
         kind, value = spanned.value
-        if kind in (K_MATCH, K_OPTIONAL_MATCH):
-            query.match_clauses.append(value)
-        elif kind == K_MERGE:
-            query.merge_clauses.append(value)
-        elif kind == K_CREATE:
-            query.create_clauses.append(value)
-        elif kind == K_WITH:
-            query.with_clauses.append(value)
-        elif kind == K_WHERE:
-            query.where_clauses.append(value)
-        elif kind == K_RETURN:
-            query.return_clauses.append(value)
-        elif kind == K_UNWIND:
-            query.unwind_clauses.append(value)
-        elif kind == K_CALL:
-            query.call_clauses.append(value)
+        getattr(query, _QUERY_VECTOR[kind]).append(value)
     return query
 
 
 # 8-state FSM (clauses.rs:939-1111). Returns None when valid, or an opaque
 # reason string when invalid — parse_query always degrades the reason to a
 # Tag error (reference behavior; the specific variants never surface).
+# The state a clause leads to depends on its kind alone (_NEXT_STATE);
+# each state lists the kinds it accepts (_ALLOWED).
 _INITIAL = "Initial"
 _AFTER_MATCH = "AfterMatch"
 _AFTER_UNWIND = "AfterUnwind"
@@ -1046,66 +741,33 @@ _AFTER_RETURN = "AfterReturn"
 _AFTER_WRITE = "AfterWrite"
 _AFTER_CALL = "AfterCall"
 
-_MATCHY = (K_MATCH, K_OPTIONAL_MATCH)
-_WRITE = (K_CREATE, K_MERGE)
+_NEXT_STATE = {
+    K_MATCH: _AFTER_MATCH,
+    K_OPTIONAL_MATCH: _AFTER_MATCH,
+    K_UNWIND: _AFTER_UNWIND,
+    K_WHERE: _AFTER_WHERE,
+    K_WITH: _AFTER_WITH,
+    K_RETURN: _AFTER_RETURN,
+    K_CREATE: _AFTER_WRITE,
+    K_MERGE: _AFTER_WRITE,
+    K_CALL: _AFTER_CALL,
+}
 
-_TRANSITIONS = {
-    _INITIAL: {
-        **{k: _AFTER_MATCH for k in _MATCHY},
-        K_UNWIND: _AFTER_UNWIND,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
-    _AFTER_MATCH: {
-        **{k: _AFTER_MATCH for k in _MATCHY},
-        K_UNWIND: _AFTER_UNWIND,
-        K_WHERE: _AFTER_WHERE,
-        K_WITH: _AFTER_WITH,
-        K_RETURN: _AFTER_RETURN,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
+_MATCHY = {K_MATCH, K_OPTIONAL_MATCH}
+_WRITE = {K_CREATE, K_MERGE}
+_ANY = frozenset(_NEXT_STATE)
+
+_ALLOWED = {
+    _INITIAL: frozenset({*_MATCHY, K_UNWIND, *_WRITE, K_CALL}),
+    _AFTER_MATCH: _ANY,
     # NB: no MATCH transition after UNWIND (clauses.rs:986-994) — reproduced.
-    _AFTER_UNWIND: {
-        K_UNWIND: _AFTER_UNWIND,
-        K_WHERE: _AFTER_WHERE,
-        K_WITH: _AFTER_WITH,
-        K_RETURN: _AFTER_RETURN,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
-    _AFTER_WHERE: {
-        **{k: _AFTER_MATCH for k in _MATCHY},
-        K_WHERE: _AFTER_WHERE,
-        K_UNWIND: _AFTER_UNWIND,
-        K_WITH: _AFTER_WITH,
-        K_RETURN: _AFTER_RETURN,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
-    _AFTER_WITH: {
-        **{k: _AFTER_MATCH for k in _MATCHY},
-        K_UNWIND: _AFTER_UNWIND,
-        K_WHERE: _AFTER_WHERE,
-        K_WITH: _AFTER_WITH,
-        K_RETURN: _AFTER_RETURN,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
-    _AFTER_CALL: {
-        K_WHERE: _AFTER_WHERE,
-        K_WITH: _AFTER_WITH,
-        K_RETURN: _AFTER_RETURN,
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_CALL: _AFTER_CALL,
-    },
+    _AFTER_UNWIND: _ANY - _MATCHY,
+    _AFTER_WHERE: _ANY,
+    _AFTER_WITH: _ANY,
+    _AFTER_CALL: _ANY - _MATCHY - {K_UNWIND},
     # CREATE/MERGE allowed after RETURN (clauses.rs:1033-1035)
-    _AFTER_RETURN: {k: _AFTER_WRITE for k in _WRITE},
-    _AFTER_WRITE: {
-        **{k: _AFTER_WRITE for k in _WRITE},
-        K_RETURN: _AFTER_RETURN,
-        K_WITH: _AFTER_WITH,
-    },
+    _AFTER_RETURN: frozenset(_WRITE),
+    _AFTER_WRITE: frozenset({*_WRITE, K_RETURN, K_WITH}),
 }
 
 
@@ -1117,10 +779,9 @@ def validate_clause_order(clauses):
     state = _INITIAL
     for spanned in clauses:
         kind, _ = spanned.value
-        nxt = _TRANSITIONS[state].get(kind)
-        if nxt is None:
+        if kind not in _ALLOWED[state]:
             return f"invalid transition: {state} + {kind}"
-        state = nxt
+        state = _NEXT_STATE[kind]
     if state == _INITIAL:
         return "missing reading clause"
     if state == _AFTER_WITH:

@@ -8,22 +8,8 @@ SET/UNWIND grammar lives in clauses.py.
 
 from __future__ import annotations
 
-from ..ast import LengthRange, Property, PropertyValue, Quantifier, RelationshipDetails, UNDIRECTED
-from .utils import digit1, identifier, tag, ws0
-
-
-def string_literal_components(s: str, i: int):
-    """'...' or "..." — no escape handling (components.rs:15-20)."""
-    if i >= len(s) or s[i] not in "'\"":
-        return None
-    quote = s[i]
-    j = i + 1
-    n = len(s)
-    while j < n and s[j] != quote:
-        j += 1
-    if j >= n:
-        return None  # unterminated: char(quote) fails
-    return (j + 1, s[i + 1 : j])
+from ..ast import LengthRange, Property, PropertyValue, Quantifier
+from .utils import digit1, identifier, separated_list, string_literal, tag, ws0
 
 
 def number_literal_components(s: str, i: int):
@@ -37,7 +23,7 @@ def number_literal_components(s: str, i: int):
 
 def property_value(s: str, i: int):
     """components.rs:29-38 — string | number | function_call(args→String)."""
-    r = string_literal_components(s, i)
+    r = string_literal(s, i)
     if r is not None:
         return (r[0], PropertyValue.string(r[1]))
     r = number_literal_components(s, i)
@@ -59,24 +45,7 @@ def function_call(s: str, i: int):
     j2 = tag(s, j, "(")
     if j2 is None:
         return None
-    j = j2
-    args = []
-    # separated_list0: first element optional
-    r = _fc_arg(s, j)
-    if r is not None:
-        j, a = r
-        args.append(a)
-        while True:
-            k = ws0(s, j)
-            k2 = tag(s, k, ",")
-            if k2 is None:
-                break
-            k = ws0(s, k2)
-            r = _fc_arg(s, k)
-            if r is None:
-                break
-            j, a = r
-            args.append(a)
+    j, args = separated_list(s, j2, _fc_arg)
     j2 = tag(s, j, ")")
     if j2 is None:
         return None
@@ -91,7 +60,7 @@ def _fc_arg(s: str, i: int):
     r = identifier(s, i)
     if r is not None:
         return r
-    r = string_literal_components(s, i)
+    r = string_literal(s, i)
     if r is not None:
         return r
     r = number_literal_components(s, i)
@@ -124,23 +93,7 @@ def property_map(s: str, i: int):
     j = tag(s, i, "{")
     if j is None:
         return None
-    i = ws0(s, j)
-    props = []
-    r = property_(s, i)
-    if r is not None:
-        i, p = r
-        props.append(p)
-        while True:
-            k = ws0(s, i)
-            k2 = tag(s, k, ",")
-            if k2 is None:
-                break
-            k = ws0(s, k2)
-            r = property_(s, k)
-            if r is None:
-                break
-            i, p = r
-            props.append(p)
+    i, props = separated_list(s, ws0(s, j), property_)
     i = ws0(s, i)
     j = tag(s, i, "}")
     if j is None:
@@ -148,22 +101,12 @@ def property_map(s: str, i: int):
     return (j, props)
 
 
-def _rel_type_word(s: str, i: int):
-    j = i
-    n = len(s)
-    while j < n and (s[j] == "_" or s[j].isalnum()):
-        j += 1
-    if j == i:
-        return None
-    return (j, s[i:j])
-
-
 def relationship_type(s: str, i: int):
     """':' TYPE('|'TYPE)* → single joined string "A|B" (components.rs:89-107)."""
     j = tag(s, i, ":")
     if j is None:
         return None
-    r = _rel_type_word(s, j)
+    r = identifier(s, j)
     if r is None:
         return None
     i, first = r
@@ -172,7 +115,7 @@ def relationship_type(s: str, i: int):
         j = tag(s, i, "|")
         if j is None:
             break
-        r = _rel_type_word(s, j)
+        r = identifier(s, j)
         if r is None:
             return None  # Rust propagates the error after '|'
         i, t = r

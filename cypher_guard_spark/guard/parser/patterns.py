@@ -15,11 +15,10 @@ from ..ast import (
 from .components import (
     length_range,
     property_map,
-    quantifier as quantifier_p,
     relationship_type,
     variable_length_relationship,
 )
-from .utils import identifier, tag, ws0
+from .utils import digit1, identifier, matching_paren, tag, ws0
 
 # Clause-boundary keywords the pattern loop stops at (patterns.rs:159-175).
 _BOUNDARIES = (
@@ -177,17 +176,7 @@ def pattern_element_sequence(s: str, i: int, allow_qpp: bool):
         if allow_qpp:
             j = ws0(s, i)
             if j < len(s) and s[j] == "(":
-                depth = 1
-                idx = -1
-                for k in range(j + 1, len(s)):
-                    c = s[k]
-                    if c == "(":
-                        depth += 1
-                    elif c == ")":
-                        depth -= 1
-                        if depth == 0:
-                            idx = k
-                            break
+                idx = matching_paren(s, j + 1)
                 if idx >= 0:
                     k = ws0(s, idx + 1)
                     if k < len(s) and s[k] in "{+*":
@@ -256,18 +245,7 @@ def quantified_path_pattern(s: str, i: int):
     r = path_variable(s, i)
     if r is not None:
         i, path_var = r
-    # matching close paren for the QPP
-    depth = 1
-    idx = -1
-    for k in range(i, len(s)):
-        c = s[k]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                idx = k
-                break
+    idx = matching_paren(s, i)
     if idx < 0:
         return None
     inner = s[i:idx]
@@ -295,8 +273,6 @@ def quantified_path_pattern(s: str, i: int):
             if j is None:
                 return None
             i = j
-            from .utils import digit1
-
             r = digit1(s, i)
             if r is None:
                 return None

@@ -250,8 +250,9 @@ def apply_merge_batches(
     MergeApplyRefused with the total refused count and the first 20
     refused statements; 'skip' applies the valid subset (the refusals
     remain queryable via parse_merge_statements). Any other value raises
-    ValueError. The apply itself is one parse pass + two distinct()s — no
-    driver loop, nothing collected but refusals.
+    ValueError. The apply itself is one parse pass (a lazy local
+    checkpoint) + two distinct()s — no driver loop, nothing collected but
+    refusals.
     """
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
@@ -260,7 +261,9 @@ def apply_merge_batches(
     stmts = batches.select(
         F.explode(F.split(F.col(cypher_col), "\n")).alias("statement")
     ).where(F.trim("statement") != "")
-    parsed = parse_merge_statements(spark, stmts, schema)
+    # four plans read `parsed` (the refusal check, the node branch, both
+    # edge endpoints); the lazy checkpoint parses each statement once
+    parsed = parse_merge_statements(spark, stmts, schema).localCheckpoint(eager=False)
     if on_error == "raise":
         bad = parsed.where(F.col("err").isNotNull()).select("statement", "err")
         failures = [

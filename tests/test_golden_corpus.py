@@ -20,14 +20,14 @@ from cypher_guard_spark.guard import DbSchema, api
 
 GOLDEN = json.loads((Path(__file__).parent / "golden/verdicts.json").read_text())
 EVAL_SCHEMA_PATH = Path("/root/reference/data/schema/eval_schema.json")
-N_EVAL = sum(1 for e in GOLDEN if e.get("schema") != "unit")
+N_EVAL_PARSED = sum(1 for e in GOLDEN if e.get("schema") != "unit" and e["parse_ok"])
 
 
 @pytest.fixture(scope="module")
 def eval_schema():
     if not EVAL_SCHEMA_PATH.exists():
         pytest.skip(
-            f"the {N_EVAL} eval-schema cases need the reference's "
+            f"the {N_EVAL_PARSED} parsed eval-schema cases need the reference's "
             "eval_schema.json, which is not in the repo"
         )
     return DbSchema.from_dict(json.loads(EVAL_SCHEMA_PATH.read_text()))
@@ -41,25 +41,33 @@ def unit_schema():
 
 
 @pytest.mark.parametrize("entry", GOLDEN, ids=[e["query_id"] for e in GOLDEN])
-def test_golden_verdict(entry, unit_schema, request):
-    # only the eval-schema cases request the reference's schema, so the
-    # unit-schema cases run on every host
+def test_golden_parse(entry):
+    # the schema-free half of each verdict, so every case runs on every host
     cypher = entry["cypher"]
-    if entry.get("schema") == "unit":
-        schema = unit_schema
-    else:
-        schema = request.getfixturevalue("eval_schema")
     ast, perr = api.parse_query_result(cypher)
     assert (perr is None) == entry["parse_ok"], f"parse_ok drift for {entry['query_id']}"
     if perr is not None:
         assert perr.code == entry["exception_class"]
-        errors = ["Invalid Cypher syntax"]
+        assert entry["error_messages"] == ["Invalid Cypher syntax"]
+        assert not entry["has_valid_cypher"]
     else:
-        errors = sorted(api.get_cypher_validation_errors(cypher, schema))
+        assert api.is_write(cypher) == entry["is_write"]
+
+
+PARSED = [e for e in GOLDEN if e["parse_ok"]]
+
+
+@pytest.mark.parametrize("entry", PARSED, ids=[e["query_id"] for e in PARSED])
+def test_golden_verdict(entry, unit_schema, request):
+    # only the eval-schema cases request the reference's schema, so the
+    # unit-schema cases run on every host
+    if entry.get("schema") == "unit":
+        schema = unit_schema
+    else:
+        schema = request.getfixturevalue("eval_schema")
+    errors = sorted(api.get_cypher_validation_errors(entry["cypher"], schema))
     assert errors == entry["error_messages"]
     assert (not errors) == entry["has_valid_cypher"]
-    if perr is None:
-        assert api.is_write(cypher) == entry["is_write"]
 
 
 def test_corpus_summary():

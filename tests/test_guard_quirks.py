@@ -202,6 +202,21 @@ def test_q12_unsupported_cypher_is_syntax_error(query):
     assert api.has_parser_errors(query) is True
 
 
+# tag_no_case parity: nom 7 compares char::to_lowercase char by char, so
+# 'ı' (U+0131) does not match 'I' nor 'ſ' (U+017F) 'S', though both
+# upper-case to them
+@pytest.mark.parametrize(
+    "query,errors",
+    [
+        ("OPTıONAL MATCH (n:Person) RETURN n", ["Invalid Cypher syntax"]),
+        ("MATCH (n:Person) WHERE n.name = falſe RETURN n", ["Undefined variable: falſe"]),
+    ],
+    ids=["dotless-i", "long-s"],
+)
+def test_tag_no_case_compares_lowercase(query, errors, schema):
+    assert get_cypher_validation_errors(query, schema) == errors
+
+
 # is_write substring false positive (python_bindings lib.rs:1676-1683)
 def test_is_write_substring_false_positive():
     assert is_write("MATCH (removed:Person) RETURN removed.name") is True

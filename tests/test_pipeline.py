@@ -820,3 +820,33 @@ def test_blocking_report_predicts_band_join_rows(spark):
     assert got == want
     # the abbreviation surface contributes no block at all
     assert sum(nb for nb, _ in got.values()) == sum(nb for _, nb, _ in twin)
+
+
+@pytest.mark.parametrize("on_error", ["raise", "skip"])
+def test_apply_merge_parses_each_statement_once(spark, monkeypatch, on_error):
+    """`apply_merge_batches` feeds the refusal check, the node branch and
+    both edge endpoints from one parse: applying 7 statements and counting
+    nodes and edges runs the guard parse 7 times, not once per consumer."""
+    import cypher_guard_spark.pipeline.apply_merge as AM
+
+    acc = spark.sparkContext.accumulator(0)
+    orig = AM._parse_statement
+
+    def counting_parse(stmt, schema):
+        acc.add(1)
+        return orig(stmt, schema)
+
+    monkeypatch.setattr(AM, "_parse_statement", counting_parse)
+    lines = [
+        "MERGE (p:Person {firstName: 'Ada', lastName: 'Lovelace'})",
+        "MERGE (c:Company {companyName: 'Acme'})",
+        "MERGE (l:Location {city: 'Berlin'})",
+        "MERGE (a:Person {firstName: 'Ada', lastName: 'Lovelace'})-[:WORKS_FOR]->(b:Company {companyName: 'Acme'})",
+        "MERGE (a:Company {companyName: 'Acme'})-[:LOCATED_IN]->(b:Location {city: 'Berlin'})",
+        "MERGE (a:Person {firstName: 'Alan', lastName: 'Turing'})-[:KNOWS]->(b:Person {firstName: 'Ada', lastName: 'Lovelace'})",
+        "MERGE (p:Person {firstName: 'Alan', lastName: 'Turing'})",
+    ]
+    batches = spark.createDataFrame([("\n".join(lines[:4]),), ("\n".join(lines[4:]),)], ["cypher"])
+    nodes, edges = AM.apply_merge_batches(spark, batches, on_error=on_error)
+    assert (nodes.count(), edges.count()) == (4, 3)
+    assert acc.value == len(lines)
