@@ -18,12 +18,21 @@ the source lines instead).
 import pytest
 
 from cypher_guard_spark.guard import (
+    CypherParsingError,
+    CypherValidationError,
     DbSchema,
     DbSchemaConstraint,
     DbSchemaIndex,
     DbSchemaMetadata,
     DbSchemaProperty,
     DbSchemaRelationshipPattern,
+    DuplicateSchemaLabel,
+    DuplicateSchemaProperty,
+    DuplicateSchemaRelationship,
+    ParsingError,
+    SchemaPropertyNotFound,
+    SchemaRelationshipNotFound,
+    ValidationError,
 )
 
 CONSTRAINT_ARGS = (
@@ -688,6 +697,162 @@ class TestCodeDerivedBindingQuirks:
         assert c.owned_index == ""
 
 
+class TestCoreCrudMethods:
+    """The core schema CRUD methods (schema.rs:377-534): typed errors with
+    the core Display text, cache invalidation, and the core-population
+    switch. `from_dict` surfaces the same duplicate errors as ValueError
+    with the same text (lib.rs:1300-1302)."""
+
+    @staticmethod
+    def _schema():
+        return DbSchema.from_dict(
+            {
+                "node_props": {"A": [{"name": "p", "neo4j_type": "STRING"}], "B": []},
+                "rel_props": {"R": [{"name": "w", "neo4j_type": "INTEGER"}]},
+                "relationships": [{"start": "A", "end": "B", "rel_type": "R"}],
+            }
+        )
+
+    def test_add_label(self):
+        schema = self._schema()
+        schema.add_label("C")
+        assert schema.has_label("C") and schema.node_props["C"] == []
+        with pytest.raises(DuplicateSchemaLabel) as exc:
+            schema.add_label("A")
+        assert str(exc.value) == "Duplicate label: Label 'A' already exists"
+
+    def test_add_node_property(self):
+        schema = self._schema()
+        schema.add_node_property("B", DbSchemaProperty("q", "FLOAT"))
+        schema.add_node_property("New", DbSchemaProperty("q", "FLOAT"))
+        assert [p.name for p in schema.node_props["B"]] == ["q"]
+        assert schema.has_label("New")
+        with pytest.raises(DuplicateSchemaProperty) as exc:
+            schema.add_node_property("A", DbSchemaProperty("p", "INTEGER"))
+        assert str(exc.value) == (
+            "Duplicate property: Property 'p' already exists for label 'A'"
+        )
+
+    def test_add_relationship_property(self):
+        schema = self._schema()
+        schema.add_relationship_property("S", DbSchemaProperty("w", "STRING"))
+        assert schema.has_relationship_type("S")
+        with pytest.raises(DuplicateSchemaProperty) as exc:
+            schema.add_relationship_property("R", DbSchemaProperty("w", "STRING"))
+        assert str(exc.value) == (
+            "Duplicate property: Property 'w' already exists for relationship 'R'"
+        )
+
+    def test_add_relationship_pattern(self):
+        schema = self._schema()
+        schema.add_relationship_pattern(DbSchemaRelationshipPattern("B", "A", "R"))
+        assert len(schema.relationships) == 2
+        with pytest.raises(DuplicateSchemaRelationship) as exc:
+            schema.add_relationship_pattern(DbSchemaRelationshipPattern("A", "B", "R"))
+        assert str(exc.value) == (
+            "Duplicate relationship: Relationship pattern '(A)--[R]--->(B)' already exists"
+        )
+
+    def test_remove_relationship_property(self):
+        schema = self._schema()
+        schema.add_relationship_property("R", DbSchemaProperty("v", "STRING"))
+        schema.remove_relationship_property("R", "w")
+        assert [p.name for p in schema.rel_props["R"]] == ["v"]
+        with pytest.raises(SchemaRelationshipNotFound) as exc:
+            schema.remove_relationship_property("Nope", "w")
+        assert str(exc.value) == (
+            "Relationship not found: Relationship type 'Nope' not found"
+        )
+        with pytest.raises(SchemaPropertyNotFound) as exc:
+            schema.remove_relationship_property("R", "w")
+        assert str(exc.value) == (
+            "Property not found: Property 'w' not found for relationship 'R'"
+        )
+
+    def test_removing_last_property_drops_the_type(self):
+        schema = DbSchema.from_dict(
+            {"rel_props": {"S": [{"name": "w", "neo4j_type": "INTEGER"}]}}
+        )
+        assert schema.has_relationship_type("S")
+        schema.remove_relationship_property("S", "w")
+        assert "S" not in schema.rel_props
+        assert schema.has_relationship_type("S") is False
+
+    def test_caches_see_a_mutation(self):
+        schema = self._schema()
+        # warm every derived cache first
+        assert schema.has_node_property("A", "p")
+        assert schema.has_relationship_property("R", "w")
+        assert not schema.has_property_anywhere("z")
+        assert schema.first_relationship_pattern("T") is None
+        assert not schema.has_relationship_type("T")
+        schema.add_node_property("A", DbSchemaProperty("z", "STRING"))
+        assert schema.has_node_property("A", "z")
+        assert schema.has_property_in_nodes("z")
+        assert schema.has_property_anywhere("z")
+        schema.add_relationship_property("R", DbSchemaProperty("y", "STRING"))
+        assert schema.has_relationship_property("R", "y")
+        assert schema.has_property_anywhere("y")
+        schema.add_relationship_pattern(DbSchemaRelationshipPattern("A", "B", "T"))
+        assert schema.has_relationship_type("T")
+        assert schema.first_relationship_pattern("T").end == "B"
+        schema.remove_relationship_property("R", "w")
+        assert not schema.has_relationship_property("R", "w")
+        assert not schema.has_property_anywhere("w")
+
+    def test_kwargs_schema_is_core_populated_after_a_mutation(self):
+        schema = DbSchema(node_props={"A": [DbSchemaProperty("p", "STRING")]})
+        assert schema.has_label("A") is False
+        assert schema.get_node_property("A", "p") is None
+        schema.add_label("C")
+        assert schema.has_label("A") and schema.has_label("C")
+        assert schema.has_node_property("A", "p")
+        assert schema.get_node_property("A", "p").neo4j_type == "STRING"
+
+    def test_from_dict_duplicate_relationship_property_is_value_error(self):
+        with pytest.raises(ValueError) as exc:
+            DbSchema.from_dict(
+                {
+                    "rel_props": {
+                        "R": [
+                            {"name": "w", "neo4j_type": "INTEGER"},
+                            {"name": "w", "neo4j_type": "STRING"},
+                        ]
+                    }
+                }
+            )
+        assert type(exc.value) is ValueError
+        assert str(exc.value) == (
+            "Duplicate property: Property 'w' already exists for relationship 'R'"
+        )
+
+    def test_from_dict_duplicate_relationship_pattern_is_value_error(self):
+        rel = {"start": "A", "end": "B", "rel_type": "R"}
+        with pytest.raises(ValueError) as exc:
+            DbSchema.from_dict({"relationships": [rel, {"type": "R", **rel}]})
+        assert type(exc.value) is ValueError
+        assert str(exc.value) == (
+            "Duplicate relationship: Relationship pattern '(A)--[R]--->(B)' already exists"
+        )
+
+    def test_from_dict_duplicate_node_property_is_value_error(self):
+        with pytest.raises(ValueError) as exc:
+            DbSchema.from_dict(
+                {
+                    "node_props": {
+                        "A": [
+                            {"name": "p", "neo4j_type": "STRING"},
+                            {"property": "p", "type": "INTEGER"},
+                        ]
+                    }
+                }
+            )
+        assert type(exc.value) is ValueError
+        assert str(exc.value) == (
+            "Duplicate property: Property 'p' already exists for label 'A'"
+        )
+
+
 def test_module_exception_surface_matches_reference():
     """The reference module registers its whole exception taxonomy at top
     level (python_bindings/src/lib.rs:1713-1905, create_exception! blocks
@@ -740,3 +905,28 @@ def test_module_exception_surface_matches_reference():
             assert name in guard.__all__, name
             n += 1
     assert n == 63
+
+
+def test_every_error_code_raises_its_own_class(monkeypatch):
+    """A parsing or validation error's code is its exception class's name:
+    `ParsingError.to_exception` and `validate_cypher_with_schema`'s raise
+    (lib.rs:122-141) both map every code back to that class, message intact."""
+    import cypher_guard_spark.guard as guard
+    from cypher_guard_spark.guard import api
+
+    parsing = CypherParsingError.__subclasses__()
+    validation = CypherValidationError.__subclasses__()
+    assert (len(parsing), len(validation)) == (24, 11)
+    for cls in parsing:
+        exc = ParsingError(cls.__name__, "m").to_exception()
+        assert type(exc) is cls and str(exc) == "m"
+        assert getattr(guard, cls.__name__) is cls
+    schema = DbSchema.from_dict({"node_props": {"A": []}})
+    for cls in validation:
+        found = [ValidationError(cls.__name__, f"{cls.__name__} text")]
+        monkeypatch.setattr(api, "validate_query_elements", lambda e, s, f=found: f)
+        with pytest.raises(cls) as exc:
+            api.validate_cypher_with_schema("MATCH (a:A) RETURN a", schema)
+        assert type(exc.value) is cls
+        assert str(exc.value) == f"{cls.__name__} text"
+        assert getattr(guard, cls.__name__) is cls
