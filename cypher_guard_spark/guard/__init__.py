@@ -4,9 +4,10 @@ Behavior parity target: neo4j-field/cypher-guard v4.0.0 (see SURVEY.md).
 Public surface mirrors the reference's Python bindings.
 """
 
+from types import ModuleType as _ModuleType
+
 from .api import (
     check_syntax,
-    get_cypher_validation_error_objects,
     get_cypher_validation_errors,
     has_parser_errors,
     has_valid_cypher,
@@ -16,77 +17,12 @@ from .api import (
     validate_cypher,
     validate_cypher_with_schema,
 )
-# the reference module registers its ENTIRE exception taxonomy at top
-# level (python_bindings lib.rs:1713-1905); a drop-in user may catch any
-# of the 63 names via `from cypher_guard import X`, so every class is
-# re-exported here (surface locked by tests/test_schema_parity.py::
-# test_module_exception_surface_matches_reference)
-from .errors import (  # noqa: F401
-    CreateAfterReturn,
+from .errors import (
     CypherParsingError,
     CypherSchemaError,
     CypherValidationError,
-    DeleteAfterReturn,
-    DuplicateSchemaDefinition,
-    DuplicateSchemaLabel,
-    DuplicateSchemaProperty,
-    DuplicateSchemaRelationship,
-    ExpectedToken,
-    InvalidClauseOrder,
-    InvalidExpression,
-    InvalidLabel,
-    InvalidNodeLabel,
-    InvalidNodeProperty,
-    InvalidPattern,
-    InvalidPropertyAccess,
-    InvalidPropertyName,
-    InvalidPropertyType,
-    InvalidRelationship,
-    InvalidRelationshipProperty,
-    InvalidRelationshipType,
-    InvalidSchemaConstraint,
-    InvalidSchemaDistinctValueCount,
-    InvalidSchemaEnumValues,
-    InvalidSchemaExampleValues,
-    InvalidSchemaFormat,
-    InvalidSchemaIndex,
-    InvalidSchemaJson,
-    InvalidSchemaMetadata,
-    InvalidSchemaPropertyName,
-    InvalidSchemaPropertyType,
-    InvalidSchemaRelationshipPattern,
-    InvalidSchemaValueRange,
-    InvalidSyntax,
-    InvalidWhereCondition,
-    LimitBeforeReturn,
-    MatchAfterReturn,
-    MergeAfterReturn,
-    MissingRequiredClause,
-    MissingSchemaField,
-    NomParsingError,
-    OrderByBeforeReturn,
     ParsingError,
-    ParsingUndefinedVariable,
-    ReturnAfterReturn,
-    ReturnBeforeOtherClauses,
-    SchemaFileCreateError,
-    SchemaFileOpenError,
-    SchemaIoError,
-    SchemaJsonReadError,
-    SchemaLabelNotFound,
-    SchemaPropertyNotFound,
-    SchemaRelationshipNotFound,
-    SchemaSerializationError,
-    SetAfterReturn,
-    SkipBeforeReturn,
-    TypeMismatch,
-    UndefinedVariable,
-    UnexpectedEndOfInput,
-    UnwindAfterReturn,
     ValidationError,
-    WhereAfterReturn,
-    WhereBeforeMatch,
-    WithAfterReturn,
 )
 from .schema import (
     DbSchema,
@@ -97,87 +33,19 @@ from .schema import (
     DbSchemaRelationshipPattern,
 )
 
+# The reference module registers its ENTIRE exception taxonomy at top
+# level (python_bindings lib.rs:1713-1905): a drop-in user may catch any of
+# the 63 names via `from cypher_guard import X`, so every class of the three
+# families is re-exported here (surface locked by tests/test_schema_parity.py::
+# test_module_exception_surface_matches_reference).
+globals().update(
+    (cls.__name__, cls)
+    for family in (CypherValidationError, CypherParsingError, CypherSchemaError)
+    for cls in family.__subclasses__()
+)
+
 __all__ = [
-    "check_syntax",
-    "get_cypher_validation_error_objects",
-    "get_cypher_validation_errors",
-    "has_parser_errors",
-    "has_valid_cypher",
-    "is_write",
-    "parse_query",
-    "parse_query_result",
-    "validate_cypher",
-    "validate_cypher_with_schema",
-    "DbSchema",
-    "DbSchemaConstraint",
-    "DbSchemaIndex",
-    "DbSchemaMetadata",
-    "DbSchemaProperty",
-    "DbSchemaRelationshipPattern",
-    "ValidationError",
-    "ParsingError",
-    # the reference module's registered exception surface (lib.rs:1713+)
-    "CreateAfterReturn",
-    "CypherParsingError",
-    "CypherSchemaError",
-    "CypherValidationError",
-    "DeleteAfterReturn",
-    "DuplicateSchemaDefinition",
-    "DuplicateSchemaLabel",
-    "DuplicateSchemaProperty",
-    "DuplicateSchemaRelationship",
-    "ExpectedToken",
-    "InvalidClauseOrder",
-    "InvalidExpression",
-    "InvalidLabel",
-    "InvalidNodeLabel",
-    "InvalidNodeProperty",
-    "InvalidPattern",
-    "InvalidPropertyAccess",
-    "InvalidPropertyName",
-    "InvalidPropertyType",
-    "InvalidRelationship",
-    "InvalidRelationshipProperty",
-    "InvalidRelationshipType",
-    "InvalidSchemaConstraint",
-    "InvalidSchemaDistinctValueCount",
-    "InvalidSchemaEnumValues",
-    "InvalidSchemaExampleValues",
-    "InvalidSchemaFormat",
-    "InvalidSchemaIndex",
-    "InvalidSchemaJson",
-    "InvalidSchemaMetadata",
-    "InvalidSchemaPropertyName",
-    "InvalidSchemaPropertyType",
-    "InvalidSchemaRelationshipPattern",
-    "InvalidSchemaValueRange",
-    "InvalidSyntax",
-    "InvalidWhereCondition",
-    "LimitBeforeReturn",
-    "MatchAfterReturn",
-    "MergeAfterReturn",
-    "MissingRequiredClause",
-    "MissingSchemaField",
-    "NomParsingError",
-    "OrderByBeforeReturn",
-    "ParsingUndefinedVariable",
-    "ReturnAfterReturn",
-    "ReturnBeforeOtherClauses",
-    "SchemaFileCreateError",
-    "SchemaFileOpenError",
-    "SchemaIoError",
-    "SchemaJsonReadError",
-    "SchemaLabelNotFound",
-    "SchemaPropertyNotFound",
-    "SchemaRelationshipNotFound",
-    "SchemaSerializationError",
-    "SetAfterReturn",
-    "SkipBeforeReturn",
-    "TypeMismatch",
-    "UndefinedVariable",
-    "UnexpectedEndOfInput",
-    "UnwindAfterReturn",
-    "WhereAfterReturn",
-    "WhereBeforeMatch",
-    "WithAfterReturn",
+    name
+    for name, value in globals().items()
+    if not name.startswith("_") and not isinstance(value, _ModuleType)
 ]

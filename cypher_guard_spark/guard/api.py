@@ -40,9 +40,9 @@ def _heuristic_error(query: str) -> Optional[E.ParsingError]:
     inside string literals and identifiers too).
     """
     if "RETURN" in query and "MATCH" in query and query.find("RETURN") < query.find("MATCH"):
-        return E.return_before_other_clauses()
+        return E.clause_order_error("ReturnBeforeOtherClauses")
     if "WHERE" in query and "MATCH" in query and query.find("WHERE") < query.find("MATCH"):
-        return E.where_before_match()
+        return E.clause_order_error("WhereBeforeMatch")
     if "WITH" in query and "MATCH" in query and query.find("WITH") < query.find("MATCH"):
         return E.invalid_clause_order(
             "query start",
@@ -57,15 +57,15 @@ def _heuristic_error(query: str) -> Optional[E.ParsingError]:
     if last_return != -1:
         tail = query[last_return:]
         if tail.find("MATCH") > 0:
-            return E.match_after_return()
+            return E.clause_order_error("MatchAfterReturn")
         if tail.find("WHERE") > 0:
             return E.invalid_clause_order(
                 "after RETURN", "WHERE cannot come after RETURN clause"
             )
         if tail.find("WITH") > 0:
-            return E.with_after_return()
+            return E.clause_order_error("WithAfterReturn")
         if tail.find("UNWIND") > 0:
-            return E.unwind_after_return()
+            return E.clause_order_error("UnwindAfterReturn")
     if (
         "MATCH" in query
         and "WITH" in query
@@ -103,26 +103,11 @@ def check_syntax(query: str) -> bool:
     return True
 
 
-def get_cypher_validation_errors(query: str, schema) -> List[str]:
-    """lib.rs:144-167 — all error strings; parse failure → ["Invalid Cypher syntax"]."""
-    db = _coerce_schema(schema)
-    ast, err = parse_query_result(query)
-    if err is not None:
-        return ["Invalid Cypher syntax"]
-    elements = extract_query_elements(ast)
-    return [e.message for e in validate_query_elements(elements, db)]
-
-
-def get_cypher_validation_error_objects(query: str, schema):
-    """Structured variant for the Spark UDF: (parse_error | None, [ValidationError])."""
-    _, perr, verrors = analyze(query, schema)
-    return (perr, verrors)
-
-
 def analyze(query: str, schema):
     """Single-parse structured analysis: (ast|None, parse_error|None, [ValidationError]).
 
-    The hot path for the vectorized UDF — parses exactly once.
+    The hot path for the vectorized UDF — parses exactly once — and the one
+    coerce → parse → extract → validate pipeline the functions below read.
     """
     db = _coerce_schema(schema)
     ast, err = parse_query_result(query)
@@ -132,28 +117,30 @@ def analyze(query: str, schema):
     return (ast, None, validate_query_elements(elements, db))
 
 
+def get_cypher_validation_errors(query: str, schema) -> List[str]:
+    """lib.rs:144-167 — all error strings; parse failure → ["Invalid Cypher syntax"]."""
+    _, err, errors = analyze(query, schema)
+    if err is not None:
+        return ["Invalid Cypher syntax"]
+    return [e.message for e in errors]
+
+
 def validate_cypher(query: str, schema) -> List[str]:
     """python_bindings/src/lib.rs:1617-1633 — parse errors raise, validation
     errors are returned as strings."""
-    db = _coerce_schema(schema)
-    ast, err = parse_query_result(query)
+    _, err, errors = analyze(query, schema)
     if err is not None:
         raise err.to_exception()
-    elements = extract_query_elements(ast)
-    return [e.message for e in validate_query_elements(elements, db)]
+    return [e.message for e in errors]
 
 
 def validate_cypher_with_schema(query: str, schema) -> bool:
     """lib.rs:122-141 — True, or raises the FIRST error (typed)."""
-    db = _coerce_schema(schema)
-    ast, err = parse_query_result(query)
+    _, err, errors = analyze(query, schema)
     if err is not None:
         raise err.to_exception()
-    elements = extract_query_elements(ast)
-    errors = validate_query_elements(elements, db)
     if errors:
-        exc_cls = E.VALIDATION_EXCEPTIONS.get(errors[0].code, E.CypherValidationError)
-        raise exc_cls(errors[0].message)
+        raise errors[0].to_exception()
     return True
 
 

@@ -261,18 +261,6 @@ class Query:
     call_clauses: list = field(default_factory=list)
 
 
-@dataclass
-class Spanned:
-    """Clause + byte offset (parser/span.rs:1-11).
-
-    Reference quirk Q8: the offset is computed against the slice handed to
-    ``clause()`` itself, so it is always 0; kept for structural parity.
-    """
-
-    value: object
-    start: int = 0
-
-
 def offset_to_line_column(text: str, byte_offset: int) -> tuple:
     """1-indexed line/column for a byte offset (parser/span.rs:21-69)."""
     if byte_offset == 0:

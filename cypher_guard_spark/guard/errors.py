@@ -293,6 +293,9 @@ class ValidationError:
     def __str__(self) -> str:  # pragma: no cover - convenience
         return self.message
 
+    def to_exception(self) -> CypherValidationError:
+        return VALIDATION_EXCEPTIONS.get(self.code, CypherValidationError)(self.message)
+
 
 def invalid_node_label(label: str) -> ValidationError:
     return ValidationError("InvalidNodeLabel", f"Invalid node label: {label}")
@@ -345,22 +348,6 @@ def undefined_variable(var: str) -> ValidationError:
     return ValidationError("UndefinedVariable", f"Undefined variable: {var}")
 
 
-# Map validation error codes to their exception classes (binding parity).
-VALIDATION_EXCEPTIONS = {
-    "InvalidNodeLabel": InvalidNodeLabel,
-    "InvalidRelationshipType": InvalidRelationshipType,
-    "InvalidNodeProperty": InvalidNodeProperty,
-    "InvalidRelationshipProperty": InvalidRelationshipProperty,
-    "InvalidPropertyAccess": InvalidPropertyAccess,
-    "InvalidPropertyName": InvalidPropertyName,
-    "UndefinedVariable": UndefinedVariable,
-    "TypeMismatch": TypeMismatch,
-    "InvalidRelationship": InvalidRelationship,
-    "InvalidLabel": InvalidLabel,
-    "InvalidPropertyType": InvalidPropertyType,
-}
-
-
 # ---------------------------------------------------------------------------
 # Parsing error value object
 # ---------------------------------------------------------------------------
@@ -370,8 +357,8 @@ class ParsingError:
     """A parse failure: ``code`` names the exception class, ``message`` the text.
 
     ``line``/``column`` mirror the reference's "(found at line L, column C)"
-    payload; the lib.rs heuristic constructors always use 0,0
-    (errors.rs:386-460), which we reproduce.
+    payload, which the lib.rs heuristic constructors always set to 0, 0
+    (errors.rs:386-460); the Spark UDF's error struct carries them.
     """
 
     code: str
@@ -380,36 +367,12 @@ class ParsingError:
     column: int = 0
 
     def to_exception(self) -> CypherParsingError:
-        exc_cls = PARSING_EXCEPTIONS.get(self.code, CypherParsingError)
-        return exc_cls(self.message)
+        return PARSING_EXCEPTIONS.get(self.code, CypherParsingError)(self.message)
 
 
-PARSING_EXCEPTIONS = {
-    "NomParsingError": NomParsingError,
-    "UnexpectedEndOfInput": UnexpectedEndOfInput,
-    "ExpectedToken": ExpectedToken,
-    "InvalidSyntax": InvalidSyntax,
-    "ParsingUndefinedVariable": ParsingUndefinedVariable,
-    "MissingRequiredClause": MissingRequiredClause,
-    "InvalidClauseOrder": InvalidClauseOrder,
-    "ReturnBeforeOtherClauses": ReturnBeforeOtherClauses,
-    "MatchAfterReturn": MatchAfterReturn,
-    "CreateAfterReturn": CreateAfterReturn,
-    "MergeAfterReturn": MergeAfterReturn,
-    "DeleteAfterReturn": DeleteAfterReturn,
-    "SetAfterReturn": SetAfterReturn,
-    "WhereAfterReturn": WhereAfterReturn,
-    "WithAfterReturn": WithAfterReturn,
-    "UnwindAfterReturn": UnwindAfterReturn,
-    "WhereBeforeMatch": WhereBeforeMatch,
-    "ReturnAfterReturn": ReturnAfterReturn,
-    "OrderByBeforeReturn": OrderByBeforeReturn,
-    "SkipBeforeReturn": SkipBeforeReturn,
-    "LimitBeforeReturn": LimitBeforeReturn,
-    "InvalidPattern": InvalidPattern,
-    "InvalidWhereCondition": InvalidWhereCondition,
-    "InvalidExpression": InvalidExpression,
-}
+# Every error code is its exception class's name (binding parity).
+VALIDATION_EXCEPTIONS = {c.__name__: c for c in CypherValidationError.__subclasses__()}
+PARSING_EXCEPTIONS = {c.__name__: c for c in CypherParsingError.__subclasses__()}
 
 
 def nom_parsing_error(kind: str, remaining: str) -> ParsingError:
@@ -431,48 +394,17 @@ def invalid_clause_order(context: str, details: str) -> ParsingError:
     )
 
 
-def return_before_other_clauses(line: int = 0, column: int = 0) -> ParsingError:
-    return ParsingError(
-        "ReturnBeforeOtherClauses",
-        "RETURN clause must come after all other clauses except ORDER BY, SKIP, "
-        f"LIMIT, and writing clauses (found at line {line}, column {column})",
-        line,
-        column,
-    )
+# The clause-order variants the lib.rs heuristic ladder raises, by code;
+# it always reports line 0, column 0 (errors.rs:386-460).
+_CLAUSE_ORDER_TEXT = {
+    "ReturnBeforeOtherClauses": "RETURN clause must come after all other clauses "
+    "except ORDER BY, SKIP, LIMIT, and writing clauses",
+    "MatchAfterReturn": "MATCH clause cannot come after RETURN clause",
+    "WithAfterReturn": "WITH clause cannot come after RETURN clause",
+    "UnwindAfterReturn": "UNWIND clause cannot come after RETURN clause",
+    "WhereBeforeMatch": "WHERE clause must come after MATCH, UNWIND, or WITH clause",
+}
 
 
-def match_after_return(line: int = 0, column: int = 0) -> ParsingError:
-    return ParsingError(
-        "MatchAfterReturn",
-        f"MATCH clause cannot come after RETURN clause (found at line {line}, column {column})",
-        line,
-        column,
-    )
-
-
-def with_after_return(line: int = 0, column: int = 0) -> ParsingError:
-    return ParsingError(
-        "WithAfterReturn",
-        f"WITH clause cannot come after RETURN clause (found at line {line}, column {column})",
-        line,
-        column,
-    )
-
-
-def unwind_after_return(line: int = 0, column: int = 0) -> ParsingError:
-    return ParsingError(
-        "UnwindAfterReturn",
-        f"UNWIND clause cannot come after RETURN clause (found at line {line}, column {column})",
-        line,
-        column,
-    )
-
-
-def where_before_match(line: int = 0, column: int = 0) -> ParsingError:
-    return ParsingError(
-        "WhereBeforeMatch",
-        "WHERE clause must come after MATCH, UNWIND, or WITH clause "
-        f"(found at line {line}, column {column})",
-        line,
-        column,
-    )
+def clause_order_error(code: str) -> ParsingError:
+    return ParsingError(code, f"{_CLAUSE_ORDER_TEXT[code]} (found at line 0, column 0)")

@@ -9,7 +9,8 @@ Behavioral landmines reproduced on purpose (SURVEY.md §2.6):
 - SET/UNWIND property values try identifier before number/bool, so bare
   `42`/`true` become String values (clauses.rs:790-800).
 - RETURN items are stored as flat strings (clauses.rs:70-111).
-- every Spanned offset is 0 (clauses.rs:805-847, quirk Q8).
+- every clause's span offset is 0 (clauses.rs:805-847, quirk Q8), so
+  clauses are carried as bare (kind, value) pairs.
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from ..ast import (
     Query,
     ReturnClause,
     SetClause,
-    Spanned,
     UnwindClause,
     UnwindExpression,
     WhereClause,
@@ -452,8 +452,8 @@ def parse_subquery(s: str, i: int):
         r = clause(s, rest)
         if r is None:
             break
-        rest, spanned = r
-        clauses.append(spanned)
+        rest, kind_clause = r
+        clauses.append(kind_clause)
     if validate_clause_order(clauses) is not None:
         return None  # degraded to a plain Tag error (quirk Q9)
     if not clauses:
@@ -648,10 +648,12 @@ _CLAUSE_PARSERS = (
 
 
 def clause(s: str, i: int):
-    """alt in order WITH, WHERE, MATCH, RETURN, MERGE, CREATE, UNWIND, CALL.
+    """alt in order WITH, WHERE, MATCH, RETURN, MERGE, CREATE, UNWIND, CALL;
+    returns (end, (kind, clause)).
 
-    Spanned.start is always 0 — reference quirk Q8 (clauses.rs:809-811
-    computes the offset against the slice handed to clause() itself).
+    The reference wraps each clause in a Spanned<Clause> whose offset is
+    always 0 — quirk Q8 (clauses.rs:809-811 computes it against the slice
+    handed to clause() itself) — and nothing reads it, so no span is kept.
     """
     for kind, parser in _CLAUSE_PARSERS:
         r = parser(s, i)
@@ -661,7 +663,7 @@ def clause(s: str, i: int):
                 kind_eff = K_OPTIONAL_MATCH
             else:
                 kind_eff = kind
-            return (j, Spanned(value=(kind_eff, value), start=0))
+            return (j, (kind_eff, value))
     return None
 
 
@@ -691,8 +693,8 @@ def _parse_full(s: str):
         r = clause(s, i)
         if r is None:
             break
-        i, spanned = r
-        clauses.append(spanned)
+        i, kind_clause = r
+        clauses.append(kind_clause)
     i = ws0(s, i)
     if i < len(s):
         raise ParseFail("Verify", s[i:])
@@ -721,8 +723,7 @@ _QUERY_VECTOR = {
 
 def _bucket_clauses(clauses) -> Query:
     query = Query()
-    for spanned in clauses:
-        kind, value = spanned.value
+    for kind, value in clauses:
         getattr(query, _QUERY_VECTOR[kind]).append(value)
     return query
 
@@ -777,8 +778,7 @@ def validate_clause_order(clauses):
     if not clauses:
         return None
     state = _INITIAL
-    for spanned in clauses:
-        kind, _ = spanned.value
+    for kind, _ in clauses:
         if kind not in _ALLOWED[state]:
             return f"invalid transition: {state} + {kind}"
         state = _NEXT_STATE[kind]

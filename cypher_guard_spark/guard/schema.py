@@ -118,6 +118,24 @@ def _require_i64(value, what: str, allow_none: bool = True):
     return int(value)
 
 
+def _required(d: dict, *keys: str, context: str = ""):
+    """The value under the first of ``keys`` present in ``d`` — the binding's
+    alternate key names — else its KeyError naming every key."""
+    for key in keys:
+        if key in d:
+            return d[key]
+    quoted = [f"'{k}'" for k in keys]
+    if len(quoted) > 2:
+        quoted = [", ".join(quoted[:-1]) + ",", quoted[-1]]
+    raise KeyError(f"Missing {' or '.join(quoted)} field{context}")
+
+
+def _either(d: dict, key: str, alternate: str, default=None):
+    """``d[key]``, else ``d[alternate]`` when the first is absent or None."""
+    value = d.get(key)
+    return d.get(alternate, default) if value is None else value
+
+
 class DbSchemaProperty:
     """schema.rs:56-71 / binding lib.rs:440-721.
 
@@ -169,24 +187,13 @@ class DbSchemaProperty:
         distinct_value_count; min/max read only when the RAW neo4j_type
         string equals "INTEGER"/"FLOAT" (aliases like "INT" skip them);
         min/max accept numeric strings, silently None on parse failure."""
-        if "name" in d:
-            name = d["name"]
-        elif "property" in d:
-            name = d["property"]
-        else:
-            raise KeyError("Missing 'name' or 'property' field")
-        if "neo4j_type" in d:
-            neo4j_type = d["neo4j_type"]
-        elif "type" in d:
-            neo4j_type = d["type"]
-        else:
-            raise KeyError("Missing 'neo4j_type' or 'type' field")
+        name = _required(d, "name", "property")
+        neo4j_type = _required(d, "neo4j_type", "type")
         resolved = property_type_from_string(neo4j_type)
 
-        distinct_value_count = d.get("distinct_value_count")
-        if distinct_value_count is None:
-            distinct_value_count = d.get("distinct_count")
-        distinct_value_count = _require_i64(distinct_value_count, "distinct_value_count")
+        distinct_value_count = _require_i64(
+            _either(d, "distinct_value_count", "distinct_count"), "distinct_value_count"
+        )
 
         enum_values = d.get("enum_values")
         if enum_values is None:
@@ -214,31 +221,21 @@ class DbSchemaProperty:
         # Raw-string comparison, NOT the resolved type (lib.rs:552-556):
         # a property declared with the "INT" alias never gets min/max.
         if neo4j_type in ("INTEGER", "FLOAT"):
-            raw_min = d.get("min_value")
-            if raw_min is None:
-                raw_min = d.get("min")
-            if raw_min is not None:
-                min_value = extract_float(raw_min)
-            raw_max = d.get("max_value")
-            if raw_max is None:
-                raw_max = d.get("max")
-            if raw_max is not None:
-                max_value = extract_float(raw_max)
+            min_value = extract_float(_either(d, "min_value", "min"))
+            max_value = extract_float(_either(d, "max_value", "max"))
 
-        example_values = d.get("example_values")
-        if example_values is None:
-            example_values = d.get("values")
-        example_values = _require_str_list(example_values, "example_values")
-
-        prop = cls.__new__(cls)
-        prop.name = _require_str(name, "name")
-        prop.neo4j_type = resolved
-        prop.enum_values = enum_values
-        prop.min_value = min_value
-        prop.max_value = max_value
-        prop.distinct_value_count = distinct_value_count
-        prop.example_values = example_values
-        return prop
+        example_values = _require_str_list(
+            _either(d, "example_values", "values"), "example_values"
+        )
+        return cls._checked(
+            _require_str(name, "name"),
+            resolved,
+            enum_values,
+            min_value,
+            max_value,
+            distinct_value_count,
+            example_values,
+        )
 
     @classmethod
     def _from_dict_serde(cls, d: dict) -> "DbSchemaProperty":
@@ -248,14 +245,23 @@ class DbSchemaProperty:
             raise E.InvalidSchemaJson(
                 "Failed to parse schema JSON: missing field `name`/`neo4j_type`"
             )
+        return cls._checked(
+            d["name"],
+            _core_property_type(d["neo4j_type"]),
+            d.get("enum_values"),
+            d.get("min_value"),
+            d.get("max_value"),
+            d.get("distinct_value_count"),
+            d.get("example_values"),
+        )
+
+    @classmethod
+    def _checked(cls, *values) -> "DbSchemaProperty":
+        """Build from slot values (in ``__slots__`` order) that the caller
+        has already checked, skipping the constructor's own checks."""
         prop = cls.__new__(cls)
-        prop.name = d["name"]
-        prop.neo4j_type = _core_property_type(d["neo4j_type"])
-        prop.enum_values = d.get("enum_values")
-        prop.min_value = d.get("min_value")
-        prop.max_value = d.get("max_value")
-        prop.distinct_value_count = d.get("distinct_value_count")
-        prop.example_values = d.get("example_values")
+        for slot, value in zip(cls.__slots__, values):
+            setattr(prop, slot, value)
         return prop
 
     def to_dict(self) -> dict:
@@ -305,17 +311,11 @@ class DbSchemaRelationshipPattern:
 
     @classmethod
     def from_dict(cls, d: dict) -> "DbSchemaRelationshipPattern":
-        if "start" not in d:
-            raise KeyError("Missing 'start' field")
-        if "end" not in d:
-            raise KeyError("Missing 'end' field")
-        if "rel_type" in d:
-            rel_type = d["rel_type"]
-        elif "type" in d:
-            rel_type = d["type"]
-        else:
-            raise KeyError("Missing 'rel_type' or 'type' field for Relationship Pattern")
-        return cls(d["start"], d["end"], rel_type)
+        return cls(
+            _required(d, "start"),
+            _required(d, "end"),
+            _required(d, "rel_type", "type", context=" for Relationship Pattern"),
+        )
 
     def to_dict(self) -> dict:
         return {"start": self.start, "end": self.end, "rel_type": self.rel_type}
@@ -385,47 +385,15 @@ class DbSchemaConstraint:
     def from_dict(cls, d: dict) -> "DbSchemaConstraint":
         """Alt keys per lib.rs:856-925: type / entityType / labelsOrTypes /
         labels / ownedIndex / propertyType."""
-        if "id" not in d:
-            raise KeyError("Missing 'id' field")
-        if "name" not in d:
-            raise KeyError("Missing 'name' field")
-        if "constraint_type" in d:
-            constraint_type = d["constraint_type"]
-        elif "type" in d:
-            constraint_type = d["type"]
-        else:
-            raise KeyError("Missing 'constraint_type' or 'type' field")
-        if "entity_type" in d:
-            entity_type = d["entity_type"]
-        elif "entityType" in d:
-            entity_type = d["entityType"]
-        else:
-            raise KeyError("Missing 'entity_type' or 'entityType' field")
-        if "labels_or_types" in d:
-            labels_or_types = d["labels_or_types"]
-        elif "labelsOrTypes" in d:
-            labels_or_types = d["labelsOrTypes"]
-        elif "labels" in d:
-            labels_or_types = d["labels"]
-        else:
-            raise KeyError("Missing 'labels_or_types', 'labelsOrTypes', or 'labels' field")
-        if "properties" not in d:
-            raise KeyError("Missing 'properties' field")
-        owned_index = d.get("owned_index")
-        if owned_index is None and "ownedIndex" in d:
-            owned_index = d["ownedIndex"]
-        property_type = d.get("property_type")
-        if property_type is None:
-            property_type = d.get("propertyType")
         return cls(
-            d["id"],
-            d["name"],
-            constraint_type,
-            entity_type,
-            labels_or_types,
-            d["properties"],
-            owned_index,
-            property_type,
+            _required(d, "id"),
+            _required(d, "name"),
+            _required(d, "constraint_type", "type"),
+            _required(d, "entity_type", "entityType"),
+            _required(d, "labels_or_types", "labelsOrTypes", "labels"),
+            _required(d, "properties"),
+            _either(d, "owned_index", "ownedIndex"),
+            _either(d, "property_type", "propertyType"),
         )
 
     def to_dict(self) -> dict:
@@ -493,31 +461,13 @@ class DbSchemaIndex:
 
     @classmethod
     def from_dict(cls, d: dict) -> "DbSchemaIndex":
-        if "label" not in d:
-            raise KeyError("Missing 'label' field")
-        if "properties" not in d:
-            raise KeyError("Missing 'properties' field")
-        if "size" not in d:
-            raise KeyError("Missing 'size' field")
-        if "index_type" in d:
-            index_type = d["index_type"]
-        elif "type" in d:
-            index_type = d["type"]
-        else:
-            raise KeyError("Missing 'index_type' or 'type' field")
-        values_selectivity = d.get("values_selectivity")
-        if values_selectivity is None:
-            values_selectivity = d.get("valuesSelectivity", 0.0)
-        distinct_values = d.get("distinct_values")
-        if distinct_values is None:
-            distinct_values = d.get("distinctValues", 0.0)
         return cls(
-            d["label"],
-            d["properties"],
-            d["size"],
-            index_type,
-            values_selectivity,
-            distinct_values,
+            _required(d, "label"),
+            _required(d, "properties"),
+            _required(d, "size"),
+            _required(d, "index_type", "type"),
+            _either(d, "values_selectivity", "valuesSelectivity", 0.0),
+            _either(d, "distinct_values", "distinctValues", 0.0),
         )
 
     def to_dict(self) -> dict:
@@ -585,6 +535,21 @@ class DbSchemaMetadata:
         )
 
 
+def _property_lookup(attr: str):
+    """A core-gated lookup of one property by owner and name in the
+    ``attr`` map (``node_props`` or ``rel_props``); the first match wins."""
+
+    def lookup(self, owner: str, property_name: str):
+        if not self._core_populated:
+            return None
+        for p in getattr(self, attr).get(owner) or ():
+            if p.name == property_name:
+                return p
+        return None
+
+    return lookup
+
+
 class DbSchema:
     """schema.rs:260-269 / binding lib.rs:1244-1530.
 
@@ -618,48 +583,24 @@ class DbSchema:
     @classmethod
     def from_dict(cls, d: dict) -> "DbSchema":
         """Binding from_dict (lib.rs:1286-1407): properties parsed with the
-        alternate-key quirks, duplicates surfaced as ValueError with the
-        core error text, metadata parsed into typed objects. Populates the
-        core (unlike the kwargs constructor)."""
+        alternate-key quirks and added through the core CRUD methods, whose
+        duplicate errors surface as ValueError with the same text
+        (lib.rs:1300-1302); metadata parsed into typed objects. Populates
+        the core (unlike the kwargs constructor)."""
         schema = cls()
-        for label, props in (d.get("node_props") or {}).items():
-            if label in schema.node_props:
-                raise ValueError(f"Duplicate label: Label '{label}' already exists")
-            parsed = []
-            for p in props:
-                prop = DbSchemaProperty.from_dict(p)
-                if any(q.name == prop.name for q in parsed):
-                    raise ValueError(
-                        f"Duplicate property: Property '{prop.name}' already exists "
-                        f"for label '{label}'"
-                    )
-                parsed.append(prop)
-            schema.node_props[label] = parsed
-        for rel_type, props in (d.get("rel_props") or {}).items():
-            parsed = []
-            for p in props:
-                prop = DbSchemaProperty.from_dict(p)
-                if any(q.name == prop.name for q in parsed):
-                    raise ValueError(
-                        f"Duplicate property: Property '{prop.name}' already exists "
-                        f"for relationship '{rel_type}'"
-                    )
-                parsed.append(prop)
-            schema.rel_props[rel_type] = parsed
-        for r in d.get("relationships") or []:
-            pattern = DbSchemaRelationshipPattern.from_dict(r)
-            for p in schema.relationships:
-                if (
-                    p.start == pattern.start
-                    and p.end == pattern.end
-                    and p.rel_type == pattern.rel_type
-                ):
-                    raise ValueError(
-                        f"Duplicate relationship: Relationship pattern "
-                        f"'({pattern.start})--[{pattern.rel_type}]--->({pattern.end})' "
-                        f"already exists"
-                    )
-            schema.relationships.append(pattern)
+        try:
+            for label, props in (d.get("node_props") or {}).items():
+                schema.add_label(label)
+                for p in props:
+                    schema.add_node_property(label, DbSchemaProperty.from_dict(p))
+            for rel_type, props in (d.get("rel_props") or {}).items():
+                schema.rel_props[rel_type] = []
+                for p in props:
+                    schema.add_relationship_property(rel_type, DbSchemaProperty.from_dict(p))
+            for r in d.get("relationships") or []:
+                schema.add_relationship_pattern(DbSchemaRelationshipPattern.from_dict(r))
+        except E.CypherSchemaError as exc:
+            raise ValueError(str(exc)) from None
         md = d.get("metadata")
         if md is not None:
             schema.metadata = DbSchemaMetadata.from_dict(md)
@@ -844,17 +785,12 @@ class DbSchema:
 
     def add_relationship_pattern(self, pattern: DbSchemaRelationshipPattern):
         """schema.rs:518-534."""
-        for p in self.relationships:
-            if (
-                p.start == pattern.start
-                and p.end == pattern.end
-                and p.rel_type == pattern.rel_type
-            ):
-                raise E.DuplicateSchemaRelationship(
-                    f"Duplicate relationship: Relationship pattern "
-                    f"'({pattern.start})--[{pattern.rel_type}]--->({pattern.end})' "
-                    f"already exists"
-                )
+        if pattern in self.relationships:
+            raise E.DuplicateSchemaRelationship(
+                f"Duplicate relationship: Relationship pattern "
+                f"'({pattern.start})--[{pattern.rel_type}]--->({pattern.end})' "
+                f"already exists"
+            )
         self.relationships.append(pattern)
         self._dirty()
 
@@ -877,16 +813,8 @@ class DbSchema:
             return None
         return self.node_props.get(label)
 
-    def get_node_property(self, label: str, property_name: str):
-        if not self._core_populated:
-            return None
-        props = self.node_props.get(label)
-        if props is None:
-            return None
-        for p in props:
-            if p.name == property_name:
-                return p
-        return None
+    get_node_property = _property_lookup("node_props")
+    get_relationship_property = _property_lookup("rel_props")
 
     def has_property_in_nodes(self, property_name: str) -> bool:
         if not self._core_populated:
@@ -898,9 +826,9 @@ class DbSchema:
     def has_relationship_type(self, rel_type: str) -> bool:
         if not self._core_populated:
             return False
-        return rel_type in self.rel_props or any(
-            r.rel_type == rel_type for r in self.relationships
-        )
+        if self._rel_first_pattern is None:
+            self._build_caches()
+        return rel_type in self.rel_props or rel_type in self._rel_first_pattern
 
     def has_relationship_property(self, rel_type: str, property_name: str) -> bool:
         if not self._core_populated:
@@ -963,9 +891,6 @@ class DbSchema:
         return {"data": self.to_dict(), "core_populated": self._core_populated}
 
     def __setstate__(self, state):
-        if "data" in state:
-            fresh = DbSchema.from_dict(state["data"])
-            fresh._core_populated = state.get("core_populated", True)
-        else:  # pre-round-3 pickles: bare to_dict payload
-            fresh = DbSchema.from_dict(state)
+        fresh = DbSchema.from_dict(state["data"])
+        fresh._core_populated = state["core_populated"]
         self.__dict__.update(fresh.__dict__)

@@ -9,7 +9,7 @@ parity is by check rank, set-equality parity within a check
 from __future__ import annotations
 
 from . import errors as E
-from .ast import LEFT, RIGHT, UNDIRECTED, NodePattern, QuantifiedPathPattern, RelationshipPattern
+from .ast import LEFT, RIGHT, NodePattern, QuantifiedPathPattern, RelationshipPattern
 from .extract import CTX_RETURN, CTX_WHERE, CTX_WITH, QueryElements
 from .schema import DbSchema
 
@@ -46,61 +46,44 @@ def validate_query_elements(elements: QueryElements, schema: DbSchema):
     # *labeled* nodes i, i+1; skip rel types absent from schema; use the
     # FIRST schema pattern with that type; guard the unlabeled-node
     # underflow by requiring at least i+2 labeled nodes (quirk Q3: the
-    # reference's release build effectively skips those sequences).
+    # reference's release build effectively skips those sequences); zip
+    # stops at the last rel that has both nodes.
     for pattern_sequence in elements.pattern_sequences:
         nodes = []
         relationships = []
-        for pe in pattern_sequence:
-            if isinstance(pe, NodePattern):
-                if pe.label:
-                    nodes.append(pe.label)
-            elif isinstance(pe, RelationshipPattern):
-                if pe.details.rel_type:
-                    relationships.append((pe.details.rel_type, pe.details.direction))
-            elif isinstance(pe, QuantifiedPathPattern):
-                for inner in pe.pattern:
-                    if isinstance(inner, NodePattern):
-                        if inner.label:
-                            nodes.append(inner.label)
-                    elif isinstance(inner, RelationshipPattern):
-                        if inner.details.rel_type:
-                            relationships.append(
-                                (inner.details.rel_type, inner.details.direction)
-                            )
-        for i, (rel_type, direction) in enumerate(relationships):
+        _collect_typed(pattern_sequence, nodes, relationships)
+        for (rel_type, direction), node1, node2 in zip(relationships, nodes, nodes[1:]):
             schema_rel = schema.first_relationship_pattern(rel_type)
             if schema_rel is None:
                 continue
-            if i < len(nodes) - 1 and nodes:
-                node1, node2 = nodes[i], nodes[i + 1]
-                start, end = schema_rel.start, schema_rel.end
-                if direction == RIGHT:
-                    if node1 != start or node2 != end:
-                        errors.append(
-                            E.invalid_relationship(
-                                f"Relationship '{rel_type}' direction mismatch: "
-                                f"expected {start}->{end}, got {node1}->{node2}"
-                            )
+            start, end = schema_rel.start, schema_rel.end
+            if direction == RIGHT:
+                if node1 != start or node2 != end:
+                    errors.append(
+                        E.invalid_relationship(
+                            f"Relationship '{rel_type}' direction mismatch: "
+                            f"expected {start}->{end}, got {node1}->{node2}"
                         )
-                elif direction == LEFT:
-                    if node1 != end or node2 != start:
-                        errors.append(
-                            E.invalid_relationship(
-                                f"Relationship '{rel_type}' direction mismatch: "
-                                f"expected {start}->{end}, got {node2}->{node1}"
-                            )
-                        )
-                else:  # UNDIRECTED
-                    ok = (node1 == start and node2 == end) or (
-                        node1 == end and node2 == start
                     )
-                    if not ok:
-                        errors.append(
-                            E.invalid_relationship(
-                                f"Relationship '{rel_type}' invalid node combination: "
-                                f"expected {start} and {end}, got {node1} and {node2}"
-                            )
+            elif direction == LEFT:
+                if node1 != end or node2 != start:
+                    errors.append(
+                        E.invalid_relationship(
+                            f"Relationship '{rel_type}' direction mismatch: "
+                            f"expected {start}->{end}, got {node2}->{node1}"
                         )
+                    )
+            else:  # UNDIRECTED
+                ok = (node1 == start and node2 == end) or (
+                    node1 == end and node2 == start
+                )
+                if not ok:
+                    errors.append(
+                        E.invalid_relationship(
+                            f"Relationship '{rel_type}' invalid node combination: "
+                            f"expected {start} and {end}, got {node1} and {node2}"
+                        )
+                    )
 
     # ⑤ node pattern-map properties (validation.rs:665-678); re-reports
     # InvalidNodeLabel for unknown labels that carry properties (reference
@@ -141,9 +124,7 @@ def validate_query_elements(elements: QueryElements, schema: DbSchema):
         if bound_label is not None:
             prop_def = schema.get_node_property(bound_label, cmp_.property)
         elif bound_rel is not None:
-            props = schema.rel_props.get(bound_rel)
-            if props:
-                prop_def = next((p for p in props if p.name == cmp_.property), None)
+            prop_def = schema.get_relationship_property(bound_rel, cmp_.property)
         else:
             # global fallback: nodes first (sorted for determinism), then rels
             for label in sorted(schema.node_props):
@@ -152,10 +133,7 @@ def validate_query_elements(elements: QueryElements, schema: DbSchema):
                     break
             if prop_def is None:
                 for rel_type in sorted(schema.rel_props):
-                    prop_def = next(
-                        (p for p in schema.rel_props[rel_type] if p.name == cmp_.property),
-                        None,
-                    )
+                    prop_def = schema.get_relationship_property(rel_type, cmp_.property)
                     if prop_def is not None:
                         break
         if prop_def is not None:
@@ -173,3 +151,18 @@ def validate_query_elements(elements: QueryElements, schema: DbSchema):
             )
 
     return errors
+
+
+def _collect_typed(elements, nodes: list, relationships: list):
+    """Check ④'s inputs: append the labels of labelled nodes and the (type,
+    direction) of typed relationships in pattern order; a QPP contributes
+    its inner elements in place (the parser builds no nested QPP)."""
+    for pe in elements:
+        if isinstance(pe, NodePattern):
+            if pe.label:
+                nodes.append(pe.label)
+        elif isinstance(pe, RelationshipPattern):
+            if pe.details.rel_type:
+                relationships.append((pe.details.rel_type, pe.details.direction))
+        elif isinstance(pe, QuantifiedPathPattern):
+            _collect_typed(pe.pattern, nodes, relationships)

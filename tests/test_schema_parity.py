@@ -605,6 +605,41 @@ class TestCodeDerivedBindingQuirks:
         assert populated.has_label("nodeA") is True
         assert populated.has_node_property("nodeA", "name") is True
 
+    @pytest.mark.parametrize(
+        "query, access",
+        [
+            ("MATCH (a:Person) WHERE a.name = 'x' RETURN a", "a.name"),
+            ("MATCH (a:Person)-[r:KNOWS]->(b:Person) WHERE r.since = 'x' RETURN a", "r.since"),
+            ("MATCH (a)-[r]->(b) WHERE r.since = 'x' RETURN a", "r.since"),
+        ],
+        ids=["node", "bound-relationship", "global-fallback"],
+    )
+    def test_kwargs_constructor_core_gates_property_comparisons(self, query, access):
+        # lib.rs:1269: the property-comparison check (validation.rs:736-803)
+        # reads node AND relationship properties from the empty inner core,
+        # so a kwargs-built schema finds neither.
+        from cypher_guard_spark.guard import validate_cypher
+
+        schema = DbSchema(
+            node_props={"Person": [DbSchemaProperty("name", "STRING")]},
+            rel_props={"KNOWS": [DbSchemaProperty("since", "STRING")]},
+            relationships=[DbSchemaRelationshipPattern("Person", "Person", "KNOWS")],
+        )
+        message = f"Invalid property access '{access}' in property comparison clause"
+        assert message in validate_cypher(query, schema)
+        populated = DbSchema.from_dict(schema.to_dict())
+        assert message not in validate_cypher(query, populated)
+
+    def test_get_relationship_property_is_core_gated(self):
+        # the relationship twin of get_node_property: None until the core
+        # is populated (lib.rs:1269)
+        props = {"KNOWS": [DbSchemaProperty("since", "STRING")]}
+        assert DbSchema(rel_props=props).get_relationship_property("KNOWS", "since") is None
+        populated = DbSchema.from_dict({"rel_props": {"KNOWS": [{"name": "since", "type": "STRING"}]}})
+        assert populated.get_relationship_property("KNOWS", "since").neo4j_type == "STRING"
+        assert populated.get_relationship_property("KNOWS", "until") is None
+        assert populated.get_relationship_property("LIKES", "since") is None
+
     def test_property_from_dict_alternate_keys(self):
         # lib.rs:492-514: 'property' and 'type' are accepted key aliases
         prop = DbSchemaProperty.from_dict({"property": "age", "type": "INTEGER"})
